@@ -341,13 +341,18 @@ def _record_row(path: str, i: int, rec: dict) -> dict:
 _COLUMNS = [f.name for f in WARC_SCHEMA.fields]
 
 
-def _records_pdf_chunks(path: str,
-                        chunk_rows: int = 256) -> Iterator[pd.DataFrame]:
+def _records_pdf_chunks(path: str, chunk_rows: int = 256,
+                        responses_only: bool = False
+                        ) -> Iterator[pd.DataFrame]:
     """Bounded Arrow batches from one file: records stream off disk and
     flush every ``chunk_rows`` rows — a 1 GB crawl file never materializes
-    as one DataFrame (ADVICE r3)."""
+    as one DataFrame (ADVICE r3). ``responses_only`` drops every other
+    record type here, before it is built into a row; ``record_idx`` still
+    counts every record in the file."""
     rows: list[dict] = []
     for i, rec in enumerate(_stream_records(path)):
+        if responses_only and rec["headers"].get("warc-type") != "response":
+            continue
         rows.append(_record_row(path, i, rec))
         if len(rows) >= chunk_rows:
             yield pd.DataFrame(rows, columns=_COLUMNS)
@@ -359,16 +364,17 @@ def _records_pdf_chunks(path: str,
 def read_warc(spark: SparkSession, paths: list[str],
               responses_only: bool = False) -> DataFrame:
     """Distributed WARC scan: one task per file (executor-side streaming;
-    the driver never touches record bytes)."""
+    record bytes never leave the executors). ``responses_only`` filters
+    inside the scan, so request/metadata/warcinfo records never cross the
+    Arrow boundary (in Common Crawl they are about two thirds of all
+    records)."""
     files = spark.createDataFrame([(p,) for p in sorted(paths)],
                                   "path string").repartition(len(paths))
 
     def _scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for p in pdf["path"]:
-                yield from _records_pdf_chunks(p)
+                yield from _records_pdf_chunks(
+                    p, responses_only=responses_only)
 
-    df = files.mapInPandas(_scan, WARC_SCHEMA)
-    if responses_only:
-        df = df.filter(df.warc_type == "response")
-    return df
+    return files.mapInPandas(_scan, WARC_SCHEMA)

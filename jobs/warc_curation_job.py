@@ -19,11 +19,16 @@ Usage (sandbox smoke — deterministic fixture segment):
         --output /tmp/curated_out
 
 Plan shape at crawl scale: the file list is the parallelism unit (60k
-files/segment); extraction and canonicalization are per-partition Arrow
-kernels (no shuffle); the two dedups are the only shuffles — url dedup
-keys on the canonical url, text dedup on an md5 digest, both plain
-groupBys that map-side combine. Quality filtering is pure Catalyst and
-runs before the text-digest shuffle so filtered rows never move.
+files/segment) and every record makes one Python pass — the scan drops
+non-response records before the Arrow boundary, and extraction and
+canonicalization share one per-partition Arrow kernel call (no shuffle).
+The two dedups are the only shuffles, both plain groupBys that map-side
+combine: url dedup keys on the canonical url, text dedup on an md5
+digest and carries the whole row as a min struct, so nothing joins back
+to an aggregate of itself and the upstream is planned once. Quality
+filtering is pure Catalyst and runs before the text-digest shuffle so
+filtered rows never move. The metrics manifest counts rows with
+``DataFrame.observe`` during the write instead of re-scanning.
 """
 
 from __future__ import annotations
@@ -37,16 +42,26 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import Observation, SparkSession, functions as F
 
 
 def curate(spark, paths, min_tokens: int):
+    """→ (raw, pages, scored, curated, counts). ``curated`` is the output
+    table; ``counts()`` returns the manifest's row counts, which ``raw``
+    and ``scored`` observe during the first action on ``curated``."""
     from air_health_gis_tools_spark.functions.html_text import html_to_text_udf
     from air_health_gis_tools_spark.functions.url import canonicalize_url_udf
     from air_health_gis_tools_spark.sources.warc import read_warc
 
-    raw = read_warc(spark, paths, responses_only=True)
-    pages = (raw.filter(F.col("http_status") == 200)
+    raw_obs, scored_obs = Observation(), Observation()
+    raw = read_warc(spark, paths, responses_only=True).observe(
+        raw_obs, F.count(F.lit(1)).alias("n_responses"),
+        F.count_if(F.col("http_status") == 200).alias("n_pages_200"))
+    # a null url is the only input with no canonical url; drop it here, not
+    # on url_norm, which Catalyst would push below the UDF projection and
+    # split the url kernel into a Python pass of its own
+    pages = (raw.filter((F.col("http_status") == 200)
+                        & F.col("url").isNotNull())
              .withColumn("text", html_to_text_udf(F.col("html")))
              .withColumn("_c", canonicalize_url_udf(F.col("url")))
              .select(F.col("_c.url_norm").alias("url_norm"),
@@ -60,13 +75,18 @@ def curate(spark, paths, min_tokens: int):
              .select("url_norm", "f.warc_ts", "f.host", "f.text",
                      "f.n_bytes"))
     scored = (first.withColumn("tokens", F.size(F.split("text", " ")))
-              .filter(F.col("tokens") >= min_tokens))
-    # exact text dedup across urls: keep lexicographically-first url per
-    # digest (deterministic, engine-independent)
-    keep = (scored.groupBy(F.md5(F.col("text")).alias("dig"))
-            .agg(F.min("url_norm").alias("url_norm")))
-    curated = scored.join(keep.select("url_norm"), "url_norm")
-    return raw, pages, scored, curated
+              .filter(F.col("tokens") >= min_tokens)
+              .observe(scored_obs,
+                       F.count(F.lit(1)).alias("n_after_quality")))
+    # exact text dedup across urls: keep the row with the lexicographically
+    # first url per digest (deterministic, engine-independent); url_norm is
+    # unique here, so the min struct is decided by it alone
+    curated = (scored.groupBy(F.md5(F.col("text")).alias("dig"))
+               .agg(F.min(F.struct("url_norm", "warc_ts", "host", "text",
+                                   "n_bytes", "tokens")).alias("k"))
+               .select("k.*"))
+    return (raw, pages, scored, curated,
+            lambda: {**raw_obs.get, **scored_obs.get})
 
 
 def main(argv=None):
@@ -94,16 +114,13 @@ def main(argv=None):
         raise SystemExit("need --warc-glob or --synthetic-pages")
 
     t0 = time.time()
-    raw, pages, scored, curated = curate(spark, paths, args.min_tokens)
+    *_, curated, counts = curate(spark, paths, args.min_tokens)
     out = os.path.join(args.output, "curated")
     curated.write.mode("overwrite").parquet(out)
-    n_out = spark.read.parquet(out).count()
     metrics = {
         "n_warc_files": len(paths),
-        "n_responses": raw.count(),
-        "n_pages_200": pages.count(),
-        "n_after_quality": scored.count(),
-        "n_curated": n_out,
+        **counts(),
+        "n_curated": spark.read.parquet(out).count(),
         "wall_s": round(time.time() - t0, 2),
     }
     with open(os.path.join(args.output, "metrics.json"), "w") as f:

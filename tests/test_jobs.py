@@ -77,3 +77,90 @@ def test_warc_curation_job(spark, tmp_path):
     got = (spark.read.parquet(os.path.join(out, "curated"))
            .select("url_norm").toPandas())
     assert set(got["url_norm"]) == keep_urls
+
+
+def _curation_segment(path):
+    """Hand-built segment covering every dedup rule: a recrawl a day later
+    under a non-canonical variant of a kept url (written first, with other
+    text), one text under two urls, a response with no target uri whose
+    text duplicates a kept page, a page below ``min_tokens``, and records
+    that are not 200 responses."""
+    from air_health_gis_tools_spark.sources.warc import (
+        http_response_block, write_warc_file, write_warc_record)
+
+    def page(words):
+        return http_response_block(f"<p>{words}</p>".encode())
+
+    a = page("alpha beta gamma delta epsilon")
+    a_later = page("alpha beta gamma delta epsilon revised")
+    dup = page("one text under two different urls")
+    short = page("too short")
+    recs = [
+        write_warc_record("warcinfo", None, "2021-06-01T00:00:00Z", "i0",
+                          b"software: test\r\n",
+                          content_type="application/warc-fields"),
+        write_warc_record(
+            "response",
+            "HTTPS://A.Example.COM:443/p/1?utm_source=feed&id=7",
+            "2021-06-02T08:00:00Z", "a-recrawl", a_later),
+        write_warc_record("response", "https://a.example.com/p/1?id=7",
+                          "2021-06-01T08:00:00Z", "a", a),
+        write_warc_record("response", "https://c.example.com/y",
+                          "2021-06-01T09:00:00Z", "c", dup),
+        write_warc_record("response", "https://b.example.com/x",
+                          "2021-06-01T10:00:00Z", "b", dup),
+        write_warc_record("response", None, "2021-06-01T07:00:00Z",
+                          "no-uri", a),
+        write_warc_record("response", "https://d.example.com/short",
+                          "2021-06-01T11:00:00Z", "short", short),
+        write_warc_record("response", "https://e.example.com/gone",
+                          "2021-06-01T12:00:00Z", "gone",
+                          http_response_block(b"<p>a b c d e f</p>",
+                                              status=404)),
+        write_warc_record("metadata", "https://a.example.com/p/1?id=7",
+                          "2021-06-01T08:00:00Z", "m0",
+                          b"fetchTimeMs: 7\r\n",
+                          content_type="application/warc-fields"),
+    ]
+    write_warc_file(path, recs)
+    return len(a), len(dup)
+
+
+def test_warc_curation_dedup_semantics(spark, tmp_path):
+    """Full curated rows on a segment with recrawls and duplicate texts:
+    first capture per canonical url, then the lexicographically-first url
+    per exact text; a response with no url never wins and never appears."""
+    from jobs.warc_curation_job import curate
+    path = str(tmp_path / "seg.warc.gz")
+    n_a, n_dup = _curation_segment(path)
+    *_, curated, counts = curate(spark, [path], min_tokens=5)
+    assert curated.columns == ["url_norm", "warc_ts", "host", "text",
+                               "n_bytes", "tokens"]
+    got = sorted((tuple(r) for r in curated.collect()), key=str)
+    ts = pd.Timestamp
+    assert got == [
+        ("https://a.example.com/p/1?id=7", ts("2021-06-01 08:00:00"),
+         "a.example.com", "alpha beta gamma delta epsilon", n_a, 5),
+        ("https://b.example.com/x", ts("2021-06-01 10:00:00"),
+         "b.example.com", "one text under two different urls", n_dup, 6),
+    ]
+    assert counts() == {"n_responses": 7, "n_pages_200": 6,
+                        "n_after_quality": 3}
+
+
+def test_warc_curation_single_pass_plan(spark, tmp_path):
+    """Each record is scanned, extracted and canonicalized once: one WARC
+    scan, one Python pass holding both UDFs, and no join back onto an
+    aggregate of the same upstream (which would plan the scan twice)."""
+    from jobs.warc_curation_job import curate
+    path = str(tmp_path / "seg.warc.gz")
+    _curation_segment(path)
+    plan = curate(spark, [path], min_tokens=5)[3]._jdf.queryExecution()
+    lines = plan.optimizedPlan().toString().splitlines()
+    nodes = [ln.lstrip(" :+-|").split(" ")[0] for ln in lines]
+    assert nodes.count("MapInPandas") == 1
+    assert nodes.count("ArrowEvalPython") == 1
+    udfs = next(ln for ln in lines if "ArrowEvalPython" in ln)
+    assert "html_to_text_udf" in udfs and "canonicalize_url_udf" in udfs
+    assert "Join" not in nodes
+    assert nodes.count("Aggregate") == 2

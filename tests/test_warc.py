@@ -151,6 +151,25 @@ def test_distributed_scan_matches_serial(spark, tmp_path):
     assert all(bytes(a) == b for a, b in zip(got["html"], exp["html"]))
 
 
+def test_responses_only_filters_inside_scan(spark, tmp_path):
+    """``responses_only`` is the full scan filtered to responses, row for
+    row with ``record_idx`` still counting every record in the file, and
+    the filter runs inside the scan: the plan has no Filter above it."""
+    paths = ensure_pages_warc(str(tmp_path / "warc"), 256, 2)
+    extra = str(tmp_path / "extra.warc.gz")
+    write_warc_file(extra, _sample_records())
+    paths.append(extra)
+    full = [tuple(r) for r in read_warc(spark, paths).collect()]
+    assert {r[2] for r in full} == {"warcinfo", "response", "metadata"}
+    want = sorted(r for r in full if r[2] == "response")
+    df = read_warc(spark, paths, responses_only=True)
+    got = sorted(tuple(r) for r in df.collect())
+    assert len(want) == 258
+    assert got == want
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "Filter" not in plan
+
+
 def test_q55_byte_identity(spark):
     """WARC → HTTP split → HTML extraction returns the generator's text
     byte-for-byte for every page (the north_star invariant through the
