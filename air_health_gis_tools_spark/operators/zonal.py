@@ -303,9 +303,11 @@ def point_tile_ids(df: DataFrame, rmax_px: int, tile_px: int,
     twice (hot-tile count + cogroup). Integer ``least/greatest`` + one
     4-element ``array`` keep the whole derivation in whole-stage codegen;
     the emitted (_tids, single, tile_id) values are bit-identical (same
-    candidate order into the same ``array_distinct``). Floor division via
-    the pmod form preserves the kernel's numpy ``//`` semantics for
-    negative frames.
+    candidate order into the same ``array_distinct``). Coordinates are
+    cast to BIGINT first (the kernels' ``astype(np.int64)``: any numeric
+    type, fractions truncated), then floor-divided via the pmod form,
+    which preserves the kernels' numpy ``//`` semantics for negative
+    frames.
     """
     assert 2 * rmax_px + 1 <= tile_px, "window spans >2 tiles per axis"
     ntx = 1 << 32
@@ -313,8 +315,8 @@ def point_tile_ids(df: DataFrame, rmax_px: int, tile_px: int,
     def fdiv(e: str, d: int) -> str:
         return f"((({e}) - pmod({e}, {d})) DIV {d})"
 
-    r0 = fdiv(y_col, xres)
-    c0 = fdiv(x_col, xres)
+    r0 = fdiv(f"CAST({y_col} AS BIGINT)", xres)
+    c0 = fdiv(f"CAST({x_col} AS BIGINT)", xres)
     tr_lo = fdiv(f"greatest({r0} - {rmax_px}, 0L)", tile_px)
     tr_hi = fdiv(f"least({r0} + {rmax_px}, {height - 1}L)", tile_px)
     tc_lo = fdiv(f"greatest({c0} - {rmax_px}, 0L)", tile_px)
@@ -644,12 +646,21 @@ def buffered_mean_convolve_all(points: DataFrame, tiles: DataFrame,
     # Catalyst (r6, guide §4.1 — the polygon_cover_cells pattern): two
     # sequence explodes in whole-stage codegen replace the per-row Python
     # loop through an Arrow boundary for every tile of the raster.
-    # explode_OUTER: sequences are provably non-empty (lo ≤ hi), and a
-    # plain explode's inferred size>0 filter would re-inline the range
-    # expressions below any upstream exchange (the tiled path's measured
-    # pathology).
+    # explode_OUTER: sequences are non-empty (lo ≤ hi for every tile
+    # inside the raster), and a plain explode's inferred size>0 filter
+    # would re-inline the range expressions below any upstream exchange
+    # (the tiled path's measured pathology). A tile outside the raster
+    # (lo > hi) fails fast: ``sequence`` would count DOWN and fan the tile
+    # out to superblocks it does not touch.
     def fdiv(e: str, d: int) -> str:
         return f"((({e}) - pmod({e}, {d})) DIV {d})"
+
+    def span(lo: str, hi: str, origin: str):
+        return F.expr(
+            f"CASE WHEN {lo} <= {hi} THEN sequence({lo}, {hi}) "
+            f"ELSE raise_error(concat('buffered_mean_convolve_all: tile "
+            f"{origin}=', CAST({origin} AS STRING), ' lies outside the "
+            f"raster')) END")
 
     r_lo = fdiv(f"greatest(CAST(row0 AS BIGINT) - {rmax}, 0L)", sb_px)
     r_hi_in = (f"least(CAST(row0 AS BIGINT) + h - 1 + {rmax}, "
@@ -660,10 +671,8 @@ def buffered_mean_convolve_all(points: DataFrame, tiles: DataFrame,
                f"{width - 1}L)")
     c_hi = f"least({fdiv(c_hi_in, sb_px)}, {nsc - 1}L)"
     contrib = (tiles
-               .withColumn("_sr", F.explode_outer(
-                   F.expr(f"sequence({r_lo}, {r_hi})")))
-               .withColumn("_sc", F.explode_outer(
-                   F.expr(f"sequence({c_lo}, {c_hi})")))
+               .withColumn("_sr", F.explode_outer(span(r_lo, r_hi, "row0")))
+               .withColumn("_sc", F.explode_outer(span(c_lo, c_hi, "col0")))
                .withColumn("sb",
                            F.col("_sr") * F.lit(1 << 32) + F.col("_sc"))
                .drop("_sr", "_sc"))

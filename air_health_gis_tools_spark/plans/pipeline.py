@@ -2,10 +2,20 @@
 
 Spark lifecycle replacing the reference's three entry points (SURVEY.md §3):
 
-    pages scan → geocode UDF → cell-encode (hex r7-9 + square) →
-    salted repartition on cell prefix (urban-skew defeat) →
+    pages scan → geocode UDF → cell-encode (hex r7-9) →
+    localCheckpoint (the point side, computed once per call) →
     [buffered zonal stats | kNN monitor | PIP exposure polygons] →
     final projection (wide per-buffer columns) → sink (+ lineage/metrics)
+
+The three result tables read ONE materialization of the point side: each
+sink action would otherwise re-run the pages scan, the geocode UDF and the
+cell encode (and the PIP branch's inferred ``isnotnull(cell)`` filter,
+pushed below the UDF projection, would plan the geocode UDF a second
+time). The checkpoint is lazy, so building the pipeline launches no job;
+the first sink computes it and ContextCleaner reclaims it once the result
+frames are gone. No exchange precedes it: none of the operators keys on a
+cell column (zonal/kNN/PIP are broadcast joins; the tiled and convolve_all
+strategies run their own tile- or superblock-keyed exchange).
 
 ``choose_zonal_strategy`` is the engine's only planner: the Python-side
 re-expression of the reference's Method 1/Method 2 gate
@@ -28,6 +38,7 @@ from ..operators.knn import knn_cell_join
 from ..operators.pip import pip_circle_counts
 from ..operators.zonal import (buffered_mean_convolve_all, buffered_stats,
                                buffered_stats_tiled)
+from ..sources.pages import page_id_expr_sql
 
 
 @dataclass
@@ -87,7 +98,6 @@ def choose_zonal_strategy(raster_px: int, n_points: int,
 
 def extract_pipeline(pages: DataFrame, monitors: DataFrame,
                      polys: DataFrame, buffers_m=None,
-                     salt_buckets: int = 64,
                      tiles: DataFrame | None = None,
                      tile_px: int = 256,
                      n_points_estimate: int = 1_000_000,
@@ -100,20 +110,14 @@ def extract_pipeline(pages: DataFrame, monitors: DataFrame,
     kernels.
     """
     buffers_m = list(buffers_m or G.BUFFERS_M)
-    pts = with_xy(pages.withColumn(
-        "doc_id",
-        F.expr("CAST(regexp_extract(url, '/page/(\\\\d+)$', 1) AS BIGINT)")),
-        id_col="doc_id")
+    pts = with_xy(pages.withColumn("doc_id",
+                                   F.expr(page_id_expr_sql("spark"))))
     pts = pts.withColumn("cell_hex_7", hex_cell_expr(7))
     pts = pts.withColumn("cell_hex_8", hex_cell_expr(8))
     pts = pts.withColumn("cell_hex_9", hex_cell_expr(9))
-    # salted repartition on cell prefix: urban clusters share cells, the
-    # salt spreads each hot cell over many buckets (SURVEY.md §7.4.4)
-    pts = pts.withColumn(
-        "salt", F.pmod(F.xxhash64("url"), F.lit(salt_buckets)))
-    pts = pts.repartition(F.col("cell_hex_7"), F.col("salt"))
     slim = pts.select("url", "doc_id", "x", "y",
                       "cell_hex_7", "cell_hex_8", "cell_hex_9")
+    slim = slim.localCheckpoint(eager=False)
 
     plan = choose_zonal_strategy(raster_px or G.RASTER_W * G.RASTER_H,
                                  n_points=n_points_estimate,

@@ -101,9 +101,10 @@ def main():
                               "plans", tag)
         os.makedirs(outdir, exist_ok=True)
         for name, fn in qs.items():
+            df = fn()
             with open(os.path.join(outdir, f"{name}.txt"), "w") as f:
-                f.write(fn()._sc._jvm.PythonSQLUtils.explainString(
-                    fn()._jdf.queryExecution(), "formatted"))
+                f.write(df._sc._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted"))
         print(f"wrote {len(qs)} plans to {outdir}")
         spark.stop()
         return

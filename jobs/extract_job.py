@@ -6,7 +6,7 @@ Usage (cluster):
     zip -r ahgts.zip air_health_gis_tools_spark
     spark-submit --py-files ahgts.zip jobs/extract_job.py \
         --pages /data/pages_parquet --output /out/extract \
-        --checkpoint /out/ckpt --buffers 700 1000 10000 --salt-buckets 256
+        --checkpoint /out/ckpt --buffers 700 1000 10000
 
 Usage (sandbox smoke):
     python jobs/extract_job.py --synthetic-pages 2000 --output /tmp/out \
@@ -14,6 +14,8 @@ Usage (sandbox smoke):
 
 The job writes three result tables (zonal, knn, pip) plus a lineage/metrics
 manifest; re-running with the same --checkpoint resumes unfinished buckets.
+The pages are scanned, geocoded and cell-encoded once per run: all three
+tables read one local checkpoint of the point side (plans/pipeline.py).
 """
 
 from __future__ import annotations
@@ -37,7 +39,6 @@ def main(argv=None):
     p.add_argument("--output", required=True)
     p.add_argument("--checkpoint", required=True)
     p.add_argument("--buffers", type=int, nargs="+", default=[700, 1000, 10000])
-    p.add_argument("--salt-buckets", type=int, default=64)
     p.add_argument("--resume-buckets", type=int, default=8,
                    help="lineage buckets for the resumable zonal stage")
     args = p.parse_args(argv)
@@ -63,8 +64,7 @@ def main(argv=None):
 
     t0 = time.perf_counter()
     out = extract_pipeline(pages, monitors_df(spark), polys_df(spark),
-                           buffers_m=args.buffers,
-                           salt_buckets=args.salt_buckets)
+                           buffers_m=args.buffers)
 
     store = CheckpointStore(args.checkpoint)
     zonal = out["zonal"].withColumn(

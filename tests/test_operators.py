@@ -86,6 +86,57 @@ def test_tiled_zonal_keeps_points_outside_coverage(spark, pts):
     assert row["n_valid_10000"] == 0 or np.isfinite(row["mean_10000"])
 
 
+def test_point_tile_ids_double_coordinates(spark, pts):
+    """Double-typed x/y take the kernels' ``astype(np.int64)`` path —
+    truncate toward zero, then floor-divide — and the tiled operator
+    accepts them with the same result as BIGINT coordinates."""
+    from air_health_gis_tools_spark.operators.zonal import point_tile_ids
+    rmax, tile = 10, 256
+    rng = np.random.default_rng(7)
+    xs = np.concatenate([[245_999.9, 246_000.4, -999.5, -1_000.5],
+                         rng.uniform(-50_000, 4_200_000, 300)])
+    ys = np.concatenate([[500_000.0, 500_000.0, 265_999.2, -0.25],
+                         rng.uniform(-50_000, 4_200_000, 300)])
+    pdf = pd.DataFrame({"doc_id": np.arange(len(xs)), "x": xs, "y": ys})
+    got = (point_tile_ids(spark.createDataFrame(pdf), rmax, tile)
+           .toPandas().groupby("doc_id"))
+    r0 = ys.astype(np.int64) // G.XRES
+    c0 = xs.astype(np.int64) // G.XRES
+    tr = (np.maximum(r0 - rmax, 0) // tile,
+          np.minimum(r0 + rmax, G.RASTER_H - 1) // tile)
+    tc = (np.maximum(c0 - rmax, 0) // tile,
+          np.minimum(c0 + rmax, G.RASTER_W - 1) // tile)
+    for i in range(len(xs)):
+        want = {int(r[i]) * (1 << 32) + int(c[i]) for r in tr for c in tc}
+        rows = got.get_group(i)
+        assert set(rows["tile_id"]) == want, (xs[i], ys[i])
+        assert (rows["single"] == (len(want) == 1)).all()
+    assert got.get_group(0)["tile_id"].tolist() == [1 << 32]
+    assert sorted(got.get_group(1)["tile_id"]) == [(1 << 32), (1 << 32) + 1]
+
+    tiles = synthetic_tile_table(spark, tile_px=tile)
+    dbl = pts.select("doc_id", F.col("x").cast("double").alias("x"),
+                     F.col("y").cast("double").alias("y"))
+    a = _sorted_pdf(buffered_stats_tiled(dbl, tiles, list(G.BUFFERS_M), tile))
+    b = _sorted_pdf(buffered_stats_tiled(pts, tiles, list(G.BUFFERS_M), tile))
+    pd.testing.assert_frame_equal(a, b, check_exact=True)
+
+
+@pytest.mark.parametrize("row0", [G.RASTER_H + 3000, -3000])
+def test_convolve_all_rejects_tile_outside_raster(spark, pts, row0):
+    """A tile row outside the raster has no superblock (lo > hi); it must
+    fail the job, not fan out over a descending superblock sequence."""
+    from air_health_gis_tools_spark.operators.zonal import (
+        buffered_mean_convolve_all)
+    tiles = synthetic_tile_table(spark, tile_px=256)
+    bad = tiles.withColumn(
+        "row0", F.when(F.col("tile_id") == 0, F.lit(row0))
+        .otherwise(F.col("row0")))
+    out = buffered_mean_convolve_all(pts, bad, list(G.BUFFERS_M), 256)
+    with pytest.raises(Exception, match="tile row0=-?[0-9]+ lies outside"):
+        out.collect()
+
+
 def test_knn_three_strategies_agree(spark, pts):
     ids = np.arange(G.N_MONITORS, dtype=np.int64)
     mx, my = G.monitor_xy_np(ids)

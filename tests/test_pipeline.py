@@ -6,16 +6,24 @@ import hashlib
 import os
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from air_health_gis_tools_spark import geo_synth as G
+from air_health_gis_tools_spark.functions.cells import hex_cell_expr
+from air_health_gis_tools_spark.functions.geocode import with_xy
+from air_health_gis_tools_spark.operators.knn import knn_cell_join
+from air_health_gis_tools_spark.operators.pip import pip_circle_counts
+from air_health_gis_tools_spark.operators.zonal import (buffered_stats,
+                                                        buffered_stats_tiled)
 from air_health_gis_tools_spark.plans.lineage import (CheckpointStore,
                                                       metrics_df, run_stage)
 from air_health_gis_tools_spark.plans.pipeline import (choose_zonal_strategy,
                                                        extract_pipeline)
 from air_health_gis_tools_spark.plans.queries import monitors_df, polys_df
-from air_health_gis_tools_spark.sources.pages import synthetic_pages
+from air_health_gis_tools_spark.sources.pages import (page_id_expr_sql,
+                                                      synthetic_pages)
 from air_health_gis_tools_spark.streaming.events import (events_hourly_batch,
                                                          run_stream_once)
 from tests.conftest import SF_DIR
@@ -106,6 +114,80 @@ def test_pipeline_executes_every_planner_strategy(spark):
     got = {r["url"]: (r["mean_10000"], r["n_valid_10000"])
            for r in conv["zonal"].collect()}
     assert got == want
+
+
+def test_pipeline_point_side_runs_once(spark):
+    """Building the pipeline launches no job, and zonal/kNN/PIP all read
+    one checkpoint of the point side: no REPARTITION_BY_COL exchange, and
+    neither the pages source (MapInPandas) nor the geocode UDF appears in
+    any executed plan — they sit behind the checkpoint's RDD scan."""
+    sc = spark.sparkContext
+    pages = synthetic_pages(spark, 500)
+    mons, polys = monitors_df(spark), polys_df(spark)
+    group = "test_pipeline_point_side_runs_once"
+    sc.setJobGroup(group, "extract_pipeline build")
+    try:
+        out = extract_pipeline(pages, mons, polys)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert out["plan"].strategy == "broadcast"
+    for table in ("zonal", "knn", "pip"):
+        df = out[table]
+        assert df.count() > 0
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Scan ExistingRDD" in plan, table
+        assert "REPARTITION_BY_COL" not in plan, table
+        assert "MapInPandas" not in plan, table
+        assert "ArrowEvalPython [_geo" not in plan, table
+
+
+def _point_side(pages):
+    """The pipeline's point side as a plain (un-materialized) plan."""
+    pts = with_xy(pages.withColumn("doc_id",
+                                   F.expr(page_id_expr_sql("spark"))))
+    for res in (7, 8, 9):
+        pts = pts.withColumn(f"cell_hex_{res}", hex_cell_expr(res))
+    return pts.select("url", "doc_id", "x", "y",
+                      "cell_hex_7", "cell_hex_8", "cell_hex_9")
+
+
+def _assert_same_rows(got, want, key):
+    a = got.toPandas().sort_values(key).reset_index(drop=True)
+    b = want.toPandas().sort_values(key).reset_index(drop=True)
+    pd.testing.assert_frame_equal(a, b, check_exact=True)
+
+
+def test_pipeline_checkpoint_equals_unmaterialized_operators(spark):
+    """The checkpointed point side changes no value: every result table
+    equals its operator applied to the plain geocode + cells plan, row for
+    row and column for column (broadcast strategy, and the tiled
+    strategy's joined-back zonal table)."""
+    from air_health_gis_tools_spark.sources.raster import synthetic_tile_table
+    pages = synthetic_pages(spark, 2400)
+    mons, polys = monitors_df(spark), polys_df(spark)
+    pts = _point_side(pages)
+    # every 5th page sits in one of 5 urban hotspots (±20 km): the five
+    # busiest 40 km bins hold far more than the ~5 points of uniform pages
+    xy = pts.select("x", "y").toPandas() // 40_000
+    assert xy.value_counts().nlargest(5).sum() >= 100
+
+    out = extract_pipeline(pages, mons, polys)
+    buffers = list(G.BUFFERS_M)
+    _assert_same_rows(out["zonal"], buffered_stats(pts, buffers), "doc_id")
+    _assert_same_rows(out["knn"], knn_cell_join(pts, mons, G.KNN_BOUND_M),
+                      "doc_id")
+    _assert_same_rows(out["pip"], pip_circle_counts(pts, polys), "poly_id")
+
+    tiles = synthetic_tile_table(spark, tile_px=256)
+    tiled = extract_pipeline(pages, mons, polys, tiles=tiles,
+                             n_points_estimate=10**5, raster_px=10**11)
+    assert tiled["plan"].strategy == "tiled"
+    want = pts.select("url", "doc_id").join(
+        buffered_stats_tiled(pts, tiles, buffers, 256, id_col="doc_id"),
+        "doc_id")
+    _assert_same_rows(tiled["zonal"], want, "doc_id")
 
 
 def test_pipeline_broadcast_uses_supplied_tiles(spark):
