@@ -18,7 +18,6 @@ Layout
                   similarity search, multimodal plumbing
 - ``sources/``    raster tile tables, pages fixtures, readers
 - ``plans/``      end-to-end pipelines, kernel-order heuristic, lineage
-- ``streaming/``  Structured Streaming ingest (events)
 """
 
 __version__ = "0.1.0"

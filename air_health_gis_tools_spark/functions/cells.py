@@ -21,7 +21,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
-from ..geo_synth import HEX_I_SHIFT, HEX_PITCH, HEX_RES_SHIFT, XRES
+from ..geo_synth import HEX_I_SHIFT, HEX_PITCH, HEX_RES_SHIFT
 
 _OFFSETS = np.array([(di, dj) for di in (-1, 0, 1, 2) for dj in (-1, 0, 1, 2)],
                     dtype=np.int64)
@@ -58,17 +58,6 @@ def hex_cell_decode(cell: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarra
     i = (cell >> HEX_I_SHIFT) & ((1 << HEX_I_SHIFT) - 1)
     j = cell & ((1 << HEX_I_SHIFT) - 1)
     return res, i, j
-
-
-def hex_cell_center(cell: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    res, i, j = hex_cell_decode(np.asarray(cell, dtype=np.int64))
-    w = np.empty_like(i)
-    h = np.empty_like(j)
-    for r, (pw, ph) in HEX_PITCH.items():
-        m = res == r
-        w[m] = pw
-        h[m] = ph
-    return i * w, j * h
 
 
 def hex_cell_udf(res: int):
@@ -133,36 +122,7 @@ def hex_cell_expr(res: int, x_col: str = "x", y_col: str = "y"):
 # path — real spherical S2 lives in functions/s2.py)
 # --------------------------------------------------------------------------
 
-def square_cell_np(x: np.ndarray, y: np.ndarray, size_m: int) -> np.ndarray:
-    x = x.astype(np.int64)
-    y = y.astype(np.int64)
-    return (y // size_m) * (1 << 32) + (x // size_m)
-
-
 def square_cell_sql(x_expr: str, y_expr: str, size_m: int, dialect: str) -> str:
     div = "DIV" if dialect == "spark" else "//"
     return (f"((({y_expr}) {div} {size_m}) * 4294967296 "
             f"+ (({x_expr}) {div} {size_m}))")
-
-
-def square_cell_udf(size_m: int):
-    @F.pandas_udf(LongType())
-    def _udf(x: pd.Series, y: pd.Series) -> pd.Series:
-        return pd.Series(square_cell_np(x.to_numpy(), y.to_numpy(), size_m))
-    return _udf
-
-
-# --------------------------------------------------------------------------
-# raster pixel assignment (the reference's affine-inverse join key, J1/J3)
-# --------------------------------------------------------------------------
-
-def pixel_floor_np(v: np.ndarray) -> np.ndarray:
-    """Truncation assignment (Archived_scripts/utils.py:47-67 semantics;
-    == floor in our positive frame)."""
-    return v.astype(np.int64) // XRES
-
-
-def pixel_nearest_np(v: np.ndarray) -> np.ndarray:
-    """'nearest' rounding (srg-dev/calculate_focal_mean.py:90 semantics),
-    exact integer half-up: floor((2v + XRES) / (2*XRES))."""
-    return (v.astype(np.int64) * 2 + XRES) // (2 * XRES)

@@ -1,9 +1,8 @@
 """Text-analysis kernels for web-scale training-data pipelines.
 
-All built-in-first: token counting, quality scoring and year extraction are
-pure Catalyst expressions (JVM-side, whole-stage-codegen'd — UDFs are the
-slow path). Language ID and simhash are Arrow kernels (batched NumPy / pandas
-string ops, no per-row Python).
+All built-in-first: token counting is a pure Catalyst expression (JVM-side,
+whole-stage-codegen'd — UDFs are the slow path). Language ID and simhash are
+Arrow kernels (batched NumPy / pandas string ops, no per-row Python).
 """
 
 from __future__ import annotations
@@ -24,21 +23,6 @@ def token_count(text: Column) -> Column:
     """Whitespace token count; split semantics chosen to match ANSI SQL
     (DuckDB ``string_split``): empty string → 1 empty token."""
     return F.size(F.split(text, " "))
-
-
-def quality_score(text: Column, n_chars: Column) -> Column:
-    """Deterministic quality heuristic: mean token length (integer-exact
-    components only, so the oracle reproduces it bit-for-bit)."""
-    toks = token_count(text)
-    return (n_chars.cast("double") / toks.cast("double")).alias("quality")
-
-
-def year_from_name(name: Column, pattern: str = r"(\d+)") -> Column:
-    """F5 semantics (reference Archived_scripts/
-    extract_point_from_raster_buffer.py:310: regex year from filename,
-    ``'20' + yy``)."""
-    return F.concat(F.lit("20"), F.lpad(F.regexp_extract(name, pattern, 1),
-                                        2, "0"))
 
 
 # --------------------------------------------------------------------------

@@ -201,13 +201,6 @@ def hex_candidates_values_sql() -> str:
     return f"(VALUES {rows})"
 
 
-def tables_sql(dialect: str) -> dict[str, str]:
-    """Convenience CTE bodies shared by oracle queries."""
-    px, py = point_xy_sql("doc_id", dialect)
-    mx, my = monitor_xy_sql("m.id", dialect)
-    return {"point_x": px, "point_y": py, "mon_x": mx, "mon_y": my}
-
-
 # --------------------------------------------------------------------------
 # numpy mirrors (used inside Arrow kernels; must match the SQL above exactly)
 # --------------------------------------------------------------------------

@@ -36,7 +36,7 @@ from pyspark.storagelevel import StorageLevel
 # (node:int64, deg:int64) rows — 1M nodes ≈ 16 MB dense, comfortably inside
 # a 1 GiB driver / executor broadcast budget; past it the degree join falls
 # back to a distributed join (AQE picks shuffle-hash: the degree table has
-# no useful sort order). Mirrors knn.BROADCAST_KERNEL_MAX_DIM's role.
+# no useful sort order).
 BROADCAST_DEG_MAX_NODES = 1_000_000
 
 

@@ -14,10 +14,8 @@ shuffle on the fact side); broadcast hash equi-join on cell; exact
 containment predicate; then partial/final ``groupBy(poly).count()``. At
 10^12 documents only the polygon dim and the final counts ever shuffle.
 
-``points_in_polygon_np`` adds general (non-convex) polygon support via a
-vectorized even-odd ray-casting kernel over vertex arrays — the pure-NumPy
-replacement for shapely (unavailable in this environment), validated in
-tests against a reference implementation of the crossing-number rule.
+``radius_count`` is the same cell equi-join shape for the ball query;
+``radius_count_np`` is its broadcast-kernel twin, timed by ``bench.py``.
 """
 
 from __future__ import annotations
@@ -66,8 +64,7 @@ def pip_circle_counts(points: DataFrame, polys: DataFrame,
                       group_cols: list[str] | None = None,
                       cell_m: int = CELL_M_DEFAULT,
                       x_col: str = "x", y_col: str = "y",
-                      poly_id_col: str = "poly_id",
-                      strategy: str = "auto") -> DataFrame:
+                      poly_id_col: str = "poly_id") -> DataFrame:
     """Count points inside each circular polygon (per optional group cols).
 
     Exact semantics: dx² + dy² ≤ r² (integer). Returns
@@ -75,24 +72,8 @@ def pip_circle_counts(points: DataFrame, polys: DataFrame,
     (the reference's rowSums yields 0 counts too, Active Fires.R:33-35) —
     zero-fill is per polygon (cross of observed group values) only when
     group_cols is empty; grouped variants return observed combinations.
-
-    ``strategy``: 'auto'/'join' use the cell-explode broadcast join (the
-    measured winner at every scale — whole-stage codegen, no Arrow
-    transfer); 'kernel' uses ``pip_circle_counts_np`` (CSR cell grid +
-    map-side partial counts inside the Arrow kernel, r3) — equivalent
-    results, kept for Python-side fusion scenarios.
     """
     group_cols = group_cols or []
-    if not group_cols and strategy == "kernel":
-        # measured r3: the JVM codegen broadcast join beats the Arrow
-        # kernel at every scale on this box (the Arrow x/y transfer alone
-        # costs more than the whole join) — so 'auto' stays on the join;
-        # the CSR map-side-partial kernel remains available (and
-        # equivalence-tested) for environments where Python-side fusion
-        # with other kernels amortizes the transfer
-        return pip_circle_counts_np(points, polys, cell_m=cell_m,
-                                    x_col=x_col, y_col=y_col,
-                                    poly_id_col=poly_id_col)
     covered = polygon_cover_cells(polys, cell_m)
     pts = points.withColumn(
         "cell",
@@ -118,100 +99,6 @@ def pip_circle_counts(points: DataFrame, polys: DataFrame,
             .join(F.broadcast(hits), poly_id_col, "left")
             .select(poly_id_col,
                     F.coalesce(F.col("n_points"), F.lit(0)).alias("n_points")))
-
-
-MAX_NP_POLYS = 100_000           # broadcast-dim gate (see docstring)
-
-
-def pip_circle_counts_np(points: DataFrame, polys: DataFrame,
-                         cell_m: int = CELL_M_DEFAULT,
-                         x_col: str = "x", y_col: str = "y",
-                         poly_id_col: str = "poly_id",
-                         max_polys: int = MAX_NP_POLYS) -> DataFrame:
-    """Map-side-partial PIP for SMALL polygon dims (r3, VERDICT scaling
-    item): the cell-explode join materializes points × covering-polygon
-    candidate rows just to count them — here the SAME cell pruning runs
-    inside the Arrow kernel as a broadcast CSR grid (cell → covering poly
-    indices), fully vectorized (cell gather → repeat-expand the nonzero
-    candidates → one distance test per candidate pair →
-    ``np.add.at`` partial counts). A partition ships exactly |polys|
-    partial rows; the final combine sums ~partitions × |polys| tiny rows.
-    Per-core work is a pure integer sweep — the shape that gives the zonal
-    kernel its 0.97 scaling efficiency. Results are bit-identical to the
-    join plan (same integer predicate); equivalence is pinned in tests.
-
-    The small-dim gate is ENFORCED (VERDICT r3 #8, mirroring
-    tile_table_to_array's max_px): the CSR build is a driver-side loop
-    over polys × covering cells, so a large dim must take the distributed
-    cell-join path (pip_circle_counts) instead of OOMing the driver. The
-    gate shares the collect the kernel needs anyway — limit(max+1) bounds
-    it, so an oversized dim costs one capped job, not a full count plus a
-    second scan (r4 review)."""
-    rows = (polys.select(poly_id_col, "cx", "cy", "r")
-            .limit(max_polys + 1).collect())
-    if len(rows) > max_polys:
-        raise ValueError(
-            f"pip_circle_counts_np: polygon dim exceeds "
-            f"max_polys={max_polys}; this kernel builds a driver-side "
-            "broadcast CSR grid and is gated to small dims — use "
-            "pip_circle_counts (distributed cell join) for large dims")
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    cxs = np.array([r[1] for r in rows], dtype=np.int64)
-    cys = np.array([r[2] for r in rows], dtype=np.int64)
-    rr = np.array([r[3] for r in rows], dtype=np.int64)
-    r2 = rr ** 2
-    # CSR cell grid over the polygon bboxes (driver-side; |polys| is small
-    # by the strategy gate). Cells outside the grid contain no polygons.
-    ci_lo = (cxs - rr) // cell_m
-    ci_hi = (cxs + rr) // cell_m
-    cj_lo = (cys - rr) // cell_m
-    cj_hi = (cys + rr) // cell_m
-    gi0, gi1 = int(ci_lo.min()), int(ci_hi.max())
-    gj0, gj1 = int(cj_lo.min()), int(cj_hi.max())
-    nci, ncj = gi1 - gi0 + 1, gj1 - gj0 + 1
-    cell_lists: list[list[int]] = [[] for _ in range(nci * ncj)]
-    for p in range(len(ids)):
-        for ci in range(int(ci_lo[p]), int(ci_hi[p]) + 1):
-            for cj in range(int(cj_lo[p]), int(cj_hi[p]) + 1):
-                cell_lists[(ci - gi0) * ncj + (cj - gj0)].append(p)
-    counts = np.array([len(c) for c in cell_lists], dtype=np.int64)
-    cell_start = np.concatenate([[0], np.cumsum(counts)])
-    flat_polys = np.array([p for c in cell_lists for p in c],
-                          dtype=np.int64)
-
-    def _partials(batches):
-        acc = np.zeros(len(ids), dtype=np.int64)
-        for pdf in batches:
-            xs = pdf[x_col].to_numpy().astype(np.int64)
-            ys = pdf[y_col].to_numpy().astype(np.int64)
-            ci = xs // cell_m - gi0
-            cj = ys // cell_m - gj0
-            inb = (ci >= 0) & (ci < nci) & (cj >= 0) & (cj < ncj)
-            cell = np.where(inb, ci * ncj + cj, 0)
-            k = np.where(inb, counts[cell], 0)
-            nz = np.flatnonzero(k)
-            if not len(nz):
-                continue
-            # expand candidates: one row per (point, covering-poly) pair
-            reps = k[nz]
-            px = np.repeat(xs[nz], reps)
-            py = np.repeat(ys[nz], reps)
-            starts = cell_start[cell[nz]]
-            # flat indices: start_i + 0..reps_i-1 for each point i
-            offs = np.arange(reps.sum(), dtype=np.int64) \
-                - np.repeat(np.cumsum(reps) - reps, reps)
-            pi = flat_polys[np.repeat(starts, reps) + offs]
-            dx = px - cxs[pi]
-            dy = py - cys[pi]
-            inside = (dx * dx + dy * dy) <= r2[pi]
-            np.add.at(acc, pi[inside], 1)
-        # one partial row per polygon per partition (zeros included → the
-        # final sum also zero-fills empty polygons)
-        yield pd.DataFrame({poly_id_col: ids, "pc": acc})
-
-    part = points.select(x_col, y_col).mapInPandas(
-        _partials, f"{poly_id_col} long, pc long")
-    return part.groupBy(poly_id_col).agg(F.sum("pc").alias("n_points"))
 
 
 def radius_count(points: DataFrame, targets: DataFrame, radius_m: int,
@@ -274,65 +161,3 @@ def radius_count_np(points: DataFrame, target_xy: tuple[np.ndarray, np.ndarray],
     return points.select(id_col, x_col, y_col).withColumn(
         "n_in_radius", _cnt(F.col(x_col), F.col(y_col))) \
         .select(id_col, "n_in_radius")
-
-
-# --------------------------------------------------------------------------
-# general polygons: vectorized even-odd ray casting (shapely replacement)
-# --------------------------------------------------------------------------
-
-def points_in_polygon_np(px: np.ndarray, py: np.ndarray,
-                         vx: np.ndarray, vy: np.ndarray) -> np.ndarray:
-    """Even-odd (crossing-number) containment of points in ONE polygon.
-
-    ``vx, vy``: polygon vertices (closed or open ring). Boundary points are
-    resolved by the half-open edge rule (consistent, not symmetric) — exact
-    for float inputs; our oracle-verified queries use circles instead, this
-    kernel backs the general-polygon API surface."""
-    px = np.asarray(px, dtype=np.float64)[:, None]
-    py = np.asarray(py, dtype=np.float64)[:, None]
-    vx = np.asarray(vx, dtype=np.float64)
-    vy = np.asarray(vy, dtype=np.float64)
-    x1, y1 = vx[None, :], vy[None, :]
-    x2, y2 = np.roll(vx, -1)[None, :], np.roll(vy, -1)[None, :]
-    cond = (y1 > py) != (y2 > py)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        xint = x1 + (py - y1) * (x2 - x1) / (y2 - y1)
-    crossing = cond & (px < xint)
-    return crossing.sum(axis=1) % 2 == 1
-
-
-def pip_polygon_counts(points: DataFrame, poly_vertices: dict[int, np.ndarray],
-                       cell_m: int = CELL_M_DEFAULT,
-                       id_col: str = "doc_id",
-                       x_col: str = "x", y_col: str = "y") -> DataFrame:
-    """General-polygon PIP: broadcast prepared vertex arrays, cell-prefilter
-    by bbox, exact ray-cast kernel. poly_vertices: {poly_id: (n,2) array}."""
-    prep = {int(k): (np.ascontiguousarray(v[:, 0]),
-                     np.ascontiguousarray(v[:, 1]),
-                     float(v[:, 0].min()), float(v[:, 0].max()),
-                     float(v[:, 1].min()), float(v[:, 1].max()))
-            for k, v in poly_vertices.items()}
-    spark = points.sparkSession
-    bc = spark.sparkContext.broadcast(prep)
-    schema = T.ArrayType(T.LongType())
-
-    @F.pandas_udf(schema)
-    def _hits(x: pd.Series, y: pd.Series) -> pd.Series:
-        xs = x.to_numpy().astype(np.float64)
-        ys = y.to_numpy().astype(np.float64)
-        res = [[] for _ in range(len(xs))]
-        for pid, (vx, vy, x0, x1, y0, y1) in bc.value.items():
-            box = (xs >= x0) & (xs <= x1) & (ys >= y0) & (ys <= y1)
-            if not box.any():
-                continue
-            idx = np.flatnonzero(box)
-            ins = points_in_polygon_np(xs[idx], ys[idx], vx, vy)
-            for i in idx[ins]:
-                res[i].append(pid)
-        return pd.Series(res)
-
-    return (points.select(id_col, x_col, y_col)
-            .withColumn("poly_id", F.explode(_hits(F.col(x_col),
-                                                   F.col(y_col))))
-            .groupBy("poly_id")
-            .agg(F.count(F.lit(1)).alias("n_points")))

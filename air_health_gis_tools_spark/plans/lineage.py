@@ -153,29 +153,17 @@ class SnapshotTable:
     def manifest(self, version: int | None = None) -> dict:
         v = self.current_version() if version is None else version
         if v == 0:
-            return {"version": 0, "op": "empty", "buckets": {},
-                    "properties": {}}
+            return {"version": 0, "op": "empty", "buckets": {}}
         with open(self._manifest_path(v)) as f:
             return json.load(f)
 
-    def properties(self) -> dict:
-        """Snapshot properties of the CURRENT version (Iceberg snapshot
-        summary analog) — carried forward commit-to-commit and swapped in
-        atomically with the data pointer, so a property and the rows it
-        describes become visible in the same instant (the streaming
-        exactly-once hook, ADVICE r3)."""
-        return self.manifest().get("properties", {})
-
     # -- commits -----------------------------------------------------------
     def commit(self, df: DataFrame, part_col: str, op: str = "overwrite",
-               buckets: list | None = None,
-               properties: dict | None = None) -> int:
+               buckets: list | None = None) -> int:
         """Write ``df`` partitioned on ``part_col`` as the next snapshot.
         ``op='overwrite'`` replaces the listed buckets (others carry over
         from the parent snapshot); ``op='append'`` adds the new files
-        ALONGSIDE the parent's files for the same buckets. ``properties``
-        merge into the parent's snapshot properties and become visible in
-        the SAME atomic pointer swap as the data."""
+        ALONGSIDE the parent's files for the same buckets."""
         assert op in ("append", "overwrite")
         spark = df.sparkSession
         v = self.current_version() + 1
@@ -199,9 +187,7 @@ class SnapshotTable:
             else:
                 new_buckets[b] = {"paths": [path], "rows": n}
         man = {"version": v, "op": op, "parent": parent["version"],
-               "buckets": new_buckets,
-               "properties": {**parent.get("properties", {}),
-                              **(properties or {})}}
+               "buckets": new_buckets}
         with open(self._manifest_path(v), "w") as f:
             json.dump(man, f, indent=1, sort_keys=True)
         tmp = self._ptr + ".tmp"
@@ -237,9 +223,9 @@ class SnapshotTable:
         whose file count exceeds the target into one fresh prefix and
         commit the rewrite as a new snapshot (op='compact'). Data is
         bit-identical (pure rewrite); older snapshots keep reading their
-        original files until ``expire_snapshots`` drops them. Streaming
-        ingest appends one prefix per micro-batch, so periodic compaction
-        is what keeps the file count — and scan task count — bounded."""
+        original files until ``expire_snapshots`` drops them. Every append
+        commit adds one prefix, so periodic compaction is what keeps the
+        file count — and scan task count — bounded."""
         parent = self.manifest()
         v = self.current_version() + 1
         data_root = os.path.join(self.root, "data", f"v{v}")
@@ -262,8 +248,7 @@ class SnapshotTable:
         if not rewrote:
             return parent["version"]
         man = {"version": v, "op": "compact", "parent": parent["version"],
-               "buckets": new_buckets,
-               "properties": dict(parent.get("properties", {}))}
+               "buckets": new_buckets}
         with open(self._manifest_path(v), "w") as f:
             json.dump(man, f, indent=1, sort_keys=True)
         tmp = self._ptr + ".tmp"

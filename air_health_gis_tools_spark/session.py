@@ -15,6 +15,16 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _default_driver_mem() -> str:
+    """Two fifths of physical memory (``SPARK_DRIVER_MEM`` overrides it):
+    the rest stays for the Python workers and the page cache, so the heap
+    cannot outgrow the host."""
+    with open("/proc/meminfo") as f:
+        total_kb = int(next(ln for ln in f
+                            if ln.startswith("MemTotal:")).split()[1])
+    return f"{total_kb * 2 // 5 // 1024}m"
+
+
 def get_spark(app: str = "air_health_gis_tools_spark",
               cpus: int | None = None,
               shuffle_partitions: int | None = None,
@@ -32,7 +42,8 @@ def get_spark(app: str = "air_health_gis_tools_spark",
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
     )
     # shuffle/spill on tmpfs when available: local-mode shuffles otherwise

@@ -108,9 +108,6 @@ def main():
     n_polys = int(os.environ.get("SPARK_GRAFT_PIP_POLYS", "500"))
     run("q07_pip_600k", lambda: pip_circle_counts(
         pts, Q.polys_df(spark, n_polys)).collect())
-    if only is not None:   # scaling-evidence comparison row only
-        run("q07_pip_kernel_600k", lambda: pip_circle_counts(
-            pts, Q.polys_df(spark, n_polys), strategy="kernel").collect())
     run("q09_radius_600k", lambda: radius_count_np(
         pts, (mxs, mys), 25_000)
         .select(F.sum("n_in_radius")).collect())

@@ -36,18 +36,10 @@ from air_health_gis_tools_spark.operators.zonal import (buffered_stats,
 from air_health_gis_tools_spark.plans import queries as Q
 from air_health_gis_tools_spark.session import get_spark
 from air_health_gis_tools_spark.sources.raster import synthetic_tile_table
+from bench import bench_points
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-
-def bench_points(spark):
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    ids = li.select(
-        (F.col("l_orderkey") * 8 + F.col("l_linenumber")).alias("doc_id"))
-    ids = ids.repartition(CPUS * 2)
-    x, y = G.point_xy_sql("doc_id", "spark")
-    return ids.select("doc_id", F.expr(x).alias("x"), F.expr(y).alias("y"))
 
 
 def build_queries(spark):

@@ -165,11 +165,7 @@ def main():
         "with the dim prep now pure Catalyst "
         "(`operators/pip.py:polygon_cover_cells` — no Python-worker "
         "round-trip inside the timed job); it clears the bar at 921.6M "
-        "points. A map-side-partial Arrow kernel "
-        "(`pip_circle_counts_np`, CSR cell grid, |polys| partial rows "
-        "per partition) ships beside it, equivalence-tested, for "
-        "Python-side fusion scenarios — the JVM join measured faster "
-        "at every scale on this box.",
+        "points.",
     ]
     m10 = os.path.join(HERE, "BENCH", "suite_mult10.json")
     if os.path.exists(m10):

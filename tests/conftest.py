@@ -15,7 +15,8 @@ SF_DIR_MED = os.environ.get("SPARK_GRAFT_TEST_SF_MED", "/root/testdata/sf0.01")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", cpus=8, shuffle_partitions=8)
+    s = get_spark("tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")),
+                  shuffle_partitions=8)
     yield s
 
 

@@ -13,10 +13,7 @@ from air_health_gis_tools_spark import geo_synth as G
 from air_health_gis_tools_spark.functions.cells import hex_assign_np
 from air_health_gis_tools_spark.functions.geocode import with_xy
 from air_health_gis_tools_spark.operators.knn import (knn_broadcast_np,
-                                                      knn_cell_join,
-                                                      knn_ring_np)
-from air_health_gis_tools_spark.operators.pip import (pip_polygon_counts,
-                                                      points_in_polygon_np)
+                                                      knn_cell_join)
 from air_health_gis_tools_spark.operators.zonal import (buffered_stats,
                                                         buffered_stats_tiled)
 from air_health_gis_tools_spark.sources.raster import synthetic_tile_table
@@ -137,7 +134,7 @@ def test_convolve_all_rejects_tile_outside_raster(spark, pts, row0):
         out.collect()
 
 
-def test_knn_three_strategies_agree(spark, pts):
+def test_knn_cell_join_equals_broadcast(spark, pts):
     ids = np.arange(G.N_MONITORS, dtype=np.int64)
     mx, my = G.monitor_xy_np(ids)
     from air_health_gis_tools_spark.plans.queries import monitors_df
@@ -145,11 +142,8 @@ def test_knn_three_strategies_agree(spark, pts):
                     .select("doc_id", "monitor_id", "dist_m"))
     b = _sorted_pdf(knn_broadcast_np(pts, (mx, my, ids), G.KNN_BOUND_M)
                     .select("doc_id", "monitor_id", "dist_m"))
-    c = _sorted_pdf(knn_ring_np(pts, (mx, my, ids), G.KNN_BOUND_M)
-                    .select("doc_id", "monitor_id", "dist_m"))
-    for other, name in ((b, "broadcast"), (c, "ring")):
-        pd.testing.assert_frame_equal(a, other, check_dtype=False,
-                                      obj=f"cell_join vs {name}")
+    pd.testing.assert_frame_equal(a, b, check_dtype=False,
+                                  obj="cell_join vs broadcast")
 
 
 def test_radius_kernel_equals_cell_join(spark, pts):
@@ -163,78 +157,26 @@ def test_radius_kernel_equals_cell_join(spark, pts):
     pd.testing.assert_frame_equal(a, b, check_dtype=False)
 
 
-def test_knn_auto_picks_kernel_and_matches(spark, pts):
-    from air_health_gis_tools_spark.operators.knn import knn_auto
-    from air_health_gis_tools_spark.plans.queries import monitors_df
-    a = _sorted_pdf(knn_auto(pts, monitors_df(spark), G.KNN_BOUND_M)
-                    .select("doc_id", "monitor_id", "dist_m"))
-    b = _sorted_pdf(knn_cell_join(pts, monitors_df(spark), G.KNN_BOUND_M)
-                    .select("doc_id", "monitor_id", "dist_m"))
-    pd.testing.assert_frame_equal(a, b, check_dtype=False)
-
-
-def test_knn_ring_expands_past_first_hit():
-    """A nearer monitor in ring k+1 must beat a ring-k hit (SURVEY §7.4.6)."""
-    # point near the right edge of its cell; monitor A in same cell but far
-    # left; monitor B in next cell, just across the boundary (closer).
+@pytest.mark.parametrize("kernel", ["cell_join", "broadcast"])
+def test_knn_nearest_across_cell_border(spark, kernel):
+    """A monitor just across a cell border must beat a same-cell hit
+    (SURVEY §7.4.6): the point sits 10 m left of the border, monitor 10 is
+    in its cell ~50 km away, monitor 20 is in the next cell 510 m away."""
     cell = 50_000
-    px, py = 2 * cell - 10, cell // 2          # 10 m left of cell border
-    ax, ay = cell + 5, cell // 2               # same cell, ~49 995 m away
-    bx, by = 2 * cell + 500, cell // 2         # next cell, 510 m away
-    import pandas as pdl
-    from air_health_gis_tools_spark.session import get_spark
-    spark = get_spark("ring-test", cpus=2)
-    pdf = spark.createDataFrame(pdl.DataFrame(
-        {"doc_id": [1], "x": [px], "y": [py]}))
-    out = knn_ring_np(pdf, (np.array([ax, bx]), np.array([ay, by]),
-                            np.array([10, 20])), bound_m=cell,
-                      cell_m=cell).toPandas()
-    assert out["monitor_id"].iloc[0] == 20
-    assert out["dist_m"].iloc[0] == pytest.approx(510.0)
-
-
-def _octagon(cx, cy, r):
-    ang = np.arange(8) * (2 * np.pi / 8)
-    return np.stack([cx + r * np.cos(ang), cy + r * np.sin(ang)], axis=1)
-
-
-def test_ray_casting_matches_scalar_reference():
-    rng = np.random.default_rng(7)
-    poly = _octagon(0.0, 0.0, 10.0)
-    px = rng.uniform(-15, 15, 500)
-    py = rng.uniform(-15, 15, 500)
-    got = points_in_polygon_np(px, py, poly[:, 0], poly[:, 1])
-
-    def scalar_pip(x, y):  # classic crossing-number reference
-        inside = False
-        n = len(poly)
-        for i in range(n):
-            x1, y1 = poly[i]
-            x2, y2 = poly[(i + 1) % n]
-            if (y1 > y) != (y2 > y):
-                xi = x1 + (y - y1) * (x2 - x1) / (y2 - y1)
-                if x < xi:
-                    inside = not inside
-        return inside
-
-    want = np.array([scalar_pip(x, y) for x, y in zip(px, py)])
-    assert np.array_equal(got, want)
-
-
-def test_pip_polygon_counts_vs_bruteforce(spark, pts):
-    ids = np.arange(10, dtype=np.int64)
-    cx, cy, r = G.poly_circle_np(ids)
-    polys = {int(i): _octagon(float(cx[i]), float(cy[i]), float(r[i]))
-             for i in ids}
-    got = pip_polygon_counts(pts, polys).toPandas() \
-        .set_index("poly_id")["n_points"].to_dict()
-    pdf = pts.toPandas()
-    for i in ids:
-        v = polys[int(i)]
-        want = int(points_in_polygon_np(
-            pdf["x"].to_numpy(), pdf["y"].to_numpy(),
-            v[:, 0], v[:, 1]).sum())
-        assert got.get(int(i), 0) == want, f"poly {i}"
+    px, py = 2 * cell - 10, cell // 2
+    ax, ay = cell + 5, cell // 2
+    bx, by = 2 * cell + 500, cell // 2
+    pts1 = spark.createDataFrame([(1, px, py)], "doc_id long, x long, y long")
+    if kernel == "cell_join":
+        mons = spark.createDataFrame([(10, ax, ay), (20, bx, by)],
+                                     "monitor_id long, mx long, my long")
+        out = knn_cell_join(pts1, mons, bound_m=cell)
+    else:
+        out = knn_broadcast_np(pts1, (np.array([ax, bx]), np.array([ay, by]),
+                                      np.array([10, 20])), bound_m=cell)
+    row = out.toPandas().iloc[0]
+    assert row["monitor_id"] == 20
+    assert row["dist_m"] == pytest.approx(510.0)
 
 
 def test_hex_expr_equals_kernel(spark, pts):
@@ -302,36 +244,6 @@ def test_zonal_deterministic_across_partitionings(spark, pts):
         outs.append(_sorted_pdf(df.select("doc_id", "mean_10000",
                                           "n_valid_10000")))
     pd.testing.assert_frame_equal(outs[0], outs[1])
-
-
-def test_pip_kernel_equals_join_strategy(spark, pts):
-    """r3: the map-side-partial PIP kernel must return exactly the
-    cell-explode join plan's counts (same integer predicate), including
-    zero-filled empty polygons."""
-    from air_health_gis_tools_spark.operators.pip import pip_circle_counts
-    from air_health_gis_tools_spark.plans.queries import polys_df
-    polys = polys_df(spark)
-    a = {r["poly_id"]: r["n_points"] for r in
-         pip_circle_counts(pts, polys, strategy="join").collect()}
-    b = {r["poly_id"]: r["n_points"] for r in
-         pip_circle_counts(pts, polys, strategy="kernel").collect()}
-    c = {r["poly_id"]: r["n_points"] for r in
-         pip_circle_counts(pts, polys).collect()}   # auto -> join
-    assert a == b == c
-    assert len(a) == polys.count()
-
-
-def test_pip_kernel_refuses_large_dim(spark, pts):
-    """VERDICT r3 #8: the CSR-grid kernel builds a driver-side structure
-    over the polygon dim — a large dim must be refused explicitly, not
-    accepted and OOMed."""
-    import pytest
-    from air_health_gis_tools_spark.operators.pip import \
-        pip_circle_counts_np
-    from air_health_gis_tools_spark.plans.queries import polys_df
-    polys = polys_df(spark)
-    with pytest.raises(ValueError, match="max_polys"):
-        pip_circle_counts_np(pts, polys, max_polys=polys.count() - 1)
 
 
 def test_convolve_plane_variant_matches_zonal_means(spark):

@@ -1,9 +1,8 @@
-"""End-to-end pipeline, lineage/resume, streaming parity, pages fixtures."""
+"""End-to-end pipeline, lineage/resume, pages fixtures."""
 
 from __future__ import annotations
 
 import hashlib
-import os
 
 import numpy as np
 import pandas as pd
@@ -24,8 +23,6 @@ from air_health_gis_tools_spark.plans.pipeline import (choose_zonal_strategy,
 from air_health_gis_tools_spark.plans.queries import monitors_df, polys_df
 from air_health_gis_tools_spark.sources.pages import (page_id_expr_sql,
                                                       synthetic_pages)
-from air_health_gis_tools_spark.streaming.events import (events_hourly_batch,
-                                                         run_stream_once)
 from tests.conftest import SF_DIR
 
 
@@ -233,81 +230,6 @@ def test_lineage_resume(spark, tmp_path):
     assert {k: done[k]["rows"] for k in m1} == m1
     met = metrics_df(spark, store).toPandas()
     assert met["rows"].sum() == docs.count()
-
-
-def _stage_events_dir(tmp_path) -> str:
-    """File-source streaming requires a directory of files."""
-    import shutil
-    d = tmp_path / "events_src"
-    d.mkdir(exist_ok=True)
-    shutil.copy(f"{SF_DIR}/events.parquet", d / "part-0.parquet")
-    return str(d)
-
-
-def test_streaming_hourly_equals_batch(spark, tmp_path):
-    src = _stage_events_dir(tmp_path)
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ck")
-    run_stream_once(spark, src, out, ckpt)
-    got = (spark.read.parquet(out)
-           .orderBy("hour", "event_type").toPandas())
-    events = spark.read.parquet(src)
-    want = events_hourly_batch(events).orderBy("hour", "event_type").toPandas()
-    # append mode emits a window only once the watermark (max_ts - 2h)
-    # passes its END; the trailing windows stay in state — by design
-    import pandas as pd
-    max_ts = events.agg(F.max("ts")).head()[0]
-    cutoff = max_ts - pd.Timedelta(hours=2)
-    emittable = want[want["hour"] + pd.Timedelta(hours=1) <= cutoff]
-    assert len(got) == len(emittable)
-    m = got.merge(emittable, on=["hour", "event_type"],
-                  suffixes=("_s", "_b"))
-    assert len(m) == len(got)
-    assert (m["n_s"] == m["n_b"]).all()
-    assert (m["min_value_s"] == m["min_value_b"]).all()
-    assert (m["max_value_s"] == m["max_value_b"]).all()
-
-
-def test_streaming_dedup_matches_batch_digest_set(spark, tmp_path):
-    """Streaming first-arrival dedup: survivor digest set == batch distinct
-    set, duplicates dropped, and a checkpointed re-run appends nothing."""
-    import shutil
-    from air_health_gis_tools_spark.streaming.dedup import (
-        run_dedup_stream_once)
-    import glob
-    src = tmp_path / "docs_src"
-    src.mkdir()
-    # two files with overlapping content: file2 duplicates file1's texts
-    # (flat files — the parquet stream source does not recurse)
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    shutil.copy(f"{SF_DIR}/documents.parquet", src / "f1.parquet")
-    stage = tmp_path / "stage"
-    (docs.withColumn("doc_id", F.col("doc_id") + 1_000_000)
-     .coalesce(1).write.parquet(str(stage)))
-    shutil.copy(glob.glob(str(stage / "part-*.parquet"))[0],
-                src / "f2.parquet")
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ck")
-    run_dedup_stream_once(spark, str(src), out, ckpt)
-    got = spark.read.parquet(out)
-    batch_digests = {r[0] for r in
-                     docs.select(F.md5("text")).distinct().collect()}
-    got_digests = {r["digest"] for r in got.select("digest").collect()}
-    assert got_digests == batch_digests
-    assert got.count() == len(batch_digests)      # exactly one survivor
-    n1 = got.count()
-    run_dedup_stream_once(spark, str(src), out, ckpt)   # no new input
-    assert spark.read.parquet(out).count() == n1
-
-
-def test_streaming_checkpoint_is_restartable(spark, tmp_path):
-    src = _stage_events_dir(tmp_path)
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ck")
-    run_stream_once(spark, src, out, ckpt)
-    n1 = spark.read.parquet(out).count()
-    # second run with same checkpoint: no new input → no duplicate output
-    run_stream_once(spark, src, out, ckpt)
-    assert spark.read.parquet(out).count() == n1
 
 
 def test_run_stage_bucket_discovery_is_bounded(spark, tmp_path, monkeypatch):
