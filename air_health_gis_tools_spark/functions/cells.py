@@ -68,9 +68,10 @@ def hex_cell_udf(res: int):
     return _udf
 
 
-def hex_cell_expr(res: int, x_col: str = "x", y_col: str = "y"):
-    """The SAME hex assignment as a pure Catalyst expression — the 100 TB
-    path: stays inside whole-stage codegen, no Arrow transfer at all
+def hex_cell_expr(res: int):
+    """The SAME hex assignment of columns ``x``, ``y`` as a pure Catalyst
+    expression — the 100 TB path: stays inside whole-stage codegen, no
+    Arrow transfer at all
     (measured: the Arrow round-trip, not the compute, capped the hex
     rollup's scaling at 38M rows).
 
@@ -91,14 +92,14 @@ def hex_cell_expr(res: int, x_col: str = "x", y_col: str = "y"):
     # but the Arrow kernel (numpy //) floors — subtracting pmod first makes
     # the dividend an exact multiple of the pitch, where truncation == floor,
     # so the expression matches hex_assign_np for negative coords too
-    i0 = f"((({x_col}) - pmod({x_col}, {w})) DIV {w})"
-    j0 = f"((({y_col}) - pmod({y_col}, {h})) DIV {h})"
+    i0 = f"(((x) - pmod(x, {w})) DIV {w})"
+    j0 = f"(((y) - pmod(y, {h})) DIV {h})"
 
     def key(di: int, dj: int) -> str:
         i = f"({i0} + {di})"
         j = f"({j0} + {dj})"
-        dx = f"(({x_col}) - {i} * {w}L)"
-        dy = f"(({y_col}) - {j} * {h}L)"
+        dx = f"((x) - {i} * {w}L)"
+        dy = f"((y) - {j} * {h}L)"
         packed = (f"(({dx} * {dx} + {dy} * {dy}) * {1 << 32}L "
                   f"+ {(di + 1) << 16}L + {dj + 1}L)")
         return packed

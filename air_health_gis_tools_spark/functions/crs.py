@@ -80,7 +80,7 @@ def albers_forward(lat_deg, lon_deg) -> tuple[np.ndarray, np.ndarray]:
     return x, y
 
 
-def albers_inverse(x, y, iters: int = 6) -> tuple[np.ndarray, np.ndarray]:
+def albers_inverse(x, y) -> tuple[np.ndarray, np.ndarray]:
     """EPSG:3577 (x, y) meters → (lat, lon) degrees. Iterative Snyder 3-16
     latitude recovery (converges quadratically; 6 iterations ≪ 1e-12 rad)."""
     x = np.asarray(x, dtype=np.float64) - FE
@@ -91,7 +91,7 @@ def albers_inverse(x, y, iters: int = 6) -> tuple[np.ndarray, np.ndarray]:
     q = (C - (rho * rho * N * N) / (A * A)) / N    # Snyder 14-19
     # initial guess: spherical (authalic) latitude
     phi = np.arcsin(np.clip(q / 2.0, -1.0, 1.0))
-    for _ in range(iters):                          # Snyder 3-16
+    for _ in range(6):                              # Snyder 3-16
         s = np.sin(phi)
         esp = E * s
         one = 1.0 - esp * esp
@@ -115,18 +115,19 @@ _R94_20 = np.array([-0.0394924, -0.0327221, -0.0328979]) * _ARCSEC
 _S94_20 = -0.009994e-6                                       # unitless
 
 
-def geodetic_to_ecef(lat_deg, lon_deg, h=0.0):
-    """GRS80 geodetic -> earth-centred cartesian (metres)."""
+def geodetic_to_ecef(lat_deg, lon_deg):
+    """GRS80 geodetic (on the ellipsoid, height 0) -> earth-centred
+    cartesian (metres)."""
     phi = np.deg2rad(np.asarray(lat_deg, dtype=np.float64))
     lam = np.deg2rad(np.asarray(lon_deg, dtype=np.float64))
     s, c = np.sin(phi), np.cos(phi)
     nu = A / np.sqrt(1.0 - E2 * s * s)
-    return np.stack([(nu + h) * c * np.cos(lam),
-                     (nu + h) * c * np.sin(lam),
-                     (nu * (1.0 - E2) + h) * s], axis=-1)
+    return np.stack([nu * c * np.cos(lam),
+                     nu * c * np.sin(lam),
+                     nu * (1.0 - E2) * s], axis=-1)
 
 
-def ecef_to_geodetic(xyz, iters: int = 6):
+def ecef_to_geodetic(xyz):
     """ECEF -> GRS80 geodetic (degrees; height discarded). Fixed-point
     latitude iteration (converges to <1e-12 rad in ~4 iterations)."""
     xyz = np.asarray(xyz, dtype=np.float64)
@@ -134,7 +135,7 @@ def ecef_to_geodetic(xyz, iters: int = 6):
     lon = np.arctan2(y, x)
     p = np.hypot(x, y)
     phi = np.arctan2(z, p * (1.0 - E2))
-    for _ in range(iters):
+    for _ in range(6):
         s = np.sin(phi)
         nu = A / np.sqrt(1.0 - E2 * s * s)
         phi = np.arctan2(z + E2 * nu * s, p)

@@ -51,10 +51,9 @@ def geocode_udf():
     return _geo
 
 
-def with_xy(docs: DataFrame, id_col: str = "doc_id",
-            text_col: str = "text") -> DataFrame:
-    """Append (x, y) via the geocode kernel."""
+def with_xy(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Append (x, y) via the geocode kernel over ``text``."""
     g = geocode_udf()
-    out = docs.withColumn("_xy", g(F.col(id_col), F.col(text_col)))
+    out = docs.withColumn("_xy", g(F.col(id_col), F.col("text")))
     return (out.withColumn("x", F.col("_xy.x"))
             .withColumn("y", F.col("_xy.y")).drop("_xy"))

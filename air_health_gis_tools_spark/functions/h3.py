@@ -24,8 +24,7 @@ them from memory would produce silently-wrong ids):
 Pentagon topology (r4, VERDICT r3 #1): the 12 vertex base cells are TRUE
 pentagons with the spec's deleted-K-axis subdigit rule — a vertex-base id
 whose leading nonzero digit is K is invalid; pentagons have 6 children
-(the center child is again a pentagon) and 5 neighbors; compact promotes
-a pentagon parent at 6 children.
+(the center child is again a pentagon) and 5 neighbors.
 
 Pentagon geometry (r5, VERDICT r4 #7): the deleted-K wedge is now SPLIT
 across the five incident faces instead of folded into the IK cells. A
@@ -44,8 +43,8 @@ frame keeps the legacy `_h3RotatePent60ccw` fold (still round-trip-exact
 — see `_build_pentagon_frames`).
 
 Everything else matches the spec mechanically: parent = digit truncation
-(exact), aperture-7 class alternation, k-ring via ijk disks, compact /
-uncompact. SURVEY.md F12 / north_star "H3 res 7-9" surface.
+(exact), aperture-7 class alternation, k-ring via ijk disks. SURVEY.md
+F12 / north_star "H3 res 7-9" surface.
 """
 
 from __future__ import annotations
@@ -840,38 +839,6 @@ def grid_disk(h: int, k: int) -> np.ndarray:
     lat = np.degrees(np.arcsin(np.clip(c[:, 2], -1, 1)))
     lng = np.degrees(np.arctan2(c[:, 1], c[:, 0]))
     return np.unique(latlng_to_cell(lat, lng, res))
-
-
-def compact_cells(cells: np.ndarray) -> np.ndarray:
-    """Replace every complete sibling set by its parent, recursively —
-    7 siblings per hexagon parent, 6 per pentagon parent (deleted K)."""
-    cells = np.unique(np.asarray(cells, dtype=np.int64))
-    out: list[np.ndarray] = []
-    cur = cells
-    while len(cur):
-        res = cell_resolution(cur)
-        top = res.max()
-        if top == 0:
-            out.append(cur)
-            break
-        at = cur[res == top]
-        keep = cur[res != top]
-        parents = cell_to_parent(at, int(top) - 1)
-        uniq, counts = np.unique(parents, return_counts=True)
-        full = uniq[counts == np.where(is_pentagon(uniq), 6, 7)]
-        promoted = np.isin(parents, full)
-        out.append(at[~promoted])
-        cur = np.unique(np.concatenate([keep, full]))
-        if not len(full):
-            out.append(keep)
-            break
-    return np.unique(np.concatenate(out)) if out else cells
-
-
-def uncompact_cells(cells: np.ndarray, res: int) -> np.ndarray:
-    outs = [cell_to_children(int(c), res)
-            for c in np.asarray(cells, dtype=np.int64)]
-    return np.unique(np.concatenate(outs))
 
 
 # --------------------------------------------------------------------------

@@ -101,8 +101,3 @@ def simhash_udf():
         return pd.Series(res.astype(np.int64))
 
     return _simhash
-
-
-def hamming64(a: Column, b: Column) -> Column:
-    """Hamming distance between two int64 fingerprints (JVM-side)."""
-    return F.bit_count(a.bitwiseXOR(b))

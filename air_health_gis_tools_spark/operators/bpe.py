@@ -32,7 +32,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import ArrayType, IntegerType, StringType, StructField, StructType
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 EOW = "</w>"
 SAMPLE_N = 256
@@ -136,9 +136,10 @@ def bpe_tokenize_np(texts: np.ndarray,
     return n_tok, n_distinct
 
 
-def bpe_token_stats(df: DataFrame, merges: list[tuple[str, str]],
-                    text_col: str = "text") -> DataFrame:
-    """Distributed apply: adds ``n_bpe_tokens`` / ``n_bpe_distinct``.
+def bpe_token_stats(df: DataFrame, merges: list[tuple[str, str]]
+                    ) -> DataFrame:
+    """Distributed apply over ``text``: adds ``n_bpe_tokens`` /
+    ``n_bpe_distinct``.
 
     The merge table rides the UDF closure broadcast (a vocabulary is
     KB-scale at any corpus size); tokenization is one Arrow-batched pass
@@ -153,13 +154,12 @@ def bpe_token_stats(df: DataFrame, merges: list[tuple[str, str]],
             "n_bpe_tokens": n_tok.astype(np.int32),
             "n_bpe_distinct": n_distinct.astype(np.int32)})
 
-    return df.withColumn("_bpe", _stats(F.col(text_col)))
+    return df.withColumn("_bpe", _stats(F.col("text")))
 
 
-def bpe_train_on_df(df: DataFrame, n_merges: int,
-                    id_col: str = "doc_id", text_col: str = "text",
-                    sample_n: int = SAMPLE_N) -> list[tuple[str, str]]:
-    """The bounded-sample training entry: pinned ``orderBy(id).limit``."""
-    texts = [r[0] for r in df.select(text_col, id_col).orderBy(id_col)
-             .limit(sample_n).select(text_col).collect()]
+def bpe_train_on_df(df: DataFrame, n_merges: int) -> list[tuple[str, str]]:
+    """The bounded-sample training entry over ``text``: pinned
+    ``orderBy(doc_id).limit``."""
+    texts = [r[0] for r in df.select("text", "doc_id").orderBy("doc_id")
+             .limit(SAMPLE_N).select("text").collect()]
     return bpe_train_merges(texts, n_merges)

@@ -25,6 +25,9 @@ from pyspark.sql import types as T
 from ..geo_synth import RASTER_H, RASTER_W, XRES
 from ..sources.raster import TILE_SCHEMA, tile_id_of
 
+# superblock side in tiles for convolve_sum_count_tiles
+SB_TILES = 2
+
 
 def convolve_valid(window: np.ndarray, kernel: np.ndarray) -> np.ndarray:
     """Shift-accumulate sum-convolution/area over a pre-padded window.
@@ -121,11 +124,10 @@ def convolve_tiles(tiles: DataFrame, kernel: np.ndarray, tile_px: int,
 
 
 def gather_point_values(points: DataFrame, tiles: DataFrame,
-                        id_col: str = "doc_id",
-                        x_col: str = "x", y_col: str = "y",
                         out_col: str = "value",
-                        tile_px: int = 256, xres: int = XRES) -> DataFrame:
-    """Per-point single-pixel gather from a tile table (J2 on tiles).
+                        tile_px: int = 256) -> DataFrame:
+    """Per-point single-pixel gather from a tile table (J2 on tiles):
+    ``(doc_id, x, y)`` points → ``(doc_id, out_col)``.
 
     Each point reads exactly the tile containing its pixel: cogroup on
     tile_id, one array index per point. The 'gather many' half of the
@@ -133,31 +135,31 @@ def gather_point_values(points: DataFrame, tiles: DataFrame,
     lookup (extract_raster_buffer.py:220-245). Points whose tile is absent
     gather NULL.
     """
-    pts = points.select(id_col, x_col, y_col).withColumn(
+    pts = points.select("doc_id", "x", "y").withColumn(
         "tile_id",
-        ((F.col(y_col) / xres).cast("long") / tile_px).cast("long")
+        ((F.col("y") / XRES).cast("long") / tile_px).cast("long")
         * F.lit(1 << 32)
-        + ((F.col(x_col) / xres).cast("long") / tile_px).cast("long"))
-    schema = T.StructType([T.StructField(id_col, T.LongType()),
+        + ((F.col("x") / XRES).cast("long") / tile_px).cast("long"))
+    schema = T.StructType([T.StructField("doc_id", T.LongType()),
                            T.StructField(out_col, T.DoubleType())])
 
     def _gather(key, pdf_points: pd.DataFrame, pdf_tiles: pd.DataFrame
                 ) -> pd.DataFrame:
         if pdf_points.empty:
-            return pd.DataFrame({id_col: pd.Series(dtype="int64"),
+            return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
                                  out_col: pd.Series(dtype="float64")})
-        ids = pdf_points[id_col].to_numpy()
+        ids = pdf_points["doc_id"].to_numpy()
         if pdf_tiles.empty:
-            return pd.DataFrame({id_col: ids,
+            return pd.DataFrame({"doc_id": ids,
                                  out_col: np.full(len(ids), np.nan)})
         t = pdf_tiles.iloc[0]
         arr = np.asarray(t["data"], dtype=np.float64).reshape(
             int(t["h"]), int(t["w"]))
-        rr = (pdf_points[y_col].to_numpy().astype(np.int64) // xres
+        rr = (pdf_points["y"].to_numpy().astype(np.int64) // XRES
               - int(t["row0"]))
-        cc = (pdf_points[x_col].to_numpy().astype(np.int64) // xres
+        cc = (pdf_points["x"].to_numpy().astype(np.int64) // XRES
               - int(t["col0"]))
-        return pd.DataFrame({id_col: ids, out_col: arr[rr, cc]})
+        return pd.DataFrame({"doc_id": ids, out_col: arr[rr, cc]})
 
     return (pts.groupBy("tile_id")
             .cogroup(tiles.groupBy("tile_id"))
@@ -166,8 +168,8 @@ def gather_point_values(points: DataFrame, tiles: DataFrame,
 
 def convolve_sum_count_tiles(tiles: DataFrame, kernels: dict,
                              tile_px: int,
-                             height: int = RASTER_H, width: int = RASTER_W,
-                             sb_tiles: int = 2) -> DataFrame:
+                             height: int = RASTER_H, width: int = RASTER_W
+                             ) -> DataFrame:
     """Multi-kernel focal SUM + VALID-COUNT convolution in ONE halo pass.
 
     ``kernels``: {name: 0/1 ndarray}. The window is assembled once per
@@ -194,7 +196,7 @@ def convolve_sum_count_tiles(tiles: DataFrame, kernels: dict,
     spark = tiles.sparkSession
     bc_kernels = spark.sparkContext.broadcast(
         {k: np.asarray(v, dtype=np.float64) for k, v in kernels.items()})
-    sb_px = sb_tiles * tile_px
+    sb_px = SB_TILES * tile_px
     nsr = (height + sb_px - 1) // sb_px
     nsc = (width + sb_px - 1) // sb_px
 
@@ -208,13 +210,13 @@ def convolve_sum_count_tiles(tiles: DataFrame, kernels: dict,
                    T.StructField(f"c_{k}", T.ArrayType(T.LongType()))]
     out_schema = T.StructType(fields)
 
-    # r3: SUPERBLOCK grouping (sb_tiles x sb_tiles tiles per task) replaces
+    # r3: SUPERBLOCK grouping (SB_TILES x SB_TILES tiles per task) replaces
     # the per-tile 9x halo fan-out: only tiles within the halo of a
     # superblock border fan out (~1 + 4*halo/sb_px per tile), so the input
     # shuffle carries the raster ~1.1x instead of 9x — the stage's cost is
     # then its unavoidable output planes, which serialize per-worker.
-    # sb_tiles=2 (512 px superblocks, ~12 MB output per group) measured
-    # fastest at local[32]: 2x the per-tile fan-out version; sb_tiles=4
+    # SB_TILES=2 (512 px superblocks, ~12 MB output per group) measured
+    # fastest at local[32]: 2x the per-tile fan-out version; SB_TILES=4
     # forms 50 MB groups (memory pressure + last-wave imbalance).
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def _sbs(row0: pd.Series, col0: pd.Series, h: pd.Series, w: pd.Series
@@ -287,11 +289,11 @@ def convolve_sum_count_tiles(tiles: DataFrame, kernels: dict,
                       - pv[r_:r_ + sb_h, fc0 + lo:fc0 + lo + sb_w])
             planes[name] = (s, c)
         rows = []
-        for tr in range(sbr * sb_tiles,
-                        min((sbr + 1) * sb_tiles,
+        for tr in range(sbr * SB_TILES,
+                        min((sbr + 1) * SB_TILES,
                             (height + tile_px - 1) // tile_px)):
-            for tc in range(sbc * sb_tiles,
-                            min((sbc + 1) * sb_tiles,
+            for tc in range(sbc * SB_TILES,
+                            min((sbc + 1) * SB_TILES,
                                 (width + tile_px - 1) // tile_px)):
                 tr0, tc0 = tr * tile_px, tc * tile_px
                 th = min(tile_px, height - tr0)

@@ -11,7 +11,8 @@
                     band digest (uniform keys → no skew).
 - ngram_jaccard:    exact n-gram Jaccard for a candidate pair set
                     (verification stage after LSH).
-- simhash near-dup: see functions/text.simhash_udf + hamming64.
+- simhash_banded_pairs: Hamming-bounded simhash near-dup pairs (signatures
+                    from functions/text.simhash_udf) via pigeonhole bands.
 
 Everything below is Catalyst expressions (explode / groupBy / join); no UDF.
 """
@@ -21,28 +22,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def exact_dedup_groups(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
+def exact_dedup_groups(docs: DataFrame) -> DataFrame:
     """(digest, n_docs, keep_id): one row per distinct content; keep_id =
     min id (the canonical survivor)."""
-    return (docs.select(F.md5(F.col(text_col)).alias("digest"), id_col)
+    return (docs.select(F.md5(F.col("text")).alias("digest"), "doc_id")
             .groupBy("digest")
             .agg(F.count(F.lit(1)).alias("n_docs"),
-                 F.min(id_col).alias("keep_id")))
+                 F.min("doc_id").alias("keep_id")))
 
 
-def _spread_ingest(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def _spread_ingest(docs: DataFrame) -> DataFrame:
     """Parallelize a compact text source before per-shingle work (r6,
     guide §2.5 input skew): one parquet row group = one scan task, so the
     shingle explode (and any md5 per shingle) would run on one core. When
     the scan has fewer partitions than the cluster has slots, hash-
     redistribute the (id, text) rows by id first — the text shuffle is
     small next to the per-shingle compute it parallelizes, and keying by
-    ``id_col`` at the session's shuffle partitioning lets any downstream
+    ``doc_id`` at the session's shuffle partitioning lets any downstream
     groupBy(id) reuse the exchange (guide §2.4). Wide sources (the real-
     scale case) skip this: there the scan is already parallel and an
     extra full-text shuffle would be pure cost."""
-    src = docs.select(id_col, text_col)
+    src = docs.select("doc_id", "text")
     spark = docs.sparkSession
     par = spark.sparkContext.defaultParallelism
     try:
@@ -50,19 +50,18 @@ def _spread_ingest(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     except (TypeError, ValueError):
         shuffle_parts = par
     if src.rdd.getNumPartitions() < par:
-        src = src.repartition(shuffle_parts, F.col(id_col))
+        src = src.repartition(shuffle_parts, F.col("doc_id"))
     return src
 
 
-def shingles(docs: DataFrame, n: int = 5, text_col: str = "text",
-             id_col: str = "doc_id") -> DataFrame:
+def shingles(docs: DataFrame, n: int = 5) -> DataFrame:
     """Distinct character n-gram shingles per doc, via sequence+explode
     (JVM-side; no UDF)."""
     g = F.expr(
-        f"transform(sequence(1, greatest(length({text_col}) - {n - 1}, 1)), "
-        f"p -> substring({text_col}, p, {n}))")
-    return (_spread_ingest(docs, id_col, text_col)
-            .select(id_col, F.explode(g).alias("shingle"))
+        f"transform(sequence(1, greatest(length(text) - {n - 1}, 1)), "
+        f"p -> substring(text, p, {n}))")
+    return (_spread_ingest(docs)
+            .select("doc_id", F.explode(g).alias("shingle"))
             .distinct())
 
 
@@ -82,9 +81,7 @@ def _mh_perm_consts(k: int) -> list[tuple[int, int]]:
     return out
 
 
-def minhash_signature(docs: DataFrame, n: int = 5, k: int = 4,
-                      text_col: str = "text", id_col: str = "doc_id"
-                      ) -> DataFrame:
+def minhash_signature(docs: DataFrame, n: int = 5, k: int = 4) -> DataFrame:
     """k-wide MinHash signature over ONE base hash:
     h = md5(shingle)[:15 hex] mod P, mh_i = MIN((a_i·h + b_i) mod P).
 
@@ -102,22 +99,22 @@ def minhash_signature(docs: DataFrame, n: int = 5, k: int = 4,
 
     Ingest spread (r6): the md5-per-shingle work is ~50× the text bytes,
     so a compact source is redistributed by id first via ``_spread_ingest``
-    — and because the spread keys on ``id_col`` at the session's shuffle
+    — and because the spread keys on ``doc_id`` at the session's shuffle
     partitioning, the trailing groupBy(doc_id) reuses that exchange: the
     whole signature then needs exactly ONE (small) shuffle.
     """
-    src = _spread_ingest(docs, id_col, text_col)
+    src = _spread_ingest(docs)
     g = F.expr(
-        f"transform(sequence(1, greatest(length({text_col}) - {n - 1}, 1)), "
-        f"p -> substring({text_col}, p, {n}))")
-    sh = src.select(id_col, F.explode(g).alias("shingle"))
+        f"transform(sequence(1, greatest(length(text) - {n - 1}, 1)), "
+        f"p -> substring(text, p, {n}))")
+    sh = src.select("doc_id", F.explode(g).alias("shingle"))
     h = (f"CAST(conv(substring(md5(shingle), 1, 15), 16, 10) AS BIGINT) "
          f"% {MINHASH_P}")
-    sh = sh.select(id_col, F.expr(h).alias("h"))
+    sh = sh.select("doc_id", F.expr(h).alias("h"))
     aggs = [F.min(F.expr(f"(h * {a}L + {b}L) % {MINHASH_P}"))
             .alias(f"mh_{i}")
             for i, (a, b) in enumerate(_mh_perm_consts(k))]
-    return sh.groupBy(id_col).agg(*aggs)
+    return sh.groupBy("doc_id").agg(*aggs)
 
 
 def minhash_base_hash_sql_duckdb() -> str:
@@ -156,26 +153,24 @@ def band_overflow_report(banded: DataFrame, max_bucket: int) -> DataFrame:
 
 
 def lsh_candidate_pairs(sig: DataFrame, bands: int = 4,
-                        id_col: str = "doc_id",
                         max_bucket: int | None = None) -> DataFrame:
     """Candidate near-dup pairs sharing ≥ 1 band (here 1 row per shared
     band = 1 signature column, rows_per_band = k/bands = 1 for the default
     k=4). Self-equi-join on (band_idx, band_val), id1 < id2.
     ``max_bucket`` enables the hot-bucket cap (see _cap_band_buckets)."""
-    banded = lsh_banded(sig, bands, id_col)
+    banded = lsh_banded(sig, bands)
     banded = _cap_band_buckets(banded, max_bucket)
     a = banded.alias("a")
     b = banded.alias("b")
     return (a.join(b, (F.col(f"a.band") == F.col(f"b.band"))
                    & (F.col(f"a.val") == F.col(f"b.val"))
-                   & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-            .select(F.col(f"a.{id_col}").alias("id1"),
-                    F.col(f"b.{id_col}").alias("id2"))
+                   & (F.col("a.doc_id") < F.col("b.doc_id")))
+            .select(F.col("a.doc_id").alias("id1"),
+                    F.col("b.doc_id").alias("id2"))
             .distinct())
 
 
-def lsh_banded(sig: DataFrame, bands: int = 4,
-               id_col: str = "doc_id") -> DataFrame:
+def lsh_banded(sig: DataFrame, bands: int = 4) -> DataFrame:
     """(id, band, val): the exploded band table behind lsh_candidate_pairs."""
     k = len([c for c in sig.columns if c.startswith("mh_")])
     per = max(k // bands, 1)
@@ -185,13 +180,13 @@ def lsh_banded(sig: DataFrame, bands: int = 4,
                  for i in range(b * per, (b + 1) * per)]
         band_cols.append(F.struct(F.lit(b).alias("band"),
                                   F.concat_ws("_", *parts).alias("val")))
-    return (sig.select(id_col, F.explode(F.array(*band_cols)).alias("bv"))
-            .select(id_col, F.col("bv.band").alias("band"),
+    return (sig.select("doc_id", F.explode(F.array(*band_cols)).alias("bv"))
+            .select("doc_id", F.col("bv.band").alias("band"),
                     F.col("bv.val").alias("val")))
 
 
 def simhash_banded_pairs(sig: DataFrame, bits: int, ham_max: int,
-                         id_col: str = "doc_id", sig_col: str = "simhash",
+                         sig_col: str = "simhash",
                          max_bucket: int | None = None) -> DataFrame:
     """Near-dup pairs with Hamming(sig) ≤ ham_max via PIGEONHOLE BANDING —
     the scale-safe replacement for the all-pairs ``a.id < b.id`` join.
@@ -217,17 +212,17 @@ def simhash_banded_pairs(sig: DataFrame, bits: int, ham_max: int,
         val = (F.shiftrightunsigned(F.col(sig_col), s)
                .bitwiseAND(F.lit((1 << ln) - 1)))
         band_cols.append(F.struct(F.lit(i).alias("band"), val.alias("val")))
-    banded = (sig.select(id_col, sig_col,
+    banded = (sig.select("doc_id", sig_col,
                          F.explode(F.array(*band_cols)).alias("bv"))
-              .select(id_col, sig_col, F.col("bv.band").alias("band"),
+              .select("doc_id", sig_col, F.col("bv.band").alias("band"),
                       F.col("bv.val").alias("val")))
     banded = _cap_band_buckets(banded, max_bucket)
     a, b = banded.alias("a"), banded.alias("b")
     cand = (a.join(b, (F.col("a.band") == F.col("b.band"))
                    & (F.col("a.val") == F.col("b.val"))
-                   & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-            .select(F.col(f"a.{id_col}").alias("id1"),
-                    F.col(f"b.{id_col}").alias("id2"),
+                   & (F.col("a.doc_id") < F.col("b.doc_id")))
+            .select(F.col("a.doc_id").alias("id1"),
+                    F.col("b.doc_id").alias("id2"),
                     F.col(f"a.{sig_col}").alias("_s1"),
                     F.col(f"b.{sig_col}").alias("_s2"))
             .distinct())
@@ -240,8 +235,7 @@ def simhash_banded_pairs(sig: DataFrame, bits: int, ham_max: int,
 
 
 def collapsed_neardup_edges(docs: DataFrame, n: int = 5, k: int = 4,
-                            bands: int = 4, max_bucket: int | None = 1024,
-                            text_col: str = "text", id_col: str = "doc_id"
+                            bands: int = 4, max_bucket: int | None = 1024
                             ) -> DataFrame:
     """Scale-safe near-dup edge generation (VERDICT r3 hot-bucket fix,
     composed): collapse EXACT duplicates through the digest groups first
@@ -260,39 +254,37 @@ def collapsed_neardup_edges(docs: DataFrame, n: int = 5, k: int = 4,
     their representative, so transitively they land in the same
     component) while candidate-pair count stays linear on degenerate
     corpora — the pytest with 10k identical docs asserts exactly that."""
-    groups = exact_dedup_groups(docs, text_col, id_col)
-    exact_edges = (docs.select(F.md5(F.col(text_col)).alias("digest"),
-                               F.col(id_col))
+    groups = exact_dedup_groups(docs)
+    exact_edges = (docs.select(F.md5(F.col("text")).alias("digest"),
+                               F.col("doc_id"))
                    .join(groups.select("digest", "keep_id"), "digest")
-                   .filter(F.col(id_col) != F.col("keep_id"))
+                   .filter(F.col("doc_id") != F.col("keep_id"))
                    .select(F.col("keep_id").alias("id1"),
-                           F.col(id_col).alias("id2")))
-    reps = (docs.join(groups.select(F.col("keep_id").alias(id_col)),
-                      id_col, "left_semi"))
-    sig = minhash_signature(reps, n, k, text_col, id_col)
-    rep_pairs = lsh_candidate_pairs(sig, bands, id_col,
-                                    max_bucket=max_bucket)
+                           F.col("doc_id").alias("id2")))
+    reps = (docs.join(groups.select(F.col("keep_id").alias("doc_id")),
+                      "doc_id", "left_semi"))
+    sig = minhash_signature(reps, n, k)
+    rep_pairs = lsh_candidate_pairs(sig, bands, max_bucket=max_bucket)
     return exact_edges.unionByName(rep_pairs)
 
 
-def ngram_jaccard(docs: DataFrame, pairs: DataFrame, n: int = 5,
-                  text_col: str = "text", id_col: str = "doc_id"
+def ngram_jaccard(docs: DataFrame, pairs: DataFrame, n: int = 5
                   ) -> DataFrame:
     """Exact n-gram Jaccard similarity for candidate (id1, id2) pairs.
 
     |A∩B| via shingle equi-join, |A∪B| = |A|+|B|-|A∩B| — integer counts, so
     the final division is a single exact-operand IEEE op."""
-    sh = shingles(docs, n, text_col, id_col)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    s1 = sh.select(F.col(id_col).alias("id1"), "shingle")
-    s2 = sh.select(F.col(id_col).alias("id2"),
+    sh = shingles(docs, n)
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
+    s1 = sh.select(F.col("doc_id").alias("id1"), "shingle")
+    s2 = sh.select(F.col("doc_id").alias("id2"),
                    F.col("shingle").alias("shingle"))
     inter = (pairs.join(s1, "id1").join(s2, ["id2", "shingle"])
              .groupBy("id1", "id2").agg(F.count(F.lit(1)).alias("n_inter")))
     out = (pairs.join(inter, ["id1", "id2"], "left")
-           .join(sizes.select(F.col(id_col).alias("id1"),
+           .join(sizes.select(F.col("doc_id").alias("id1"),
                               F.col("sz").alias("sz1")), "id1")
-           .join(sizes.select(F.col(id_col).alias("id2"),
+           .join(sizes.select(F.col("doc_id").alias("id2"),
                               F.col("sz").alias("sz2")), "id2")
            .select("id1", "id2",
                    (F.coalesce("n_inter", F.lit(0)).cast("double")

@@ -40,16 +40,15 @@ from pyspark.storagelevel import StorageLevel
 BROADCAST_DEG_MAX_NODES = 1_000_000
 
 
-def triangle_counts(edges: DataFrame, a_col: str = "id1",
-                    b_col: str = "id2",
+def triangle_counts(edges: DataFrame,
                     n_nodes: int | None = None) -> DataFrame:
     """Per-node triangle participation counts over an undirected simple
-    graph given as endpoint pairs (either orientation; duplicates and
-    self-loops dropped). Returns (node, n_triangles) for every node in at
-    least one triangle. ``n_nodes`` (|V|, counted if not supplied) gates
-    the degree-table broadcast hint."""
-    e = (edges.select(F.least(a_col, b_col).alias("a"),
-                      F.greatest(a_col, b_col).alias("b"))
+    graph given as ``(id1, id2)`` endpoint pairs (either orientation;
+    duplicates and self-loops dropped). Returns (node, n_triangles) for
+    every node in at least one triangle. ``n_nodes`` (|V|, counted if not
+    supplied) gates the degree-table broadcast hint."""
+    e = (edges.select(F.least("id1", "id2").alias("a"),
+                      F.greatest("id1", "id2").alias("b"))
          .filter(F.col("a") != F.col("b")).distinct())
     deg = (e.select(F.col("a").alias("node"))
            .unionAll(e.select(F.col("b").alias("node")))

@@ -31,14 +31,13 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 
-def _neighbor_cells(df: DataFrame, cell_m: int, x_col: str,
-                    y_col: str) -> DataFrame:
+def _neighbor_cells(df: DataFrame, cell_m: int) -> DataFrame:
     """Explode each point to the keys of its 3×3 neighbor cells."""
     offs = [(di, dj) for di in (-1, 0, 1) for dj in (-1, 0, 1)]
     off_col = F.array(*[F.struct(F.lit(di).alias("di"), F.lit(dj).alias("dj"))
                         for di, dj in offs])
-    ci = (F.col(x_col) / cell_m).cast("long")
-    cj = (F.col(y_col) / cell_m).cast("long")
+    ci = (F.col("x") / cell_m).cast("long")
+    cj = (F.col("y") / cell_m).cast("long")
     return (df.withColumn("_o", F.explode(off_col))
             .withColumn("cell",
                         (ci + F.col("_o.di")) * F.lit(1 << 32)
@@ -46,22 +45,21 @@ def _neighbor_cells(df: DataFrame, cell_m: int, x_col: str,
             .drop("_o"))
 
 
-def knn_cell_join(points: DataFrame, monitors: DataFrame, bound_m: int,
-                  id_col: str = "doc_id", mon_id_col: str = "monitor_id",
-                  x_col: str = "x", y_col: str = "y",
-                  mx_col: str = "mx", my_col: str = "my") -> DataFrame:
-    """Distributed bounded 1-NN; returns (id, monitor_id, dist_m) with NULLs
-    when nothing lies within ``bound_m``. Exact integer d² math."""
+def knn_cell_join(points: DataFrame, monitors: DataFrame, bound_m: int
+                  ) -> DataFrame:
+    """Distributed bounded 1-NN of ``(doc_id, x, y)`` points over
+    ``(monitor_id, mx, my)`` monitors; returns (doc_id, x, y, monitor_id,
+    dist_m) with NULLs when nothing lies within ``bound_m``. Exact integer
+    d² math."""
     cell_m = bound_m
-    pts = _neighbor_cells(points.select(id_col, x_col, y_col),
-                          cell_m, x_col, y_col)
+    pts = _neighbor_cells(points.select("doc_id", "x", "y"), cell_m)
     mons = monitors.select(
-        mon_id_col, mx_col, my_col,
-        ((F.col(mx_col) / cell_m).cast("long") * F.lit(1 << 32)
-         + (F.col(my_col) / cell_m).cast("long")).alias("cell"))
+        "monitor_id", "mx", "my",
+        ((F.col("mx") / cell_m).cast("long") * F.lit(1 << 32)
+         + (F.col("my") / cell_m).cast("long")).alias("cell"))
 
-    dx = F.col(x_col) - F.col(mx_col)
-    dy = F.col(y_col) - F.col(my_col)
+    dx = F.col("x") - F.col("mx")
+    dy = F.col("y") - F.col("my")
     d2 = dx * dx + dy * dy
     # LEFT join keeps no-match points in-flow (no join-back stage needed);
     # candidates outside the bound collapse to NULL structs that min()
@@ -69,22 +67,22 @@ def knn_cell_join(points: DataFrame, monitors: DataFrame, bound_m: int,
     # of a point are co-located, so the map-side partial agg collapses them
     # BEFORE the shuffle: exactly one row per point crosses the wire.
     cand = (pts.join(F.broadcast(mons), "cell", "left")
-            .select(id_col, x_col, y_col,
+            .select("doc_id", "x", "y",
                     F.when(d2 <= F.lit(bound_m) ** 2,
-                           F.struct(d2.alias("d2"), F.col(mon_id_col)))
+                           F.struct(d2.alias("d2"), F.col("monitor_id")))
                     .alias("c")))
-    return (cand.groupBy(id_col)
-            .agg(F.first(x_col).alias(x_col), F.first(y_col).alias(y_col),
+    return (cand.groupBy("doc_id")
+            .agg(F.first("x").alias("x"), F.first("y").alias("y"),
                  F.min("c").alias("b"))
-            .select(id_col, x_col, y_col,
-                    F.col(f"b.{mon_id_col}").alias(mon_id_col),
+            .select("doc_id", "x", "y",
+                    F.col("b.monitor_id").alias("monitor_id"),
                     F.sqrt(F.col("b.d2")).alias("dist_m")))
 
 
 def knn_broadcast_np(points: DataFrame, mon_xy_ids: tuple[np.ndarray, ...],
-                     bound_m: int, id_col: str = "doc_id",
-                     x_col: str = "x", y_col: str = "y") -> DataFrame:
-    """Arrow-kernel brute-force 1-NN against a broadcast monitor array."""
+                     bound_m: int) -> DataFrame:
+    """Arrow-kernel brute-force 1-NN of the ``(x, y)`` points against a
+    broadcast monitor array."""
     mxs, mys, mids = (np.asarray(a, dtype=np.int64) for a in mon_xy_ids)
     # sort by id so np.argmin's first-match rule IS the deterministic
     # (d2, monitor_id) tie-break — no packed-key pass needed
@@ -117,6 +115,6 @@ def knn_broadcast_np(points: DataFrame, mon_xy_ids: tuple[np.ndarray, ...],
                                   np.nan)
         return pd.DataFrame({"monitor_id": out_id, "dist_m": out_d})
 
-    out = points.withColumn("_nn", _nn(F.col(x_col), F.col(y_col)))
+    out = points.withColumn("_nn", _nn(F.col("x"), F.col("y")))
     return (out.withColumn("monitor_id", F.col("_nn.monitor_id").cast("long"))
             .withColumn("dist_m", F.col("_nn.dist_m")).drop("_nn"))

@@ -50,10 +50,10 @@ def seg_circle_length_np(px, py, ax, ay, bx, by, radius):
 def lines_in_radius(points: DataFrame,
                     seg_xy: tuple[np.ndarray, np.ndarray,
                                   np.ndarray, np.ndarray],
-                    radius_m: int, id_col: str = "doc_id",
-                    x_col: str = "x", y_col: str = "y") -> DataFrame:
-    """(id, n_lines, total_len_um): segments crossing the R-disk of each
-    point and their total intersected length in integer micrometers."""
+                    radius_m: int) -> DataFrame:
+    """(doc_id, n_lines, total_len_um): segments crossing the R-disk of
+    each ``(doc_id, x, y)`` point and their total intersected length in
+    integer micrometers."""
     ax, ay, bx, by = (np.asarray(a, dtype=np.int64) for a in seg_xy)
     schema = T.StructType([T.StructField("n_lines", T.LongType()),
                            T.StructField("total_len_um", T.LongType())])
@@ -73,9 +73,9 @@ def lines_in_radius(points: DataFrame,
                 .sum(axis=1)
         return pd.DataFrame({"n_lines": n_out, "total_len_um": l_out})
 
-    out = points.select(id_col, x_col, y_col).withColumn(
-        "_l", _lines(F.col(x_col), F.col(y_col)))
-    return out.select(id_col, F.col("_l.n_lines").alias("n_lines"),
+    out = points.select("doc_id", "x", "y").withColumn(
+        "_l", _lines(F.col("x"), F.col("y")))
+    return out.select("doc_id", F.col("_l.n_lines").alias("n_lines"),
                       F.col("_l.total_len_um").alias("total_len_um"))
 
 

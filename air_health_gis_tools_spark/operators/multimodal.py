@@ -4,11 +4,11 @@ All three decode paths are REAL (no stand-ins left, VERDICT r3 #6): a
 pure-NumPy PNG codec (``sources/png.py``), a RIFF/PCM WAV codec
 (``sources/wav.py``), and a YUV4MPEG2 video codec (``sources/y4m.py``) —
 each written from its public spec. Video payloads are genuine Y4M streams;
-features come from decoded luma/chroma planes and frame sampling demuxes
-real frames. A compressed-codec demux (H.264 via ffmpeg) slots in front of
-the Y4M surface on a real cluster; the Spark plumbing — schema, Arrow
-batch shaping, size-aware partitioning, mapInPandas signatures, the
-feature-extraction contract — is identical either way.
+features come from decoded luma/chroma planes. A compressed-codec demux
+(H.264 via ffmpeg) slots in front of the Y4M surface on a real cluster;
+the Spark plumbing — schema, Arrow batch shaping, size-aware
+partitioning, mapInPandas signatures, the feature-extraction contract —
+is identical either way.
 """
 
 from __future__ import annotations
@@ -17,7 +17,7 @@ import hashlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..sources.png import png_decode, png_encode
@@ -25,6 +25,7 @@ from ..sources.wav import wav_decode, wav_encode
 from ..sources.y4m import y4m_decode, y4m_encode
 
 AUDIO_RATE = 8000
+FEAT_DIM = 8         # length of every pooled feature vector
 
 MEDIA_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType(), False),
@@ -131,16 +132,16 @@ def decode_image(payload: bytes) -> np.ndarray:
     return png_decode(bytes(payload))
 
 
-def image_feature(arr: np.ndarray, feat_dim: int = 8) -> np.ndarray:
+def image_feature(arr: np.ndarray) -> np.ndarray:
     """Channel-mean pooled feature (float32). Shared by the extract kernel
     and the golden generator so parity is arithmetic identity."""
     flat = arr.reshape(-1, arr.shape[2]) if arr.ndim == 3 \
         else arr.reshape(-1, 1)
-    return np.resize(flat.mean(axis=0).astype(np.float32), feat_dim)
+    return np.resize(flat.mean(axis=0).astype(np.float32), FEAT_DIM)
 
 
-def audio_feature(samples: np.ndarray, rate: int = AUDIO_RATE,
-                  feat_dim: int = 8) -> np.ndarray:
+def audio_feature(samples: np.ndarray, rate: int = AUDIO_RATE
+                  ) -> np.ndarray:
     """Pooled audio descriptor from decoded PCM samples: mean |amplitude|
     (exact int64 sum → one division), RMS, zero-crossing rate, peak,
     duration and extremes. Shared by the extract kernel and the golden
@@ -156,11 +157,11 @@ def audio_feature(samples: np.ndarray, rate: int = AUDIO_RATE,
                      n * 1000.0 / rate, float(s.sum()) / n,
                      float(s.min() if len(s) else 0),
                      float(s.max() if len(s) else 0)], dtype=np.float32)
-    return np.resize(feat, feat_dim)
+    return np.resize(feat, FEAT_DIM)
 
 
 def video_feature(y: np.ndarray, u: np.ndarray | None,
-                  v: np.ndarray | None, feat_dim: int = 8) -> np.ndarray:
+                  v: np.ndarray | None) -> np.ndarray:
     """Pooled video descriptor from DECODED planes: mean/peak luma, mean
     inter-frame |Δluma| (motion), mean chroma, frame count and geometry.
     Every statistic is an exact int64 sum followed by one division, so the
@@ -183,10 +184,10 @@ def video_feature(y: np.ndarray, u: np.ndarray | None,
     feat = np.array([mean_y, motion, mean_u, mean_v,
                      float(n), float(h), float(w), peak_y],
                     dtype=np.float32)
-    return np.resize(feat, feat_dim)
+    return np.resize(feat, FEAT_DIM)
 
 
-def extract_features(media: DataFrame, feat_dim: int = 8) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """mapInPandas feature extraction: per-batch PNG decode → pooled
     feature.
 
@@ -203,13 +204,13 @@ def extract_features(media: DataFrame, feat_dim: int = 8) -> DataFrame:
                 b = bytes(payload)
                 digs.append(hashlib.sha256(b).hexdigest())
                 if kind == "image":
-                    feats.append(image_feature(decode_image(b), feat_dim))
+                    feats.append(image_feature(decode_image(b)))
                 elif kind == "audio":
                     samples, rate = wav_decode(b)
-                    feats.append(audio_feature(samples, rate, feat_dim))
+                    feats.append(audio_feature(samples, rate))
                 else:
                     y, u, v, _ = y4m_decode(b)
-                    feats.append(video_feature(y, u, v, feat_dim))
+                    feats.append(video_feature(y, u, v))
             yield pd.DataFrame({
                 "media_id": pdf["media_id"],
                 "kind": pdf["kind"],
@@ -219,60 +220,3 @@ def extract_features(media: DataFrame, feat_dim: int = 8) -> DataFrame:
             })
 
     return media.mapInPandas(_extract, FEATURE_SCHEMA)
-
-
-def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Image resize operator (nearest-neighbor, exact integer center map) —
-    decode → resample → re-encode, all inside one mapInPandas pass.
-    Non-image rows pass through untouched."""
-    def _resize(batches):
-        for pdf in batches:
-            rows = []
-            for t in pdf.itertuples():
-                if t.kind != "image":
-                    rows.append((t.media_id, t.kind, bytes(t.payload),
-                                 t.width, t.height, t.duration_ms))
-                    continue
-                arr = decode_image(bytes(t.payload))
-                h, w = arr.shape[0], arr.shape[1]
-                ridx = np.minimum((np.arange(out_h) * 2 + 1) * h
-                                  // (2 * out_h), h - 1)
-                cidx = np.minimum((np.arange(out_w) * 2 + 1) * w
-                                  // (2 * out_w), w - 1)
-                small = arr[np.ix_(ridx, cidx)]
-                rows.append((t.media_id, t.kind, png_encode(small),
-                             out_w, out_h, t.duration_ms))
-            yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_SCHEMA])
-
-    return media.mapInPandas(_resize, MEDIA_SCHEMA)
-
-
-FRAME_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType(), False),
-    T.StructField("frame_no", T.IntegerType(), False),
-    T.StructField("width", T.IntegerType(), False),
-    T.StructField("height", T.IntegerType(), False),
-    T.StructField("frame", T.BinaryType(), False),  # luma plane, row-major
-])
-
-
-def sample_frames(media: DataFrame, every_k: int = 4) -> DataFrame:
-    """Frame-sample operator for video payloads: a REAL Y4M demux — every
-    k-th decoded luma plane becomes one output row (bounded fan-out:
-    n_frames/k rows per video, payload bytes never duplicated beyond the
-    sampled frames). A compressed-codec deployment swaps the y4m_decode
-    call for an ffmpeg demux; the Spark shape is identical."""
-    def _frames(batches):
-        for pdf in batches:
-            rows = []
-            for t in pdf.itertuples():
-                if t.kind != "video":
-                    continue
-                y, _, _, info = y4m_decode(bytes(t.payload))
-                for fno in range(0, info["n_frames"], every_k):
-                    rows.append((t.media_id, fno, info["width"],
-                                 info["height"], y[fno].tobytes()))
-            yield pd.DataFrame(rows,
-                               columns=[f.name for f in FRAME_SCHEMA])
-
-    return media.mapInPandas(_frames, FRAME_SCHEMA)

@@ -37,14 +37,14 @@ DAMP_NUM, DAMP_DEN = 85, 100
 
 
 def pagerank_fixed_point(edges: DataFrame, n_nodes: int,
-                         iterations: int = 10,
-                         src: str = "src", dst: str = "dst") -> DataFrame:
-    """Exact integer PageRank. ``edges`` must cover every node as a
-    source (no dangling sources; the fixture guarantees out-degree 3).
+                         iterations: int = 10) -> DataFrame:
+    """Exact integer PageRank over ``(src, dst)`` edges, which must cover
+    every node as a source (no dangling sources; the fixture guarantees
+    out-degree 3).
     Returns (node, rank_fp) for every node appearing anywhere."""
-    deg = edges.groupBy(src).agg(F.count(F.lit(1)).alias("deg"))
-    nodes = (edges.select(F.col(src).alias("node"))
-             .unionByName(edges.select(F.col(dst).alias("node")))
+    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    nodes = (edges.select(F.col("src").alias("node"))
+             .unionByName(edges.select(F.col("dst").alias("node")))
              .distinct())
     base = (DAMP_DEN - DAMP_NUM) * SCALE // DAMP_DEN // n_nodes
     ranks = nodes.withColumn("rank_fp",
@@ -52,8 +52,8 @@ def pagerank_fixed_point(edges: DataFrame, n_nodes: int,
     # localCheckpoint truncates lineage each round — persist alone caches
     # data but the logical plan keeps growing and Catalyst re-analysis
     # compounds per iteration (see operators/components.py)
-    e = (edges.join(deg, src)
-         .select(F.col(src).alias("node"), F.col(dst).alias("_dst"),
+    e = (edges.join(deg, "src")
+         .select(F.col("src").alias("node"), F.col("dst").alias("_dst"),
                  "deg")
          .localCheckpoint())
     nodes = nodes.localCheckpoint()

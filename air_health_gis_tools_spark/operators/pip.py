@@ -25,13 +25,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
-CELL_M_DEFAULT = 25_000
+# square cell pitch of the polygon cover / point key equi-join
+CELL_M = 25_000
 
 
-def polygon_cover_cells(polys: DataFrame, cell_m: int = CELL_M_DEFAULT,
-                        cx_col: str = "cx", cy_col: str = "cy",
-                        r_col: str = "r") -> DataFrame:
-    """Explode each circle polygon to the cells its bbox covers.
+def polygon_cover_cells(polys: DataFrame) -> DataFrame:
+    """Explode each ``(cx, cy, r)`` circle polygon to the cells its bbox
+    covers.
 
     (The rasterize-vector analogue of the reference's
     ``arcpy.conversion.PolygonToRaster``, 1-Burnt Area ArcGIS - 25km.py:30 —
@@ -46,10 +46,8 @@ def polygon_cover_cells(polys: DataFrame, cell_m: int = CELL_M_DEFAULT,
     def fdiv(e: str, d: int) -> str:
         return f"(({e}) - pmod({e}, {d})) DIV {d}"
 
-    ci = fdiv(f"{cx_col} - {r_col}", cell_m), fdiv(f"{cx_col} + {r_col}",
-                                                   cell_m)
-    cj = fdiv(f"{cy_col} - {r_col}", cell_m), fdiv(f"{cy_col} + {r_col}",
-                                                   cell_m)
+    ci = fdiv("cx - r", CELL_M), fdiv("cx + r", CELL_M)
+    cj = fdiv("cy - r", CELL_M), fdiv("cy + r", CELL_M)
     return (polys
             .withColumn("_ci", F.explode(F.expr(
                 f"sequence({ci[0]}, {ci[1]})")))
@@ -61,11 +59,9 @@ def polygon_cover_cells(polys: DataFrame, cell_m: int = CELL_M_DEFAULT,
 
 
 def pip_circle_counts(points: DataFrame, polys: DataFrame,
-                      group_cols: list[str] | None = None,
-                      cell_m: int = CELL_M_DEFAULT,
-                      x_col: str = "x", y_col: str = "y",
-                      poly_id_col: str = "poly_id") -> DataFrame:
-    """Count points inside each circular polygon (per optional group cols).
+                      group_cols: list[str] | None = None) -> DataFrame:
+    """Count ``(x, y)`` points inside each circular polygon (per optional
+    group cols).
 
     Exact semantics: dx² + dy² ≤ r² (integer). Returns
     (poly_id, *group_cols, n_points) including zero rows for empty polygons
@@ -74,18 +70,18 @@ def pip_circle_counts(points: DataFrame, polys: DataFrame,
     group_cols is empty; grouped variants return observed combinations.
     """
     group_cols = group_cols or []
-    covered = polygon_cover_cells(polys, cell_m)
+    covered = polygon_cover_cells(polys)
     pts = points.withColumn(
         "cell",
-        (F.col(x_col) / cell_m).cast("long") * F.lit(1 << 32)
-        + (F.col(y_col) / cell_m).cast("long"))
+        (F.col("x") / CELL_M).cast("long") * F.lit(1 << 32)
+        + (F.col("y") / CELL_M).cast("long"))
 
-    dx = F.col(x_col) - F.col("cx")
-    dy = F.col(y_col) - F.col("cy")
+    dx = F.col("x") - F.col("cx")
+    dy = F.col("y") - F.col("cy")
     inside = (dx * dx + dy * dy) <= (F.col("r") * F.col("r"))
     hits = (pts.join(F.broadcast(covered), "cell")
             .filter(inside)
-            .groupBy(poly_id_col, *group_cols)
+            .groupBy("poly_id", *group_cols)
             .agg(F.count(F.lit(1)).alias("n_points")))
     if group_cols:
         return hits
@@ -95,50 +91,48 @@ def pip_circle_counts(points: DataFrame, polys: DataFrame,
     # is a BroadcastHashJoin instead of a sort-merge join whose aggregate
     # side has no size estimate (r6, guide §3.1; AQE usually rewrites it
     # at runtime anyway, the hint makes it unconditional).
-    return (polys.select(poly_id_col)
-            .join(F.broadcast(hits), poly_id_col, "left")
-            .select(poly_id_col,
+    return (polys.select("poly_id")
+            .join(F.broadcast(hits), "poly_id", "left")
+            .select("poly_id",
                     F.coalesce(F.col("n_points"), F.lit(0)).alias("n_points")))
 
 
-def radius_count(points: DataFrame, targets: DataFrame, radius_m: int,
-                 id_col: str = "doc_id",
-                 x_col: str = "x", y_col: str = "y",
-                 tx_col: str = "mx", ty_col: str = "my") -> DataFrame:
+def radius_count(points: DataFrame, targets: DataFrame, radius_m: int
+                 ) -> DataFrame:
     """Ball/radius join count — the reference's ``find_nn_kd_by_tree``
     ``query_ball_tree`` (Archived_scripts/exploration.ipynb): for every
-    point, how many targets lie within ``radius_m``. Distance-band range
-    join realized as cell equi-join + exact θ post-filter (SURVEY.md J5)."""
+    ``(doc_id, x, y)`` point, how many ``(mx, my)`` targets lie within
+    ``radius_m``. Distance-band range join realized as cell equi-join +
+    exact θ post-filter (SURVEY.md J5)."""
     cell_m = radius_m
     offs = [(di, dj) for di in (-1, 0, 1) for dj in (-1, 0, 1)]
     off_col = F.array(*[F.struct(F.lit(a).alias("di"), F.lit(b).alias("dj"))
                         for a, b in offs])
-    pts = (points.select(id_col, x_col, y_col)
+    pts = (points.select("doc_id", "x", "y")
            .withColumn("_o", F.explode(off_col))
            .withColumn("cell",
-                       ((F.col(x_col) / cell_m).cast("long") + F.col("_o.di"))
+                       ((F.col("x") / cell_m).cast("long") + F.col("_o.di"))
                        * F.lit(1 << 32)
-                       + ((F.col(y_col) / cell_m).cast("long")
+                       + ((F.col("y") / cell_m).cast("long")
                           + F.col("_o.dj")))
            .drop("_o"))
     tg = targets.select(
-        tx_col, ty_col,
-        ((F.col(tx_col) / cell_m).cast("long") * F.lit(1 << 32)
-         + (F.col(ty_col) / cell_m).cast("long")).alias("cell"))
-    dx = F.col(x_col) - F.col(tx_col)
-    dy = F.col(y_col) - F.col(ty_col)
+        "mx", "my",
+        ((F.col("mx") / cell_m).cast("long") * F.lit(1 << 32)
+         + (F.col("my") / cell_m).cast("long")).alias("cell"))
+    dx = F.col("x") - F.col("mx")
+    dy = F.col("y") - F.col("my")
     hits = (pts.join(F.broadcast(tg), "cell")
             .filter((dx * dx + dy * dy) <= F.lit(radius_m) ** 2)
-            .groupBy(id_col).agg(F.count(F.lit(1)).alias("n_in_radius")))
-    return (points.select(id_col)
-            .join(hits, id_col, "left")
-            .select(id_col, F.coalesce("n_in_radius", F.lit(0))
+            .groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_in_radius")))
+    return (points.select("doc_id")
+            .join(hits, "doc_id", "left")
+            .select("doc_id", F.coalesce("n_in_radius", F.lit(0))
                     .alias("n_in_radius")))
 
 
 def radius_count_np(points: DataFrame, target_xy: tuple[np.ndarray, np.ndarray],
-                    radius_m: int, id_col: str = "doc_id",
-                    x_col: str = "x", y_col: str = "y") -> DataFrame:
+                    radius_m: int) -> DataFrame:
     """Broadcast-kernel variant of ``radius_count`` for small target dims:
     the chunked numpy distance matrix replaces the 9-cell explode join —
     far less row amplification, scales with cores like the zonal kernel.
@@ -158,6 +152,6 @@ def radius_count_np(points: DataFrame, target_xy: tuple[np.ndarray, np.ndarray],
             out[s:e] = ((dx * dx + dy * dy) <= r2).sum(axis=1)
         return pd.Series(out)
 
-    return points.select(id_col, x_col, y_col).withColumn(
-        "n_in_radius", _cnt(F.col(x_col), F.col(y_col))) \
-        .select(id_col, "n_in_radius")
+    return points.select("doc_id", "x", "y").withColumn(
+        "n_in_radius", _cnt(F.col("x"), F.col("y"))) \
+        .select("doc_id", "n_in_radius")

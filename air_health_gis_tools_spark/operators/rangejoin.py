@@ -15,7 +15,8 @@ interval-join paper use) is BUCKET DECOMPOSITION, pure Catalyst:
 No dedup pass is needed: a probe's single bucket meets each covering
 interval exactly once. Cost: one shuffle keyed by bucket, join fan-in
 bounded by intervals-per-bucket. Long intervals explode into many rows —
-``max_span_buckets`` fails fast (executor-side ``raise_error``) instead of
+a span cap (``MAX_SPAN_BUCKETS``; ``range_join`` takes it as
+``max_span_buckets``) fails fast (executor-side ``raise_error``) instead of
 letting one degenerate interval produce millions of rows; pick ``w`` near
 the typical interval length so the blow-up factor stays ~2.
 
@@ -32,88 +33,73 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+# fail-fast cap on the buckets one interval may explode into
+MAX_SPAN_BUCKETS = 10_000
+
 
 def range_join(probes: DataFrame, intervals: DataFrame, v_col: str,
-               lo_col: str = "lo", hi_col: str = "hi",
                bucket_w: float = 10.0, key: str | None = None,
-               max_span_buckets: int = 10_000) -> DataFrame:
-    """Inner join of probe rows to every interval containing ``v_col``
-    (and matching ``key``, if given). Returns probe columns + interval
-    columns. Exact semantics: ``lo <= v <= hi`` (pure comparisons — no
-    float arithmetic crosses the result surface)."""
-    start = F.floor(F.col(lo_col) / bucket_w).cast("long")
-    span = F.floor(F.col(hi_col) / bucket_w).cast("long") - start + 1
+               max_span_buckets: int = MAX_SPAN_BUCKETS) -> DataFrame:
+    """Inner join of probe rows to every ``[lo, hi]`` interval containing
+    ``v_col`` (and matching ``key``, if given). Returns probe columns +
+    interval columns. Exact semantics: ``lo <= v <= hi`` (pure comparisons
+    — no float arithmetic crosses the result surface)."""
+    start = F.floor(F.col("lo") / bucket_w).cast("long")
+    span = F.floor(F.col("hi") / bucket_w).cast("long") - start + 1
     # the guard lives INSIDE the sequence's end bound — a separate guard
     # column would be pruned away by the optimizer and never evaluated
     end = F.when(
         span <= max_span_buckets,
-        F.floor(F.col(hi_col) / bucket_w).cast("long")
+        F.floor(F.col("hi") / bucket_w).cast("long")
     ).otherwise(F.raise_error(F.concat(
         F.lit(f"range_join: interval spans more than {max_span_buckets} "
               f"buckets at bucket_w={bucket_w}; raise bucket_w or split "
               "the interval — ["),
-        F.col(lo_col).cast("string"), F.lit(", "),
-        F.col(hi_col).cast("string"), F.lit("]"))).cast("long"))
+        F.col("lo").cast("string"), F.lit(", "),
+        F.col("hi").cast("string"), F.lit("]"))).cast("long"))
     b_int = intervals.withColumn("_b", F.explode(F.sequence(start, end)))
     b_pr = probes.withColumn(
         "_b", F.floor(F.col(v_col) / bucket_w).cast("long"))
     on = ["_b"] if key is None else ["_b", key]
     return (b_pr.join(b_int, on)
-            .filter((F.col(v_col) >= F.col(lo_col))
-                    & (F.col(v_col) <= F.col(hi_col)))
+            .filter((F.col(v_col) >= F.col("lo"))
+                    & (F.col(v_col) <= F.col("hi")))
             .drop("_b"))
 
 
-def suggest_bucket_w(intervals: DataFrame, lo_col: str = "lo",
-                     hi_col: str = "hi") -> float:
-    """Data-derived bucket width: the median interval length (one tiny
-    aggregate job, driver-side planning like choose_zonal_strategy).
-    With w ~ median length, a typical interval explodes into <= 2-3
-    bucket rows and a probe meets few candidate intervals per bucket —
-    the blow-up/selectivity sweet spot. Width never changes RESULTS
-    (tested), only the plan's fan-out."""
-    row = intervals.select(F.expr(
-        f"approx_percentile({hi_col} - {lo_col}, 0.5)").alias("m")).head()
-    m = float(row["m"]) if row and row["m"] is not None else 1.0
-    return max(m, 1e-9)
-
-
 def interval_overlap_join(left: DataFrame, right: DataFrame,
-                          lo_l: str = "lo", hi_l: str = "hi",
-                          lo_r: str = "lo_r", hi_r: str = "hi_r",
-                          bucket_w: float = 10.0, key: str | None = None,
-                          max_span_buckets: int = 10_000) -> DataFrame:
-    """Interval × interval OVERLAP join (``lo_l <= hi_r AND lo_r <=
-    hi_l``): both sides explode into bucket coverage, equi-join on the
-    bucket, exact overlap re-check. Two overlapping intervals can share
-    SEVERAL buckets, so each pair is emitted only at its FIRST shared
-    bucket — both coverages are contiguous ranges, so their intersection
-    starts at ``greatest(start_l, start_r)``; keeping only the join row
-    whose bucket equals that value yields each pair exactly once with a
-    cheap post-join filter, instead of a second full shuffle through
-    ``.distinct()`` (which would also collapse genuinely duplicate input
-    rows when callers lack a unique key). Same fail-fast span guard as
-    range_join on both sides."""
+                          bucket_w: float = 10.0) -> DataFrame:
+    """Interval × interval OVERLAP join of ``left`` ``[lo, hi]`` and
+    ``right`` ``[lo_r, hi_r]`` (``lo <= hi_r AND lo_r <= hi``): both sides
+    explode into bucket coverage, equi-join on the bucket, exact overlap
+    re-check. Two overlapping intervals can share SEVERAL buckets, so each
+    pair is emitted only at its FIRST shared bucket — both coverages are
+    contiguous ranges, so their intersection starts at
+    ``greatest(start_l, start_r)``; keeping only the join row whose bucket
+    equals that value yields each pair exactly once with a cheap post-join
+    filter, instead of a second full shuffle through ``.distinct()``
+    (which would also collapse genuinely duplicate input rows when callers
+    lack a unique key). Same fail-fast span guard as
+    range_join on both sides, at ``MAX_SPAN_BUCKETS``."""
     def _explode(df: DataFrame, lo: str, hi: str) -> DataFrame:
         start = F.floor(F.col(lo) / bucket_w).cast("long")
         span = F.floor(F.col(hi) / bucket_w).cast("long") - start + 1
         end = F.when(
-            span <= max_span_buckets,
+            span <= MAX_SPAN_BUCKETS,
             F.floor(F.col(hi) / bucket_w).cast("long")
         ).otherwise(F.raise_error(F.lit(
             f"interval_overlap_join: interval spans more than "
-            f"{max_span_buckets} buckets at bucket_w={bucket_w}"))
+            f"{MAX_SPAN_BUCKETS} buckets at bucket_w={bucket_w}"))
             .cast("long"))
         return df.withColumn("_b", F.explode(F.sequence(start, end)))
 
-    a = _explode(left, lo_l, hi_l)
-    b = _explode(right, lo_r, hi_r)
-    on = ["_b"] if key is None else ["_b", key]
+    a = _explode(left, "lo", "hi")
+    b = _explode(right, "lo_r", "hi_r")
     first_shared = F.greatest(
-        F.floor(F.col(lo_l) / bucket_w).cast("long"),
-        F.floor(F.col(lo_r) / bucket_w).cast("long"))
-    return (a.join(b, on)
-            .filter((F.col(lo_l) <= F.col(hi_r))
-                    & (F.col(lo_r) <= F.col(hi_l))
+        F.floor(F.col("lo") / bucket_w).cast("long"),
+        F.floor(F.col("lo_r") / bucket_w).cast("long"))
+    return (a.join(b, ["_b"])
+            .filter((F.col("lo") <= F.col("hi_r"))
+                    & (F.col("lo_r") <= F.col("hi"))
                     & (F.col("_b") == first_shared))
             .drop("_b"))

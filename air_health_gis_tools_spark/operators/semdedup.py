@@ -47,10 +47,10 @@ a quadratic single-task straggler that caps thread scaling no matter how
 fast the kernel is. ``max_cluster`` is the LSH hot-bucket defense
 (operators/dedup.py `_cap_band_buckets`) applied here: clusters past the
 cap deterministically sub-split by ``pmod(id, ceil(|c|/cap))``; pairs
-are tested within a sub-bucket only (documented recall trade, measurable
-via `cluster_overflow_report`), bounding every task at O(cap^2) and the
-total at O(n*cap). Default off — the exact SemDeDup semantics (and the
-q84 golden) are unchanged unless the caller opts in.
+are tested within a sub-bucket only (documented recall trade), bounding
+every task at O(cap^2) and the total at O(n*cap). Default off — the exact
+SemDeDup semantics (and the q84 golden) are unchanged unless the caller
+opts in.
 """
 
 from __future__ import annotations
@@ -59,11 +59,10 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from .similarity import (_quant_expr, ivf_assign, ivf_assign_topp,
-                         ivf_train_centroids)
+                         ivf_train_centroids, training_sample)
 
 TAU_NUM = 9          # τ = 9/20 = 0.45 — q37's corpus-calibrated threshold
 TAU_DEN = 20
-SAMPLE_N = 4096
 
 
 def _quant16_expr(col: str) -> str:
@@ -104,16 +103,17 @@ def _n2_bound_ok(n2_max: int) -> None:
             "|e| <= sqrt(_N2_MAX/dim)/1000, not the int16 limit)")
 
 
-def _quant_cols(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+def _quant_cols(df: DataFrame) -> DataFrame:
     # the ‖q‖² guard is folded into the produced n2 VALUE (rangejoin
     # lesson: Catalyst prunes unevaluated guard columns) so the Catalyst
     # pair path fails fast instead of wrapping int64 in the predicate
-    n2 = (f"aggregate(transform({_quant_expr(vec_col)}, e -> e * e), "
+    qe = _quant_expr("embedding")
+    n2 = (f"aggregate(transform({qe}, e -> e * e), "
           f"0L, (acc, v) -> acc + v)")
     return df.select(
         F.col("cluster"),
-        F.col(id_col),
-        F.expr(_quant_expr(vec_col)).alias("qv"),
+        F.col("vec_id"),
+        F.expr(qe).alias("qv"),
         F.expr(f"CASE WHEN {n2} <= {_N2_MAX} THEN {n2} ELSE "
                f"CAST(raise_error('semdedup: ||q||^2 overflows the exact "
                f"int64 cosine predicate') AS BIGINT) END").alias("n2"))
@@ -121,26 +121,20 @@ def _quant_cols(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
 
 def semantic_neardup_edges(emb: DataFrame, n_lists: int = 8,
                            tau_num: int = TAU_NUM, tau_den: int = TAU_DEN,
-                           id_col: str = "vec_id",
-                           vec_col: str = "embedding",
-                           centroids: np.ndarray | None = None,
-                           seed: int = 42) -> DataFrame:
-    """Cluster-local near-dup edges (id1 < id2, same cluster,
-    cos ≥ tau_num/tau_den exact-integer). Columns: cluster, id1, id2."""
-    if not (0 < tau_num <= tau_den <= 20):
-        raise ValueError("tau must be in (0, 1] with den <= 20 "
-                         "(int64 overflow bound, module docstring)")
+                           centroids: np.ndarray | None = None
+                           ) -> DataFrame:
+    """Cluster-local near-dup edges of ``(vec_id, embedding)`` rows
+    (id1 < id2, same cluster, cos ≥ tau_num/tau_den exact-integer).
+    Columns: cluster, id1, id2."""
+    _check_tau(tau_num, tau_den)
     if centroids is None:
-        sample = np.stack(
-            [r[0] for r in emb.select(vec_col, id_col).orderBy(id_col)
-             .limit(SAMPLE_N).select(vec_col).collect()])
-        centroids = ivf_train_centroids(sample, n_lists, seed=seed)
-    assigned = (ivf_assign(emb, centroids, vec_col)
+        centroids = ivf_train_centroids(training_sample(emb), n_lists)
+    assigned = (ivf_assign(emb, centroids)
                 .withColumnRenamed("ivf_list", "cluster"))
-    q = _quant_cols(assigned, id_col, vec_col)
-    a = q.select("cluster", F.col(id_col).alias("id1"),
+    q = _quant_cols(assigned)
+    a = q.select("cluster", F.col("vec_id").alias("id1"),
                  F.col("qv").alias("qv1"), F.col("n2").alias("n21"))
-    b = q.select("cluster", F.col(id_col).alias("id2"),
+    b = q.select("cluster", F.col("vec_id").alias("id2"),
                  F.col("qv").alias("qv2"), F.col("n2").alias("n22"))
     pairs = (a.join(b, "cluster")
              .filter(F.col("id1") < F.col("id2"))
@@ -154,8 +148,13 @@ def semantic_neardup_edges(emb: DataFrame, n_lists: int = 8,
     return near.select("cluster", "id1", "id2")
 
 
-def _cap_cluster_salt(assigned: DataFrame, id_col: str,
-                      max_cluster: int) -> DataFrame:
+def _check_tau(tau_num: int, tau_den: int) -> None:
+    if not (0 < tau_num <= tau_den <= 20):
+        raise ValueError("tau must be in (0, 1] with den <= 20 "
+                         "(int64 overflow bound, module docstring)")
+
+
+def _cap_cluster_salt(assigned: DataFrame, max_cluster: int) -> DataFrame:
     """Add a deterministic ``_salt`` sub-bucket key: 0 for clusters within
     the cap, ``pmod(id, ceil(|c|/cap))`` past it. The size dim is ≤
     n_lists rows — always broadcastable; the salt derives from DATA only,
@@ -168,47 +167,14 @@ def _cap_cluster_salt(assigned: DataFrame, id_col: str,
                 "_salt",
                 F.when(F.col("_csz") <= max_cluster, F.lit(0).cast("long"))
                 .otherwise(F.pmod(
-                    F.col(id_col),
+                    F.col("vec_id"),
                     F.ceil(F.col("_csz") / F.lit(max_cluster))
                     .cast("long"))))
             .drop("_csz"))
 
 
-def cluster_overflow_report(emb: DataFrame, n_lists: int = 8,
-                            max_cluster: int = 65536,
-                            id_col: str = "vec_id",
-                            vec_col: str = "embedding",
-                            centroids: np.ndarray | None = None,
-                            seed: int = 42) -> DataFrame:
-    """Which clusters the ``max_cluster`` cap would sub-split, and how much
-    pair work the cap removes: (cluster, n_vecs, n_subbuckets,
-    pairs_uncapped, pairs_capped_max). The LSH `band_overflow_report`
-    twin — run it before committing a cap on a new corpus."""
-    if centroids is None:
-        sample = np.stack(
-            [r[0] for r in emb.select(vec_col, id_col).orderBy(id_col)
-             .limit(SAMPLE_N).select(vec_col).collect()])
-        centroids = ivf_train_centroids(sample, n_lists, seed=seed)
-    sizes = (ivf_assign(emb, centroids, vec_col)
-             .withColumnRenamed("ivf_list", "cluster")
-             .groupBy("cluster").agg(F.count(F.lit(1)).alias("n_vecs")))
-    nsb = F.ceil(F.col("n_vecs") / F.lit(max_cluster)).cast("long")
-    return (sizes.filter(F.col("n_vecs") > max_cluster)
-            .select("cluster", "n_vecs", nsb.alias("n_subbuckets"),
-                    (F.col("n_vecs") * (F.col("n_vecs") - 1) / 2)
-                    .cast("long").alias("pairs_uncapped"),
-                    (nsb * (F.lit(max_cluster)
-                            * (F.lit(max_cluster) - 1) / 2).cast("long"))
-                    .alias("pairs_capped_max")))
-
-
 def semantic_neardup_edges_np(emb: DataFrame, n_lists: int = 8,
-                              tau_num: int = TAU_NUM,
-                              tau_den: int = TAU_DEN,
-                              id_col: str = "vec_id",
-                              vec_col: str = "embedding",
                               centroids: np.ndarray | None = None,
-                              seed: int = 42,
                               n_probe: int = 1,
                               max_cluster: int | None = None) -> DataFrame:
     """The throughput twin of ``semantic_neardup_edges``: one
@@ -238,32 +204,27 @@ def semantic_neardup_edges_np(emb: DataFrame, n_lists: int = 8,
     the LOWER-numbered one (canonical-emission rule, checked against the
     visitor's probe set in-kernel) — no post-hoc dedup shuffle, the
     interval-join lesson. Shuffle volume scales ×n_probe."""
-    if not (0 < tau_num <= tau_den <= 20):
-        raise ValueError("tau must be in (0, 1] with den <= 20 "
-                         "(int64 overflow bound, module docstring)")
+    _check_tau(TAU_NUM, TAU_DEN)
     if centroids is None:
-        sample = np.stack(
-            [r[0] for r in emb.select(vec_col, id_col).orderBy(id_col)
-             .limit(SAMPLE_N).select(vec_col).collect()])
-        centroids = ivf_train_centroids(sample, n_lists, seed=seed)
+        centroids = ivf_train_centroids(training_sample(emb), n_lists)
     # the cluster shuffle ships the QUANTIZED int16 vector, not the raw
     # float32: the same floor(e*1000+0.5) the kernel used to compute —
     # moved into Catalyst so the shuffled bytes halve (2 B/component).
     # The q84_semdedup_big scaling row is Arrow/shuffle-bound once the
     # matmul runs in dgemm, so shuffle bytes are the scaling lever here.
     if n_probe <= 1:
-        assigned = (ivf_assign(emb, centroids, vec_col)
+        assigned = (ivf_assign(emb, centroids)
                     .withColumnRenamed("ivf_list", "cluster")
-                    .select("cluster", F.col(id_col),
-                            F.expr(_quant16_expr(vec_col)).alias("qv")))
+                    .select("cluster", F.col("vec_id"),
+                            F.expr(_quant16_expr("embedding")).alias("qv")))
     else:
-        assigned = (ivf_assign_topp(emb, centroids, vec_col, n_probe)
-                    .select(F.col(id_col),
-                            F.expr(_quant16_expr(vec_col)).alias("qv"),
+        assigned = (ivf_assign_topp(emb, centroids, n_probe)
+                    .select(F.col("vec_id"),
+                            F.expr(_quant16_expr("embedding")).alias("qv"),
                             F.col("ivf_probes"),
                             F.col("ivf_probes")[0].alias("primary"),
                             F.explode("ivf_probes").alias("cluster")))
-    num2, den2 = tau_num * tau_num, tau_den * tau_den
+    num2, den2 = TAU_NUM * TAU_NUM, TAU_DEN * TAU_DEN
     # mirror-based single emission is only valid when home lists are whole
     # cogroup groups (see the in-kernel comment); capped multi-probe runs
     # emit per meeting and canonicalize downstream
@@ -271,7 +232,7 @@ def semantic_neardup_edges_np(emb: DataFrame, n_lists: int = 8,
 
     def _pairs(pdf):
         import pandas as pd
-        ids = pdf[id_col].to_numpy(np.int64)
+        ids = pdf["vec_id"].to_numpy(np.int64)
         order = np.argsort(ids)
         ids = ids[order]
         multi = "ivf_probes" in pdf.columns
@@ -353,7 +314,7 @@ def semantic_neardup_edges_np(emb: DataFrame, n_lists: int = 8,
         # n x k x d kernel twice per action
         from pyspark import StorageLevel
         assigned = assigned.persist(StorageLevel.MEMORY_AND_DISK)
-        salted = (_cap_cluster_salt(assigned, id_col, max_cluster)
+        salted = (_cap_cluster_salt(assigned, max_cluster)
                   .repartition(n_parts, "cluster", "_salt"))
         edges = salted.groupBy("cluster", "_salt").applyInPandas(
             _pairs, schema="cluster bigint, id1 bigint, id2 bigint")
@@ -371,37 +332,27 @@ def semantic_neardup_edges_np(emb: DataFrame, n_lists: int = 8,
                 _pairs, schema="cluster bigint, id1 bigint, id2 bigint"))
 
 
-def semantic_dedup(emb: DataFrame, n_lists: int = 8,
-                   tau_num: int = TAU_NUM, tau_den: int = TAU_DEN,
-                   id_col: str = "vec_id", vec_col: str = "embedding",
-                   centroids: np.ndarray | None = None,
-                   seed: int = 42) -> DataFrame:
-    """Per-vector SemDeDup verdict: (vec_id, cluster, n_nbrs, keep) —
-    n_nbrs = near-dup neighbors in the cluster (either direction), keep =
-    0 iff a lower-id near-duplicate exists. All-integer output (hash-safe
-    across engines)."""
-    if centroids is None:
-        sample = np.stack(
-            [r[0] for r in emb.select(vec_col, id_col).orderBy(id_col)
-             .limit(SAMPLE_N).select(vec_col).collect()])
-        centroids = ivf_train_centroids(sample, n_lists, seed=seed)
-    assigned = (ivf_assign(emb, centroids, vec_col)
+def semantic_dedup(emb: DataFrame, n_lists: int = 8) -> DataFrame:
+    """Per-vector SemDeDup verdict at τ = TAU_NUM/TAU_DEN: (vec_id,
+    cluster, n_nbrs, keep) — n_nbrs = near-dup neighbors in the cluster
+    (either direction), keep = 0 iff a lower-id near-duplicate exists.
+    All-integer output (hash-safe across engines)."""
+    centroids = ivf_train_centroids(training_sample(emb), n_lists)
+    assigned = (ivf_assign(emb, centroids)
                 .withColumnRenamed("ivf_list", "cluster"))
-    edges = semantic_neardup_edges(
-        emb, n_lists, tau_num, tau_den, id_col, vec_col,
-        centroids=centroids, seed=seed)
+    edges = semantic_neardup_edges(emb, n_lists, centroids=centroids)
     # per-vector rollup of the (already cluster-bounded) edge set: one
     # map-side-combined aggregate over exploded endpoints
-    nbrs = (edges.select(F.col("id1").alias(id_col),
+    nbrs = (edges.select(F.col("id1").alias("vec_id"),
                          F.lit(0).alias("has_lower"))
-            .unionAll(edges.select(F.col("id2").alias(id_col),
+            .unionAll(edges.select(F.col("id2").alias("vec_id"),
                                    F.lit(1).alias("has_lower")))
-            .groupBy(id_col)
+            .groupBy("vec_id")
             .agg(F.count(F.lit(1)).alias("n_nbrs"),
                  F.max("has_lower").alias("dropped")))
-    return (assigned.select(id_col, "cluster")
-            .join(nbrs, id_col, "left")
-            .select(id_col, F.col("cluster").cast("bigint").alias("cluster"),
+    return (assigned.select("vec_id", "cluster")
+            .join(nbrs, "vec_id", "left")
+            .select("vec_id", F.col("cluster").cast("bigint").alias("cluster"),
                     F.coalesce("n_nbrs", F.lit(0)).cast("bigint")
                     .alias("n_nbrs"),
                     (F.lit(1) - F.coalesce("dropped", F.lit(0)))

@@ -5,10 +5,11 @@
   product, making every sum an exact integer ⇒ the score is bit-identical in
   Spark, NumPy and the DuckDB oracle regardless of summation order. Built-in
   ``aggregate``/``zip_with`` expressions (JVM-side), no UDF.
-- ``cosine_topk_udf``: the same computation as a batched NumPy matmul kernel
-  (the fast path at scale — one BLAS call per Arrow batch).
-- ``lsh_buckets``: random-hyperplane (sign-LSH) bucketing for ANN at scale:
-  b deterministic hyperplanes → b-bit bucket id; candidate = same bucket.
+- ``ann_topk_ivf`` / ``ann_topk_ivfpq`` / ``ann_topk_lsh``: approximate
+  top-k that restrict the same exact scoring to an IVF-list, IVF-PQ
+  shortlist or sign-LSH bucket candidate set.
+
+Vectors are ``(vec_id, embedding)`` rows throughout.
 """
 
 from __future__ import annotations
@@ -19,6 +20,8 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 QUANT = 1000
+DIM = 64            # embedding width the LSH hyperplanes are drawn in
+SAMPLE_N = 4096     # quantizer training sample size
 
 
 def _quant_expr(col: str) -> str:
@@ -27,18 +30,18 @@ def _quant_expr(col: str) -> str:
             f"+ 0.5) AS BIGINT))")
 
 
-def quantized_cosine(df: DataFrame, qvec: list[float],
-                     vec_col: str = "embedding") -> DataFrame:
+def quantized_cosine(df: DataFrame, qvec: list[float]) -> DataFrame:
     """Append exact quantized-cosine similarity vs a constant query vector."""
     q = np.floor(np.asarray(qvec, dtype=np.float64) * QUANT + 0.5).astype(
         np.int64)
     q_lit = "array(" + ",".join(f"{int(v)}L" for v in q) + ")"
     qn2 = int((q * q).sum())
+    qe = _quant_expr("embedding")
     expr = (
-        f"aggregate(zip_with({_quant_expr(vec_col)}, {q_lit}, "
-        f"(a, b) -> a * b), 0L, (acc, v) -> acc + v)")
-    n2 = (f"aggregate(transform({_quant_expr(vec_col)}, e -> e * e), 0L, "
-          f"(acc, v) -> acc + v)")
+        f"aggregate(zip_with({qe}, {q_lit}, "
+        "(a, b) -> a * b), 0L, (acc, v) -> acc + v)")
+    n2 = (f"aggregate(transform({qe}, e -> e * e), 0L, "
+          "(acc, v) -> acc + v)")
     return (df.withColumn("dot", F.expr(expr))
             .withColumn("n2", F.expr(n2))
             .withColumn("cosine",
@@ -48,77 +51,31 @@ def quantized_cosine(df: DataFrame, qvec: list[float],
                         .otherwise(F.lit(None))))
 
 
-def cosine_topk(df: DataFrame, qvec: list[float], k: int = 5,
-                id_col: str = "vec_id", vec_col: str = "embedding"
+def cosine_topk(df: DataFrame, qvec: list[float], k: int = 5
                 ) -> DataFrame:
     """Top-k by exact quantized cosine (desc), deterministic id tie-break.
     Plan: per-partition TakeOrdered (no full sort at scale)."""
-    scored = quantized_cosine(df, qvec, vec_col)
+    scored = quantized_cosine(df, qvec)
     return (scored
-            .orderBy(F.col("cosine").desc(), F.col(id_col))
+            .orderBy(F.col("cosine").desc(), F.col("vec_id"))
             .limit(k)
-            .select(id_col, "cosine"))
+            .select("vec_id", "cosine"))
 
 
-def cosine_topk_udf(df: DataFrame, qvec: list[float], k: int = 5,
-                    id_col: str = "vec_id", vec_col: str = "embedding"
-                    ) -> DataFrame:
-    """Same result via a batched NumPy matmul kernel (scale fast-path)."""
-    q = np.floor(np.asarray(qvec, dtype=np.float64) * QUANT + 0.5).astype(
-        np.int64)
-    qn = float(np.sqrt(float((q * q).sum())))
-
-    @F.pandas_udf(T.DoubleType())
-    def _cos(emb: pd.Series) -> pd.Series:
-        m = np.floor(np.stack(emb.to_numpy()).astype(np.float64) * QUANT
-                     + 0.5).astype(np.int64)
-        dot = m @ q
-        n2 = (m * m).sum(axis=1)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            c = dot / np.sqrt(n2) / qn
-        # zero-norm → NULL, not NaN: Spark sorts NaN ABOVE all reals, so a
-        # NaN would jump to the top of orderBy(desc); NULL sorts last —
-        # matching the expression variant (cosine_topk) exactly
-        return pd.Series(np.where(n2 > 0, c, np.nan)).astype("Float64")
-
-    return (df.withColumn("cosine", _cos(F.col(vec_col)))
-            .orderBy(F.col("cosine").desc(), F.col(id_col))
-            .limit(k)
-            .select(id_col, "cosine"))
-
-
-def lsh_buckets(df: DataFrame, n_planes: int = 8, dim: int = 64,
-                id_col: str = "vec_id", vec_col: str = "embedding",
-                seed: int = 42) -> DataFrame:
-    """Sign-LSH bucket id per vector: bit i = (v · h_i) >= 0 for n_planes
-    deterministic (seeded) hyperplanes. Same-bucket vectors are ANN
-    candidates; bucket join is a plain equi-join at scale."""
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_planes, dim))
-
-    @F.pandas_udf(T.LongType())
-    def _bucket(emb: pd.Series) -> pd.Series:
-        m = np.stack(emb.to_numpy()).astype(np.float64)
-        signs = (m @ planes.T) >= 0
-        weights = (1 << np.arange(n_planes)).astype(np.int64)
-        return pd.Series((signs * weights).sum(axis=1).astype(np.int64))
-
-    return df.withColumn("bucket", _bucket(F.col(vec_col)))
-
-
-def ivf_train_centroids(vectors: np.ndarray, n_lists: int = 16,
-                        iters: int = 10, seed: int = 42) -> np.ndarray:
+def ivf_train_centroids(vectors: np.ndarray, n_lists: int = 16
+                        ) -> np.ndarray:
     """Deterministic Lloyd's k-means for the IVF coarse quantizer.
 
     Trained driver-side on a sample (the standard IVF recipe — at 100 TB
     the sample is a tiny .limit() collect, the ASSIGNMENT is distributed).
-    Fixed seed + fixed iteration count ⇒ reproducible across runs.
+    Fixed seed (42) + fixed iteration count (10) ⇒ reproducible across
+    runs.
     """
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(42)
     idx = rng.choice(len(vectors), size=min(n_lists, len(vectors)),
                      replace=False)
     cents = vectors[idx].astype(np.float64).copy()
-    for _ in range(iters):
+    for _ in range(10):
         # chunked over the sample axis: the (chunk, k, dim) difference
         # tensor stays bounded (~25 MB at dim 64) for ANY n_lists, while
         # the per-element arithmetic — and therefore every assignment and
@@ -136,8 +93,7 @@ def ivf_train_centroids(vectors: np.ndarray, n_lists: int = 16,
     return cents
 
 
-def ivf_assign(df: DataFrame, centroids: np.ndarray,
-               vec_col: str = "embedding") -> DataFrame:
+def ivf_assign(df: DataFrame, centroids: np.ndarray) -> DataFrame:
     """Distributed IVF list assignment: nearest centroid per vector
     (batched matmul kernel; centroids broadcast)."""
     cents = centroids.astype(np.float64)
@@ -158,11 +114,10 @@ def ivf_assign(df: DataFrame, centroids: np.ndarray,
             out[s:s + 512] = np.argmin(d, axis=1).astype(np.int32)
         return pd.Series(out)
 
-    return df.withColumn("ivf_list", _assign(F.col(vec_col)))
+    return df.withColumn("ivf_list", _assign(F.col("embedding")))
 
 
 def ivf_assign_topp(df: DataFrame, centroids: np.ndarray,
-                    vec_col: str = "embedding",
                     n_probe: int = 1) -> DataFrame:
     """Multi-probe IVF assignment: the ``n_probe`` nearest centroids per
     vector as an int array, nearest first. A STABLE argsort breaks
@@ -185,51 +140,50 @@ def ivf_assign_topp(df: DataFrame, centroids: np.ndarray,
                 d, axis=1, kind="stable")[:, :p].astype(np.int32)
         return pd.Series(list(idx))
 
-    return df.withColumn("ivf_probes", _assign(F.col(vec_col)))
+    return df.withColumn("ivf_probes", _assign(F.col("embedding")))
+
+
+def training_sample(df: DataFrame) -> np.ndarray:
+    """The first SAMPLE_N vectors by id: a bare LIMIT has no guaranteed
+    membership or order under repartitioning (ADVICE r3) — pin both with
+    orderBy(id) so the trained quantizers (and the committed goldens) are
+    invariant to partitioning and corpus growth."""
+    return np.stack([r[0] for r in
+                     df.select("embedding", "vec_id").orderBy("vec_id")
+                     .limit(SAMPLE_N).select("embedding").collect()])
 
 
 def ann_topk_ivf(df: DataFrame, qvec: list[float], k: int = 5,
-                 n_lists: int = 16, n_probe: int = 4,
-                 id_col: str = "vec_id", vec_col: str = "embedding",
-                 centroids: np.ndarray | None = None,
-                 seed: int = 42) -> DataFrame:
+                 n_lists: int = 16, n_probe: int = 4) -> DataFrame:
     """IVF ANN: exact scoring restricted to the n_probe lists whose
     centroids are nearest the query. Recall grows with n_probe
     (n_probe = n_lists ⇒ exact); measured in tests against brute force."""
-    if centroids is None:
-        # deterministic training sample: a bare LIMIT has no guaranteed
-        # membership or order under repartitioning (ADVICE r3) — pin both
-        # with orderBy(id) so the trained centroids (and the committed
-        # golden) are invariant to partitioning and corpus growth.
-        sample = np.stack([r[0] for r in
-                           df.select(vec_col, id_col).orderBy(id_col)
-                           .limit(4096).select(vec_col).collect()])
-        centroids = ivf_train_centroids(sample, n_lists, seed=seed)
+    centroids = ivf_train_centroids(training_sample(df), n_lists)
     q = np.asarray(qvec, dtype=np.float64)
     d = ((centroids - q[None, :]) ** 2).sum(axis=1)
     probes = [int(i) for i in np.argsort(d)[:n_probe]]
-    assigned = ivf_assign(df, centroids, vec_col)
+    assigned = ivf_assign(df, centroids)
     cand = assigned.filter(F.col("ivf_list").isin(probes))
-    return cosine_topk(cand, qvec, k, id_col, vec_col)
+    return cosine_topk(cand, qvec, k)
 
 
-def pq_train_codebooks(vectors: np.ndarray, m: int = 8, ksub: int = 16,
-                       iters: int = 10, seed: int = 7) -> np.ndarray:
+def pq_train_codebooks(vectors: np.ndarray, m: int = 8, ksub: int = 16
+                       ) -> np.ndarray:
     """Product-quantization codebooks (Jégou et al., TPAMI 2011): split the
     dim into ``m`` subspaces and run Lloyd's k-means with ``ksub``
     centroids in each. Driver-side on a bounded sample (same recipe as the
     IVF coarse quantizer); returns ``(m, ksub, dim//m)``. Deterministic:
-    fixed seed, fixed iterations."""
+    fixed seed (7), fixed iterations (10)."""
     n, dim = vectors.shape
     assert dim % m == 0, "dim must divide into m subspaces"
     dsub = dim // m
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(7)
     books = np.empty((m, ksub, dsub))
     for j in range(m):
         sub = vectors[:, j * dsub:(j + 1) * dsub].astype(np.float64)
         idx = rng.choice(n, size=min(ksub, n), replace=False)
         cents = sub[idx].copy()
-        for _ in range(iters):
+        for _ in range(10):
             d = ((sub[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
             assign = np.argmin(d, axis=1)
             for c in range(len(cents)):
@@ -242,8 +196,7 @@ def pq_train_codebooks(vectors: np.ndarray, m: int = 8, ksub: int = 16,
     return books
 
 
-def pq_encode(df: DataFrame, codebooks: np.ndarray,
-              vec_col: str = "embedding") -> DataFrame:
+def pq_encode(df: DataFrame, codebooks: np.ndarray) -> DataFrame:
     """Distributed PQ encode: each vector becomes ``m`` small codes
     (argmin centroid per subspace). At dim=64/m=8/ksub=16 that is 256 B of
     float32 → 8 codes — the 32× memory step that lets a billion-vector
@@ -264,16 +217,13 @@ def pq_encode(df: DataFrame, codebooks: np.ndarray,
             codes[:, j] = np.argmin(d, axis=1)
         return pd.Series(list(codes))
 
-    return df.withColumn("pq_codes", _encode(F.col(vec_col)))
+    return df.withColumn("pq_codes", _encode(F.col("embedding")))
 
 
 def ann_topk_ivfpq(df: DataFrame, qvec: list[float], k: int = 5,
                    n_lists: int = 8, n_probe: int = 4,
-                   m: int = 8, ksub: int = 16, refine: int = 64,
-                   id_col: str = "vec_id", vec_col: str = "embedding",
-                   centroids: np.ndarray | None = None,
-                   codebooks: np.ndarray | None = None,
-                   seed: int = 42) -> DataFrame:
+                   m: int = 8, ksub: int = 16, refine: int = 64
+                   ) -> DataFrame:
     """IVF-PQ ANN — the billion-scale composition: IVF coarse prune to
     ``n_probe`` lists, PQ asymmetric-distance (ADC) scoring of the
     survivors from the query's ``(m, ksub)`` lookup table, keep the
@@ -288,15 +238,9 @@ def ann_topk_ivfpq(df: DataFrame, qvec: list[float], k: int = 5,
 
     Codes are built on raw vectors (no residual rotation — OPQ/residual-PQ
     are documented extensions, not implemented)."""
-    if centroids is None or codebooks is None:
-        # deterministic training sample — see ann_topk_ivf (ADVICE r3)
-        sample = np.stack([r[0] for r in
-                           df.select(vec_col, id_col).orderBy(id_col)
-                           .limit(4096).select(vec_col).collect()])
-        if centroids is None:
-            centroids = ivf_train_centroids(sample, n_lists, seed=seed)
-        if codebooks is None:
-            codebooks = pq_train_codebooks(sample, m=m, ksub=ksub)
+    sample = training_sample(df)
+    centroids = ivf_train_centroids(sample, n_lists)
+    codebooks = pq_train_codebooks(sample, m=m, ksub=ksub)
     q = np.asarray(qvec, dtype=np.float64)
     d = ((centroids - q[None, :]) ** 2).sum(axis=1)
     probes = [int(i) for i in np.argsort(d)[:n_probe]]
@@ -312,23 +256,20 @@ def ann_topk_ivfpq(df: DataFrame, qvec: list[float], k: int = 5,
         c = np.stack(codes.to_numpy())                       # (n, m)
         return pd.Series(lut[np.arange(m_)[None, :], c].sum(axis=1))
 
-    cand = (ivf_assign(pq_encode(df, codebooks, vec_col), centroids,
-                       vec_col)
+    cand = (ivf_assign(pq_encode(df, codebooks), centroids)
             .filter(F.col("ivf_list").isin(probes)))
     shortlist = (cand.withColumn("adc", _adc(F.col("pq_codes")))
-                 .orderBy(F.col("adc").asc(), F.col(id_col))
+                 .orderBy(F.col("adc").asc(), F.col("vec_id"))
                  .limit(refine))
-    return cosine_topk(shortlist, qvec, k, id_col, vec_col)
+    return cosine_topk(shortlist, qvec, k)
 
 
 def ann_topk_lsh(df: DataFrame, qvec: list[float], k: int = 5,
-                 n_planes: int = 8, dim: int = 64,
-                 id_col: str = "vec_id", vec_col: str = "embedding",
-                 seed: int = 42, n_tables: int = 1) -> DataFrame:
+                 n_planes: int = 8, n_tables: int = 1) -> DataFrame:
     """ANN: restrict exact scoring to the query's LSH bucket(s).
 
-    ``n_tables`` independent hash tables (different seeded hyperplane
-    sets): a vector is a candidate if it shares the query's bucket in ANY
+    ``n_tables`` independent hash tables (hyperplane sets seeded 42, 43,
+    ...): a vector is a candidate if it shares the query's bucket in ANY
     table — the standard recall amplifier (prob. of missing a true
     neighbor decays exponentially in the table count). One kernel pass
     computes all table buckets; the candidate filter is a disjunction of
@@ -339,8 +280,8 @@ def ann_topk_lsh(df: DataFrame, qvec: list[float], k: int = 5,
     all_planes = []
     qbs = []
     for t in range(n_tables):
-        rng = np.random.default_rng(seed + t)
-        planes = rng.standard_normal((n_planes, dim))
+        rng = np.random.default_rng(42 + t)
+        planes = rng.standard_normal((n_planes, DIM))
         all_planes.append(planes)
         qbs.append(int(((q @ planes.T >= 0)
                         * (1 << np.arange(n_planes))).sum()))
@@ -354,9 +295,9 @@ def ann_topk_lsh(df: DataFrame, qvec: list[float], k: int = 5,
         b = (signs * weights).sum(axis=2).astype(np.int64)    # (n, T)
         return pd.Series(list(b))
 
-    bucketed = df.withColumn("buckets", _buckets(F.col(vec_col)))
+    bucketed = df.withColumn("buckets", _buckets(F.col("embedding")))
     cond = None
     for t, qb in enumerate(qbs):
         c = F.col("buckets").getItem(t) == qb
         cond = c if cond is None else (cond | c)
-    return cosine_topk(bucketed.filter(cond), qvec, k, id_col, vec_col)
+    return cosine_topk(bucketed.filter(cond), qvec, k)

@@ -218,64 +218,51 @@ def _batch_stats(x: np.ndarray, y: np.ndarray, buffers_m: Sequence[int],
 
 
 def buffered_stats(df: DataFrame, buffers_m: Sequence[int],
-                   x_col: str = "x", y_col: str = "y",
-                   value_fn: Callable | None = None,
                    raster: np.ndarray | None = None,
                    spark=None, mode: str = "canonical",
                    height: int | None = None, width: int | None = None,
                    xres: int = XRES) -> DataFrame:
-    """Append per-buffer zonal stats columns (struct-expanded) to ``df``.
+    """Append per-buffer zonal stats columns (struct-expanded) to ``df``
+    around its ``(x, y)`` points.
 
-    ``value_fn(rows, cols) -> float64[NaN]`` defaults to the synthetic
-    functional raster; pass ``raster`` (2-D ndarray, NaN = nodata) to sample
-    a broadcast in-memory raster instead (the reference's whole-raster-
-    resident regime, README.md:88-92).
+    Values come from the synthetic functional raster; pass ``raster``
+    (2-D ndarray, NaN = nodata) to sample a broadcast in-memory raster
+    instead (the reference's whole-raster-resident regime,
+    README.md:88-92).
     """
     buffers_m = list(buffers_m)
     schema = _stats_schema(buffers_m)
 
-    # extent defaults: the in-memory raster's own shape, else the
-    # synthetic formula raster's
     if raster is not None:
+        # extent defaults to the in-memory raster's own shape
         height = height or raster.shape[0]
         width = width or raster.shape[1]
-    else:
-        height = height or RASTER_H
-        width = width or RASTER_W
-
-    if raster is not None:
         bc = (spark or df.sparkSession).sparkContext.broadcast(raster)
 
-        def value_fn(rows, cols, _bc=bc):  # noqa: F811
+        def value_fn(rows, cols, _bc=bc):
             arr = _bc.value
             r = np.clip(rows, 0, arr.shape[0] - 1)
             c = np.clip(cols, 0, arr.shape[1] - 1)
             v = arr[r, c]
             return np.where((rows != r) | (cols != c), np.nan, v)
-    elif value_fn is None:
-        value_fn = raster_value_np
 
+        @F.pandas_udf(schema)
+        def _kernel(x: pd.Series, y: pd.Series) -> pd.DataFrame:
+            res = _batch_stats(x.to_numpy(), y.to_numpy(), buffers_m,
+                               value_fn, mode, height=height, width=width,
+                               xres=xres)
+            return pd.DataFrame(res)
+    else:
         @F.pandas_udf(schema)
         def _kernel(x: pd.Series, y: pd.Series) -> pd.DataFrame:
             xs, ys = x.to_numpy(), y.to_numpy()
             try:
                 res = _batch_stats_formula_fast(xs, ys, buffers_m, mode)
             except ValueError:  # edge window → generic (clipping) path
-                res = _batch_stats(xs, ys, buffers_m, value_fn, mode)
+                res = _batch_stats(xs, ys, buffers_m, raster_value_np, mode)
             return pd.DataFrame(res)
 
-        out = df.withColumn("_z", _kernel(F.col(x_col), F.col(y_col)))
-        for f in schema.fields:
-            out = out.withColumn(f.name, F.col(f"_z.{f.name}"))
-        return out.drop("_z")
-
-    @F.pandas_udf(schema)
-    def _kernel(x: pd.Series, y: pd.Series) -> pd.DataFrame:
-        res = _batch_stats(x.to_numpy(), y.to_numpy(), buffers_m, value_fn,
-                           mode, height=height, width=width, xres=xres)
-        return pd.DataFrame(res)
-
-    out = df.withColumn("_z", _kernel(F.col(x_col), F.col(y_col)))
+    out = df.withColumn("_z", _kernel(F.col("x"), F.col("y")))
     for f in schema.fields:
         out = out.withColumn(f.name, F.col(f"_z.{f.name}"))
     return out.drop("_z")
@@ -286,10 +273,10 @@ def buffered_stats(df: DataFrame, buffers_m: Sequence[int],
 # --------------------------------------------------------------------------
 
 def point_tile_ids(df: DataFrame, rmax_px: int, tile_px: int,
-                   x_col: str = "x", y_col: str = "y",
                    height: int = RASTER_H, width: int = RASTER_W,
                    xres: int = XRES) -> DataFrame:
-    """Explode each point to the tile ids its max-buffer square touches.
+    """Explode each ``(x, y)`` point to the tile ids its max-buffer square
+    touches.
 
     Tile key: tile_id = (row0/tile_px) * 2^32 + (col0/tile_px). A 10 km
     buffer at 1 km pixels touches ≤ 4 tiles of 256 px — bounded fan-out.
@@ -315,8 +302,8 @@ def point_tile_ids(df: DataFrame, rmax_px: int, tile_px: int,
     def fdiv(e: str, d: int) -> str:
         return f"((({e}) - pmod({e}, {d})) DIV {d})"
 
-    r0 = fdiv(f"CAST({y_col} AS BIGINT)", xres)
-    c0 = fdiv(f"CAST({x_col} AS BIGINT)", xres)
+    r0 = fdiv("CAST(y AS BIGINT)", xres)
+    c0 = fdiv("CAST(x AS BIGINT)", xres)
     tr_lo = fdiv(f"greatest({r0} - {rmax_px}, 0L)", tile_px)
     tr_hi = fdiv(f"least({r0} + {rmax_px}, {height - 1}L)", tile_px)
     tc_lo = fdiv(f"greatest({c0} - {rmax_px}, 0L)", tile_px)
@@ -344,15 +331,22 @@ def point_tile_ids(df: DataFrame, rmax_px: int, tile_px: int,
             .drop("_tids"))
 
 
+# adaptive salting: a hot group splits into at most MAX_SALT salt groups;
+# buffered_mean_convolve_all salts superblocks past CONVOLVE_HOT_GROUP_ROWS
+# points
+MAX_SALT = 32
+CONVOLVE_HOT_GROUP_ROWS = 262_144
+
+
 def buffered_stats_tiled(points: DataFrame, tiles: DataFrame,
                          buffers_m: Sequence[int], tile_px: int,
                          id_col: str = "doc_id",
-                         x_col: str = "x", y_col: str = "y",
                          hot_group_rows: int = 8192,
-                         max_salt: int = 32,
+                         max_salt: int = MAX_SALT,
                          height: int = RASTER_H, width: int = RASTER_W,
                          xres: int = XRES) -> DataFrame:
-    """Partial/final zonal stats over a raster *tile table*.
+    """Partial/final zonal stats of the ``(id_col, x, y)`` points over a
+    raster *tile table*.
 
     ``tiles``: (tile_id:long, row0:int, col0:int, h:int, w:int,
     data:array<double>) — NaN encoded as NULL inside the array is not needed;
@@ -375,7 +369,7 @@ def buffered_stats_tiled(points: DataFrame, tiles: DataFrame,
     buffers_m = list(buffers_m)
     rmax = max(_radius_px_at(b, xres) for b in buffers_m)
     pts = point_tile_ids(
-        points.select(id_col, x_col, y_col), rmax, tile_px, x_col, y_col,
+        points.select(id_col, "x", "y"), rmax, tile_px,
         height=height, width=width, xres=xres)
     # NOTE (r6, considered and rejected): persisting the exploded point
     # side here would serve both the hot-tile pre-count and the cogroup
@@ -460,8 +454,8 @@ def buffered_stats_tiled(points: DataFrame, tiles: DataFrame,
             # with the broadcast-kernel strategy for arbitrary tile tables.
             tile_id = int(key[0]) // 64
             tr, tc = tile_id >> 32, tile_id & 0xFFFFFFFF
-            xs = pdf_points[x_col].to_numpy().astype(np.int64)
-            ys = pdf_points[y_col].to_numpy().astype(np.int64)
+            xs = pdf_points["x"].to_numpy().astype(np.int64)
+            ys = pdf_points["y"].to_numpy().astype(np.int64)
             home = (((ys // xres) // tile_px == tr)
                     & ((xs // xres) // tile_px == tc))
             ids = pdf_points[id_col].to_numpy()[home]
@@ -477,8 +471,8 @@ def buffered_stats_tiled(points: DataFrame, tiles: DataFrame,
         th, tw = int(t["h"]), int(t["w"])
         arr = np.asarray(t["data"], dtype=np.float64).reshape(th, tw)
         row0, col0 = int(t["row0"]), int(t["col0"])
-        xs = pdf_points[x_col].to_numpy().astype(np.int64)
-        ys = pdf_points[y_col].to_numpy().astype(np.int64)
+        xs = pdf_points["x"].to_numpy().astype(np.int64)
+        ys = pdf_points["y"].to_numpy().astype(np.int64)
         ids = pdf_points[id_col].to_numpy()
         singles = pdf_points["single"].to_numpy()
         pr_all = ys // xres
@@ -584,21 +578,18 @@ def buffered_stats_tiled(points: DataFrame, tiles: DataFrame,
 def buffered_mean_convolve_all(points: DataFrame, tiles: DataFrame,
                                buffers_m: Sequence[int], tile_px: int,
                                id_col: str = "doc_id",
-                               x_col: str = "x", y_col: str = "y",
-                               height: int = RASTER_H, width: int = RASTER_W,
-                               xres: int = XRES,
-                               sb_tiles: int | None = None,
-                               hot_group_rows: int = 262_144,
-                               max_salt: int = 32) -> DataFrame:
+                               height: int = RASTER_H, width: int = RASTER_W
+                               ) -> DataFrame:
     """Third physical strategy — the reference's Method 1 ('convolve once,
     gather many', extract_raster_buffer.py:220-245), distributed.
 
     r3 plan (replaces the two-stage convolve-planes-then-gather): ONE
     cogroup on SUPERBLOCK keys (``sb_tiles``×``sb_tiles`` tiles per task)
-    fuses convolution and gather. Each task assembles its superblock
-    window + rmax halo, takes one row-prefix-sum pass, and evaluates every
-    point's buffer sums directly from the prefix table via chord
-    subtraction (2r+1 ops per point per buffer). Identical A1 semantics
+    fuses convolution and gather over the ``(id_col, x, y)`` points. Each
+    task assembles its superblock window + rmax halo, takes one
+    row-prefix-sum pass, and evaluates every point's buffer sums directly
+    from the prefix table via chord subtraction (2r+1 ops per point per
+    buffer). Identical A1 semantics
     (sum/valid-count, NaN outside coverage); exact for integer-valued
     rasters (prefix sums < 2^53 — the chord-decomposition invariant
     documented in convolve.py).
@@ -613,20 +604,19 @@ def buffered_mean_convolve_all(points: DataFrame, tiles: DataFrame,
     Method 1 this strategy emits mean + n_valid.
     """
     buffers_m = list(buffers_m)
-    rmax = max(_radius_px_at(b, xres) for b in buffers_m)
-    if sb_tiles is None:
-        # Adaptive superblock sizing — a DATA-dependent rule (never
-        # parallelism-dependent, so the same input yields the same plan at
-        # every cluster size): the smallest power-of-2 superblock that
-        # (a) contains the halo and (b) keeps the tile fan-out
-        # (1 + 2·rmax/sb_px)² ≤ 2 — i.e. the raster moves at most ~2×.
-        # Smaller superblocks mean MORE tasks (a 4096² raster gets 64
-        # groups instead of 16 — the difference between starving and
-        # saturating an 8-wide stage) at bounded shuffle cost.
-        sb_tiles = 1
-        while (sb_tiles * tile_px < rmax
-               or (1 + 2 * rmax / (sb_tiles * tile_px)) ** 2 > 2.0):
-            sb_tiles *= 2
+    rmax = max(_radius_px_at(b, XRES) for b in buffers_m)
+    # Adaptive superblock sizing — a DATA-dependent rule (never
+    # parallelism-dependent, so the same input yields the same plan at
+    # every cluster size): the smallest power-of-2 superblock that
+    # (a) contains the halo and (b) keeps the tile fan-out
+    # (1 + 2·rmax/sb_px)² ≤ 2 — i.e. the raster moves at most ~2×.
+    # Smaller superblocks mean MORE tasks (a 4096² raster gets 64
+    # groups instead of 16 — the difference between starving and
+    # saturating an 8-wide stage) at bounded shuffle cost.
+    sb_tiles = 1
+    while (sb_tiles * tile_px < rmax
+           or (1 + 2 * rmax / (sb_tiles * tile_px)) ** 2 > 2.0):
+        sb_tiles *= 2
     sb_px = sb_tiles * tile_px
     assert rmax <= sb_px, "halo larger than superblock"
     nsr = (height + sb_px - 1) // sb_px
@@ -635,7 +625,7 @@ def buffered_mean_convolve_all(points: DataFrame, tiles: DataFrame,
     # chord tables per buffer: kernel row di in 0..2r -> [lo, hi] columns
     chords = {}
     for b in buffers_m:
-        rpx = _radius_px_at(b, xres)
+        rpx = _radius_px_at(b, XRES)
         dr = np.arange(-rpx, rpx + 1, dtype=np.int64)
         half = np.floor(np.sqrt((rpx * rpx - dr * dr).astype(np.float64))
                         ).astype(np.int64)
@@ -677,11 +667,11 @@ def buffered_mean_convolve_all(points: DataFrame, tiles: DataFrame,
                            F.col("_sr") * F.lit(1 << 32) + F.col("_sc"))
                .drop("_sr", "_sc"))
 
-    pts = points.select(id_col, x_col, y_col).withColumn(
+    pts = points.select(id_col, "x", "y").withColumn(
         "sb",
-        ((F.col(y_col) / xres).cast("long") / sb_px).cast("long")
+        ((F.col("y") / XRES).cast("long") / sb_px).cast("long")
         * F.lit(1 << 32)
-        + ((F.col(x_col) / xres).cast("long") / sb_px).cast("long"))
+        + ((F.col("x") / XRES).cast("long") / sb_px).cast("long"))
 
     # adaptive salting, same machinery as buffered_stats_tiled: urban
     # clusters pile millions of points into one superblock group — the
@@ -690,10 +680,10 @@ def buffered_mean_convolve_all(points: DataFrame, tiles: DataFrame,
     # each salt). Cold superblocks pay nothing. Output unchanged: each
     # salt group assembles the same window and serves disjoint points.
     hot = (pts.groupBy("sb").count()
-           .filter(F.col("count") > hot_group_rows)
+           .filter(F.col("count") > CONVOLVE_HOT_GROUP_ROWS)
            .select("sb",
-                   F.least(F.ceil(F.col("count") / hot_group_rows),
-                           F.lit(max_salt)).cast("long").alias("salt_k")))
+                   F.least(F.ceil(F.col("count") / CONVOLVE_HOT_GROUP_ROWS),
+                           F.lit(MAX_SALT)).cast("long").alias("salt_k")))
     pts = (pts.join(F.broadcast(hot), "sb", "left")
            .withColumn("_k", F.coalesce(F.col("salt_k"), F.lit(1)))
            .withColumn(
@@ -755,8 +745,8 @@ def buffered_mean_convolve_all(points: DataFrame, tiles: DataFrame,
         pv = np.concatenate(
             [np.zeros((valid.shape[0], 1), dtype=np.int64),
              np.cumsum(valid, axis=1, dtype=np.int64)], axis=1)
-        pr = pdf_points[y_col].to_numpy().astype(np.int64) // xres
-        pc = pdf_points[x_col].to_numpy().astype(np.int64) // xres
+        pr = pdf_points["y"].to_numpy().astype(np.int64) // XRES
+        pc = pdf_points["x"].to_numpy().astype(np.int64) // XRES
         # points whose own pixel is outside the raster extent return
         # 0-count/NULL from this strategy (documented: Method 1 serves
         # in-extent points; the kernel strategies clip partial circles) —

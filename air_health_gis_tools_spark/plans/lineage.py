@@ -158,8 +158,8 @@ class SnapshotTable:
             return json.load(f)
 
     # -- commits -----------------------------------------------------------
-    def commit(self, df: DataFrame, part_col: str, op: str = "overwrite",
-               buckets: list | None = None) -> int:
+    def commit(self, df: DataFrame, part_col: str, op: str = "overwrite"
+               ) -> int:
         """Write ``df`` partitioned on ``part_col`` as the next snapshot.
         ``op='overwrite'`` replaces the listed buckets (others carry over
         from the parent snapshot); ``op='append'`` adds the new files
@@ -217,10 +217,9 @@ class SnapshotTable:
                                     for e in m["buckets"].values())})
         return out
 
-    def compact(self, spark: SparkSession, target_files_per_bucket: int = 1
-                ) -> int:
+    def compact(self, spark: SparkSession) -> int:
         """Iceberg ``rewrite_data_files`` analog: rewrite every bucket
-        whose file count exceeds the target into one fresh prefix and
+        held in more than one file into one file under a fresh prefix and
         commit the rewrite as a new snapshot (op='compact'). Data is
         bit-identical (pure rewrite); older snapshots keep reading their
         original files until ``expire_snapshots`` drops them. Every append
@@ -236,12 +235,12 @@ class SnapshotTable:
                 len([f for f in os.listdir(p)
                      if f.endswith(".parquet")])
                 for p in e["paths"] if os.path.exists(p))
-            if len(e["paths"]) <= 1 and n_files <= target_files_per_bucket:
+            if len(e["paths"]) <= 1 and n_files <= 1:
                 new_buckets[b] = dict(e)
                 continue
             dst = os.path.join(data_root, f"part_bucket={b}")
             (spark.read.parquet(*e["paths"])
-             .coalesce(target_files_per_bucket)
+             .coalesce(1)
              .write.mode("overwrite").parquet(dst))
             new_buckets[b] = {"paths": [dst], "rows": e["rows"]}
             rewrote = True

@@ -51,11 +51,14 @@ class ZonalPlan:
 # per-point cost unit of the broadcast/tiled kernels); the Method-1 gate
 # compares total visits against redoing the whole raster a few times over
 _VISITS_PER_BUFFER = 109     # ~327 visits / 3 buffers (disk px at r<=10)
+# executor memory the "raster fits" gate budgets a quarter of
+EXECUTOR_MEM_BYTES = 4 << 30
+# tile side in pixels of the tile tables extract_pipeline is given
+TILE_PX = 256
 
 
 def choose_zonal_strategy(raster_px: int, n_points: int,
-                          n_buffers: int, executor_mem_bytes: int = 4 << 30,
-                          ) -> ZonalPlan:
+                          n_buffers: int) -> ZonalPlan:
     """O1/O2-style cost gate, decided BEFORE plan construction (mirroring
     where the reference does it — driver-side Python, not a Catalyst rule).
 
@@ -74,7 +77,7 @@ def choose_zonal_strategy(raster_px: int, n_points: int,
       at points = 0.29*px already; the 4x-visits gate is conservative).
     """
     raster_bytes = raster_px * 8
-    fits = raster_bytes <= executor_mem_bytes // 4
+    fits = raster_bytes <= EXECUTOR_MEM_BYTES // 4
     if fits:
         if n_points > 4 * raster_px:
             return ZonalPlan(
@@ -99,7 +102,6 @@ def choose_zonal_strategy(raster_px: int, n_points: int,
 def extract_pipeline(pages: DataFrame, monitors: DataFrame,
                      polys: DataFrame, buffers_m=None,
                      tiles: DataFrame | None = None,
-                     tile_px: int = 256,
                      n_points_estimate: int = 1_000_000,
                      raster_px: int | None = None
                      ) -> dict[str, DataFrame]:
@@ -127,11 +129,11 @@ def extract_pipeline(pages: DataFrame, monitors: DataFrame,
     # raster is then resident by definition)
     strategy = plan.strategy if tiles is not None else "broadcast"
     if strategy == "tiled":
-        zon = buffered_stats_tiled(slim, tiles, buffers_m, tile_px,
+        zon = buffered_stats_tiled(slim, tiles, buffers_m, TILE_PX,
                                    id_col="doc_id")
         zon = slim.select("url", "doc_id").join(zon, "doc_id")
     elif strategy == "convolve_all":
-        zon = buffered_mean_convolve_all(slim, tiles, buffers_m, tile_px,
+        zon = buffered_mean_convolve_all(slim, tiles, buffers_m, TILE_PX,
                                          id_col="doc_id")
         zon = slim.select("url", "doc_id").join(zon, "doc_id")
     elif tiles is not None:

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import geo_synth as G
 from ..functions import text as TXT
-from ..functions.cells import hex_cell_expr, hex_cell_udf, square_cell_sql
+from ..functions.cells import hex_cell_expr, square_cell_sql
 from ..functions.geocode import with_xy
 from ..operators import dedup as DD
 from ..operators import similarity as SIM
@@ -56,9 +56,9 @@ def docs_xy(spark: SparkSession, sf_dir: str) -> DataFrame:
     return with_xy(_docs(spark, sf_dir))
 
 
-def monitors_df(spark: SparkSession, n: int = G.N_MONITORS) -> DataFrame:
+def monitors_df(spark: SparkSession) -> DataFrame:
     mx, my = G.monitor_xy_sql("id", "spark")
-    return spark.range(n).select(
+    return spark.range(G.N_MONITORS).select(
         F.col("id").alias("monitor_id"),
         F.expr(mx).alias("mx"), F.expr(my).alias("my"))
 
@@ -70,9 +70,9 @@ def polys_df(spark: SparkSession, n: int = G.N_POLYS) -> DataFrame:
         F.expr(cx).alias("cx"), F.expr(cy).alias("cy"), F.expr(r).alias("r"))
 
 
-def polys_big_df(spark: SparkSession, n: int = G.N_POLYS) -> DataFrame:
+def polys_big_df(spark: SparkSession) -> DataFrame:
     cx, cy, r = G.poly_circle_big_sql("id", "spark")
-    return spark.range(n).select(
+    return spark.range(G.N_POLYS).select(
         F.col("id").alias("poly_id"),
         F.expr(cx).alias("cx"), F.expr(cy).alias("cy"), F.expr(r).alias("r"))
 
@@ -683,8 +683,7 @@ def q27_knn_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = docs_xy(spark, sf_dir)
     mons = monitors_df(spark)
     from ..operators.knn import _neighbor_cells
-    cand = (_neighbor_cells(pts.select("doc_id", "x", "y"), G.KNN_BOUND_M,
-                            "x", "y")
+    cand = (_neighbor_cells(pts.select("doc_id", "x", "y"), G.KNN_BOUND_M)
             .join(F.broadcast(mons.withColumn(
                 "cell",
                 (F.col("mx") / G.KNN_BOUND_M).cast("long") * F.lit(1 << 32)

@@ -12,7 +12,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# the CPUs this process may run on, unless SPARK_GRAFT_CPUS says otherwise
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS")
+                   or len(os.sched_getaffinity(0)))
 
 
 def _default_driver_mem() -> str:
@@ -27,8 +29,7 @@ def _default_driver_mem() -> str:
 
 def get_spark(app: str = "air_health_gis_tools_spark",
               cpus: int | None = None,
-              shuffle_partitions: int | None = None,
-              extra_conf: dict | None = None) -> SparkSession:
+              shuffle_partitions: int | None = None) -> SparkSession:
     cpus = cpus or DEFAULT_CPUS
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
     b = (
@@ -55,8 +56,6 @@ def get_spark(app: str = "air_health_gis_tools_spark",
         b = b.config("spark.local.dir", shm)
     except OSError:
         pass
-    for k, v in (extra_conf or {}).items():
-        b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

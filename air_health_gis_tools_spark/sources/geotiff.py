@@ -340,10 +340,11 @@ def rowcol_of_xy(info: TiffInfo, x: np.ndarray, y: np.ndarray
 
 
 def write_geotiff(tiles: DataFrame, path: str, height: int, width: int,
-                  tile_px: int = 128, nodata: float = -3.4e38,
-                  transform: tuple[float, float, float, float] | None = None,
-                  level: int = 6) -> None:
-    """Raster SINK (S9-S11): tile table → tiled float32 deflate GeoTIFF.
+                  tile_px: int = 128,
+                  transform: tuple[float, float, float, float] | None = None
+                  ) -> None:
+    """Raster SINK (S9-S11): tile table → tiled float32 deflate (level 6)
+    GeoTIFF.
 
     Tile payloads are deflate-compressed ON THE EXECUTORS (one mapInPandas
     pass — the expensive part scales out); the driver only assembles the
@@ -352,6 +353,7 @@ def write_geotiff(tiles: DataFrame, path: str, height: int, width: int,
     (ours or GDAL) restores NaN. Round-trips bit-exactly through
     ``read_geotiff`` at float32 precision.
     """
+    nodata, level = -3.4e38, 6
     ntx = (width + tile_px - 1) // tile_px
     nty = (height + tile_px - 1) // tile_px
 

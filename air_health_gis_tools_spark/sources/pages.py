@@ -54,9 +54,8 @@ def _gen_pages(batches):
                             "text": texts, "lang": langs})
 
 
-def synthetic_pages(spark: SparkSession, n: int,
-                    partitions: int | None = None) -> DataFrame:
-    rng = spark.range(n, numPartitions=partitions or max(n // 50_000, 4))
+def synthetic_pages(spark: SparkSession, n: int) -> DataFrame:
+    rng = spark.range(n, numPartitions=max(n // 50_000, 4))
     return rng.mapInPandas(_gen_pages, PAGES_SCHEMA)
 
 

@@ -31,8 +31,9 @@ def _chunk(tag: bytes, data: bytes) -> bytes:
             + struct.pack(">I", zlib.crc32(tag + data)))
 
 
-def png_encode(arr: np.ndarray, level: int = 6) -> bytes:
-    """uint8 (H,W) gray / (H,W,3) RGB / (H,W,4) RGBA → PNG bytes.
+def png_encode(arr: np.ndarray) -> bytes:
+    """uint8 (H,W) gray / (H,W,3) RGB / (H,W,4) RGBA → PNG bytes (deflate
+    level 6).
 
     Scanline filters cycle 0..4 by row — deterministic, and it exercises
     every un-filter path in the decoder on round-trip (filter choice never
@@ -72,7 +73,7 @@ def png_encode(arr: np.ndarray, level: int = 6) -> bytes:
             filt = cur - _paeth(left, prev, ul)
         lines.append(bytes([ft]) + (filt & 0xFF).astype(np.uint8).tobytes())
         prev = cur
-    idat = zlib.compress(b"".join(lines), level)
+    idat = zlib.compress(b"".join(lines), 6)
     return (_SIG + _chunk(b"IHDR", ihdr) + _chunk(b"IDAT", idat)
             + _chunk(b"IEND", b""))
 

@@ -80,21 +80,24 @@ def tile_table_from_array(spark: SparkSession, arr: np.ndarray,
     return spark.createDataFrame(rows, TILE_SCHEMA)
 
 
-def tile_table_to_array(tiles: DataFrame,
-                        max_px: int = 256_000_000) -> np.ndarray:
+# largest raster (pixels) tile_table_to_array assembles on the driver
+MAX_PX = 256_000_000
+
+
+def tile_table_to_array(tiles: DataFrame) -> np.ndarray:
     """Assemble a tile table into one dense ndarray (inverse of
     ``tile_table_from_array``). Driver-side by design — only valid in the
     planner's *broadcast* regime where the raster fits one executor; the
-    ``max_px`` guard refuses anything larger so a mis-routed 100 TB tile
+    ``MAX_PX`` guard refuses anything larger so a mis-routed 100 TB tile
     table fails fast instead of OOMing the driver."""
     rows = tiles.select("row0", "col0", "h", "w", "data").collect()
     if not rows:
         return np.full((0, 0), np.nan)
     height = max(int(r["row0"]) + int(r["h"]) for r in rows)
     width = max(int(r["col0"]) + int(r["w"]) for r in rows)
-    if height * width > max_px:
+    if height * width > MAX_PX:
         raise ValueError(
-            f"tile table is {height}x{width} px > max_px={max_px}; "
+            f"tile table is {height}x{width} px > max_px={MAX_PX}; "
             "use the tiled/convolve_all strategy for rasters this large")
     arr = np.full((height, width), np.nan)
     for r in rows:

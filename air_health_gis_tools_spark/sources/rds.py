@@ -18,7 +18,6 @@ import gzip
 import struct
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
 
 # SEXP type codes (R Internals §1.1)
 _SYM, _PAIRLIST, _CHAR, _LGL, _INT, _REAL, _STR, _VEC = \
@@ -196,10 +195,3 @@ def rds_to_pandas(path: str) -> pd.DataFrame:
         else:
             cols[name] = col
     return pd.DataFrame(cols)
-
-
-def read_rds_points(spark: SparkSession, path: str) -> DataFrame:
-    """S4 point scan: .rds → Spark DataFrame (driver-side parse — these
-    grids are small dims in the reference; a directory of large .rds
-    would map paths over executors with the same parser)."""
-    return spark.createDataFrame(rds_to_pandas(path))

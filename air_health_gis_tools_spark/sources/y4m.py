@@ -44,22 +44,19 @@ def _chroma_shape(cs: str, w: int, h: int) -> tuple[int, int] | None:
 
 def y4m_encode(y: np.ndarray, u: np.ndarray | None = None,
                v: np.ndarray | None = None,
-               fps: tuple[int, int] = (25, 1),
-               colorspace: str | None = None) -> bytes:
+               fps: tuple[int, int] = (25, 1)) -> bytes:
     """Serialize frames to Y4M. ``y`` is (n, h, w) uint8; ``u``/``v`` are
     (n, ch, cw) uint8 or None for mono. The colorspace is inferred from
-    the chroma shape unless given."""
+    the chroma shape."""
     y = np.ascontiguousarray(y, dtype=np.uint8)
     n, h, w = y.shape
     if u is None:
-        cs = colorspace or "Cmono"
+        cs = "Cmono"
     else:
         u = np.ascontiguousarray(u, dtype=np.uint8)
         v = np.ascontiguousarray(v, dtype=np.uint8)
         ch, cw = u.shape[1], u.shape[2]
-        if colorspace:
-            cs = colorspace
-        elif (ch, cw) == (h // 2, w // 2):
+        if (ch, cw) == (h // 2, w // 2):
             cs = "C420"
         elif (ch, cw) == (h, w // 2):
             cs = "C422"

@@ -2,16 +2,12 @@
 """Extra measurement harness for the optimization rounds (guide §1).
 
 NOT part of the frozen driver contract (bench.py is the timed surface).
-This file exists to:
-  - time each headline query in isolation through the noop sink
-    (guide §1.4) with min-of-N reps;
-  - dump `.explain("formatted")` for each query into plans/<tag>/ so plan
-    claims (Exchange counts, join strategies, Python-eval nodes) are
-    reviewable without running Spark.
+It times each headline query in isolation through the noop sink
+(guide §1.4) with min-of-N reps. Physical plans of the registry's
+headline queries come from ``tools/plan_report.py`` (BENCH/PLANS.md).
 
 Usage:
-  python bench_extra.py explain <tagdir>     # write plans/<tagdir>/*.txt
-  python bench_extra.py time [reps] [only]   # noop-isolated timings JSON
+  python bench_extra.py [reps] [only]   # noop-isolated timings JSON
 """
 
 from __future__ import annotations
@@ -83,26 +79,10 @@ def build_queries(spark):
 
 
 def main():
-    mode = sys.argv[1] if len(sys.argv) > 1 else "time"
     spark = get_spark("bench_extra", cpus=CPUS, shuffle_partitions=CPUS)
     qs = build_queries(spark)
-
-    if mode == "explain":
-        tag = sys.argv[2]
-        outdir = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                              "plans", tag)
-        os.makedirs(outdir, exist_ok=True)
-        for name, fn in qs.items():
-            df = fn()
-            with open(os.path.join(outdir, f"{name}.txt"), "w") as f:
-                f.write(df._sc._jvm.PythonSQLUtils.explainString(
-                    df._jdf.queryExecution(), "formatted"))
-        print(f"wrote {len(qs)} plans to {outdir}")
-        spark.stop()
-        return
-
-    reps = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-    only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
+    reps = int(sys.argv[1]) if len(sys.argv) > 1 else 3
+    only = set(sys.argv[2].split(",")) if len(sys.argv) > 2 else None
     timings = {}
     for name, fn in qs.items():
         if only is not None and name not in only:

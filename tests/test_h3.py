@@ -128,19 +128,6 @@ def test_grid_disk_sizes_interior():
                 assert int(cell) in h3.grid_disk(int(nb), 1).tolist()
 
 
-def test_compact_uncompact():
-    lat, lng = _rand_points(40, 6)
-    parents = np.unique(h3.latlng_to_cell(lat, lng, 5))[:10]
-    child = h3.uncompact_cells(parents, 7)
-    assert len(child) == len(parents) * 49
-    back = h3.compact_cells(child)
-    assert np.array_equal(np.sort(back), np.sort(parents))
-    # partial sets do not compact
-    partial = child[1:]
-    comp = h3.compact_cells(partial)
-    assert len(comp) > len(parents)
-
-
 def test_deterministic_and_dtype():
     lat, lng = _rand_points(5000, 7)
     a = h3.latlng_to_cell(lat, lng, 8)
@@ -203,8 +190,7 @@ def test_pentagon_set_and_validity():
 
 def test_pentagon_children_count_and_roundtrip():
     """Pentagons have 6 children at every res (count(r) = 7*count(r-1)-1
-    per lineage); children invert the parent; compact/uncompact
-    round-trips on the pentagon set."""
+    per lineage); children invert the parent."""
     pents = _pentagons_res0()
     for p in pents[:4]:
         n = 1
@@ -215,15 +201,6 @@ def test_pentagon_children_count_and_roundtrip():
             assert len(np.unique(ch)) == n
             assert (h3.cell_to_parent(ch, 0) == p).all()
             assert h3.is_valid_cell(ch).all()
-    # compact promotes a pentagon parent at SIX children
-    child = h3.uncompact_cells(pents, 2)
-    assert len(child) == 12 * 41
-    back = h3.compact_cells(child)
-    assert np.array_equal(np.sort(back), np.sort(pents))
-    # dropping one child prevents promotion of that lineage only
-    partial = child[1:]
-    comp = h3.compact_cells(partial)
-    assert len(comp) > 12
 
 
 def test_pentagon_has_five_neighbors():

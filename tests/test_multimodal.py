@@ -1,4 +1,4 @@
-"""Multimodal operators: real PNG decode (r3), resize, frame sampling."""
+"""Multimodal operators: real PNG / Y4M decode and feature extraction."""
 
 from __future__ import annotations
 
@@ -7,7 +7,7 @@ import pytest
 
 from air_health_gis_tools_spark.operators.multimodal import (
     decode_image, extract_features, image_feature, media_image_array,
-    media_row, resize_images, sample_frames, synthetic_media)
+    media_row, synthetic_media)
 from air_health_gis_tools_spark.sources.png import png_decode, png_encode
 
 
@@ -57,27 +57,6 @@ def test_feature_extraction_real_decode(spark):
     d1 = {r["media_id"]: (r["digest"], list(r["feature"])) for r in feats}
     d2 = {r["media_id"]: (r["digest"], list(r["feature"])) for r in feats2}
     assert d1 == d2
-
-
-def test_resize_images(spark):
-    media = synthetic_media(spark, 30)
-    out = {r["media_id"]: r
-           for r in resize_images(media, 16, 12).collect()}
-    assert len(out) == 30
-    for i in (0, 3, 6):
-        r = out[i]
-        assert (r["width"], r["height"]) == (16, 12)
-        arr = decode_image(bytes(r["payload"]))
-        assert arr.shape == (12, 16, 3)
-        # nearest-neighbor oracle on the source array
-        w, h = media_row(i)[3], media_row(i)[4]
-        src = media_image_array(i, w, h)
-        ridx = np.minimum((np.arange(12) * 2 + 1) * h // 24, h - 1)
-        cidx = np.minimum((np.arange(16) * 2 + 1) * w // 32, w - 1)
-        assert np.array_equal(arr, src[np.ix_(ridx, cidx)])
-    # non-image rows untouched
-    for i in (1, 2):
-        assert bytes(out[i]["payload"]) == media_row(i)[2]
 
 
 def test_y4m_roundtrip():
@@ -132,24 +111,3 @@ def test_video_decode_matches_source_planes():
         assert dur == y.shape[0] * 40          # 25 fps
         assert np.array_equal(video_feature(y2, u2, v2),
                               video_feature(y, u, v))
-
-
-def test_sample_frames(spark):
-    from air_health_gis_tools_spark.operators.multimodal import \
-        media_video_planes
-    media = synthetic_media(spark, 30)
-    frames = sample_frames(media, every_k=4).collect()
-    assert frames, "no frames sampled"
-    ids = {r["media_id"] for r in frames}
-    assert all(i % 3 == 2 for i in ids)  # only video rows
-    for r in frames:
-        assert r["frame_no"] % 4 == 0
-        assert len(r["frame"]) == r["width"] * r["height"]
-    # sampled luma planes are the SOURCE frames, demuxed for real
-    y, _, _ = media_video_planes(2)
-    got = {r["frame_no"]: r for r in frames if r["media_id"] == 2}
-    assert set(got) == set(range(0, y.shape[0], 4))
-    for fno, r in got.items():
-        arr = np.frombuffer(bytes(r["frame"]), np.uint8).reshape(
-            r["height"], r["width"])
-        assert np.array_equal(arr, y[fno])

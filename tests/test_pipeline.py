@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import hashlib
+import math
 
 import numpy as np
 import pandas as pd
@@ -212,6 +213,20 @@ def test_pipeline_broadcast_uses_supplied_tiles(spark):
     zon = out["zonal"].select("mean_10000", "n_valid_10000").collect()
     assert all(r["mean_10000"] == 7.0 for r in zon if r["n_valid_10000"] > 0)
     assert any(r["n_valid_10000"] > 0 for r in zon)
+
+
+def test_tile_table_to_array_refuses_raster_past_max_px(spark):
+    """The driver-side assembly's MAX_PX gate: tile metadata whose extent
+    exceeds the pixel cap fails fast, before the dense array is
+    allocated."""
+    from air_health_gis_tools_spark.sources.raster import (
+        MAX_PX, TILE_SCHEMA, tile_table_to_array)
+    side = math.isqrt(MAX_PX) + 1          # side * side > MAX_PX
+    tiles = spark.createDataFrame(
+        [(0, side - 1, side - 1, 1, 1, [1.0])], TILE_SCHEMA)
+    with pytest.raises(ValueError, match=f"{side}x{side} px > "
+                                         f"max_px={MAX_PX}"):
+        tile_table_to_array(tiles)
 
 
 def test_lineage_resume(spark, tmp_path):

@@ -63,6 +63,24 @@ def test_degenerate_span_refused(spark):
                    max_span_buckets=1000).collect()
 
 
+def test_overlap_span_cap_refused(spark):
+    """interval_overlap_join's MAX_SPAN_BUCKETS gate: an interval one
+    bucket past the cap fails the job instead of exploding; one at the cap
+    still joins."""
+    from air_health_gis_tools_spark.operators.rangejoin import (
+        MAX_SPAN_BUCKETS, interval_overlap_join)
+    right = spark.createDataFrame([(0, 1.0, 2.0)],
+                                  "b_id long, lo_r double, hi_r double")
+    at_cap = spark.createDataFrame([(0, 0.0, MAX_SPAN_BUCKETS - 1.0)],
+                                   "a_id long, lo double, hi double")
+    assert interval_overlap_join(at_cap, right, bucket_w=1.0).count() == 1
+    past = spark.createDataFrame([(0, 0.0, float(MAX_SPAN_BUCKETS))],
+                                 "a_id long, lo double, hi double")
+    with pytest.raises(Exception, match=f"spans more than "
+                                        f"{MAX_SPAN_BUCKETS} buckets"):
+        interval_overlap_join(past, right, bucket_w=1.0).collect()
+
+
 def test_overlap_matches_bruteforce(spark):
     from air_health_gis_tools_spark.operators.rangejoin import \
         interval_overlap_join
@@ -81,22 +99,6 @@ def test_overlap_matches_bruteforce(spark):
     # no duplicate pairs despite multi-bucket overlap
     rows = interval_overlap_join(left, right, bucket_w=2.0).count()
     assert rows == len(naive)
-
-
-def test_suggest_bucket_w(spark):
-    from air_health_gis_tools_spark.operators.rangejoin import \
-        suggest_bucket_w
-    iv = _intervals(spark)     # lengths 3..27
-    w = suggest_bucket_w(iv)
-    assert 3.0 <= w <= 27.0
-    # the suggested width reproduces brute-force results like any other
-    got = {(r["pid"], r["int_id"]) for r in
-           range_join(_probes(spark, 800), iv, "v", bucket_w=w).collect()}
-    naive = {(r["pid"], r["int_id"]) for r in
-             _probes(spark, 800).crossJoin(iv)
-             .filter((F.col("v") >= F.col("lo"))
-                     & (F.col("v") <= F.col("hi"))).collect()}
-    assert got == naive
 
 
 def test_plan_is_hash_join(spark):

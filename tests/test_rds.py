@@ -10,8 +10,7 @@ import glob
 import numpy as np
 import pytest
 
-from air_health_gis_tools_spark.sources.rds import (read_rds_points,
-                                                    rds_to_pandas)
+from air_health_gis_tools_spark.sources.rds import rds_to_pandas
 
 GRIDS = "/root/reference/data/grids"
 TIF = "/root/reference/data/apg18e_1_0_0_20210512.tif"
@@ -47,12 +46,6 @@ def test_coordinates_sit_inside_reference_raster():
     inside = ((r >= 0) & (r < info.height)
               & (c >= 0) & (c < info.width)).mean()
     assert inside > 0.99
-
-
-def test_rds_points_to_spark(spark):
-    df = read_rds_points(spark, f"{GRIDS}/testing_points.rds")
-    assert df.count() == 100
-    assert set(df.columns) == {"FID", "X", "Y"}
 
 
 def test_reference_workflow_rds_points_x_geotiff_zonal(spark):

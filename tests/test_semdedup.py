@@ -198,8 +198,6 @@ def test_max_cluster_subset_and_salt_rule(spark):
     of the uncapped one — every surviving pair shares
     pmod(id, ceil(|c|/cap)), every dropped pair does not, and the result
     is deterministic across runs."""
-    from air_health_gis_tools_spark.operators.semdedup import (
-        cluster_overflow_report)
     # one deliberately tight corpus: everything lands in few clusters and
     # near-dups are plentiful
     base = _rng_vectors(8, seed=51)
@@ -217,9 +215,8 @@ def test_max_cluster_subset_and_salt_rule(spark):
     assert capped, "cap fixture must keep some within-bucket pairs"
     assert capped != uncapped, "cap fixture must split a cluster"
     # reconstruct the salt rule independently and verify edge membership
-    from air_health_gis_tools_spark.operators.semdedup import (
-        SAMPLE_N, ivf_train_centroids)
-    from air_health_gis_tools_spark.operators.similarity import ivf_assign
+    from air_health_gis_tools_spark.operators.similarity import (
+        SAMPLE_N, ivf_assign, ivf_train_centroids)
     sample = np.stack(
         [r[0] for r in df.orderBy("vec_id").limit(SAMPLE_N)
          .select("embedding").collect()])
@@ -241,13 +238,6 @@ def test_max_cluster_subset_and_salt_rule(spark):
     again = {(r["id1"], r["id2"]) for r in semantic_neardup_edges_np(
         df, n_lists=2, max_cluster=cap).collect()}
     assert again == capped
-    # the report names exactly the oversized clusters
-    rep = cluster_overflow_report(df, n_lists=2, max_cluster=cap).collect()
-    over = {c for c, s in csize.items() if s > cap}
-    assert {r["cluster"] for r in rep} == over
-    for r in rep:
-        assert r["n_vecs"] == csize[r["cluster"]]
-        assert r["n_subbuckets"] == _m.ceil(csize[r["cluster"]] / cap)
 
 
 def test_multiprobe_with_max_cluster_emits_every_meeting(spark):
@@ -262,9 +252,8 @@ def test_multiprobe_with_max_cluster_emits_every_meeting(spark):
     (pmod(id, ceil(rows_in_list/cap))), and no edge appears twice."""
     import collections
     import math as _m
-    from air_health_gis_tools_spark.operators.semdedup import SAMPLE_N
     from air_health_gis_tools_spark.operators.similarity import (
-        ivf_assign_topp, ivf_train_centroids)
+        SAMPLE_N, ivf_assign_topp, ivf_train_centroids)
     base = _rng_vectors(8, seed=61)
     reps = np.repeat(base, 12, axis=0)
     jitter = _rng_vectors(len(reps), seed=62) * 0.005
@@ -287,7 +276,7 @@ def test_multiprobe_with_max_cluster_emits_every_meeting(spark):
         [r[0] for r in df.orderBy("vec_id").limit(SAMPLE_N)
          .select("embedding").collect()])
     cents = ivf_train_centroids(sample, n_lists)
-    probes_pdf = (ivf_assign_topp(df, cents, "embedding", n_probe)
+    probes_pdf = (ivf_assign_topp(df, cents, n_probe)
                   .select("vec_id", "ivf_probes").toPandas())
     probes = {int(r["vec_id"]): [int(x) for x in r["ivf_probes"]]
               for _, r in probes_pdf.iterrows()}

@@ -8,8 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from air_health_gis_tools_spark.operators.similarity import (
-    ann_topk_ivf, ann_topk_lsh, cosine_topk, cosine_topk_udf,
-    ivf_assign, ivf_train_centroids)
+    ann_topk_ivf, ann_topk_lsh, cosine_topk, ivf_assign, ivf_train_centroids)
 from tests.conftest import SF_DIR
 
 
@@ -21,13 +20,6 @@ def emb(spark):
 @pytest.fixture(scope="module")
 def qvec(emb):
     return list(emb.filter(F.col("vec_id") == 0).head()["embedding"])
-
-
-def test_expression_and_kernel_topk_agree(emb, qvec):
-    a = cosine_topk(emb, qvec, k=10).toPandas()
-    b = cosine_topk_udf(emb, qvec, k=10).toPandas()
-    assert a["vec_id"].tolist() == b["vec_id"].tolist()
-    assert np.allclose(a["cosine"], b["cosine"], rtol=0, atol=0)
 
 
 def test_ivf_assignment_is_nearest_centroid(spark, emb):

@@ -30,7 +30,7 @@ HEADLINE = [
     "q86_cms_heavy_hitters", "q87_contamination_spans",
     "q88_retention_cohorts", "q89_scd2_intervals",
     "q90_sequence_packing", "q91_pmi_pairs", "q92_passage_dedup",
-    "q93_bigram_surprise",
+    "q93_bigram_surprise", "q94_bpe_tokenize", "q95_shard_shuffle",
 ]
 
 SF = "/root/testdata/sf0.001"
