@@ -2,16 +2,15 @@
 
 The reference's A2 operator (``buffer_convolve``, extract_raster_buffer.py:
 68-80) convolves the WHOLE raster in one resident ndarray. The scale path
-here is tile + halo exchange (SURVEY.md A2 row): every tile is exploded to
-the (≤ 9) output tiles whose halo window it intersects, grouped by output
-tile, assembled into a padded window, and convolved with the SAME
-shift-accumulate kernel order as the single-node reference implementation
-(functions/ref_compat.convolve_extend) — so the distributed result is
-bit-identical to the whole-array result, any tiling.
-
-Shuffle cost: each tile's pixels move ≤ 9× (in practice ~1 + 4·halo/tile_px);
-nothing else shuffles. At 100 TB the tile table is the raster's native COG
-layout and this is a single self-join-shaped stage.
+here is tile + halo exchange (SURVEY.md A2 row): every tile goes to the
+output groups whose halo window it intersects
+(``sources/raster.halo_groups``, which also states the fan-out), each group
+pastes its tiles into one padded window (``fill_window``) and convolves it
+with the SAME shift-accumulate kernel order as the single-node reference
+implementation (functions/ref_compat.convolve_extend) — so the
+distributed result is bit-identical to the whole-array result, any tiling.
+Only the tiles shuffle; at 100 TB the tile table is the raster's native
+COG layout and this is a single self-join-shaped stage.
 """
 
 from __future__ import annotations
@@ -23,7 +22,8 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from ..geo_synth import RASTER_H, RASTER_W, XRES
-from ..sources.raster import TILE_SCHEMA, tile_id_of
+from ..sources.raster import (TILE_SCHEMA, fill_window, halo_groups,
+                              tile_id_of)
 
 # superblock side in tiles for convolve_sum_count_tiles
 SB_TILES = 2
@@ -58,49 +58,20 @@ def convolve_tiles(tiles: DataFrame, kernel: np.ndarray, tile_px: int,
     kh, kw = kernel.shape
     ph, pw = kh // 2, kw // 2
     assert ph <= tile_px and pw <= tile_px, "halo larger than tile"
-    spark = tiles.sparkSession
-    bc_kernel = spark.sparkContext.broadcast(kernel)
-    ntr = (height + tile_px - 1) // tile_px
-    ntc = (width + tile_px - 1) // tile_px
-
-    # explode: every input tile → the output-tile groups its pixels feed
-    offs = [(di, dj) for di in (-1, 0, 1) for dj in (-1, 0, 1)]
-    off_col = F.array(*[F.struct(F.lit(a).alias("di"), F.lit(b).alias("dj"))
-                        for a, b in offs])
-    trow = (F.col("row0") / tile_px).cast("int")
-    tcol = (F.col("col0") / tile_px).cast("int")
-    contrib = (tiles
-               .withColumn("_o", F.explode(off_col))
-               .withColumn("_tr", trow + F.col("_o.di"))
-               .withColumn("_tc", tcol + F.col("_o.dj"))
-               .filter((F.col("_tr") >= 0) & (F.col("_tr") < ntr)
-                       & (F.col("_tc") >= 0) & (F.col("_tc") < ntc))
-               .withColumn("out_tile",
-                           F.col("_tr").cast("long") * F.lit(1 << 32)
-                           + F.col("_tc"))
-               .drop("_o", "_tr", "_tc"))
+    bc_kernel = tiles.sparkSession.sparkContext.broadcast(kernel)
+    halo = max(ph, pw)
+    contrib = halo_groups(tiles, tile_px, halo, halo, height, width)
 
     def _assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        out_tile = int(key[0])
-        otr, otc = out_tile >> 32, out_tile & 0xFFFFFFFF
+        otr, otc = int(key[0]) >> 32, int(key[0]) & 0xFFFFFFFF
         r0 = otr * tile_px
         c0 = otc * tile_px
         h = min(tile_px, height - r0)
         w = min(tile_px, width - c0)
         kernel = bc_kernel.value
-        kh, kw = kernel.shape
-        ph, pw = kh // 2, kw // 2
-        win = np.full((h + kh - 1, w + kw - 1), np.nan)
         wr0 = r0 - ph  # absolute raster row of win[0, 0]
         wc0 = c0 - pw
-        for t in pdf.itertuples():
-            arr = np.asarray(t.data).reshape(t.h, t.w)
-            rr = t.row0 - wr0
-            cc = t.col0 - wc0
-            a0, a1 = max(0, -rr), min(t.h, win.shape[0] - rr)
-            b0, b1 = max(0, -cc), min(t.w, win.shape[1] - cc)
-            if a0 < a1 and b0 < b1:
-                win[rr + a0:rr + a1, cc + b0:cc + b1] = arr[a0:a1, b0:b1]
+        win = fill_window(pdf, wr0, wc0, h + kh - 1, w + kw - 1)
         # replicate at raster boundary (astropy boundary='extend' semantics)
         top = max(0, -wr0)
         left = max(0, -wc0)
@@ -119,7 +90,7 @@ def convolve_tiles(tiles: DataFrame, kernel: np.ndarray, tile_px: int,
             "tile_id": tile_id_of(otr, otc), "row0": r0, "col0": c0,
             "h": h, "w": w, "data": out.ravel()}])
 
-    return (contrib.groupBy("out_tile")
+    return (contrib.groupBy("group_id")
             .applyInPandas(_assemble, TILE_SCHEMA))
 
 
@@ -197,8 +168,6 @@ def convolve_sum_count_tiles(tiles: DataFrame, kernels: dict,
     bc_kernels = spark.sparkContext.broadcast(
         {k: np.asarray(v, dtype=np.float64) for k, v in kernels.items()})
     sb_px = SB_TILES * tile_px
-    nsr = (height + sb_px - 1) // sb_px
-    nsc = (width + sb_px - 1) // sb_px
 
     fields = [T.StructField("tile_id", T.LongType()),
               T.StructField("row0", T.IntegerType()),
@@ -210,50 +179,21 @@ def convolve_sum_count_tiles(tiles: DataFrame, kernels: dict,
                    T.StructField(f"c_{k}", T.ArrayType(T.LongType()))]
     out_schema = T.StructType(fields)
 
-    # r3: SUPERBLOCK grouping (SB_TILES x SB_TILES tiles per task) replaces
-    # the per-tile 9x halo fan-out: only tiles within the halo of a
-    # superblock border fan out (~1 + 4*halo/sb_px per tile), so the input
-    # shuffle carries the raster ~1.1x instead of 9x — the stage's cost is
-    # then its unavoidable output planes, which serialize per-worker.
-    # SB_TILES=2 (512 px superblocks, ~12 MB output per group) measured
-    # fastest at local[32]: 2x the per-tile fan-out version; SB_TILES=4
-    # forms 50 MB groups (memory pressure + last-wave imbalance).
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _sbs(row0: pd.Series, col0: pd.Series, h: pd.Series, w: pd.Series
-             ) -> pd.Series:
-        out = []
-        for r0, c0, hh, ww in zip(row0.to_numpy(), col0.to_numpy(),
-                                  h.to_numpy(), w.to_numpy()):
-            r_lo = max(0, (int(r0) - ph)) // sb_px
-            r_hi = min(height - 1, int(r0) + int(hh) - 1 + ph) // sb_px
-            c_lo = max(0, (int(c0) - pw)) // sb_px
-            c_hi = min(width - 1, int(c0) + int(ww) - 1 + pw) // sb_px
-            out.append([sr * (1 << 32) + sc
-                        for sr in range(r_lo, min(r_hi, nsr - 1) + 1)
-                        for sc in range(c_lo, min(c_hi, nsc - 1) + 1)])
-        return pd.Series(out)
-
-    contrib = tiles.withColumn(
-        "sb", F.explode(_sbs(F.col("row0"), F.col("col0"),
-                             F.col("h"), F.col("w"))))
+    # SUPERBLOCK grouping (SB_TILES x SB_TILES tiles per task): SB_TILES=2
+    # (512 px superblocks, ~12 MB output per group) measured fastest at
+    # local[32], 2x the per-tile grouping; SB_TILES=4 forms 50 MB groups
+    # (memory pressure + last-wave imbalance)
+    halo = max(ph, pw)
+    contrib = halo_groups(tiles, sb_px, halo, halo, height, width)
 
     def _assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        sb = int(key[0])
-        sbr, sbc = sb >> 32, sb & 0xFFFFFFFF
+        sbr, sbc = int(key[0]) >> 32, int(key[0]) & 0xFFFFFFFF
         r0 = sbr * sb_px
         c0 = sbc * sb_px
         sb_h = min(sb_px, height - r0)
         sb_w = min(sb_px, width - c0)
-        win = np.full((sb_h + 2 * ph, sb_w + 2 * pw), np.nan)
-        wr0, wc0 = r0 - ph, c0 - pw
-        for t in pdf.itertuples():
-            arr = np.asarray(t.data).reshape(t.h, t.w)
-            rr = t.row0 - wr0
-            cc = t.col0 - wc0
-            a0, a1 = max(0, -rr), min(t.h, win.shape[0] - rr)
-            b0, b1 = max(0, -cc), min(t.w, win.shape[1] - cc)
-            if a0 < a1 and b0 < b1:
-                win[rr + a0:rr + a1, cc + b0:cc + b1] = arr[a0:a1, b0:b1]
+        win = fill_window(pdf, r0 - ph, c0 - pw,
+                          sb_h + 2 * ph, sb_w + 2 * pw)
         filled = np.nan_to_num(win, nan=0.0)
         valid = (~np.isnan(win)).astype(np.float64)
         # CHORD DECOMPOSITION: a circle kernel is one contiguous column
@@ -308,5 +248,5 @@ def convolve_sum_count_tiles(tiles: DataFrame, kernels: dict,
                 rows.append(row)
         return pd.DataFrame(rows)
 
-    return (contrib.groupBy("sb")
+    return (contrib.groupBy("group_id")
             .applyInPandas(_assemble, out_schema))

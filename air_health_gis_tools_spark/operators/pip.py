@@ -29,6 +29,14 @@ from pyspark.sql import types as T
 CELL_M = 25_000
 
 
+def _cell_sql(e: str) -> str:
+    """floor(e / CELL_M) of the BIGINT value of ``e`` — the one cell key of
+    both join sides. Floor (the pmod form), not truncation: a negative
+    coordinate must land in the cell its polygon's cover lists."""
+    v = f"CAST({e} AS BIGINT)"
+    return f"(({v} - pmod({v}, {CELL_M})) DIV {CELL_M})"
+
+
 def polygon_cover_cells(polys: DataFrame) -> DataFrame:
     """Explode each ``(cx, cy, r)`` circle polygon to the cells its bbox
     covers.
@@ -40,14 +48,10 @@ def polygon_cover_cells(polys: DataFrame) -> DataFrame:
     Pure Catalyst (r3): ``sequence``+``explode`` replaces the r2 Arrow
     kernel — the dim prep no longer pays a Python-worker round-trip inside
     every job that builds the broadcast (and stays in whole-stage
-    codegen). Floor division via the pmod form so negative frames keep
-    numpy-floor semantics.
+    codegen).
     """
-    def fdiv(e: str, d: int) -> str:
-        return f"(({e}) - pmod({e}, {d})) DIV {d}"
-
-    ci = fdiv("cx - r", CELL_M), fdiv("cx + r", CELL_M)
-    cj = fdiv("cy - r", CELL_M), fdiv("cy + r", CELL_M)
+    ci = _cell_sql("cx - r"), _cell_sql("cx + r")
+    cj = _cell_sql("cy - r"), _cell_sql("cy + r")
     return (polys
             .withColumn("_ci", F.explode(F.expr(
                 f"sequence({ci[0]}, {ci[1]})")))
@@ -71,10 +75,8 @@ def pip_circle_counts(points: DataFrame, polys: DataFrame,
     """
     group_cols = group_cols or []
     covered = polygon_cover_cells(polys)
-    pts = points.withColumn(
-        "cell",
-        (F.col("x") / CELL_M).cast("long") * F.lit(1 << 32)
-        + (F.col("y") / CELL_M).cast("long"))
+    pts = points.withColumn("cell", F.expr(
+        f"{_cell_sql('x')} * {1 << 32}L + {_cell_sql('y')}"))
 
     dx = F.col("x") - F.col("cx")
     dy = F.col("y") - F.col("cy")

@@ -10,18 +10,21 @@ Distributed form for integer downsample factor f with nearest resampling
 extract_raster_buffer.py:28-35): each source tile belongs to exactly one
 output tile (src (tr, tc) → out (tr//f, tc//f)); group the f² source tiles
 per output tile, assemble, and gather centers. One narrow shuffle keyed by
-output tile; no pixel is read twice. Bilinear/cubic variants swap the
-gather kernel (parameter seam, as in the reference's Resampling enum).
+output tile; no pixel is read twice. The bilinear and Lanczos modes swap
+the gather kernel and widen the window by their stencil's halo. All three
+route tiles with ``sources/raster.halo_groups`` (group = one output tile,
+``tile_px·f`` source pixels) and paste them with ``fill_window``.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..geo_synth import RASTER_H, RASTER_W
-from ..sources.raster import TILE_SCHEMA, tile_id_of
+from ..sources.raster import (TILE_SCHEMA, fill_window, halo_groups,
+                              tile_id_of)
 
 
 def resample_tiles_nearest(tiles: DataFrame, factor: int, tile_px: int,
@@ -45,24 +48,15 @@ def resample_tiles_nearest(tiles: DataFrame, factor: int, tile_px: int,
     out_h = -(-height // f)
     out_w = -(-width // f)
 
-    out_tr = ((F.col("row0") / tile_px).cast("long") / f).cast("long")
-    out_tc = ((F.col("col0") / tile_px).cast("long") / f).cast("long")
-    keyed = tiles.withColumn(
-        "out_tile", out_tr * F.lit(1 << 32) + out_tc)
+    span = tile_px * f
+    keyed = halo_groups(tiles, span, 0, 0, height, width)
 
     def _assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        out_tile = int(key[0])
-        otr, otc = out_tile >> 32, out_tile & 0xFFFFFFFF
+        otr, otc = int(key[0]) >> 32, int(key[0]) & 0xFFFFFFFF
         # source window covered by this output tile
-        src_r0 = otr * tile_px * f
-        src_c0 = otc * tile_px * f
-        span = tile_px * f
-        win = np.full((span, span), np.nan)
-        for t in pdf.itertuples():
-            arr = np.asarray(t.data).reshape(t.h, t.w)
-            rr = int(t.row0) - src_r0
-            cc = int(t.col0) - src_c0
-            win[rr:rr + t.h, cc:cc + t.w] = arr
+        src_r0 = otr * span
+        src_c0 = otc * span
+        win = fill_window(pdf, src_r0, src_c0, span, span)
         # trim edge tiles to the true downsampled extent so h/w metadata
         # matches the output raster dims (no phantom NaN-padded pixels)
         h = min(tile_px, out_h - otr * tile_px)
@@ -84,7 +78,7 @@ def resample_tiles_nearest(tiles: DataFrame, factor: int, tile_px: int,
             "row0": otr * tile_px, "col0": otc * tile_px,
             "h": h, "w": w, "data": out.ravel()}])
 
-    return keyed.groupBy("out_tile").applyInPandas(_assemble, TILE_SCHEMA)
+    return keyed.groupBy("group_id").applyInPandas(_assemble, TILE_SCHEMA)
 
 
 def resample_tiles_bilinear(tiles: DataFrame, factor: int, tile_px: int,
@@ -110,47 +104,16 @@ def resample_tiles_bilinear(tiles: DataFrame, factor: int, tile_px: int,
     span = tile_px * f
     out_h = -(-height // f)
     out_w = -(-width // f)
-    ntr_out = (out_h + tile_px - 1) // tile_px
-    ntc_out = (out_w + tile_px - 1) // tile_px
-
-    @F.pandas_udf("array<long>")
-    def _out_tiles(row0: pd.Series, col0: pd.Series) -> pd.Series:
-        out = []
-        for r0, c0 in zip(row0.to_numpy(), col0.to_numpy()):
-            # output tile otr needs source rows [otr*span, otr*span+span+1)
-            r_lo = max(0, (int(r0) - span - 1) // span + 1)
-            r_hi = min(ntr_out - 1, (int(r0) + tile_px - 1) // span)
-            c_lo = max(0, (int(c0) - span - 1) // span + 1)
-            c_hi = min(ntc_out - 1, (int(c0) + tile_px - 1) // span)
-            out.append([tr * (1 << 32) + tc
-                        for tr in range(r_lo, r_hi + 1)
-                        for tc in range(c_lo, c_hi + 1)])
-        return pd.Series(out)
-
-    keyed = tiles.withColumn(
-        "out_tile", F.explode(_out_tiles(F.col("row0"), F.col("col0"))))
+    # output tile otr needs source rows [otr*span, otr*span+span+1)
+    keyed = halo_groups(tiles, span, 0, 1, height, width)
 
     def _assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        out_tile = int(key[0])
-        otr, otc = out_tile >> 32, out_tile & 0xFFFFFFFF
+        otr, otc = int(key[0]) >> 32, int(key[0]) & 0xFFFFFFFF
         src_r0 = otr * span
         src_c0 = otc * span
-        win = np.full((span + 1, span + 1), np.nan)
-        for t in pdf.itertuples():
-            arr = np.asarray(t.data).reshape(t.h, t.w)
-            rr = int(t.row0) - src_r0
-            cc = int(t.col0) - src_c0
-            a0, a1 = max(0, -rr), min(t.h, win.shape[0] - rr)
-            b0, b1 = max(0, -cc), min(t.w, win.shape[1] - cc)
-            if a0 < a1 and b0 < b1:
-                win[rr + a0:rr + a1, cc + b0:cc + b1] = arr[a0:a1, b0:b1]
+        win = fill_window(pdf, src_r0, src_c0, span + 1, span + 1)
         h = min(tile_px, out_h - otr * tile_px)
         w = min(tile_px, out_w - otc * tile_px)
-        if h <= 0 or w <= 0:
-            return pd.DataFrame(
-                {fld.name: pd.Series(dtype="object" if fld.name == "data"
-                                     else "int64")
-                 for fld in TILE_SCHEMA})
         out = bilinear_gather_np(win, src_r0, src_c0, otr * tile_px,
                                  otc * tile_px, h, w, f, height, width)
         return pd.DataFrame([{
@@ -158,7 +121,7 @@ def resample_tiles_bilinear(tiles: DataFrame, factor: int, tile_px: int,
             "row0": otr * tile_px, "col0": otc * tile_px,
             "h": h, "w": w, "data": out.ravel()}])
 
-    return keyed.groupBy("out_tile").applyInPandas(_assemble, TILE_SCHEMA)
+    return keyed.groupBy("group_id").applyInPandas(_assemble, TILE_SCHEMA)
 
 
 LANCZOS_A = 3
@@ -213,43 +176,18 @@ def resample_tiles_lanczos(tiles: DataFrame, factor: int, tile_px: int,
     halo = LANCZOS_A * f
     out_h = -(-height // f)
     out_w = -(-width // f)
-    ntr_out = (out_h + tile_px - 1) // tile_px
-    ntc_out = (out_w + tile_px - 1) // tile_px
-
-    @F.pandas_udf("array<long>")
-    def _out_tiles(row0: pd.Series, col0: pd.Series) -> pd.Series:
-        out = []
-        for r0, c0 in zip(row0.to_numpy(), col0.to_numpy()):
-            # output tile otr reads source rows [otr*span−halo,
-            # otr*span+span+halo)
-            r_lo = max(0, (int(r0) - span - halo) // span + 1)
-            r_hi = min(ntr_out - 1, (int(r0) + tile_px - 1 + halo) // span)
-            c_lo = max(0, (int(c0) - span - halo) // span + 1)
-            c_hi = min(ntc_out - 1, (int(c0) + tile_px - 1 + halo) // span)
-            out.append([tr * (1 << 32) + tc
-                        for tr in range(r_lo, r_hi + 1)
-                        for tc in range(c_lo, c_hi + 1)])
-        return pd.Series(out)
-
-    keyed = tiles.withColumn(
-        "out_tile", F.explode(_out_tiles(F.col("row0"), F.col("col0"))))
+    # output tile otr reads source rows [otr*span − halo,
+    # otr*span + span + halo), clipped to the raster
+    keyed = halo_groups(tiles, span, halo, halo, height, width)
 
     def _assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        out_tile = int(key[0])
-        otr, otc = out_tile >> 32, out_tile & 0xFFFFFFFF
+        otr, otc = int(key[0]) >> 32, int(key[0]) & 0xFFFFFFFF
         win_r0 = max(0, otr * span - halo)
         win_c0 = max(0, otc * span - halo)
         win_r1 = min(height, otr * span + span + halo)
         win_c1 = min(width, otc * span + span + halo)
-        win = np.full((win_r1 - win_r0, win_c1 - win_c0), np.nan)
-        for t in pdf.itertuples():
-            rr = int(t.row0) - win_r0
-            cc = int(t.col0) - win_c0
-            arr = np.asarray(t.data).reshape(t.h, t.w)
-            a0, a1 = max(0, -rr), min(t.h, win.shape[0] - rr)
-            b0, b1 = max(0, -cc), min(t.w, win.shape[1] - cc)
-            if a0 < a1 and b0 < b1:
-                win[rr + a0:rr + a1, cc + b0:cc + b1] = arr[a0:a1, b0:b1]
+        win = fill_window(pdf, win_r0, win_c0,
+                          win_r1 - win_r0, win_c1 - win_c0)
         h = min(tile_px, out_h - otr * tile_px)
         w = min(tile_px, out_w - otc * tile_px)
         out = lanczos_gather_np(win, win_r0, win_c0, otr * tile_px,
@@ -259,7 +197,7 @@ def resample_tiles_lanczos(tiles: DataFrame, factor: int, tile_px: int,
             "row0": otr * tile_px, "col0": otc * tile_px,
             "h": h, "w": w, "data": out.ravel()}])
 
-    return keyed.groupBy("out_tile").applyInPandas(_assemble, TILE_SCHEMA)
+    return keyed.groupBy("group_id").applyInPandas(_assemble, TILE_SCHEMA)
 
 
 def bilinear_gather_np(win: np.ndarray, win_r0: int, win_c0: int,

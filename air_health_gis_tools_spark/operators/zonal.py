@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from ..geo_synth import RASTER_H, RASTER_W, XRES, raster_value_np
+from ..sources.raster import fill_window, halo_groups
 
 
 def _radius_px_at(buffer_m: int, xres: int) -> int:
@@ -338,6 +339,46 @@ MAX_SALT = 32
 CONVOLVE_HOT_GROUP_ROWS = 262_144
 
 
+def _salt_hot_groups(points: DataFrame, tiles: DataFrame, key: str,
+                     id_col: str, hot_group_rows: int, max_salt: int
+                     ) -> tuple[DataFrame, DataFrame]:
+    """Adaptive salting of a (points, tiles) cogroup on ``key``: adds the
+    cogroup key ``gkey = key·64 + salt`` to both sides.
+
+    A group holding more than ``hot_group_rows`` points splits into
+    ceil(count / hot_group_rows) ≤ ``max_salt`` salt groups: points pick
+    their salt by id hash, the group's tile rows (the small side)
+    replicate into each salt. Cold groups take salt 0 via the left-join
+    default and pay nothing. Output is unchanged: each salt group sees
+    every tile row of its group and a disjoint share of its points. Fully
+    distributed — the hot map is a broadcast-joined DataFrame bounded by
+    n_points / hot_group_rows, never a driver collect.
+    """
+    hot = (points.groupBy(key).count()
+           .filter(F.col("count") > hot_group_rows)
+           .select(key,
+                   F.least(F.ceil(F.col("count") / hot_group_rows),
+                           F.lit(max_salt)).cast("long").alias("salt_k")))
+    # Knuth multiplicative hash of the id picks the salt
+    points = (points.join(F.broadcast(hot), key, "left")
+              .withColumn("_k", F.coalesce(F.col("salt_k"), F.lit(1)))
+              .withColumn(
+                  "gkey",
+                  F.col(key) * 64
+                  + F.pmod(F.pmod(F.col(id_col) * F.lit(2654435761),
+                                  F.lit(1 << 31)), F.col("_k")))
+              .drop("salt_k", "_k"))
+    tiles = (tiles.join(F.broadcast(hot), key, "left")
+             .withColumn(
+                 "_salt",
+                 F.explode(F.sequence(
+                     F.lit(0).cast("long"),
+                     F.coalesce(F.col("salt_k"), F.lit(1)) - 1)))
+             .withColumn("gkey", F.col(key) * 64 + F.col("_salt"))
+             .drop("salt_k", "_salt"))
+    return points, tiles
+
+
 def buffered_stats_tiled(points: DataFrame, tiles: DataFrame,
                          buffers_m: Sequence[int], tile_px: int,
                          id_col: str = "doc_id",
@@ -382,38 +423,9 @@ def buffered_stats_tiled(points: DataFrame, tiles: DataFrame,
     # passes since the r6 Catalyst tile-id rewrite.
     from pyspark import StorageLevel
 
-    # ---- adaptive salting, fully distributed: the hot-tile map is a
-    # DataFrame (only tiles with count > hot_group_rows survive the filter),
-    # broadcast-joined onto both sides. Nothing proportional to the tile
-    # count ever touches the driver — at a 100 TB raster the hot set is
-    # bounded by n_points / hot_group_rows, and cold tiles (the vast
-    # majority) take salt_k = 1 via the left-join default.
-    hot = (pts.groupBy("tile_id").count()
-           .filter(F.col("count") > hot_group_rows)
-           .select("tile_id",
-                   F.least(F.ceil(F.col("count") / hot_group_rows),
-                           F.lit(max_salt)).cast("long").alias("salt_k")))
-    # point side: salt = hash(id) % salt_k (same Knuth multiplicative hash
-    # as before; salting only regroups (point, tile) partials, so outputs
-    # are unchanged — partials are computed whole within one group)
-    pts = (pts.join(F.broadcast(hot), "tile_id", "left")
-           .withColumn("_k", F.coalesce(F.col("salt_k"), F.lit(1)))
-           .withColumn(
-               "gkey",
-               F.col("tile_id") * 64
-               + F.pmod(F.pmod(F.col(id_col) * F.lit(2654435761),
-                               F.lit(1 << 31)), F.col("_k")))
-           .drop("salt_k", "_k"))
-    # tile side: a hot tile replicates into each of its salt groups (the
-    # raster row fans out, never the points); cold tiles pay nothing
-    tiles = (tiles.join(F.broadcast(hot), "tile_id", "left")
-             .withColumn(
-                 "_salt",
-                 F.explode(F.sequence(
-                     F.lit(0).cast("long"),
-                     F.coalesce(F.col("salt_k"), F.lit(1)) - 1)))
-             .withColumn("gkey", F.col("tile_id") * 64 + F.col("_salt"))
-             .drop("salt_k", "_salt"))
+    # urban-cluster skew: hot tiles split into salt groups
+    pts, tiles = _salt_hot_groups(pts, tiles, "tile_id", id_col,
+                                  hot_group_rows, max_salt)
 
     # one WIDE partial row per (point, tile): no per-buffer row blowup and
     # no pivot stage in the final combine
@@ -597,30 +609,30 @@ def buffered_mean_convolve_all(points: DataFrame, tiles: DataFrame,
     Why this shape survives 100 TB: the r2 plan shuffled the raster 9×
     (full halo fan-out), materialized 6 result planes per tile (48 B/px)
     and shuffled THEM again into the gather cogroup — ~25 GB of movement
-    per 201 M px. Here tiles move ~(1 + 4·rmax/sb_px)× ≈ 1.1×, points
-    shuffle once, and only per-point rows leave the task; per-task compute
-    is one cumsum of the superblock (cache-resident) plus O(points·r)
-    gathers. min/max are not convolution-expressible; like the reference's
-    Method 1 this strategy emits mean + n_valid.
+    per 201 M px. Here whole tiles go to every superblock whose
+    rmax-padded window they touch (``halo_groups``: 8.27 groups per tile
+    on the 4096² raster at sb_tiles = 1), points shuffle once, no plane
+    is materialized, and only per-point rows leave the task; per-task
+    compute is one cumsum of the superblock (cache-resident) plus
+    O(points·r) gathers. min/max are not convolution-expressible; like
+    the reference's Method 1 this strategy emits mean + n_valid.
     """
     buffers_m = list(buffers_m)
     rmax = max(_radius_px_at(b, XRES) for b in buffers_m)
     # Adaptive superblock sizing — a DATA-dependent rule (never
     # parallelism-dependent, so the same input yields the same plan at
     # every cluster size): the smallest power-of-2 superblock that
-    # (a) contains the halo and (b) keeps the tile fan-out
-    # (1 + 2·rmax/sb_px)² ≤ 2 — i.e. the raster moves at most ~2×.
-    # Smaller superblocks mean MORE tasks (a 4096² raster gets 64
-    # groups instead of 16 — the difference between starving and
-    # saturating an 8-wide stage) at bounded shuffle cost.
+    # (a) contains the halo and (b) keeps the padded window's area
+    # (1 + 2·rmax/sb_px)² ≤ 2× the superblock's, i.e. at most ~2× the
+    # prefix-sum work per output pixel. Smaller superblocks mean MORE
+    # tasks (a 4096² raster gets 256 groups instead of 16 — the
+    # difference between starving and saturating the stage).
     sb_tiles = 1
     while (sb_tiles * tile_px < rmax
            or (1 + 2 * rmax / (sb_tiles * tile_px)) ** 2 > 2.0):
         sb_tiles *= 2
     sb_px = sb_tiles * tile_px
     assert rmax <= sb_px, "halo larger than superblock"
-    nsr = (height + sb_px - 1) // sb_px
-    nsc = (width + sb_px - 1) // sb_px
 
     # chord tables per buffer: kernel row di in 0..2r -> [lo, hi] columns
     chords = {}
@@ -631,75 +643,17 @@ def buffered_mean_convolve_all(points: DataFrame, tiles: DataFrame,
                         ).astype(np.int64)
         chords[b] = (rpx, rpx - half, rpx + half)   # (rpx, lo[di], hi[di])
 
-    # tile -> superblock keys its (rmax-padded) extent touches (≤ 3 per
-    # axis — when sb_px == tile_px the halo reaches both neighbors). Pure
-    # Catalyst (r6, guide §4.1 — the polygon_cover_cells pattern): two
-    # sequence explodes in whole-stage codegen replace the per-row Python
-    # loop through an Arrow boundary for every tile of the raster.
-    # explode_OUTER: sequences are non-empty (lo ≤ hi for every tile
-    # inside the raster), and a plain explode's inferred size>0 filter
-    # would re-inline the range expressions below any upstream exchange
-    # (the tiled path's measured pathology). A tile outside the raster
-    # (lo > hi) fails fast: ``sequence`` would count DOWN and fan the tile
-    # out to superblocks it does not touch.
-    def fdiv(e: str, d: int) -> str:
-        return f"((({e}) - pmod({e}, {d})) DIV {d})"
-
-    def span(lo: str, hi: str, origin: str):
-        return F.expr(
-            f"CASE WHEN {lo} <= {hi} THEN sequence({lo}, {hi}) "
-            f"ELSE raise_error(concat('buffered_mean_convolve_all: tile "
-            f"{origin}=', CAST({origin} AS STRING), ' lies outside the "
-            f"raster')) END")
-
-    r_lo = fdiv(f"greatest(CAST(row0 AS BIGINT) - {rmax}, 0L)", sb_px)
-    r_hi_in = (f"least(CAST(row0 AS BIGINT) + h - 1 + {rmax}, "
-               f"{height - 1}L)")
-    r_hi = f"least({fdiv(r_hi_in, sb_px)}, {nsr - 1}L)"
-    c_lo = fdiv(f"greatest(CAST(col0 AS BIGINT) - {rmax}, 0L)", sb_px)
-    c_hi_in = (f"least(CAST(col0 AS BIGINT) + w - 1 + {rmax}, "
-               f"{width - 1}L)")
-    c_hi = f"least({fdiv(c_hi_in, sb_px)}, {nsc - 1}L)"
-    contrib = (tiles
-               .withColumn("_sr", F.explode_outer(span(r_lo, r_hi, "row0")))
-               .withColumn("_sc", F.explode_outer(span(c_lo, c_hi, "col0")))
-               .withColumn("sb",
-                           F.col("_sr") * F.lit(1 << 32) + F.col("_sc"))
-               .drop("_sr", "_sc"))
-
+    contrib = halo_groups(tiles, sb_px, rmax, rmax, height, width)
     pts = points.select(id_col, "x", "y").withColumn(
-        "sb",
+        "group_id",
         ((F.col("y") / XRES).cast("long") / sb_px).cast("long")
         * F.lit(1 << 32)
         + ((F.col("x") / XRES).cast("long") / sb_px).cast("long"))
-
-    # adaptive salting, same machinery as buffered_stats_tiled: urban
-    # clusters pile millions of points into one superblock group — the
-    # 4N-leg straggler. Hot superblocks split into salt groups (points by
-    # id hash; the superblock's TILES — the small side — replicate into
-    # each salt). Cold superblocks pay nothing. Output unchanged: each
-    # salt group assembles the same window and serves disjoint points.
-    hot = (pts.groupBy("sb").count()
-           .filter(F.col("count") > CONVOLVE_HOT_GROUP_ROWS)
-           .select("sb",
-                   F.least(F.ceil(F.col("count") / CONVOLVE_HOT_GROUP_ROWS),
-                           F.lit(MAX_SALT)).cast("long").alias("salt_k")))
-    pts = (pts.join(F.broadcast(hot), "sb", "left")
-           .withColumn("_k", F.coalesce(F.col("salt_k"), F.lit(1)))
-           .withColumn(
-               "gkey",
-               F.col("sb") * 64
-               + F.pmod(F.pmod(F.col(id_col) * F.lit(2654435761),
-                               F.lit(1 << 31)), F.col("_k")))
-           .drop("salt_k", "_k"))
-    contrib = (contrib.join(F.broadcast(hot), "sb", "left")
-               .withColumn(
-                   "_salt",
-                   F.explode(F.sequence(
-                       F.lit(0).cast("long"),
-                       F.coalesce(F.col("salt_k"), F.lit(1)) - 1)))
-               .withColumn("gkey", F.col("sb") * 64 + F.col("_salt"))
-               .drop("salt_k", "_salt"))
+    # urban clusters pile millions of points into one superblock group —
+    # the 4N-leg straggler; each salt group assembles the same window and
+    # serves disjoint points
+    pts, contrib = _salt_hot_groups(pts, contrib, "group_id", id_col,
+                                    CONVOLVE_HOT_GROUP_ROWS, MAX_SALT)
 
     fields = [T.StructField(id_col, T.LongType())]
     for b in buffers_m:
@@ -728,15 +682,8 @@ def buffered_mean_convolve_all(points: DataFrame, tiles: DataFrame,
             return pd.DataFrame(out)
         wr0 = sbr * sb_px - rmax
         wc0 = sbc * sb_px - rmax
-        win = np.full((sb_h + 2 * rmax, sb_w + 2 * rmax), np.nan)
-        for t in pdf_tiles.itertuples():
-            arr = np.asarray(t.data).reshape(t.h, t.w)
-            rr = int(t.row0) - wr0
-            cc = int(t.col0) - wc0
-            a0, a1 = max(0, -rr), min(int(t.h), win.shape[0] - rr)
-            b0, b1 = max(0, -cc), min(int(t.w), win.shape[1] - cc)
-            if a0 < a1 and b0 < b1:
-                win[rr + a0:rr + a1, cc + b0:cc + b1] = arr[a0:a1, b0:b1]
+        win = fill_window(pdf_tiles, wr0, wc0,
+                          sb_h + 2 * rmax, sb_w + 2 * rmax)
         valid = ~np.isnan(win)
         filled = np.where(valid, win, 0.0)
         pf = np.concatenate(

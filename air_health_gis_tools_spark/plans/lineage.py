@@ -14,7 +14,9 @@ Design:
   appending one parquet file per bucket + a metrics row
   (rows, wall seconds, attempt) — so a killed run re-executes only
   unfinished buckets;
-- results are read back as one DataFrame; metrics are a queryable table.
+- per-bucket rows come from the written files' parquet footers (no
+  read-back job); results are read back as one DataFrame with the input's
+  schema; metrics are a queryable table.
 """
 
 from __future__ import annotations
@@ -23,11 +25,28 @@ import json
 import os
 import shutil
 import time
+from urllib.parse import unquote
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
 MAX_DISCOVERED_BUCKETS = 10_000
+
+
+def _bucket_rows(root: str) -> dict[str, int]:
+    """Rows per ``part_bucket=<b>`` directory of a partitioned write under
+    ``root``, summed from the data files' parquet footers — the driver
+    reads file metadata only, no Spark job."""
+    out = {}
+    for d in os.listdir(root):
+        if not d.startswith("part_bucket="):
+            continue
+        path = os.path.join(root, d)
+        out[unquote(d.split("=", 1)[1])] = sum(
+            pq.read_metadata(os.path.join(path, f)).num_rows
+            for f in os.listdir(path) if f.endswith(".parquet"))
+    return out
 
 
 class CheckpointStore:
@@ -89,19 +108,14 @@ def run_stage(df: DataFrame, part_col: str, store: CheckpointStore,
         tmp = os.path.join(store.root, "stage_tmp")
         shutil.rmtree(tmp, ignore_errors=True)
         # `part_bucket` is a COPY of part_col: partitionBy consumes it for
-        # the
-        # directory layout while part_col itself stays in the data files,
-        # so per-bucket read-back keeps the full schema. (No leading
-        # underscore anywhere: Spark's FileIndex silently ignores _-prefixed
-        # paths, which would blank the counts read.)
+        # the directory layout while part_col itself stays in the data
+        # files, so each bucket's files hold df's full schema. (No leading
+        # underscore anywhere: Spark's FileIndex silently ignores
+        # _-prefixed paths.)
         staged = (df.filter(F.col(part_col).isin(todo))
                   .withColumn("part_bucket", F.col(part_col).cast("string")))
         staged.write.mode("overwrite").partitionBy("part_bucket").parquet(tmp)
-        # str() both sides: partition-column type inference may read the
-        # directory value back as int
-        counts = {str(r["part_bucket"]): r["count"] for r in
-                  spark.read.parquet(tmp).groupBy("part_bucket").count()
-                  .collect()}
+        counts = _bucket_rows(tmp)
         elapsed = round(time.perf_counter() - t0, 3)
         for b in todo:
             key = str(b)
@@ -110,15 +124,18 @@ def run_stage(df: DataFrame, part_col: str, store: CheckpointStore,
             shutil.rmtree(dst, ignore_errors=True)
             if os.path.exists(src):
                 os.replace(src, dst)
-            else:   # bucket empty in this run: materialize the schema
-                df.limit(0).write.mode("overwrite").parquet(dst)
+            else:   # bucket empty in this run: an empty directory
+                os.makedirs(dst)
             store.commit_bucket(key, {
-                "rows": int(counts.get(key, 0)),
+                "rows": counts.get(key, 0),
                 "seconds": elapsed,
                 "attempt_epoch": len(done),
             })
         shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(*[store.bucket_path(str(b)) for b in buckets])
+    # the written files carry df's columns (partitionBy consumed only the
+    # part_bucket copy): no schema-inference job, and empty buckets read
+    return spark.read.schema(df.schema).parquet(
+        *[store.bucket_path(str(b)) for b in buckets])
 
 
 class SnapshotTable:
@@ -165,16 +182,13 @@ class SnapshotTable:
         from the parent snapshot); ``op='append'`` adds the new files
         ALONGSIDE the parent's files for the same buckets."""
         assert op in ("append", "overwrite")
-        spark = df.sparkSession
         v = self.current_version() + 1
         data_root = os.path.join(self.root, "data", f"v{v}")
         staged = df.withColumn("part_bucket",
                                F.col(part_col).cast("string"))
         staged.write.mode("overwrite").partitionBy("part_bucket").parquet(
             data_root)
-        counts = {str(r["part_bucket"]): int(r["count"]) for r in
-                  spark.read.parquet(data_root)
-                  .groupBy("part_bucket").count().collect()}
+        counts = _bucket_rows(data_root)
         parent = self.manifest()
         new_buckets: dict[str, dict] = {
             k: dict(e) for k, e in parent["buckets"].items()}

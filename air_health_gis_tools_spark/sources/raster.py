@@ -35,6 +35,69 @@ def tile_id_of(trow: int, tcol: int) -> int:
     return trow * (1 << 32) + tcol
 
 
+def halo_groups(tiles: DataFrame, group_px: int, before: int, after: int,
+                n_rows: int, n_cols: int) -> DataFrame:
+    """Explode every tile to the output groups whose padded window it
+    intersects: adds ``group_id = (gr << 32) + gc``.
+
+    Group ``g`` (per axis) owns pixels ``[g·group_px, (g+1)·group_px)`` of
+    an ``n_rows × n_cols`` raster and reads the window
+    ``[g·group_px − before, (g+1)·group_px + after)``; a tile at
+    ``[o, o + extent)`` goes to every in-grid ``g`` with
+    ``floor((o − after) / group_px) ≤ g ≤ floor((o + extent − 1 + before)
+    / group_px)``. This is the one tile→group rule of the tiled raster
+    operators (convolution, resampling, fused convolve-and-gather).
+
+    Fan-out: whole tiles are shipped, so with ``group_px = k·tile_px`` and
+    a halo of 1..tile_px pixels each tile on a group border lands in the
+    neighbour group too — about ``(1 + 2/k)²`` groups per tile away from
+    the raster edge (9 at k = 1, 4 at k = 2), not ``1 + 4·halo/tile_px``.
+    On a 4096² raster of 256-px tiles that is 8.27 groups per tile at
+    k = 1 and 3.52 at k = 2; shipping only the halo strips would cut it.
+
+    A tile outside the grid (lo > hi on either axis) fails the job rather
+    than fanning out over a descending ``sequence``. Pure Catalyst;
+    ``explode_outer`` because the sequences are never empty, and a plain
+    explode's inferred ``size > 0`` filter would re-inline the range
+    expressions below any upstream exchange.
+    """
+    def fdiv(e: str, d: int) -> str:
+        return f"((({e}) - pmod({e}, {d})) DIV {d})"
+
+    def span(origin: str, extent: str, n: int):
+        lo = fdiv(f"greatest(CAST({origin} AS BIGINT) - {after}, 0L)",
+                  group_px)
+        hi = fdiv(f"least(CAST({origin} AS BIGINT) + {extent} - 1 "
+                  f"+ {before}, {n - 1}L)", group_px)
+        return F.explode_outer(F.expr(
+            f"CASE WHEN {lo} <= {hi} THEN sequence({lo}, {hi}) "
+            f"ELSE raise_error(concat('halo_groups: tile {origin}=', "
+            f"CAST({origin} AS STRING), ' lies outside the raster')) END"))
+
+    return (tiles
+            .withColumn("_gr", span("row0", "h", n_rows))
+            .withColumn("_gc", span("col0", "w", n_cols))
+            .withColumn("group_id",
+                        F.col("_gr") * F.lit(1 << 32) + F.col("_gc"))
+            .drop("_gr", "_gc"))
+
+
+def fill_window(pdf_tiles: pd.DataFrame, r0: int, c0: int, h: int, w: int
+                ) -> np.ndarray:
+    """An ``h × w`` NaN window with absolute origin ``(r0, c0)``, the
+    group's tiles pasted in and clipped to it."""
+    win = np.full((h, w), np.nan)
+    for t in pdf_tiles.itertuples():
+        th, tw = int(t.h), int(t.w)
+        rr, cc = int(t.row0) - r0, int(t.col0) - c0
+        a0, a1 = max(0, -rr), min(th, h - rr)
+        b0, b1 = max(0, -cc), min(tw, w - cc)
+        if a0 < a1 and b0 < b1:
+            win[rr + a0:rr + a1, cc + b0:cc + b1] = (
+                np.asarray(t.data).reshape(th, tw)[a0:a1, b0:b1])
+    return win
+
+
 def synthetic_tile_table(spark: SparkSession, tile_px: int = 256,
                          height: int = RASTER_H, width: int = RASTER_W,
                          ) -> DataFrame:

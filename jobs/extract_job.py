@@ -75,8 +75,8 @@ def main(argv=None):
     out["knn"].write.mode("overwrite").parquet(f"{args.output}/knn")
     out["pip"].write.mode("overwrite").parquet(f"{args.output}/pip")
 
-    n = spark.read.parquet(*[store.bucket_path(str(b))
-                             for b in range(args.resume_buckets)]).count()
+    done = store.done_buckets()
+    n = sum(done[str(b)]["rows"] for b in range(args.resume_buckets))
     print(json.dumps({"rows": n,
                       "seconds": round(time.perf_counter() - t0, 2),
                       "plan": out["plan"].strategy,

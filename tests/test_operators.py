@@ -12,10 +12,14 @@ from pyspark.sql import functions as F
 from air_health_gis_tools_spark import geo_synth as G
 from air_health_gis_tools_spark.functions.cells import hex_assign_np
 from air_health_gis_tools_spark.functions.geocode import with_xy
+from air_health_gis_tools_spark.operators.convolve import (
+    convolve_sum_count_tiles, convolve_tiles)
 from air_health_gis_tools_spark.operators.knn import (knn_broadcast_np,
                                                       knn_cell_join)
-from air_health_gis_tools_spark.operators.zonal import (buffered_stats,
-                                                        buffered_stats_tiled)
+from air_health_gis_tools_spark.operators.warp import (
+    resample_tiles_bilinear, resample_tiles_lanczos, resample_tiles_nearest)
+from air_health_gis_tools_spark.operators.zonal import (
+    buffered_mean_convolve_all, buffered_stats, buffered_stats_tiled)
 from air_health_gis_tools_spark.sources.raster import synthetic_tile_table
 from tests.conftest import SF_DIR
 
@@ -119,19 +123,53 @@ def test_point_tile_ids_double_coordinates(spark, pts):
     pd.testing.assert_frame_equal(a, b, check_exact=True)
 
 
+_HALO_OPS = {
+    "convolve_tiles": lambda t, pts, n: convolve_tiles(
+        t, np.ones((3, 3)), 128, height=n, width=n),
+    "convolve_sum_count_tiles": lambda t, pts, n: convolve_sum_count_tiles(
+        t, {"k": np.ones((3, 3))}, 128, height=n, width=n),
+    "buffered_mean_convolve_all": lambda t, pts, n:
+        buffered_mean_convolve_all(pts, t, list(G.BUFFERS_M), 128,
+                                   height=n, width=n),
+    "resample_tiles_nearest": lambda t, pts, n: resample_tiles_nearest(
+        t, 2, 128, height=n, width=n),
+    "resample_tiles_bilinear": lambda t, pts, n: resample_tiles_bilinear(
+        t, 2, 128, height=n, width=n),
+    "resample_tiles_lanczos": lambda t, pts, n: resample_tiles_lanczos(
+        t, 2, 128, height=n, width=n),
+}
+
+
 @pytest.mark.parametrize("row0", [G.RASTER_H + 3000, -3000])
-def test_convolve_all_rejects_tile_outside_raster(spark, pts, row0):
-    """A tile row outside the raster has no superblock (lo > hi); it must
-    fail the job, not fan out over a descending superblock sequence."""
-    from air_health_gis_tools_spark.operators.zonal import (
-        buffered_mean_convolve_all)
-    tiles = synthetic_tile_table(spark, tile_px=256)
+@pytest.mark.parametrize("op", sorted(_HALO_OPS))
+def test_convolve_all_rejects_tile_outside_raster(spark, pts, op, row0):
+    """A tile row outside the raster belongs to no output group (lo > hi
+    in ``halo_groups``); every tiled raster operator must fail the job,
+    not drop the tile or fan it out over a descending sequence."""
+    n = 512
+    tiles = synthetic_tile_table(spark, tile_px=128, height=n, width=n)
     bad = tiles.withColumn(
         "row0", F.when(F.col("tile_id") == 0, F.lit(row0))
         .otherwise(F.col("row0")))
-    out = buffered_mean_convolve_all(pts, bad, list(G.BUFFERS_M), 256)
+    out = _HALO_OPS[op](bad, pts, n)
     with pytest.raises(Exception, match="tile row0=-?[0-9]+ lies outside"):
         out.collect()
+
+
+def test_pip_counts_points_at_negative_coordinates(spark):
+    """Both sides of the PIP cell join floor-divide: a point at negative
+    coordinates keys to a cell its circle's cover lists, so it is
+    counted (truncation put (-22000, -30000) in cell x = 0, outside the
+    cover x ∈ {-2, -1} of the circle centred at x = -30000)."""
+    from air_health_gis_tools_spark.operators.pip import pip_circle_counts
+    polys = spark.createDataFrame(
+        [(0, -30_000, -30_000, 10_000), (1, 30_000, 30_000, 10_000)],
+        "poly_id long, cx long, cy long, r long")
+    pts = spark.createDataFrame(
+        [(0, -22_000, -30_000), (1, -30_000, -30_000), (2, 30_000, 30_000)],
+        "doc_id long, x long, y long")
+    got = sorted(tuple(r) for r in pip_circle_counts(pts, polys).collect())
+    assert got == [(0, 2), (1, 1)]
 
 
 def test_knn_cell_join_equals_broadcast(spark, pts):

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 
 import numpy as np
 import pandas as pd
@@ -245,6 +246,33 @@ def test_lineage_resume(spark, tmp_path):
     assert {k: done[k]["rows"] for k in m1} == m1
     met = metrics_df(spark, store).toPandas()
     assert met["rows"].sum() == docs.count()
+
+
+def test_run_stage_commits_without_read_back(spark, tmp_path):
+    """With explicit buckets, run_stage's only Spark job is its write:
+    per-bucket rows come from the parquet footers, an empty bucket is an
+    empty directory, and the returned frame reads with the input schema."""
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet") \
+        .withColumn("bucket", F.pmod(F.col("doc_id"), F.lit(2)))
+    store = CheckpointStore(str(tmp_path / "ckpt"))
+    sc = spark.sparkContext
+    group = "test_run_stage_commits_without_read_back"
+    sc.setJobGroup(group, "run_stage")
+    try:
+        out = run_stage(docs, "bucket", store, buckets=[0, 1, 2])
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert n_jobs == 1
+    done = store.done_buckets()
+    want = docs.groupBy("bucket").count().toPandas()
+    assert {k: v["rows"] for k, v in done.items()} == {
+        **{str(b): int(c) for b, c in zip(want["bucket"], want["count"])},
+        "2": 0}
+    assert os.listdir(store.bucket_path("2")) == []
+    assert out.schema == docs.schema
+    assert out.count() == docs.count()
 
 
 def test_run_stage_bucket_discovery_is_bounded(spark, tmp_path, monkeypatch):

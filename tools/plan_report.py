@@ -19,7 +19,7 @@ sys.path.insert(0, REPO)
 HEADLINE = [
     "q01_buffered_stats", "q06_knn", "q07_pip_counts", "q09_radius_count",
     "q19_lineitem_agg", "q21_hex_rollup", "q16_minhash", "q18_cosine_topk",
-    "q54_html_extract", "q55_warc_ingest", "q57_asof_join",
+    "q42_convolve_all_gather", "q54_html_extract", "q55_warc_ingest", "q57_asof_join",
     "q62_bm25_topk", "q63_sessionize", "q64_salted_host_rollup",
     "q65_zorder_cells", "q69_rollup_cube", "q70_anti_join",
     "q74_approx_percentile_check", "q75_range_join",
