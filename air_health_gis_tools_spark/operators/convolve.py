@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from ..geo_synth import RASTER_H, RASTER_W, XRES
-from ..sources.raster import (TILE_SCHEMA, fill_window, halo_groups,
+from ..sources.raster import (TILE_SCHEMA, fdiv, fill_window, halo_groups,
                               tile_id_of)
 
 # superblock side in tiles for convolve_sum_count_tiles
@@ -103,14 +103,15 @@ def gather_point_values(points: DataFrame, tiles: DataFrame,
     Each point reads exactly the tile containing its pixel: cogroup on
     tile_id, one array index per point. The 'gather many' half of the
     reference's Method 1 — convolve once, then every point is a cheap
-    lookup (extract_raster_buffer.py:220-245). Points whose tile is absent
+    lookup (extract_raster_buffer.py:220-245). Points outside the tiles
     gather NULL.
     """
+    # floor, as the kernel indexes the tile: a point left of or above the
+    # raster keys to a tile that does not exist, not to tile 0
+    tr = fdiv(fdiv("CAST(y AS BIGINT)", XRES), tile_px)
+    tc = fdiv(fdiv("CAST(x AS BIGINT)", XRES), tile_px)
     pts = points.select("doc_id", "x", "y").withColumn(
-        "tile_id",
-        ((F.col("y") / XRES).cast("long") / tile_px).cast("long")
-        * F.lit(1 << 32)
-        + ((F.col("x") / XRES).cast("long") / tile_px).cast("long"))
+        "tile_id", F.expr(f"{tr} * {1 << 32}L + {tc}"))
     schema = T.StructType([T.StructField("doc_id", T.LongType()),
                            T.StructField(out_col, T.DoubleType())])
 
@@ -130,7 +131,11 @@ def gather_point_values(points: DataFrame, tiles: DataFrame,
               - int(t["row0"]))
         cc = (pdf_points["x"].to_numpy().astype(np.int64) // XRES
               - int(t["col0"]))
-        return pd.DataFrame({"doc_id": ids, out_col: arr[rr, cc]})
+        # a partial edge tile is narrower than its key's span
+        ok = (rr < arr.shape[0]) & (cc < arr.shape[1])
+        out = np.full(len(ids), np.nan)
+        out[ok] = arr[rr[ok], cc[ok]]
+        return pd.DataFrame({"doc_id": ids, out_col: out})
 
     return (pts.groupBy("tile_id")
             .cogroup(tiles.groupBy("tile_id"))

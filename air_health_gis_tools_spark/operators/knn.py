@@ -6,16 +6,15 @@ KDTree build Archived_scripts/utils.py:177-206): nearest monitor with
 
 Physical strategies:
 
-1. ``knn_cell_join`` (the plan every query and ``extract_pipeline`` runs,
-   fully distributed — the 100 TB plan): both sides are keyed by a square
-   cell of pitch = bound; the point side explodes its 3×3 cell
-   neighborhood (any monitor within ``bound`` of the point lies in one of
-   those 9 cells, so this one ring is the complete bounded search); hash
-   equi-join on cell; exact integer d² predicate; argmin per point via
-   ``min(struct(d2, monitor_id))`` — lexicographic struct ordering gives
-   the deterministic monitor_id tie-break. The monitor side is a dim table
-   → Catalyst broadcasts it (O12); the point side never shuffles (cell
-   keys are computed columns).
+1. ``knn_cell_join`` (the plan every query and ``extract_pipeline`` runs):
+   the monitors become a broadcast cell index of pitch = bound
+   (``pip._near_targets``: each monitor copied to its 3×3 neighbour
+   cells, one row of candidates per cell). Each point looks up the one row
+   of its own cell — any monitor within ``bound`` of the point is in it —
+   and takes ``array_min`` over the candidates' ``(d2, monitor_id)``
+   structs within the bound: exact integer d², and lexicographic struct
+   ordering gives the deterministic monitor_id tie-break. No explode, no
+   group-by, no shuffle: the point side stays where it is.
 
 2. ``knn_broadcast_np`` (kernel variant): monitors collected to a driver
    ndarray, chunked brute-force argmin inside an Arrow kernel — the numpy
@@ -30,53 +29,34 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
+from .pip import _near_targets
 
-def _neighbor_cells(df: DataFrame, cell_m: int) -> DataFrame:
-    """Explode each point to the keys of its 3×3 neighbor cells."""
-    offs = [(di, dj) for di in (-1, 0, 1) for dj in (-1, 0, 1)]
-    off_col = F.array(*[F.struct(F.lit(di).alias("di"), F.lit(dj).alias("dj"))
-                        for di, dj in offs])
-    ci = (F.col("x") / cell_m).cast("long")
-    cj = (F.col("y") / cell_m).cast("long")
-    return (df.withColumn("_o", F.explode(off_col))
-            .withColumn("cell",
-                        (ci + F.col("_o.di")) * F.lit(1 << 32)
-                        + (cj + F.col("_o.dj")))
-            .drop("_o"))
+
+def near_monitors(points: DataFrame, monitors: DataFrame, bound_m: int
+                  ) -> DataFrame:
+    """``(doc_id, x, y)`` points plus ``near``: a ``(d2, monitor_id)``
+    struct for each ``(monitor_id, mx, my)`` monitor within ``bound_m``
+    (boundary included), unordered; NULL when the point's 3×3 cell ring
+    holds no monitor."""
+    cand = _near_targets(points.select("doc_id", "x", "y"),
+                         monitors.select("monitor_id", "mx", "my"), bound_m)
+    near = F.expr(
+        "filter(transform(cands, m -> named_struct("
+        "'d2', (x - m.mx) * (x - m.mx) + (y - m.my) * (y - m.my), "
+        f"'monitor_id', m.monitor_id)), c -> c.d2 <= {bound_m * bound_m}L)")
+    return cand.select("doc_id", "x", "y", near.alias("near"))
 
 
 def knn_cell_join(points: DataFrame, monitors: DataFrame, bound_m: int
                   ) -> DataFrame:
-    """Distributed bounded 1-NN of ``(doc_id, x, y)`` points over
-    ``(monitor_id, mx, my)`` monitors; returns (doc_id, x, y, monitor_id,
-    dist_m) with NULLs when nothing lies within ``bound_m``. Exact integer
-    d² math."""
-    cell_m = bound_m
-    pts = _neighbor_cells(points.select("doc_id", "x", "y"), cell_m)
-    mons = monitors.select(
-        "monitor_id", "mx", "my",
-        ((F.col("mx") / cell_m).cast("long") * F.lit(1 << 32)
-         + (F.col("my") / cell_m).cast("long")).alias("cell"))
-
-    dx = F.col("x") - F.col("mx")
-    dy = F.col("y") - F.col("my")
-    d2 = dx * dx + dy * dy
-    # LEFT join keeps no-match points in-flow (no join-back stage needed);
-    # candidates outside the bound collapse to NULL structs that min()
-    # skips. The min(struct) is partial-aggregable, and the 9 exploded rows
-    # of a point are co-located, so the map-side partial agg collapses them
-    # BEFORE the shuffle: exactly one row per point crosses the wire.
-    cand = (pts.join(F.broadcast(mons), "cell", "left")
-            .select("doc_id", "x", "y",
-                    F.when(d2 <= F.lit(bound_m) ** 2,
-                           F.struct(d2.alias("d2"), F.col("monitor_id")))
-                    .alias("c")))
-    return (cand.groupBy("doc_id")
-            .agg(F.first("x").alias("x"), F.first("y").alias("y"),
-                 F.min("c").alias("b"))
-            .select("doc_id", "x", "y",
-                    F.col("b.monitor_id").alias("monitor_id"),
-                    F.sqrt(F.col("b.d2")).alias("dist_m")))
+    """Bounded 1-NN of ``(doc_id, x, y)`` points over ``(monitor_id, mx,
+    my)`` monitors; returns (doc_id, x, y, monitor_id, dist_m) with NULLs
+    when nothing lies within ``bound_m``. Exact integer d² math."""
+    best = (near_monitors(points, monitors, bound_m)
+            .select("doc_id", "x", "y", F.array_min("near").alias("b")))
+    return best.select("doc_id", "x", "y",
+                       F.col("b.monitor_id").alias("monitor_id"),
+                       F.sqrt(F.col("b.d2")).alias("dist_m"))
 
 
 def knn_broadcast_np(points: DataFrame, mon_xy_ids: tuple[np.ndarray, ...],

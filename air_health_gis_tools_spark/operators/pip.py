@@ -14,8 +14,14 @@ shuffle on the fact side); broadcast hash equi-join on cell; exact
 containment predicate; then partial/final ``groupBy(poly).count()``. At
 10^12 documents only the polygon dim and the final counts ever shuffle.
 
-``radius_count`` is the same cell equi-join shape for the ball query;
+``radius_count`` (the ball query) and ``knn.knn_cell_join`` probe one
+broadcast candidate index, ``_near_targets``: each target is copied to the
+3×3 cells of pitch = radius around its own, grouped to one row per cell,
+and every point reads the single row of its own cell — a hash lookup per
+point, no explode of the fact side, no group-by and no shuffle. The exact
+predicate then runs as a Catalyst higher-order function over that row.
 ``radius_count_np`` is its broadcast-kernel twin, timed by ``bench.py``.
+All three joins key cells with one floor rule, ``_cell_sql``.
 """
 
 from __future__ import annotations
@@ -29,12 +35,47 @@ from pyspark.sql import types as T
 CELL_M = 25_000
 
 
-def _cell_sql(e: str) -> str:
-    """floor(e / CELL_M) of the BIGINT value of ``e`` — the one cell key of
-    both join sides. Floor (the pmod form), not truncation: a negative
-    coordinate must land in the cell its polygon's cover lists."""
+def _cell_sql(e: str, cell_m: int = CELL_M) -> str:
+    """floor(e / cell_m) of the BIGINT value of ``e`` — the one cell key of
+    both sides of every cell join here. Floor (the pmod form), not
+    truncation: a negative coordinate must land in the cell its polygon's
+    cover, or its target's 3×3 ring, lists."""
     v = f"CAST({e} AS BIGINT)"
-    return f"(({v} - pmod({v}, {CELL_M})) DIV {CELL_M})"
+    return f"(({v} - pmod({v}, {cell_m})) DIV {cell_m})"
+
+
+def _cell_key_sql(x: str, y: str, cell_m: int = CELL_M) -> str:
+    """The packed (column, row) cell key of the point ``(x, y)``."""
+    return f"{_cell_sql(x, cell_m)} * {1 << 32}L + {_cell_sql(y, cell_m)}"
+
+
+def _near_targets(points: DataFrame, targets: DataFrame, cell_m: int
+                  ) -> DataFrame:
+    """``points`` plus ``cands``: the rows of ``targets`` (each a struct of
+    all its columns, ``mx``/``my`` among them) whose cell of pitch
+    ``cell_m`` lies in the 3×3 ring around the point's cell. Any target
+    within ``cell_m`` of the point is in that ring, so ``cands`` is a
+    complete candidate set for a bounded search; NULL when the ring is
+    empty.
+
+    Build side: each target is copied to its 9 neighbour cells and grouped
+    to one row per cell (9·|targets| entries). It is grouped on one
+    partition — a single partition already satisfies the group-by's
+    clustering, so the build adds no Exchange — and broadcast. Probe side:
+    one LEFT hash lookup per point on its own cell, so points with no
+    candidate stay in the flow."""
+    ring = F.explode(F.array(*[F.lit(d) for d in (-1, 0, 1)]))
+    index = (targets.coalesce(1)
+             .select(F.struct(*targets.columns).alias("t"),
+                     F.expr(_cell_sql("mx", cell_m)).alias("ci"),
+                     F.expr(_cell_sql("my", cell_m)).alias("cj"))
+             .withColumn("di", ring).withColumn("dj", ring)
+             .groupBy(((F.col("ci") + F.col("di")) * F.lit(1 << 32)
+                       + F.col("cj") + F.col("dj")).alias("cell"))
+             .agg(F.collect_list("t").alias("cands")))
+    return (points.withColumn("cell",
+                              F.expr(_cell_key_sql("x", "y", cell_m)))
+            .join(F.broadcast(index), "cell", "left").drop("cell"))
 
 
 def polygon_cover_cells(polys: DataFrame) -> DataFrame:
@@ -75,8 +116,7 @@ def pip_circle_counts(points: DataFrame, polys: DataFrame,
     """
     group_cols = group_cols or []
     covered = polygon_cover_cells(polys)
-    pts = points.withColumn("cell", F.expr(
-        f"{_cell_sql('x')} * {1 << 32}L + {_cell_sql('y')}"))
+    pts = points.withColumn("cell", F.expr(_cell_key_sql("x", "y")))
 
     dx = F.col("x") - F.col("cx")
     dy = F.col("y") - F.col("cy")
@@ -104,41 +144,23 @@ def radius_count(points: DataFrame, targets: DataFrame, radius_m: int
     """Ball/radius join count — the reference's ``find_nn_kd_by_tree``
     ``query_ball_tree`` (Archived_scripts/exploration.ipynb): for every
     ``(doc_id, x, y)`` point, how many ``(mx, my)`` targets lie within
-    ``radius_m``. Distance-band range join realized as cell equi-join +
-    exact θ post-filter (SURVEY.md J5)."""
-    cell_m = radius_m
-    offs = [(di, dj) for di in (-1, 0, 1) for dj in (-1, 0, 1)]
-    off_col = F.array(*[F.struct(F.lit(a).alias("di"), F.lit(b).alias("dj"))
-                        for a, b in offs])
-    pts = (points.select("doc_id", "x", "y")
-           .withColumn("_o", F.explode(off_col))
-           .withColumn("cell",
-                       ((F.col("x") / cell_m).cast("long") + F.col("_o.di"))
-                       * F.lit(1 << 32)
-                       + ((F.col("y") / cell_m).cast("long")
-                          + F.col("_o.dj")))
-           .drop("_o"))
-    tg = targets.select(
-        "mx", "my",
-        ((F.col("mx") / cell_m).cast("long") * F.lit(1 << 32)
-         + (F.col("my") / cell_m).cast("long")).alias("cell"))
-    dx = F.col("x") - F.col("mx")
-    dy = F.col("y") - F.col("my")
-    hits = (pts.join(F.broadcast(tg), "cell")
-            .filter((dx * dx + dy * dy) <= F.lit(radius_m) ** 2)
-            .groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_in_radius")))
-    return (points.select("doc_id")
-            .join(hits, "doc_id", "left")
-            .select("doc_id", F.coalesce("n_in_radius", F.lit(0))
-                    .alias("n_in_radius")))
+    ``radius_m`` (boundary included). Distance-band range join realized as
+    one probe of the cell index + exact θ filter over the candidates
+    (SURVEY.md J5)."""
+    near = _near_targets(points.select("doc_id", "x", "y"),
+                         targets.select("mx", "my"), radius_m)
+    # coalesce the ARRAY, not the size: size(NULL) is -1 with ANSI off
+    n = F.expr(f"size(filter(coalesce(cands, array()), m -> "
+               f"(x - m.mx) * (x - m.mx) + (y - m.my) * (y - m.my) "
+               f"<= {radius_m * radius_m}L))")
+    return near.select("doc_id", n.cast("long").alias("n_in_radius"))
 
 
 def radius_count_np(points: DataFrame, target_xy: tuple[np.ndarray, np.ndarray],
                     radius_m: int) -> DataFrame:
-    """Broadcast-kernel variant of ``radius_count`` for small target dims:
-    the chunked numpy distance matrix replaces the 9-cell explode join —
-    far less row amplification, scales with cores like the zonal kernel.
-    The cell-join variant remains the plan for large target tables."""
+    """Broadcast-kernel variant of ``radius_count``: a chunked numpy
+    distance matrix against every target, in an Arrow UDF (timed by
+    ``bench.py``; ``radius_count`` is the plan queries run)."""
     txs, tys = (np.asarray(a, dtype=np.int64) for a in target_xy)
     r2 = radius_m * radius_m
 

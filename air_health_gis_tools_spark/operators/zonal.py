@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from ..geo_synth import RASTER_H, RASTER_W, XRES, raster_value_np
-from ..sources.raster import fill_window, halo_groups
+from ..sources.raster import fdiv, fill_window, halo_groups
 
 
 def _radius_px_at(buffer_m: int, xres: int) -> int:
@@ -299,9 +299,6 @@ def point_tile_ids(df: DataFrame, rmax_px: int, tile_px: int,
     """
     assert 2 * rmax_px + 1 <= tile_px, "window spans >2 tiles per axis"
     ntx = 1 << 32
-
-    def fdiv(e: str, d: int) -> str:
-        return f"((({e}) - pmod({e}, {d})) DIV {d})"
 
     r0 = fdiv("CAST(y AS BIGINT)", xres)
     c0 = fdiv("CAST(x AS BIGINT)", xres)

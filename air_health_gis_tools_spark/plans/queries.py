@@ -24,7 +24,7 @@ from ..functions.cells import hex_cell_expr, square_cell_sql
 from ..functions.geocode import with_xy
 from ..operators import dedup as DD
 from ..operators import similarity as SIM
-from ..operators.knn import knn_cell_join
+from ..operators.knn import knn_cell_join, near_monitors
 from ..operators.pip import pip_circle_counts, radius_count
 from ..operators.zonal import buffered_stats, radius_px
 
@@ -675,28 +675,19 @@ WHERE NOT EXISTS (
 
 
 # --------------------------------------------------------------------------
-# q27 k-NN top-k via window (the validation fallback of SURVEY §2.5 top-k)
+# q27 k-NN top-k over the kNN cell index (SURVEY §2.5 top-k)
 # --------------------------------------------------------------------------
 
 def q27_knn_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-    pts = docs_xy(spark, sf_dir)
-    mons = monitors_df(spark)
-    from ..operators.knn import _neighbor_cells
-    cand = (_neighbor_cells(pts.select("doc_id", "x", "y"), G.KNN_BOUND_M)
-            .join(F.broadcast(mons.withColumn(
-                "cell",
-                (F.col("mx") / G.KNN_BOUND_M).cast("long") * F.lit(1 << 32)
-                + (F.col("my") / G.KNN_BOUND_M).cast("long"))), "cell"))
-    dx = F.col("x") - F.col("mx")
-    dy = F.col("y") - F.col("my")
-    cand = (cand.withColumn("d2", dx * dx + dy * dy)
-            .filter(F.col("d2") <= F.lit(G.KNN_BOUND_M) ** 2))
-    w = W.partitionBy("doc_id").orderBy(F.col("d2"), F.col("monitor_id"))
-    return (cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= 3)
-            .select("doc_id", "rank", "monitor_id",
-                    F.sqrt(F.col("d2")).alias("dist_m")))
+    near = near_monitors(docs_xy(spark, sf_dir), monitors_df(spark),
+                         G.KNN_BOUND_M)
+    # array_sort orders the (d2, monitor_id) structs lexicographically —
+    # the oracle's ORDER BY d2, monitor_id — inside each point's row
+    top = near.select("doc_id", F.posexplode(
+        F.slice(F.array_sort("near"), 1, 3)).alias("pos", "c"))
+    return top.select("doc_id", (F.col("pos") + 1).alias("rank"),
+                      F.col("c.monitor_id").alias("monitor_id"),
+                      F.sqrt(F.col("c.d2")).alias("dist_m"))
 
 
 def q27_sql() -> str:

@@ -35,6 +35,12 @@ def tile_id_of(trow: int, tcol: int) -> int:
     return trow * (1 << 32) + tcol
 
 
+def fdiv(e: str, d: int) -> str:
+    """SQL floor division of the integer expression ``e`` by ``d`` (the
+    pmod form: Spark's DIV truncates toward zero, numpy's ``//`` floors)."""
+    return f"((({e}) - pmod({e}, {d})) DIV {d})"
+
+
 def halo_groups(tiles: DataFrame, group_px: int, before: int, after: int,
                 n_rows: int, n_cols: int) -> DataFrame:
     """Explode every tile to the output groups whose padded window it
@@ -61,9 +67,6 @@ def halo_groups(tiles: DataFrame, group_px: int, before: int, after: int,
     explode's inferred ``size > 0`` filter would re-inline the range
     expressions below any upstream exchange.
     """
-    def fdiv(e: str, d: int) -> str:
-        return f"((({e}) - pmod({e}, {d})) DIV {d})"
-
     def span(origin: str, extent: str, n: int):
         lo = fdiv(f"greatest(CAST({origin} AS BIGINT) - {after}, 0L)",
                   group_px)

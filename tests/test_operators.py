@@ -217,6 +217,101 @@ def test_knn_nearest_across_cell_border(spark, kernel):
     assert row["dist_m"] == pytest.approx(510.0)
 
 
+def _knn_radius(spark, points, monitors, bound):
+    """(kNN rows, radius counts) of ``knn_cell_join`` and ``radius_count``
+    over the same ``(doc_id, x, y)`` / ``(monitor_id, mx, my)`` tuples."""
+    from air_health_gis_tools_spark.operators.pip import radius_count
+    pts = spark.createDataFrame(points, "doc_id long, x long, y long")
+    mons = spark.createDataFrame(monitors,
+                                 "monitor_id long, mx long, my long")
+    knn = {r["doc_id"]: (r["monitor_id"], r["dist_m"])
+           for r in knn_cell_join(pts, mons, bound).collect()}
+    cnt = {r["doc_id"]: r["n_in_radius"]
+           for r in radius_count(pts, mons, bound).collect()}
+    return knn, cnt
+
+
+def test_knn_and_radius_equal_brute_force_across_axes(spark):
+    """Points and monitors on both sides of x = 0 and y = 0, on a coarse
+    grid so exact-bound distances and equal-d² ties are common: kNN and
+    radius equal a numpy brute force with the (d², monitor_id) order."""
+    rng = np.random.default_rng(7)
+    bound = 50_000
+    px, py = (rng.integers(-30, 31, 300) * 5_000 for _ in range(2))
+    mx, my = (rng.integers(-60, 61, 25) * 5_000 for _ in range(2))
+    mids = rng.permutation(25) + 100
+    knn, cnt = _knn_radius(
+        spark, [(i, int(a), int(b)) for i, (a, b) in enumerate(zip(px, py))],
+        [(int(m), int(a), int(b)) for m, a, b in zip(mids, mx, my)], bound)
+    d2 = (px[:, None] - mx[None, :]) ** 2 + (py[:, None] - my[None, :]) ** 2
+    within = d2 <= bound * bound
+    for i in range(len(px)):
+        hits = sorted(zip(d2[i][within[i]], mids[within[i]]))
+        want = ((int(hits[0][1]), float(np.sqrt(hits[0][0]))) if hits
+                else (None, None))
+        assert knn[i] == want, i
+        assert cnt[i] == len(hits), i
+    assert 0 < sum(within.any(axis=1)) < len(px)
+
+
+def test_knn_and_radius_equal_d2_tie_takes_lower_id(spark):
+    """Two monitors at the same d², in different cells: kNN resolves to
+    the lower monitor_id, radius counts both."""
+    knn, cnt = _knn_radius(spark, [(1, 0, 0)],
+                           [(7, 1_000, 0), (3, -1_000, 0)], 50_000)
+    assert knn[1] == (3, 1_000.0)
+    assert cnt[1] == 2
+
+
+def test_knn_and_radius_count_target_at_bound(spark):
+    """The comparison is d² ≤ bound²: a monitor exactly at the bound is
+    found and counted, one metre further is not."""
+    bound = 50_000
+    knn, cnt = _knn_radius(spark, [(1, 0, 0), (2, 0, 200_000)],
+                           [(5, bound, 0), (6, 0, 200_000 + bound + 1)],
+                           bound)
+    assert knn == {1: (5, float(bound)), 2: (None, None)}
+    assert cnt == {1: 1, 2: 0}
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_knn_and_radius_point_with_no_index_row(spark, ansi):
+    """A point whose cell has no index row: kNN NULL/NULL and radius 0,
+    with ANSI mode on or off (size(NULL) is -1 when it is off)."""
+    before = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        knn, cnt = _knn_radius(spark, [(1, 5, 5)],
+                               [(1, 10_000_000, 10_000_000)], 1_000)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", before)
+    assert knn == {1: (None, None)}
+    assert cnt == {1: 0}
+
+
+def test_gather_point_values_outside_tiles_is_null(spark):
+    """A point left of the raster gathers NULL: the tile key floors, as
+    the pixel index does (truncation put (-500, 10 500) on tile 0 at
+    column -1, which numpy wrapped to pixel (10, 255) = 2815). So does a
+    point past the edge of a partial tile."""
+    from air_health_gis_tools_spark.operators.convolve import (
+        gather_point_values)
+    from air_health_gis_tools_spark.sources.raster import (
+        tile_table_from_array)
+    arr = np.arange(256 * 256, dtype=np.float64).reshape(256, 256)
+    pts = spark.createDataFrame(
+        [(0, -500, 10_500), (1, 255_500, 10_500), (2, 210_500, 10_500)],
+        "doc_id long, x long, y long")
+
+    def gather(raster):
+        tiles = tile_table_from_array(spark, raster, tile_px=256)
+        return {r["doc_id"]: r["value"]
+                for r in gather_point_values(pts, tiles).collect()}
+
+    assert gather(arr) == {0: None, 1: 2815.0, 2: 2770.0}
+    assert gather(arr[:, :200]) == {0: None, 1: None, 2: None}
+
+
 def test_hex_expr_equals_kernel(spark, pts):
     """The Catalyst-expression hex assignment (whole-stage codegen, the
     100 TB path) must equal the Arrow kernel bit-for-bit at every res."""

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import io
 import contextlib
+import re
 
 import pytest
 
@@ -37,13 +38,29 @@ def test_q01_zonal_zero_shuffle(spark):
     assert "ReadSchema: struct<doc_id:bigint,text:string>" in p
 
 
-def test_q06_knn_single_exchange_broadcast(spark):
+def _shuffles(plan: str) -> int:
+    """Shuffle Exchange nodes of a formatted plan (``BroadcastExchange``
+    does not match)."""
+    return len(re.findall(r"\bExchange\b", plan))
+
+
+def test_q06_knn_no_shuffle_broadcast_index(spark):
+    """Each point probes the broadcast monitor cell index once: no
+    explode-and-regroup, so no shuffle Exchange at all."""
     p = plan_of(Q.q06_knn(spark, SF_DIR))
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p
-    # one Exchange for the final agg + the BroadcastExchange for the dim
-    assert p.count("+- Exchange") == 1
     assert "BroadcastExchange" in p
+    assert _shuffles(p) == 0
+
+
+def test_q09_radius_no_shuffle_no_join_back(spark):
+    """The radius count reads the same broadcast index: no group-by
+    Exchange and no sort-merge join back to the points."""
+    p = plan_of(Q.q09_radius_count(spark, SF_DIR))
+    assert "BroadcastExchange" in p
+    assert "SortMergeJoin" not in p
+    assert _shuffles(p) == 0
 
 
 def test_q07_pip_all_broadcast(spark):
