@@ -153,13 +153,17 @@ def extract_text(html: str) -> str:
     return _norm_ws("".join(parts))
 
 
+def html_to_text(v: bytes | str | None) -> str | None:
+    """``extract_text`` of one ``html`` value: bytes decode as UTF-8 with
+    replacement, None stays None."""
+    if v is None:
+        return None
+    if isinstance(v, (bytes, bytearray, memoryview)):
+        v = bytes(v).decode("utf-8", "replace")
+    return extract_text(v)
+
+
 @F.pandas_udf(T.StringType())
 def html_to_text_udf(html: pd.Series) -> pd.Series:
     """Arrow-batched extraction over an ``html`` binary or string column."""
-    def _one(v):
-        if v is None:
-            return None
-        if isinstance(v, (bytes, bytearray, memoryview)):
-            v = bytes(v).decode("utf-8", "replace")
-        return extract_text(v)
-    return html.map(_one)
+    return html.map(html_to_text)

@@ -1760,7 +1760,7 @@ WARC_FIXTURE_DIR = "/tmp/spark_graft_warc_q55"
 def q55_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S-surface ingest edge for the webtext axis: Common-Crawl-style WARC
     files (ISO 28500, member-gzip) → pages table → HTML extraction, fully
-    distributed (one task per WARC file; sources/warc.py). The golden
+    distributed (one task per file split; sources/warc.py). The golden
     oracle is built straight from the page GENERATOR — it never touches
     the WARC codec or either HTML tokenizer — so the hash verifies
     writer→gzip→reader→HTTP-split→extraction end-to-end."""

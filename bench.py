@@ -191,7 +191,7 @@ def main():
         .groupBy("c").count().select(F.sum("count")).collect())
     # north-rule metric is docs/sec: the webtext ingest edge end-to-end
     # (WARC file scan -> gzip member decode -> HTTP split -> HTML->text
-    # extraction), one task per file. Fixture is built once and cached
+    # extraction), one task per file split. Fixture is built once and cached
     # on disk; the timed job never touches the generator.
     from air_health_gis_tools_spark.functions.html_text import \
         html_to_text_udf

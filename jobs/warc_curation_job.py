@@ -3,8 +3,8 @@
 
 The webtext-axis production job (north_rule: "ships as spark-submit
 --py-files modules", Common-Crawl-style input): WARC files → distributed
-record scan (one task per file) → HTML→text extraction → URL
-canonicalization → exact dedup (first capture per canonical url by
+record scan, HTML→text extraction and URL canonicalization in one Python
+task per file split → exact dedup (first capture per canonical url by
 warc_ts, then by text digest) → quality filter → curated parquet + a
 per-stage metrics manifest.
 
@@ -18,17 +18,19 @@ Usage (sandbox smoke — deterministic fixture segment):
     python jobs/warc_curation_job.py --synthetic-pages 2048 \
         --output /tmp/curated_out
 
-Plan shape at crawl scale: the file list is the parallelism unit (60k
-files/segment) and every record makes one Python pass — the scan drops
-non-response records before the Arrow boundary, and extraction and
-canonicalization share one per-partition Arrow kernel call (no shuffle).
-The two dedups are the only shuffles, both plain groupBys that map-side
-combine: url dedup keys on the canonical url, text dedup on an md5
-digest and carries the whole row as a min struct, so nothing joins back
-to an aggregate of itself and the upstream is planned once. Quality
-filtering is pure Catalyst and runs before the text-digest shuffle so
-filtered rows never move. The metrics manifest counts rows with
-``DataFrame.observe`` during the write instead of re-scanning.
+Plan shape at crawl scale: the sorted file list is cut into Spark file
+splits (one per file at crawl size, small files packed together; see
+``sources/warc.file_splits``) and each split is ONE Python task. That task
+streams its files' response records and extracts text and canonicalizes
+the url of each 200 response with a url, so a record crosses the Arrow
+boundary once and its html bytes never reach the JVM. The two dedups are
+the only shuffles, both plain groupBys that map-side combine: url dedup
+keys on the canonical url, text dedup on an md5 digest and carries the
+whole row as a min struct, so nothing joins back to an aggregate of itself
+and the upstream is planned once. Quality filtering is pure Catalyst and
+runs before the text-digest shuffle so filtered rows never move. The
+metrics manifest counts rows with ``DataFrame.observe`` during the write
+and sums the written files' parquet footers instead of re-scanning.
 """
 
 from __future__ import annotations
@@ -42,31 +44,47 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import pyarrow.parquet as pq
 from pyspark.sql import Observation, SparkSession, functions as F
 
 
 def curate(spark, paths, min_tokens: int):
-    """→ (raw, pages, scored, curated, counts). ``curated`` is the output
-    table; ``counts()`` returns the manifest's row counts, which ``raw``
-    and ``scored`` observe during the first action on ``curated``."""
-    from air_health_gis_tools_spark.functions.html_text import html_to_text_udf
-    from air_health_gis_tools_spark.functions.url import canonicalize_url_udf
-    from air_health_gis_tools_spark.sources.warc import read_warc
+    """→ (raw, pages, scored, curated, counts). ``raw`` is one row per
+    response record, with ``url_norm``, ``host`` and ``text`` filled on the
+    200 responses that have a url; ``curated`` is the output table;
+    ``counts()`` returns the manifest's row counts, which ``raw`` and
+    ``scored`` observe during the first action on ``curated``."""
+    import pandas as pd
+
+    from air_health_gis_tools_spark.functions.html_text import html_to_text
+    from air_health_gis_tools_spark.functions.url import canonicalize_url
+    from air_health_gis_tools_spark.sources.warc import (_records_pdf_chunks,
+                                                         scan_files)
+
+    def extract(path):
+        # a null url is the only input with no canonical url, so url_norm
+        # is filled exactly on the pages the filter below keeps
+        for pdf in _records_pdf_chunks(path, responses_only=True):
+            keep = ((pdf["http_status"] == 200) & pdf["url"].notna()).tolist()
+            canon = [canonicalize_url(u) if k else (None, None)
+                     for u, k in zip(pdf["url"], keep)]
+            yield pd.DataFrame({
+                "http_status": pdf["http_status"],
+                "url_norm": [c[0] for c in canon],
+                "host": [c[1] for c in canon],
+                "warc_ts": pdf["warc_ts"],
+                "text": [html_to_text(h) if k else None
+                         for h, k in zip(pdf["html"], keep)],
+                "n_bytes": pdf["n_bytes"]})
 
     raw_obs, scored_obs = Observation(), Observation()
-    raw = read_warc(spark, paths, responses_only=True).observe(
-        raw_obs, F.count(F.lit(1)).alias("n_responses"),
-        F.count_if(F.col("http_status") == 200).alias("n_pages_200"))
-    # a null url is the only input with no canonical url; drop it here, not
-    # on url_norm, which Catalyst would push below the UDF projection and
-    # split the url kernel into a Python pass of its own
-    pages = (raw.filter((F.col("http_status") == 200)
-                        & F.col("url").isNotNull())
-             .withColumn("text", html_to_text_udf(F.col("html")))
-             .withColumn("_c", canonicalize_url_udf(F.col("url")))
-             .select(F.col("_c.url_norm").alias("url_norm"),
-                     F.col("_c.host").alias("host"),
-                     "warc_ts", "text", "n_bytes"))
+    raw = scan_files(
+        spark, paths, extract,
+        "http_status int, url_norm string, host string, warc_ts timestamp,"
+        " text string, n_bytes long",
+    ).observe(raw_obs, F.count(F.lit(1)).alias("n_responses"),
+              F.count_if(F.col("http_status") == 200).alias("n_pages_200"))
+    pages = raw.filter(F.col("url_norm").isNotNull()).drop("http_status")
     # first capture per canonical url (recrawl dedup): min (warc_ts, text)
     # struct per url — one shuffle, map-side combined
     first = (pages.groupBy("url_norm")
@@ -120,7 +138,9 @@ def main(argv=None):
     metrics = {
         "n_warc_files": len(paths),
         **counts(),
-        "n_curated": spark.read.parquet(out).count(),
+        # summed from the written files' parquet footers: no read-back job
+        "n_curated": sum(pq.read_metadata(os.path.join(out, f)).num_rows
+                         for f in os.listdir(out) if f.endswith(".parquet")),
         "wall_s": round(time.time() - t0, 2),
     }
     with open(os.path.join(args.output, "metrics.json"), "w") as f:

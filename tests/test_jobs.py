@@ -149,18 +149,23 @@ def test_warc_curation_dedup_semantics(spark, tmp_path):
 
 
 def test_warc_curation_single_pass_plan(spark, tmp_path):
-    """Each record is scanned, extracted and canonicalized once: one WARC
-    scan, one Python pass holding both UDFs, and no join back onto an
-    aggregate of the same upstream (which would plan the scan twice)."""
+    """Each record is scanned, extracted and canonicalized in one Python
+    pass: one MapInPandas and no UDF node, no join back onto an aggregate
+    of the same upstream (which would plan the scan twice), and no Exchange
+    but the two dedup aggregates' (two files, so two scan tasks: a single
+    scan task would need no Exchange at all)."""
     from jobs.warc_curation_job import curate
-    path = str(tmp_path / "seg.warc.gz")
-    _curation_segment(path)
-    plan = curate(spark, [path], min_tokens=5)[3]._jdf.queryExecution()
+    paths = [str(tmp_path / f"seg{i}.warc.gz") for i in range(2)]
+    for path in paths:
+        _curation_segment(path)
+    plan = curate(spark, paths, min_tokens=5)[3]._jdf.queryExecution()
     lines = plan.optimizedPlan().toString().splitlines()
     nodes = [ln.lstrip(" :+-|").split(" ")[0] for ln in lines]
     assert nodes.count("MapInPandas") == 1
-    assert nodes.count("ArrowEvalPython") == 1
-    udfs = next(ln for ln in lines if "ArrowEvalPython" in ln)
-    assert "html_to_text_udf" in udfs and "canonicalize_url_udf" in udfs
+    assert nodes.count("ArrowEvalPython") == 0
     assert "Join" not in nodes
     assert nodes.count("Aggregate") == 2
+    physical = plan.executedPlan().toString()
+    exchanges = [ln for ln in physical.splitlines() if "Exchange" in ln]
+    assert len(exchanges) == 2
+    assert all("hashpartitioning" in ln for ln in exchanges)

@@ -170,6 +170,65 @@ def test_responses_only_filters_inside_scan(spark, tmp_path):
     assert "Filter" not in plan
 
 
+def test_read_warc_file_split(spark, tmp_path):
+    """Files split the way Spark's file sources split unsplittable files:
+    small files pack into ``defaultParallelism`` splits of contiguous
+    sorted paths, a file larger than ``maxPartitionBytes`` sits alone, and
+    the rows are the per-file scan's, with no shuffle in the plan."""
+    from air_health_gis_tools_spark.sources.warc import (_records_pdf_chunks,
+                                                         file_splits)
+    par = spark.sparkContext.defaultParallelism
+    paths = ensure_pages_warc(str(tmp_path / "warc"), 64 * 3 * par, 3 * par)
+    splits = file_splits(spark, paths)
+    assert len(splits) == par
+    assert [p for s in splits for p in s] == sorted(paths)
+    # Spark's own unsplittable file source cuts the same files as often
+    assert (spark.read.format("binaryFile").load(paths).rdd
+            .getNumPartitions() == par)
+
+    df = read_warc(spark, paths)
+    assert "RoundRobinPartitioning" not in (
+        df._jdf.queryExecution().executedPlan().toString())
+    assert df.rdd.getNumPartitions() == par
+    got = (df.withColumn("split", F.spark_partition_id()).toPandas()
+           .sort_values(["src_file", "record_idx"]).reset_index(drop=True))
+    by_split = got.groupby("split")["src_file"].agg(lambda s: sorted(set(s)))
+    assert by_split.tolist() == splits
+    want = (pd.concat([c for p in paths for c in _records_pdf_chunks(p)])
+            .reset_index(drop=True))
+    assert (got["src_file"] == want["src_file"]).all()
+    assert (got["record_idx"] == want["record_idx"]).all()
+    for col in ("warc_type", "record_id", "url", "content_type",
+                "http_content_type"):
+        assert got[col].fillna("").tolist() == want[col].fillna("").tolist()
+    assert got["warc_ts"].tolist() == want["warc_ts"].tolist()
+    assert (got["http_status"].fillna(-1).to_numpy()
+            == want["http_status"].fillna(-1).to_numpy()).all()
+    assert (got["n_bytes"].to_numpy() == want["n_bytes"].to_numpy()).all()
+    assert [None if h is None else bytes(h) for h in got["html"]] == \
+        want["html"].tolist()
+
+    big = str(tmp_path / "warc" / "big.warc")
+    write_warc_file(big, [write_warc_record(
+        "response", "https://big.example/x", "2021-01-01T00:00:00Z", "big",
+        http_response_block(b"x" * (1 << 20)))], member_gzip=False)
+    small = sorted(paths)[:6]
+    try:
+        spark.conf.set("spark.sql.files.minPartitionNum", "1")
+        assert file_splits(spark, small) == [small]
+        spark.conf.set("spark.sql.files.maxPartitionBytes",
+                       str(3 * os.path.getsize(small[0])))
+        spark.conf.set("spark.sql.files.openCostInBytes", "0")
+        splits = file_splits(spark, small + [big])
+        assert [big] in splits
+        assert max(len(s) for s in splits) > 1
+        assert [p for s in splits for p in s] == sorted(small + [big])
+    finally:
+        for key in ("minPartitionNum", "maxPartitionBytes",
+                    "openCostInBytes"):
+            spark.conf.unset(f"spark.sql.files.{key}")
+
+
 def test_q55_byte_identity(spark):
     """WARC → HTTP split → HTML extraction returns the generator's text
     byte-for-byte for every page (the north_star invariant through the

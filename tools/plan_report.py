@@ -11,6 +11,7 @@ sort-merge choices and every Exchange. Run after plan-affecting changes:
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -35,6 +36,11 @@ HEADLINE = [
 
 SF = "/root/testdata/sf0.001"
 
+# Catalyst numbers expressions and exchanges per session, so one changed
+# plan would renumber every plan after it; masked, a regenerated report
+# differs only where a plan did
+_IDS = re.compile(r"(#|plan_id=)\d+L?")
+
 
 def main() -> None:
     from air_health_gis_tools_spark.plans import queries as Q
@@ -57,8 +63,8 @@ def main() -> None:
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
-        lines += [f"## {name}", "", "```", buf.getvalue().rstrip(),
-                  "```", ""]
+        plan = _IDS.sub(r"\1N", buf.getvalue().rstrip())
+        lines += [f"## {name}", "", "```", plan, "```", ""]
     out = os.path.join(REPO, "BENCH", "PLANS.md")
     with open(out, "w") as f:
         f.write("\n".join(lines) + "\n")
