@@ -82,10 +82,13 @@ def hex_cell_expr(res: int):
       (i0+di, j0+dj) is even iff (di+dj) parity matches (i0+j0) parity, so
       the valid 8-candidate set is one of two static expression lists
       picked by one CASE on pmod(i0+j0, 2);
-    - each candidate packs to one BIGINT ``d2·2³² + (di+1)·2¹⁶ + (dj+1)``
+    - each candidate packs to one BIGINT ``d2·2³² + (di+1)·2²⁹ + (dj+1)``
       whose ordering IS the (d2, i, j) lexicographic tie-break the kernel
-      and the DuckDB oracle use (d2 < 2²⁵ for every supported pitch, and
-      i = i0+di is monotone in di).
+      and the DuckDB oracle use (d2 < 2²⁵ for every supported pitch, the
+      tie-break stays below 2³², and i = i0+di is monotone in di). Its low
+      32 bits are the winner's offset already in the cell-id layout, so
+      ``best`` is evaluated once: cell = res·2⁵⁸ + (i0−1)·2²⁹ + (j0−1) +
+      pmod(best, 2³²).
     """
     w, h = HEX_PITCH[res]
     # FLOOR division, exact in int64: Spark's DIV truncates toward zero,
@@ -100,9 +103,8 @@ def hex_cell_expr(res: int):
         j = f"({j0} + {dj})"
         dx = f"((x) - {i} * {w}L)"
         dy = f"((y) - {j} * {h}L)"
-        packed = (f"(({dx} * {dx} + {dy} * {dy}) * {1 << 32}L "
-                  f"+ {(di + 1) << 16}L + {dj + 1}L)")
-        return packed
+        return (f"(({dx} * {dx} + {dy} * {dy}) * {1 << 32}L "
+                f"+ {((di + 1) << HEX_I_SHIFT) + dj + 1}L)")
 
     evens = [key(di, dj) for di in (-1, 0, 1, 2) for dj in (-1, 0, 1, 2)
              if (di + dj) % 2 == 0]
@@ -111,10 +113,9 @@ def hex_cell_expr(res: int):
     best = (f"(CASE WHEN pmod({i0} + {j0}, 2) = 0 "
             f"THEN least({', '.join(evens)}) "
             f"ELSE least({', '.join(odds)}) END)")
-    bi = f"({i0} + (({best} DIV {1 << 16}L) % 65536) - 1)"
-    bj = f"({j0} + ({best} % 65536) - 1)"
     enc = (f"(CAST({res} AS BIGINT) * {1 << HEX_RES_SHIFT} "
-           f"+ {bi} * {1 << HEX_I_SHIFT} + {bj})")
+           f"+ ({i0} - 1) * {1 << HEX_I_SHIFT} + ({j0} - 1) "
+           f"+ pmod({best}, {1 << 32}L))")
     return F.expr(enc)
 
 

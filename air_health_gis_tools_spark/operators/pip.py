@@ -69,7 +69,7 @@ def _near_targets(points: DataFrame, targets: DataFrame, cell_m: int
              .select(F.struct(*targets.columns).alias("t"),
                      F.expr(_cell_sql("mx", cell_m)).alias("ci"),
                      F.expr(_cell_sql("my", cell_m)).alias("cj"))
-             .withColumn("di", ring).withColumn("dj", ring)
+             .select("*", ring.alias("di"), ring.alias("dj"))
              .groupBy(((F.col("ci") + F.col("di")) * F.lit(1 << 32)
                        + F.col("cj") + F.col("dj")).alias("cell"))
              .agg(F.collect_list("t").alias("cands")))
@@ -94,13 +94,14 @@ def polygon_cover_cells(polys: DataFrame) -> DataFrame:
     ci = _cell_sql("cx - r"), _cell_sql("cx + r")
     cj = _cell_sql("cy - r"), _cell_sql("cy + r")
     return (polys
-            .withColumn("_ci", F.explode(F.expr(
-                f"sequence({ci[0]}, {ci[1]})")))
-            .withColumn("_cj", F.explode(F.expr(
-                f"sequence({cj[0]}, {cj[1]})")))
-            .withColumn("cell",
-                        F.col("_ci") * F.lit(1 << 32) + F.col("_cj"))
-            .drop("_ci", "_cj"))
+            .select("*",
+                    F.explode(F.expr(f"sequence({ci[0]}, {ci[1]})")
+                              ).alias("_ci"),
+                    F.explode(F.expr(f"sequence({cj[0]}, {cj[1]})")
+                              ).alias("_cj"))
+            .select(*polys.columns,
+                    (F.col("_ci") * F.lit(1 << 32) + F.col("_cj")
+                     ).alias("cell")))
 
 
 def pip_circle_counts(points: DataFrame, polys: DataFrame,

@@ -263,10 +263,8 @@ def buffered_stats(df: DataFrame, buffers_m: Sequence[int],
                 res = _batch_stats(xs, ys, buffers_m, raster_value_np, mode)
             return pd.DataFrame(res)
 
-    out = df.withColumn("_z", _kernel(F.col("x"), F.col("y")))
-    for f in schema.fields:
-        out = out.withColumn(f.name, F.col(f"_z.{f.name}"))
-    return out.drop("_z")
+    return (df.withColumn("_z", _kernel(F.col("x"), F.col("y")))
+            .select(*df.columns, "_z.*"))
 
 
 # --------------------------------------------------------------------------

@@ -2,20 +2,19 @@
 
 Spark lifecycle replacing the reference's three entry points (SURVEY.md §3):
 
-    pages scan → geocode UDF → cell-encode (hex r7-9) →
+    pages scan → geocode → cell-encode (hex r7-9) →
     localCheckpoint (the point side, computed once per call) →
     [buffered zonal stats | kNN monitor | PIP exposure polygons] →
     final projection (wide per-buffer columns) → sink (+ lineage/metrics)
 
 The three result tables read ONE materialization of the point side: each
-sink action would otherwise re-run the pages scan, the geocode UDF and the
-cell encode (and the PIP branch's inferred ``isnotnull(cell)`` filter,
-pushed below the UDF projection, would plan the geocode UDF a second
-time). The checkpoint is lazy, so building the pipeline launches no job;
-the first sink computes it and ContextCleaner reclaims it once the result
-frames are gone. No exchange precedes it: none of the operators keys on a
-cell column (zonal/kNN/PIP are broadcast joins; the tiled and convolve_all
-strategies run their own tile- or superblock-keyed exchange).
+sink action would otherwise re-run the pages scan (a Python task per
+partition), the geocode and the cell encode. The checkpoint is lazy, so
+building the pipeline launches no job; the first sink computes it and
+ContextCleaner reclaims it once the result frames are gone. No exchange
+precedes it: none of the operators keys on a cell column (zonal/kNN/PIP
+are broadcast joins; the tiled and convolve_all strategies run their own
+tile- or superblock-keyed exchange).
 
 ``choose_zonal_strategy`` is the engine's only planner: the Python-side
 re-expression of the reference's Method 1/Method 2 gate
@@ -114,11 +113,9 @@ def extract_pipeline(pages: DataFrame, monitors: DataFrame,
     buffers_m = list(buffers_m or G.BUFFERS_M)
     pts = with_xy(pages.withColumn("doc_id",
                                    F.expr(page_id_expr_sql("spark"))))
-    pts = pts.withColumn("cell_hex_7", hex_cell_expr(7))
-    pts = pts.withColumn("cell_hex_8", hex_cell_expr(8))
-    pts = pts.withColumn("cell_hex_9", hex_cell_expr(9))
     slim = pts.select("url", "doc_id", "x", "y",
-                      "cell_hex_7", "cell_hex_8", "cell_hex_9")
+                      *[hex_cell_expr(r).alias(f"cell_hex_{r}")
+                        for r in (7, 8, 9)])
     slim = slim.localCheckpoint(eager=False)
 
     plan = choose_zonal_strategy(raster_px or G.RASTER_W * G.RASTER_H,

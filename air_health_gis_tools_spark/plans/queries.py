@@ -52,7 +52,7 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def docs_xy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents + geocoded (x, y) — the Arrow geocode kernel (F11)."""
+    """documents + geocoded (x, y) — the Catalyst geocode (F11)."""
     return with_xy(_docs(spark, sf_dir))
 
 

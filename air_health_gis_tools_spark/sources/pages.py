@@ -7,7 +7,7 @@ Generated distributed (spark.range → Arrow kernel), pure function of the row
 index: no wall clock, no RNG state. 20 % of pages cluster into 5 urban
 hotspots (the id-derived coordinates in geo_synth already encode this); the
 text embeds one coordinate-bearing phrase ``"x <int> y <int>"`` so the
-geocode kernel's regex path is exact, with the id-hash fallback exercised by
+geocode's regex path is exact, with the id-hash fallback exercised by
 rows whose phrase is withheld (every 13th page).
 """
 

@@ -346,6 +346,29 @@ def test_hex_expr_equals_kernel_negative_coords(spark):
         assert bad == 0, res
 
 
+def test_hex_expr_exact_ties(spark):
+    """Points equidistant from two lattice centres: ``(i+1)·w, j·h + dy``
+    lies on the bisector of the even centres ``(i, j)`` and ``(i+2, j)``,
+    which are its two nearest for |dy| ≤ h/3. Both paths must break the
+    tie to the smaller (i, j) and agree bit-for-bit at every res."""
+    from air_health_gis_tools_spark.functions.cells import hex_cell_expr
+    for res, (w, h) in G.HEX_PITCH.items():
+        pts = [((i + 1) * w, j * h + dy)
+               for i in range(-3, 40, 7) for j in range(-2, 30, 5)
+               if (i + j) % 2 == 0 for dy in (-(h // 3), -1, 0, 7, h // 3)]
+        x = np.array([p[0] for p in pts], dtype=np.int64)
+        y = np.array([p[1] for p in pts], dtype=np.int64)
+        want = hex_assign_np(x, y, res)
+        i = (x // w) - 1
+        j = (y + h // 2) // h
+        assert np.array_equal(want, (np.int64(res) << G.HEX_RES_SHIFT)
+                              + (i << G.HEX_I_SHIFT) + j), res
+        df = spark.createDataFrame(list(zip(x.tolist(), y.tolist())),
+                                   "x long, y long")
+        got = df.select(hex_cell_expr(res).alias("c")).toPandas()["c"]
+        assert np.array_equal(got.to_numpy(), want), res
+
+
 def test_hex_assignment_is_true_nearest_center():
     """Voronoi property: the chosen center is the argmin over a wide brute-
     force neighborhood (not just the 16-candidate window)."""

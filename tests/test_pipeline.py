@@ -5,6 +5,7 @@ from __future__ import annotations
 import hashlib
 import math
 import os
+import re
 
 import numpy as np
 import pandas as pd
@@ -69,6 +70,44 @@ def test_pipeline_geocode_regex_vs_fallback_consistent(spark):
     assert np.array_equal(got["y"].to_numpy(), ey)
 
 
+def _geocode_row(doc_id, text):
+    """Per-row oracle of ``with_xy``: the first ``x <int> y <int>`` phrase,
+    each number clamped into the extent (past BIGINT clamps high); the
+    id-derived point when the text holds no phrase."""
+    m = re.search(r"x ([0-9]+) y ([0-9]+)", text or "")
+    if m is None:
+        fx, fy = G.point_xy_np(np.array([doc_id]))
+        return int(fx[0]), int(fy[0])
+    lo, hi = G.MARGIN_M, G.MARGIN_M + G.SPAN - 1
+    return tuple(min(max(v if v < 2**63 else hi, lo), hi)
+                 for v in map(int, m.groups()))
+
+
+def test_with_xy_edge_cases(spark):
+    """Each row geocodes on its own, whatever its batch neighbours hold: a
+    zero-padded phrase next to a coordinate past BIGINT parses as it does
+    alone, and the overflowing coordinate clamps to the extent maximum."""
+    big = "9" * 25
+    rows = [(1, None), (2, "air quality monitor"),
+            (3, "x 100000 y 200000 then x 300000 y 400000"),
+            (4, "x 00000000000000000000001234567 y 00700000"),
+            (5, f"x {big} y 9223372036854775808"),
+            (6, "x 9223372036854775807 y 1"),
+            (7, "x 5 y 4500000"), (8, "x 17000 y x 18000 y 19000"),
+            (9, "at x 4079999 y 16000, then x 1 y 1")]
+    schema = "doc_id long, text string"
+    df = spark.createDataFrame(rows, schema).coalesce(1)
+    got = {r["doc_id"]: (r["x"], r["y"]) for r in with_xy(df).collect()}
+    assert got == {i: _geocode_row(i, t) for i, t in rows}
+    assert got[5] == (G.MARGIN_M + G.SPAN - 1,) * 2
+    # the same row alone and next to an overflowing row: equal x, y
+    alone = with_xy(spark.createDataFrame(rows[3:4], schema)).collect()[0]
+    assert (alone["x"], alone["y"]) == got[4] == (1_234_567, 700_000)
+    pair = with_xy(spark.createDataFrame([rows[3], rows[4]], schema)
+                   .coalesce(1)).collect()
+    assert (pair[0]["x"], pair[0]["y"]) == got[4]
+
+
 def test_zonal_strategy_planner():
     assert choose_zonal_strategy(10**6, 10**7, 3).strategy == "convolve_all"
     assert choose_zonal_strategy(16 * 10**6, 10**5, 3).strategy == "broadcast"
@@ -115,14 +154,24 @@ def test_pipeline_executes_every_planner_strategy(spark):
     assert got == want
 
 
-def test_pipeline_point_side_runs_once(spark):
+def test_pipeline_point_side_runs_once(spark, monkeypatch):
     """Building the pipeline launches no job, and zonal/kNN/PIP all read
     one checkpoint of the point side: no REPARTITION_BY_COL exchange, and
-    neither the pages source (MapInPandas) nor the geocode UDF appears in
-    any executed plan — they sit behind the checkpoint's RDD scan."""
+    neither the pages source (MapInPandas) nor the geocode appears in any
+    executed plan — they sit behind the checkpoint's RDD scan. The point
+    side itself holds exactly one Python node, the pages ``MapInPandas``:
+    geocode and cell encode are Catalyst projections."""
     sc = spark.sparkContext
     pages = synthetic_pages(spark, 500)
     mons, polys = monitors_df(spark), polys_df(spark)
+    checkpointed = []
+    local_checkpoint = type(pages).localCheckpoint
+
+    def capture(self, *args, **kwargs):
+        checkpointed.append(self)
+        return local_checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(pages), "localCheckpoint", capture)
     group = "test_pipeline_point_side_runs_once"
     sc.setJobGroup(group, "extract_pipeline build")
     try:
@@ -139,7 +188,12 @@ def test_pipeline_point_side_runs_once(spark):
         assert "Scan ExistingRDD" in plan, table
         assert "REPARTITION_BY_COL" not in plan, table
         assert "MapInPandas" not in plan, table
-        assert "ArrowEvalPython [_geo" not in plan, table
+    [point_side] = checkpointed
+    nodes = point_side._jdf.queryExecution().executedPlan().toString()
+    python_nodes = [ln for ln in nodes.splitlines()
+                    if re.search(r"Python|InPandas|InArrow", ln)]
+    assert len(python_nodes) == 1 and "MapInPandas" in python_nodes[0], \
+        python_nodes
 
 
 def _point_side(pages):
