@@ -2,8 +2,8 @@
 
 Re-expresses the numba point-in-circle loop (``coregRaster``,
 Archived_scripts/utils.py:89-117: ``nansum(pts)/count_nonzero(~isnan(pts))``
-over pixels in a circle) as a batched Arrow kernel: one ``pandas_udf``
-evaluates ALL buffer radii for a whole Arrow batch of points at once
+over pixels in a circle) as batched Arrow kernels: each evaluates ALL
+buffer radii for a whole Arrow batch of points at once
 (compute-once reuse across buffers — the reference's O3 optimization,
 extract_raster_buffer.py:39-41 — generalized).
 
@@ -13,7 +13,7 @@ extract_raster_buffer.py:94-102 and the ``intceil`` chord loop of
 utils.py:69-87 — are reproduced separately in tests/test_reference_parity.py):
 
     pixel (r, c) ∈ buffer(B) of point p  ⇔  (r-r0)² + (c-c0)² ≤ rpx²,
-    rpx = ceil(B / XRES)  (with the v2 ``max(…,1)`` guard,
+    rpx = ceil(B / xres)  (with the v2 ``max(…,1)`` guard,
                            srg-dev/calculate_focal_mean.py:95)
 
 where (r0, c0) is p's containing pixel (truncation assignment,
@@ -23,17 +23,24 @@ Aggregation per point per buffer: nan-aware sum / count / min / max; mean =
 sum/count (NULL when count = 0). Values are exact-integer-valued doubles, so
 the sums are order-independent and bit-identical across engines.
 
-Two physical strategies:
-- ``buffered_stats`` — functional-raster / broadcast-raster path: the kernel
-  evaluates pixel values directly (no shuffle at all; the raster is a
-  deterministic function or a broadcast ndarray). Right when the raster fits
-  one executor (the reference's regime: ~100 M px ≈ 800 MB).
+Three physical strategies:
+- ``buffered_stats`` — functional-raster / broadcast-raster path: a
+  ``pandas_udf`` evaluates pixel values directly (no shuffle at all; the
+  raster is a deterministic function or a broadcast ndarray). Right when
+  the raster fits one executor (the reference's regime: ~100 M px ≈
+  800 MB).
 - ``buffered_stats_tiled`` (scale path) — raster as a parquet tile table,
   points cogrouped with tiles on tile_id (``cogroup.applyInPandas``), partial
   (sum, cnt, min, max) per (point, tile), final combine via ``groupBy(point)``
   — classic partial/final aggregation; no tile array is ever replicated per
   point, and the shuffle moves only points + partial aggregates, never the
   raster. This is the plan that survives a 100 TB raster.
+- ``buffered_mean_convolve_all`` — the reference's convolve-once Method 1:
+  chord prefix sums over superblock windows; mean and n_valid only.
+
+The first two share one disc kernel, ``_disc_stats``: one radius rule
+(``radius_px``) and one gather over the union of the buffers' offsets,
+reading a broadcast array, a tile or the formula raster.
 """
 
 from __future__ import annotations
@@ -47,17 +54,13 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from ..geo_synth import RASTER_H, RASTER_W, XRES, raster_value_np
-from ..sources.raster import fdiv, fill_window, halo_groups
+from ..sources.raster import fdiv, fill_window, halo_groups, tile_id_of
 
 
-def _radius_px_at(buffer_m: int, xres: int) -> int:
-    return max(math.ceil(buffer_m / xres), 1)
-
-
-def radius_px(buffer_m: int) -> int:
+def radius_px(buffer_m: int, xres: int = XRES) -> int:
     """F7 semantics: ceil(buff/xres) with the v2 max(…,1) guard
     (extract_raster_buffer.py:227; calculate_focal_mean.py:95)."""
-    return _radius_px_at(buffer_m, XRES)
+    return max(math.ceil(buffer_m / xres), 1)
 
 
 def circle_offsets(rpx: int) -> tuple[np.ndarray, np.ndarray]:
@@ -68,7 +71,8 @@ def circle_offsets(rpx: int) -> tuple[np.ndarray, np.ndarray]:
     return dr[m], dc[m]
 
 
-def buffer_offsets(buffer_m: int, mode: str) -> tuple[np.ndarray, np.ndarray]:
+def buffer_offsets(buffer_m: int, mode: str, xres: int = XRES
+                   ) -> tuple[np.ndarray, np.ndarray]:
     """Membership pixel set for one buffer.
 
     mode='canonical' — engine rule d² ≤ ceil(B/xres)² (oracle-replicable).
@@ -77,10 +81,10 @@ def buffer_offsets(buffer_m: int, mode: str) -> tuple[np.ndarray, np.ndarray]:
                        asymmetric), radius in float pixel units B/xres.
     """
     if mode == "canonical":
-        return circle_offsets(radius_px(buffer_m))
+        return circle_offsets(radius_px(buffer_m, xres))
     if mode == "ref_loop":
         from ..functions.ref_compat import ref_circle_pixel_offsets
-        return ref_circle_pixel_offsets(buffer_m / XRES)
+        return ref_circle_pixel_offsets(buffer_m / xres)
     raise ValueError(mode)
 
 
@@ -171,97 +175,134 @@ def _batch_stats_formula_fast(x: np.ndarray, y: np.ndarray,
     return out
 
 
-def _batch_stats(x: np.ndarray, y: np.ndarray, buffers_m: Sequence[int],
-                 value_fn: Callable[[np.ndarray, np.ndarray], np.ndarray],
-                 mode: str = "canonical",
-                 height: int = RASTER_H, width: int = RASTER_W,
-                 xres: int = XRES) -> dict[str, np.ndarray]:
-    """Evaluate all buffers for one batch. value_fn returns float64 w/ NaN."""
-    offs = {b: buffer_offsets(b, mode) for b in buffers_m}
+def _disc_stats(pr: np.ndarray, pc: np.ndarray,
+                offsets: Sequence[tuple[np.ndarray, np.ndarray]],
+                value_at: Callable[..., np.ndarray]
+                ) -> list[tuple[np.ndarray, ...]]:
+    """The disc kernel: nan-aware (sum, count, min, max) of each buffer's
+    disc around the pixels ``(pr, pc)`` — one tuple per ``offsets`` entry
+    (a buffer's (dr, dc) table); min/max are ±inf for an empty disc.
 
-    n = len(x)
-    out: dict[str, np.ndarray] = {}
-    for b in buffers_m:
-        out[f"mean_{b}"] = np.empty(n)
-        out[f"min_{b}"] = np.empty(n)
-        out[f"max_{b}"] = np.empty(n)
-        out[f"n_valid_{b}"] = np.empty(n, dtype=np.int64)
+    ``value_at(pr, pc, dr, dc)`` returns the (len(pr), len(dr)) values of
+    the pixels (pr + dr, pc + dc), NaN at nodata and outside the raster.
+    Per ``_CHUNK`` points it is called ONCE, over the union of the
+    buffers' offsets (compute-once reuse across buffers); each buffer then
+    takes its own columns in its own offset order, so every disc sums the
+    same values in the same order as a gather of that buffer alone would.
+    """
+    rmax = int(np.abs(np.concatenate(
+        [d for dr_dc in offsets for d in dr_dc])).max(initial=0))
+    span = 2 * rmax + 1
+    keys = [dr * span + (dc + rmax) for dr, dc in offsets]
+    union = np.unique(np.concatenate(keys))   # row-major (dr, dc) order
+    udr, udc = union // span, union % span - rmax
+    sels = [np.searchsorted(union, k) for k in keys]
+    # a buffer that IS the union (the largest canonical disc) reads the
+    # chunk's blocks in place — no (chunk × |disc|) column copy
+    whole = [np.array_equal(sel, np.arange(len(union))) for sel in sels]
 
-    r0_all = y.astype(np.int64) // xres
-    c0_all = x.astype(np.int64) // xres
+    n = len(pr)
+    out = [(np.empty(n), np.empty(n, dtype=np.int64), np.empty(n),
+            np.empty(n)) for _ in offsets]
     for s0 in range(0, n, _CHUNK):
         s1 = min(s0 + _CHUNK, n)
-        r0 = r0_all[s0:s1]
-        c0 = c0_all[s0:s1]
-        for b in buffers_m:
-            dr, dc = offs[b]
-            rows = r0[:, None] + dr[None, :]
-            cols = c0[:, None] + dc[None, :]
-            vals = value_fn(rows, cols)
-            # clip to raster extent (reference clips the circle at array
-            # edges — utils.py:82-84 bounds)
-            oob = ((rows < 0) | (rows >= height)
-                   | (cols < 0) | (cols >= width))
-            if oob.any():
-                vals = np.where(oob, np.nan, vals)
-            valid = ~np.isnan(vals)
-            cnt = valid.sum(axis=1)
-            s = np.where(valid, vals, 0.0).sum(axis=1)
-            has = cnt > 0
-            mean = np.where(has, s / np.maximum(cnt, 1), np.nan)
-            mn = np.where(valid, vals, np.inf).min(axis=1)
-            mx = np.where(valid, vals, -np.inf).max(axis=1)
-            out[f"mean_{b}"][s0:s1] = np.where(has, mean, np.nan)
-            out[f"min_{b}"][s0:s1] = np.where(has, mn, np.nan)
-            out[f"max_{b}"][s0:s1] = np.where(has, mx, np.nan)
-            out[f"n_valid_{b}"][s0:s1] = cnt
+        vals = value_at(pr[s0:s1], pc[s0:s1], udr, udc)
+        valid_all = ~np.isnan(vals)
+        for (s, cnt, mn, mx), sel, w in zip(out, sels, whole):
+            v = vals if w else vals[:, sel]
+            valid = valid_all if w else valid_all[:, sel]
+            cnt[s0:s1] = valid.sum(axis=1)
+            s[s0:s1] = np.where(valid, v, 0.0).sum(axis=1)
+            # ±inf sentinels (NOT NaN: Spark max prefers NaN over reals);
+            # callers null them via count > 0
+            mn[s0:s1] = np.where(valid, v, np.inf).min(axis=1)
+            mx[s0:s1] = np.where(valid, v, -np.inf).max(axis=1)
     return out
+
+
+def _window_lookup(arr: np.ndarray, row0: int = 0, col0: int = 0
+                   ) -> Callable[..., np.ndarray]:
+    """``value_at`` over the 2-D window ``arr`` whose [0, 0] pixel is
+    (row0, col0): NaN outside it (the reference clips the circle at array
+    edges — utils.py:82-84 bounds). A chunk whose discs all lie inside the
+    window skips the clip + mask + where pass (three (chunk × |disc|)
+    temporaries of pure memory traffic)."""
+    h, w = arr.shape
+
+    def value_at(pr, pc, dr, dc):
+        rows = (pr - row0)[:, None] + dr
+        cols = (pc - col0)[:, None] + dc
+        if (pr.min() - row0 + dr.min() >= 0 and pr.max() - row0 + dr.max() < h
+                and pc.min() - col0 + dc.min() >= 0
+                and pc.max() - col0 + dc.max() < w):
+            return arr[rows, cols]
+        inside = (rows >= 0) & (rows < h) & (cols >= 0) & (cols < w)
+        vals = arr[np.clip(rows, 0, h - 1), np.clip(cols, 0, w - 1)]
+        return np.where(inside, vals, np.nan)
+    return value_at
+
+
+def _absent_lookup(pr, pc, dr, dc) -> np.ndarray:
+    """``value_at`` of a tile missing from the tile table: all nodata."""
+    return np.full((len(pr), len(dr)), np.nan)
+
+
+def _formula_lookup(pr, pc, dr, dc) -> np.ndarray:
+    """``value_at`` of the synthetic formula raster, NaN off its extent."""
+    rows = pr[:, None] + dr
+    cols = pc[:, None] + dc
+    vals = raster_value_np(rows, cols)
+    vals[(rows < 0) | (rows >= RASTER_H) | (cols < 0) | (cols >= RASTER_W)
+         ] = np.nan
+    return vals
 
 
 def buffered_stats(df: DataFrame, buffers_m: Sequence[int],
                    raster: np.ndarray | None = None,
-                   spark=None, mode: str = "canonical",
-                   height: int | None = None, width: int | None = None,
-                   xres: int = XRES) -> DataFrame:
+                   mode: str = "canonical", xres: int = XRES) -> DataFrame:
     """Append per-buffer zonal stats columns (struct-expanded) to ``df``
-    around its ``(x, y)`` points.
+    around its ``(x, y)`` points, ``xres`` metres per pixel.
 
     Values come from the synthetic functional raster; pass ``raster``
     (2-D ndarray, NaN = nodata) to sample a broadcast in-memory raster
     instead (the reference's whole-raster-resident regime,
-    README.md:88-92).
+    README.md:88-92). The raster's extent is its shape.
     """
     buffers_m = list(buffers_m)
     schema = _stats_schema(buffers_m)
+    if raster is None and xres != XRES:
+        raise ValueError(f"the formula raster has {XRES} m pixels, "
+                         f"not xres={xres}")
+    offsets = [buffer_offsets(b, mode, xres) for b in buffers_m]
+
+    def _stats(xs: np.ndarray, ys: np.ndarray, value_at) -> pd.DataFrame:
+        res = _disc_stats(ys.astype(np.int64) // xres,
+                          xs.astype(np.int64) // xres, offsets, value_at)
+        out: dict[str, np.ndarray] = {}
+        for b, (s, cnt, mn, mx) in zip(buffers_m, res):
+            has = cnt > 0
+            out[f"mean_{b}"] = np.where(has, s / np.maximum(cnt, 1), np.nan)
+            out[f"min_{b}"] = np.where(has, mn, np.nan)
+            out[f"max_{b}"] = np.where(has, mx, np.nan)
+            out[f"n_valid_{b}"] = cnt
+        return pd.DataFrame(out)
 
     if raster is not None:
-        # extent defaults to the in-memory raster's own shape
-        height = height or raster.shape[0]
-        width = width or raster.shape[1]
-        bc = (spark or df.sparkSession).sparkContext.broadcast(raster)
-
-        def value_fn(rows, cols, _bc=bc):
-            arr = _bc.value
-            r = np.clip(rows, 0, arr.shape[0] - 1)
-            c = np.clip(cols, 0, arr.shape[1] - 1)
-            v = arr[r, c]
-            return np.where((rows != r) | (cols != c), np.nan, v)
+        bc = df.sparkSession.sparkContext.broadcast(raster)
 
         @F.pandas_udf(schema)
         def _kernel(x: pd.Series, y: pd.Series) -> pd.DataFrame:
-            res = _batch_stats(x.to_numpy(), y.to_numpy(), buffers_m,
-                               value_fn, mode, height=height, width=width,
-                               xres=xres)
-            return pd.DataFrame(res)
+            return _stats(x.to_numpy(), y.to_numpy(),
+                          _window_lookup(bc.value))
     else:
         @F.pandas_udf(schema)
         def _kernel(x: pd.Series, y: pd.Series) -> pd.DataFrame:
             xs, ys = x.to_numpy(), y.to_numpy()
             try:
-                res = _batch_stats_formula_fast(xs, ys, buffers_m, mode)
+                return pd.DataFrame(
+                    _batch_stats_formula_fast(xs, ys, buffers_m, mode))
             except ValueError:  # edge window → generic (clipping) path
-                res = _batch_stats(xs, ys, buffers_m, raster_value_np, mode)
-            return pd.DataFrame(res)
+                return _stats(xs, ys, _formula_lookup)
 
     return (df.withColumn("_z", _kernel(F.col("x"), F.col("y")))
             .select(*df.columns, "_z.*"))
@@ -403,7 +444,7 @@ def buffered_stats_tiled(points: DataFrame, tiles: DataFrame,
     sort-merge joins, applied to the cogroup.
     """
     buffers_m = list(buffers_m)
-    rmax = max(_radius_px_at(b, xres) for b in buffers_m)
+    rmax = max(radius_px(b, xres) for b in buffers_m)
     pts = point_tile_ids(
         points.select(id_col, "x", "y"), rmax, tile_px,
         height=height, width=width, xres=xres)
@@ -433,115 +474,56 @@ def buffered_stats_tiled(points: DataFrame, tiles: DataFrame,
                     T.StructField(f"mx_{b}", T.DoubleType())]
     partial_schema = T.StructType(pfields)
 
-    rng0 = np.arange(-rmax, rmax + 1, dtype=np.int64)
-    _dr, _dc = np.meshgrid(rng0, rng0, indexing="ij")
-    _dr = _dr.ravel(); _dc = _dc.ravel()
-    _d2 = _dr * _dr + _dc * _dc
-    # gather only the UNION CIRCLE, not the bounding square — the corners
-    # (~27 % of the square) belong to no buffer and would be pure wasted
-    # gather + mask work in the hot kernel
-    _keep = _d2 <= rmax * rmax
-    _dr, _dc, _d2 = _dr[_keep], _dc[_keep], _d2[_keep]
-    _sels = {b: np.flatnonzero(_d2 <= _radius_px_at(b, xres) ** 2)
-             for b in buffers_m}
-    # the max-radius buffer selects the WHOLE union circle — column-slicing
-    # with it would copy the full (chunk × offsets) value/valid blocks per
-    # chunk for nothing (r6: ~2 × 8 B × |circle| per point of pure memcpy)
-    _full_sel = {b: len(_sels[b]) == len(_dr) for b in buffers_m}
+    offsets = [buffer_offsets(b, "canonical", xres) for b in buffers_m]
 
     def _partial(key, pdf_points: pd.DataFrame, pdf_tiles: pd.DataFrame
                  ) -> pd.DataFrame:
         if pdf_points.empty:
             return pd.DataFrame(
                 {f.name: pd.Series(dtype="float64") for f in partial_schema})
-        if pdf_tiles.empty:
-            # tile absent from the table (out-of-coverage): emit zero-count
-            # partials for the points whose HOME tile this is, so they stay
-            # in the output with n_valid = 0 / NULL stats — row-count parity
-            # with the broadcast-kernel strategy for arbitrary tile tables.
-            tile_id = int(key[0]) // 64
-            tr, tc = tile_id >> 32, tile_id & 0xFFFFFFFF
-            xs = pdf_points["x"].to_numpy().astype(np.int64)
-            ys = pdf_points["y"].to_numpy().astype(np.int64)
-            home = (((ys // xres) // tile_px == tr)
-                    & ((xs // xres) // tile_px == tc))
-            ids = pdf_points[id_col].to_numpy()[home]
-            cols_out = {id_col: ids,
-                        "single": pdf_points["single"].to_numpy()[home]}
-            for b in buffers_m:
-                cols_out[f"s_{b}"] = np.zeros(len(ids))
-                cols_out[f"cnt_{b}"] = np.zeros(len(ids), dtype=np.int64)
-                cols_out[f"mn_{b}"] = np.full(len(ids), np.inf)
-                cols_out[f"mx_{b}"] = np.full(len(ids), -np.inf)
-            return pd.DataFrame(cols_out)
-        t = pdf_tiles.iloc[0]
-        th, tw = int(t["h"]), int(t["w"])
-        arr = np.asarray(t["data"], dtype=np.float64).reshape(th, tw)
-        row0, col0 = int(t["row0"]), int(t["col0"])
-        xs = pdf_points["x"].to_numpy().astype(np.int64)
-        ys = pdf_points["y"].to_numpy().astype(np.int64)
         ids = pdf_points[id_col].to_numpy()
         singles = pdf_points["single"].to_numpy()
-        pr_all = ys // xres
-        pc_all = xs // xres
-        # home-tile membership: these rows are kept even at zero count so
-        # every point keeps exactly one guaranteed partial row (row-count
-        # parity with buffered_stats when a buffer is all-nodata)
-        home_all = ((pr_all >= row0) & (pr_all < row0 + th)
-                    & (pc_all >= col0) & (pc_all < col0 + tw))
-        frames = []
-        # chunked so hot (salted) groups never build giant temporaries.
-        # ~(1 - 2·rmax/tile_px)² of points have their whole window inside
-        # this tile (the `single` fraction) — for those the inside mask is
-        # all-true by construction, so the mask + clip + where pass (three
-        # (chunk × |circle|) temporaries of pure memory traffic) is
-        # skipped (r6). Points are reordered interior-first so chunks stay
-        # homogeneous (emitted row order is free — the combine groups by
-        # point id and the driver hash is order-insensitive).
-        interior = ((pr_all - rmax >= row0) & (pr_all + rmax < row0 + th)
-                    & (pc_all - rmax >= col0) & (pc_all + rmax < col0 + tw))
-        if interior.any() and not interior.all():
-            ordr = np.argsort(~interior, kind="stable")
-            ids = ids[ordr]
-            singles = singles[ordr]
-            pr_all = pr_all[ordr]
-            pc_all = pc_all[ordr]
-            home_all = home_all[ordr]
-            interior = interior[ordr]
-        for s0 in range(0, len(xs), _CHUNK):
-            s1 = min(s0 + _CHUNK, len(xs))
-            rows = pr_all[s0:s1, None] + _dr[None, :]
-            cols = pc_all[s0:s1, None] + _dc[None, :]
-            if interior[s0:s1].all():
-                vals = arr[rows - row0, cols - col0]
-            else:
-                inside = ((rows >= row0) & (rows < row0 + th) &
-                          (cols >= col0) & (cols < col0 + tw))
-                rr = np.clip(rows - row0, 0, th - 1)
-                cc = np.clip(cols - col0, 0, tw - 1)
-                vals = arr[rr, cc]
-                vals = np.where(inside, vals, np.nan)
-            valid_all = ~np.isnan(vals)
-            cols_out = {id_col: ids[s0:s1], "single": singles[s0:s1]}
-            any_cnt = np.zeros(s1 - s0, dtype=np.int64)
-            for b in buffers_m:
-                sel = _sels[b]
-                v = vals if _full_sel[b] else vals[:, sel]
-                valid = valid_all if _full_sel[b] else valid_all[:, sel]
-                cnt = valid.sum(axis=1)
-                s = np.where(valid, v, 0.0).sum(axis=1)
-                mn = np.where(valid, v, np.inf).min(axis=1)
-                mx = np.where(valid, v, -np.inf).max(axis=1)
-                cols_out[f"s_{b}"] = s
-                cols_out[f"cnt_{b}"] = cnt
-                # +-inf sentinels (NOT NaN: Spark max prefers NaN over
-                # reals); the final projection nulls them via cnt > 0
-                cols_out[f"mn_{b}"] = mn
-                cols_out[f"mx_{b}"] = mx
-                any_cnt += cnt
-            df_out = pd.DataFrame(cols_out)
-            frames.append(df_out[(any_cnt > 0) | home_all[s0:s1]])
-        return pd.concat(frames, ignore_index=True)
+        pr = pdf_points["y"].to_numpy().astype(np.int64) // xres
+        pc = pdf_points["x"].to_numpy().astype(np.int64) // xres
+        # home tile: the tile holding the point's pixel clamped into the
+        # raster extent — always one of its point_tile_ids candidates, so
+        # every point keeps exactly one guaranteed partial row, even at
+        # zero count (row-count parity with buffered_stats for points off
+        # the raster, on nodata, or under a tile missing from the table)
+        home = tile_id_of(np.clip(pr, 0, height - 1) // tile_px,
+                          np.clip(pc, 0, width - 1) // tile_px
+                          ) == int(key[0]) // 64
+        if pdf_tiles.empty:
+            value_at = _absent_lookup
+        else:
+            t = pdf_tiles.iloc[0]
+            th, tw = int(t["h"]), int(t["w"])
+            row0, col0 = int(t["row0"]), int(t["col0"])
+            value_at = _window_lookup(
+                np.asarray(t["data"], dtype=np.float64).reshape(th, tw),
+                row0, col0)
+            # ~(1 - 2·rmax/tile_px)² of points have their whole window
+            # inside this tile (the `single` fraction): order them first so
+            # the kernel's chunks stay homogeneous and take the lookup's
+            # in-window path (emitted row order is free — the combine
+            # groups by point id and the driver hash is order-insensitive)
+            interior = ((pr - rmax >= row0) & (pr + rmax < row0 + th)
+                        & (pc - rmax >= col0) & (pc + rmax < col0 + tw))
+            if interior.any() and not interior.all():
+                ordr = np.argsort(~interior, kind="stable")
+                ids, singles, pr, pc, home = (
+                    ids[ordr], singles[ordr], pr[ordr], pc[ordr], home[ordr])
+        cols_out = {id_col: ids, "single": singles}
+        any_cnt = np.zeros(len(ids), dtype=np.int64)
+        for b, (s, cnt, mn, mx) in zip(
+                buffers_m, _disc_stats(pr, pc, offsets, value_at)):
+            cols_out[f"s_{b}"] = s
+            cols_out[f"cnt_{b}"] = cnt
+            cols_out[f"mn_{b}"] = mn
+            cols_out[f"mx_{b}"] = mx
+            any_cnt += cnt
+        df_out = pd.DataFrame(cols_out)
+        return df_out[(any_cnt > 0) | home]
 
     partial = (pts.groupBy("gkey")
                .cogroup(tiles.groupBy("gkey"))
@@ -613,7 +595,7 @@ def buffered_mean_convolve_all(points: DataFrame, tiles: DataFrame,
     the reference's Method 1 this strategy emits mean + n_valid.
     """
     buffers_m = list(buffers_m)
-    rmax = max(_radius_px_at(b, XRES) for b in buffers_m)
+    rmax = max(radius_px(b) for b in buffers_m)
     # Adaptive superblock sizing — a DATA-dependent rule (never
     # parallelism-dependent, so the same input yields the same plan at
     # every cluster size): the smallest power-of-2 superblock that
@@ -632,7 +614,7 @@ def buffered_mean_convolve_all(points: DataFrame, tiles: DataFrame,
     # chord tables per buffer: kernel row di in 0..2r -> [lo, hi] columns
     chords = {}
     for b in buffers_m:
-        rpx = _radius_px_at(b, XRES)
+        rpx = radius_px(b)
         dr = np.arange(-rpx, rpx + 1, dtype=np.int64)
         half = np.floor(np.sqrt((rpx * rpx - dr * dr).astype(np.float64))
                         ).astype(np.int64)

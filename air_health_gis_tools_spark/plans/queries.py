@@ -1504,9 +1504,7 @@ def q44_real_raster_zonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     y = (F.lit(16) + F.pmod(F.col("doc_id") * 16807 + 23,
                             F.lit(info.height - 32))) * 1000 + 500
     pts = d.select("doc_id", x.alias("x"), y.alias("y"))
-    return buffered_stats(pts, [700, 1000, 10000], raster=full,
-                          spark=spark, height=info.height,
-                          width=info.width, xres=1000)
+    return buffered_stats(pts, [700, 1000, 10000], raster=full, xres=1000)
 
 
 def q48_rds_point_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1601,8 +1599,7 @@ def q50_two_crs_focal(spark: SparkSession, sf_dir: str) -> DataFrame:
                   & (F.col("col") >= 1) & (F.col("col") < info.width - 1))
           .withColumn("x", F.col("col") * 1000 + 500)
           .withColumn("y", F.col("row") * 1000 + 500))
-    out = buffered_stats(px, [700], raster=full, spark=spark,
-                         height=info.height, width=info.width, xres=1000)
+    out = buffered_stats(px, [700], raster=full, xres=1000)
     return out.select("fid", "row", "col", "mean_700", "min_700",
                       "max_700", "n_valid_700")
 

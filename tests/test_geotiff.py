@@ -8,6 +8,8 @@ operator must match a coregRaster-style numpy oracle over the REAL raster
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pytest
 
@@ -19,15 +21,21 @@ from air_health_gis_tools_spark.sources.geotiff import (geotiff_tile_table,
                                                         read_geotiff,
                                                         read_ifd,
                                                         rowcol_of_xy)
+from tests.conftest import TIF
 
-TIF = "/root/reference/data/apg18e_1_0_0_20210512.tif"
 OVR = TIF + ".ovr"
 
+pytestmark = pytest.mark.reference_data(TIF)
 
-@pytest.fixture(scope="module")
-def real_raster():
-    arr, info = read_geotiff(TIF)
-    return arr, info
+
+@functools.lru_cache(maxsize=1)
+def _read_real_raster():
+    return read_geotiff(TIF)
+
+
+@pytest.fixture
+def real_raster(reference_data):
+    return _read_real_raster()
 
 
 def test_ifd_parse(real_raster):
@@ -40,6 +48,7 @@ def test_ifd_parse(real_raster):
     assert info.transform == (-3901000.0, 1000.0, -1000000.0, -1000.0)
 
 
+@pytest.mark.reference_data(OVR)
 def test_decode_cross_validates_against_overview(real_raster):
     """The .ovr pyramid is an INDEPENDENT decode path (deflate, not LZW):
     nearest 2x subsample of the full-res decode must agree almost
@@ -200,7 +209,7 @@ def test_real_raster_zonal_broadcast_bit_parity(spark, real_raster):
     pts = spark.createDataFrame(
         [(int(i), int(a), int(b)) for i, a, b in zip(ids, x, y)],
         "doc_id long, x long, y long")
-    got = (buffered_stats(pts, BUFFERS, raster=full, spark=spark)
+    got = (buffered_stats(pts, BUFFERS, raster=full)
            .toPandas().sort_values("doc_id").reset_index(drop=True))
     want = _np_zonal_oracle(full, rows, cols, BUFFERS)
     for b in BUFFERS:

@@ -15,6 +15,7 @@ import pandas as pd
 import pytest
 
 from air_health_gis_tools_spark.plans import queries as Q
+from tests.conftest import query_params
 
 SF001 = "/root/testdata/sf0.01"
 
@@ -54,8 +55,8 @@ def test_golden_files_committed():
         assert os.path.exists(os.path.join(Q.GOLDEN_DIR, f"{k}.parquet")), k
 
 
-@pytest.mark.parametrize("name", GOLDEN_KEYS)
-def test_golden_oracle_parity(name, spark):
+@pytest.mark.parametrize("name", query_params(GOLDEN_KEYS))
+def test_golden_oracle_parity(name, reference_data, spark):
     sdf = Q.QUERIES[name](spark, SF001).toPandas()
     odf = duckdb.sql(Q.ORACLES[name]).df()
     _assert_equal(sdf, odf, name)

@@ -11,6 +11,7 @@ from __future__ import annotations
 import pytest
 
 from air_health_gis_tools_spark.plans import queries as Q
+from tests.conftest import query_params
 
 SF = "/root/testdata/sf0.001"
 
@@ -37,8 +38,8 @@ ALLOWED_BNLJ = ALLOWED_CARTESIAN | {"q35_lines_in_radius",
                                     "q91_pmi_pairs"}
 
 
-@pytest.mark.parametrize("name", sorted(Q.QUERIES))
-def test_no_cartesian_or_bnlj(name, spark):
+@pytest.mark.parametrize("name", query_params(sorted(Q.QUERIES)))
+def test_no_cartesian_or_bnlj(name, reference_data, spark):
     plan = (Q.QUERIES[name](spark, SF)
             ._jdf.queryExecution().executedPlan().toString())
     if name not in ALLOWED_CARTESIAN:

@@ -11,11 +11,13 @@ import numpy as np
 import pytest
 
 from air_health_gis_tools_spark.sources.rds import rds_to_pandas
+from tests.conftest import GRIDS, TIF
 
-GRIDS = "/root/reference/data/grids"
-TIF = "/root/reference/data/apg18e_1_0_0_20210512.tif"
+pytestmark = pytest.mark.usefixtures("reference_data")
 
 
+@pytest.mark.reference_data(f"{GRIDS}/100_testing_points.rds",
+                            f"{GRIDS}/NSW_points_1km.rds")
 def test_every_reference_grid_parses():
     shapes = {}
     for p in sorted(glob.glob(f"{GRIDS}/*.rds")):
@@ -26,6 +28,8 @@ def test_every_reference_grid_parses():
     assert shapes["NSW_points_1km.rds"] == (1755120, 3)
 
 
+@pytest.mark.reference_data(f"{GRIDS}/NSW_points_1km.rds",
+                            f"{GRIDS}/nsw_points_1km_test.rds")
 def test_altrep_and_plain_serializations_agree():
     """NSW_points_1km.rds uses ALTREP compact/wrapped vectors;
     nsw_points_1km_test.rds carries the same table in plain vectors —
@@ -37,6 +41,7 @@ def test_altrep_and_plain_serializations_agree():
     assert np.array_equal(a["y"].to_numpy(), b["Y"].to_numpy())
 
 
+@pytest.mark.reference_data(TIF, f"{GRIDS}/AUS_points_5km.rds")
 def test_coordinates_sit_inside_reference_raster():
     from air_health_gis_tools_spark.sources.geotiff import (read_ifd,
                                                             rowcol_of_xy)
@@ -48,6 +53,7 @@ def test_coordinates_sit_inside_reference_raster():
     assert inside > 0.99
 
 
+@pytest.mark.reference_data(TIF, f"{GRIDS}/NSW_points_1km.rds")
 def test_reference_workflow_rds_points_x_geotiff_zonal(spark):
     """THE reference pipeline on the reference's own inputs: RDS point
     grid + apg18e GeoTIFF + buffers 700/1000/10000 — tiled zonal vs a
