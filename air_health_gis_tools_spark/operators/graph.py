@@ -31,7 +31,6 @@ explode corners → per-node count. Three shuffles total, all keyed.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.storagelevel import StorageLevel
 
 # (node:int64, deg:int64) rows — 1M nodes ≈ 16 MB dense, comfortably inside
 # a 1 GiB driver / executor broadcast budget; past it the degree join falls
@@ -53,9 +52,9 @@ def triangle_counts(edges: DataFrame,
     deg = (e.select(F.col("a").alias("node"))
            .unionAll(e.select(F.col("b").alias("node")))
            .groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
-           .persist(StorageLevel.MEMORY_AND_DISK))
+           .localCheckpoint(eager=False))
     if n_nodes is None:
-        n_nodes = deg.count()   # also materializes the persisted degrees
+        n_nodes = deg.count()   # also materializes the degree checkpoint
     hint = F.broadcast if n_nodes <= BROADCAST_DEG_MAX_NODES else (
         lambda df: df)
     # total order (deg, node): orient edges low→high so out-degree is
@@ -71,14 +70,15 @@ def triangle_counts(edges: DataFrame,
         F.when(lo_first, F.col("a")).otherwise(F.col("b")).alias("lo"),
         F.when(lo_first, F.col("b")).otherwise(F.col("a")).alias("hi"))
     # oriented feeds THREE consumers (two wedge legs + the closing-edge
-    # side). Unpersisted, Catalyst clones its whole upstream per consumer
+    # side). Unmaterialized, Catalyst clones its whole upstream per consumer
     # — the static plan blows up 3× (166 Exchange nodes / 7.5k plan lines
     # observed) and only runtime exchange reuse saves the recompute.
-    # Persist once (disk-spillable, edge-table sized — LSH-capped in the
-    # dedup use) so every consumer scans InMemoryRelation and the
-    # distinct/degree subplans exist exactly once. Same pattern
-    # GraphFrames uses for its motif edge tables.
-    oriented = oriented.persist(StorageLevel.MEMORY_AND_DISK)
+    # Checkpoint once (edge-table sized — LSH-capped in the dedup use;
+    # lazy, and reclaimed by ContextCleaner with the frame, unlike a
+    # persist nobody unpersists) so every consumer scans the same
+    # materialized rows and the distinct/degree subplans exist exactly
+    # once, as ``components.py`` does for its label tables.
+    oriented = oriented.localCheckpoint(eager=False)
     # wedges from the common low vertex; u < v in (deg, id) order keeps
     # each unordered wedge once
     w1 = oriented.select(F.col("lo"), F.col("hi").alias("u"))

@@ -309,11 +309,10 @@ def semantic_neardup_edges_np(emb: DataFrame, n_lists: int = 8,
         if max_cluster < 1:
             raise ValueError("max_cluster must be >= 1")
         # the sizes dim and the salted main path both consume the
-        # assignment kernel — persist it once (disk-spillable, the
-        # triangle-count oriented-table pattern) instead of running the
-        # n x k x d kernel twice per action
-        from pyspark import StorageLevel
-        assigned = assigned.persist(StorageLevel.MEMORY_AND_DISK)
+        # assignment kernel — checkpoint it once (lazily, on the first
+        # action; ContextCleaner reclaims it with the frame) instead of
+        # running the n x k x d kernel twice per action
+        assigned = assigned.localCheckpoint(eager=False)
         salted = (_cap_cluster_salt(assigned, max_cluster)
                   .repartition(n_parts, "cluster", "_salt"))
         edges = salted.groupBy("cluster", "_salt").applyInPandas(

@@ -29,18 +29,24 @@ Three physical strategies:
   raster is a deterministic function or a broadcast ndarray). Right when
   the raster fits one executor (the reference's regime: ~100 M px ≈
   800 MB).
-- ``buffered_stats_tiled`` (scale path) — raster as a parquet tile table,
-  points cogrouped with tiles on tile_id (``cogroup.applyInPandas``), partial
-  (sum, cnt, min, max) per (point, tile), final combine via ``groupBy(point)``
-  — classic partial/final aggregation; no tile array is ever replicated per
-  point, and the shuffle moves only points + partial aggregates, never the
-  raster. This is the plan that survives a 100 TB raster.
+- ``buffered_stats_tiled`` (scale path) — raster as a parquet tile table.
+  Each point keys to ONE home group (the tile-sized cell holding its
+  pixel, clamped into the extent); ``sources/raster.halo_groups`` sends
+  each group the strips of tiles inside its rmax-padded window; one
+  cogroup pastes that window (``fill_window``) and computes each point's
+  final row there, like the reference's one resident window per point.
+  The shuffle moves the points once and about (1 + 2·rmax/tile_px)² of
+  the raster, never a per-(point, tile) partial. This is the plan that
+  survives a 100 TB raster.
 - ``buffered_mean_convolve_all`` — the reference's convolve-once Method 1:
-  chord prefix sums over superblock windows; mean and n_valid only.
+  chord prefix sums over superblock windows (the same home-group and
+  halo routing); mean and n_valid only.
 
 The first two share one disc kernel, ``_disc_stats``: one radius rule
 (``radius_px``) and one gather over the union of the buffers' offsets,
-reading a broadcast array, a tile or the formula raster.
+reading a broadcast array, a tile window or the formula raster. Every
+disc is summed in one place in the same order, so both match the
+per-buffer gather bit for bit on any raster.
 """
 
 from __future__ import annotations
@@ -54,7 +60,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from ..geo_synth import RASTER_H, RASTER_W, XRES, raster_value_np
-from ..sources.raster import fdiv, fill_window, halo_groups, tile_id_of
+from ..sources.raster import fill_window, halo_groups
 
 
 def radius_px(buffer_m: int, xres: int = XRES) -> int:
@@ -242,11 +248,6 @@ def _window_lookup(arr: np.ndarray, row0: int = 0, col0: int = 0
     return value_at
 
 
-def _absent_lookup(pr, pc, dr, dc) -> np.ndarray:
-    """``value_at`` of a tile missing from the tile table: all nodata."""
-    return np.full((len(pr), len(dr)), np.nan)
-
-
 def _formula_lookup(pr, pc, dr, dc) -> np.ndarray:
     """``value_at`` of the synthetic formula raster, NaN off its extent."""
     rows = pr[:, None] + dr
@@ -255,6 +256,25 @@ def _formula_lookup(pr, pc, dr, dc) -> np.ndarray:
     vals[(rows < 0) | (rows >= RASTER_H) | (cols < 0) | (cols >= RASTER_W)
          ] = np.nan
     return vals
+
+
+def _stats(xs: np.ndarray, ys: np.ndarray, xres: int,
+           buffers_m: Sequence[int],
+           offsets: Sequence[tuple[np.ndarray, np.ndarray]], value_at
+           ) -> dict[str, np.ndarray]:
+    """Per-buffer mean/min/max/n_valid columns of the discs around the
+    ``(xs, ys)`` points' pixels (coordinates truncated to integers, then
+    floor-divided by ``xres``): NULL stats on an empty disc."""
+    res = _disc_stats(ys.astype(np.int64) // xres,
+                      xs.astype(np.int64) // xres, offsets, value_at)
+    out: dict[str, np.ndarray] = {}
+    for b, (s, cnt, mn, mx) in zip(buffers_m, res):
+        has = cnt > 0
+        out[f"mean_{b}"] = np.where(has, s / np.maximum(cnt, 1), np.nan)
+        out[f"min_{b}"] = np.where(has, mn, np.nan)
+        out[f"max_{b}"] = np.where(has, mx, np.nan)
+        out[f"n_valid_{b}"] = cnt
+    return out
 
 
 def buffered_stats(df: DataFrame, buffers_m: Sequence[int],
@@ -275,25 +295,14 @@ def buffered_stats(df: DataFrame, buffers_m: Sequence[int],
                          f"not xres={xres}")
     offsets = [buffer_offsets(b, mode, xres) for b in buffers_m]
 
-    def _stats(xs: np.ndarray, ys: np.ndarray, value_at) -> pd.DataFrame:
-        res = _disc_stats(ys.astype(np.int64) // xres,
-                          xs.astype(np.int64) // xres, offsets, value_at)
-        out: dict[str, np.ndarray] = {}
-        for b, (s, cnt, mn, mx) in zip(buffers_m, res):
-            has = cnt > 0
-            out[f"mean_{b}"] = np.where(has, s / np.maximum(cnt, 1), np.nan)
-            out[f"min_{b}"] = np.where(has, mn, np.nan)
-            out[f"max_{b}"] = np.where(has, mx, np.nan)
-            out[f"n_valid_{b}"] = cnt
-        return pd.DataFrame(out)
-
     if raster is not None:
         bc = df.sparkSession.sparkContext.broadcast(raster)
 
         @F.pandas_udf(schema)
         def _kernel(x: pd.Series, y: pd.Series) -> pd.DataFrame:
-            return _stats(x.to_numpy(), y.to_numpy(),
-                          _window_lookup(bc.value))
+            return pd.DataFrame(_stats(x.to_numpy(), y.to_numpy(), xres,
+                                       buffers_m, offsets,
+                                       _window_lookup(bc.value)))
     else:
         @F.pandas_udf(schema)
         def _kernel(x: pd.Series, y: pd.Series) -> pd.DataFrame:
@@ -302,70 +311,32 @@ def buffered_stats(df: DataFrame, buffers_m: Sequence[int],
                 return pd.DataFrame(
                     _batch_stats_formula_fast(xs, ys, buffers_m, mode))
             except ValueError:  # edge window → generic (clipping) path
-                return _stats(xs, ys, _formula_lookup)
+                return pd.DataFrame(_stats(xs, ys, xres, buffers_m, offsets,
+                                           _formula_lookup))
 
     return (df.withColumn("_z", _kernel(F.col("x"), F.col("y")))
             .select(*df.columns, "_z.*"))
 
 
 # --------------------------------------------------------------------------
-# scale path: raster tile table + cogroup partial/final aggregation
+# scale path: raster tile table, one halo window per group of points
 # --------------------------------------------------------------------------
 
-def point_tile_ids(df: DataFrame, rmax_px: int, tile_px: int,
-                   height: int = RASTER_H, width: int = RASTER_W,
-                   xres: int = XRES) -> DataFrame:
-    """Explode each ``(x, y)`` point to the tile ids its max-buffer square
-    touches.
+def _home_group(group_px: int, height: int, width: int, xres: int):
+    """``group_id`` of each ``(x, y)`` point's home group: the group of
+    ``group_px``-square cells holding its pixel (truncated coordinates,
+    floor-divided) clamped into the ``height × width`` extent. Every
+    raster pixel within ``rmax`` of the point lies in that group's
+    ``halo_groups(…, rmax, rmax, …)`` window.
 
-    Tile key: tile_id = (row0/tile_px) * 2^32 + (col0/tile_px). A 10 km
-    buffer at 1 km pixels touches ≤ 4 tiles of 256 px — bounded fan-out.
-
-    Pure Catalyst (r6, guide §4.1/§4.4): the r5 Arrow kernel here was the
-    tiled plan's hidden cost — explode's implicit ``size(...) > 0`` filter
-    is pushed below the ingest repartition, and a filter on a UDF-computed
-    column makes the optimizer evaluate the UDF BOTH below the exchange
-    (on the unparallelized scan task) and above it — two ArrowEvalPython
-    nodes per subtree, four per action since the plan reads the point side
-    twice (hot-tile count + cogroup). Integer ``least/greatest`` + one
-    4-element ``array`` keep the whole derivation in whole-stage codegen;
-    the emitted (_tids, single, tile_id) values are bit-identical (same
-    candidate order into the same ``array_distinct``). Coordinates are
-    cast to BIGINT first (the kernels' ``astype(np.int64)``: any numeric
-    type, fractions truncated), then floor-divided via the pmod form,
-    which preserves the kernels' numpy ``//`` semantics for negative
-    frames.
-    """
-    assert 2 * rmax_px + 1 <= tile_px, "window spans >2 tiles per axis"
-    ntx = 1 << 32
-
-    r0 = fdiv("CAST(y AS BIGINT)", xres)
-    c0 = fdiv("CAST(x AS BIGINT)", xres)
-    tr_lo = fdiv(f"greatest({r0} - {rmax_px}, 0L)", tile_px)
-    tr_hi = fdiv(f"least({r0} + {rmax_px}, {height - 1}L)", tile_px)
-    tc_lo = fdiv(f"greatest({c0} - {rmax_px}, 0L)", tile_px)
-    tc_hi = fdiv(f"least({c0} + {rmax_px}, {width - 1}L)", tile_px)
-    # window ≤ tile ⇒ at most the 4 corner tiles (same candidate order as
-    # the r5 kernel: lo/lo, lo/hi, hi/lo, hi/hi)
-    arr = F.array_distinct(F.expr(
-        f"array({tr_lo} * {ntx}L + {tc_lo}, {tr_lo} * {ntx}L + {tc_hi}, "
-        f"{tr_hi} * {ntx}L + {tc_lo}, {tr_hi} * {ntx}L + {tc_hi})"))
-    # `single` marks points whose whole (clipped) window lies in ONE tile —
-    # their (point, tile) partial IS the final answer, so they can bypass
-    # the final combine shuffle entirely (the common case: fraction
-    # ≈ (1 - 2·rmax/tile_px)², ~85 % at rmax 10 / tile 256).
-    # explode_OUTER, deliberately: the candidate array is never empty (4
-    # corners → ≥ 1 distinct id), so the rows are identical to explode's —
-    # but a plain explode makes InferFiltersFromGenerate add a
-    # ``size(_tids) > 0`` filter that filter-pushdown then copies BELOW
-    # the ingest exchange, re-inlining the whole ~2000-node tile-id
-    # expression into one interpreted (too big for codegen) per-row
-    # predicate on the unparallelized scan task (guide §4.4's duplication
-    # pathology, expression-flavored). Outer generate infers no filter.
-    return (df.withColumn("_tids", arr)
-            .withColumn("single", F.size("_tids") == 1)
-            .withColumn("tile_id", F.explode_outer("_tids"))
-            .drop("_tids"))
+    Truncating ``DIV`` gives the clamped floor: the two differ only below
+    pixel 0, which the clamp maps to 0 either way. Each coordinate appears
+    once, so the filters Catalyst infers from the cogroup key stay small
+    when they inline an upstream coordinate expression."""
+    def cell(coord: str, n: int) -> str:
+        return (f"(least(greatest(CAST({coord} AS BIGINT) DIV {xres}, 0L), "
+                f"{n - 1}L) DIV {group_px})")
+    return F.expr(f"{cell('y', height)} * {1 << 32}L + {cell('x', width)}")
 
 
 # adaptive salting: a hot group splits into at most MAX_SALT salt groups;
@@ -395,15 +366,15 @@ def _salt_hot_groups(points: DataFrame, tiles: DataFrame, key: str,
            .select(key,
                    F.least(F.ceil(F.col("count") / hot_group_rows),
                            F.lit(max_salt)).cast("long").alias("salt_k")))
-    # Knuth multiplicative hash of the id picks the salt
+    # xxhash64 of the id picks the salt (no arithmetic on the id, so any
+    # BIGINT id is safe under ANSI overflow checks)
     points = (points.join(F.broadcast(hot), key, "left")
-              .withColumn("_k", F.coalesce(F.col("salt_k"), F.lit(1)))
               .withColumn(
                   "gkey",
                   F.col(key) * 64
-                  + F.pmod(F.pmod(F.col(id_col) * F.lit(2654435761),
-                                  F.lit(1 << 31)), F.col("_k")))
-              .drop("salt_k", "_k"))
+                  + F.pmod(F.xxhash64(F.col(id_col)),
+                           F.coalesce(F.col("salt_k"), F.lit(1))))
+              .drop("salt_k"))
     tiles = (tiles.join(F.broadcast(hot), key, "left")
              .withColumn(
                  "_salt",
@@ -422,146 +393,55 @@ def buffered_stats_tiled(points: DataFrame, tiles: DataFrame,
                          max_salt: int = MAX_SALT,
                          height: int = RASTER_H, width: int = RASTER_W,
                          xres: int = XRES) -> DataFrame:
-    """Partial/final zonal stats of the ``(id_col, x, y)`` points over a
-    raster *tile table*.
+    """Zonal stats of the ``(id_col, x, y)`` points over a raster *tile
+    table* (``sources/raster.TILE_SCHEMA``; nodata arrives as NaN).
 
-    ``tiles``: (tile_id:long, row0:int, col0:int, h:int, w:int,
-    data:array<double>) — NaN encoded as NULL inside the array is not needed;
-    nodata arrives already as NaN doubles.
+    Plan: each point keys to its home group (``_home_group``: a
+    ``tile_px``-square cell of the raster); ``halo_groups`` routes to each
+    group the part of every tile inside its ``rmax``-padded window; one
+    cogroup pastes the window (``fill_window``) and runs the disc kernel
+    once per point. Every disc lies in its home window, so each point gets
+    its final row in one pass — no per-tile partials, no combine — and
+    sums the oracle's values in the oracle's order (bit-identical to
+    ``buffered_stats`` on any raster). Points off the raster or under
+    missing tiles read NaN and keep a zero-count row.
 
-    Plan: points exploded to touched tiles → cogroup(points, tiles) on
-    tile_id (one shuffle of the small side each; the tile table is read
-    once) → Arrow kernel emits per-(point, buffer) PARTIAL (sum, cnt, min,
-    max) → groupBy(point) FINAL combine. Mirrors Spark's own partial/final
-    HashAggregate; no tile pixel ever crosses the final shuffle.
-
-    Urban-cluster skew (north_rule): a hot tile can hold 100k+ points —
+    Urban-cluster skew (north_rule): a hot group can hold 100k+ points —
     one cogroup group, one core, the job's straggler. Defense is ADAPTIVE
-    SALTING: a cheap pre-count finds hot tiles, each is split into
-    ceil(count / hot_group_rows) salt groups (points pick their salt by id
-    hash; the tile row replicates only into its own salts). Cold tiles pay
-    nothing. This is the same mechanism AQE's skew-join split applies to
-    sort-merge joins, applied to the cogroup.
+    SALTING (``_salt_hot_groups``): a cheap pre-count finds hot groups,
+    each splits into ceil(count / hot_group_rows) salt groups and the
+    window replicates only into its own salts. Cold groups pay nothing.
     """
     buffers_m = list(buffers_m)
     rmax = max(radius_px(b, xres) for b in buffers_m)
-    pts = point_tile_ids(
-        points.select(id_col, "x", "y"), rmax, tile_px,
-        height=height, width=width, xres=xres)
-    # NOTE (r6, considered and rejected): persisting the exploded point
-    # side here would serve both the hot-tile pre-count and the cogroup
-    # from one computation — but the persist's logical plan is invariant
-    # across repeated invocations on the same input, so Spark's
-    # CacheManager would feed every later invocation (including a bench's
-    # timed reps) from the first run's cache, silently excluding the
-    # ingest from what is measured. The double computation is the honest
-    # price of the pre-count salting pattern; it is two narrow codegen
-    # passes since the r6 Catalyst tile-id rewrite.
-    from pyspark import StorageLevel
-
-    # urban-cluster skew: hot tiles split into salt groups
-    pts, tiles = _salt_hot_groups(pts, tiles, "tile_id", id_col,
-                                  hot_group_rows, max_salt)
-
-    # one WIDE partial row per (point, tile): no per-buffer row blowup and
-    # no pivot stage in the final combine
-    pfields = [T.StructField(id_col, T.LongType()),
-               T.StructField("single", T.BooleanType())]
-    for b in buffers_m:
-        pfields += [T.StructField(f"s_{b}", T.DoubleType()),
-                    T.StructField(f"cnt_{b}", T.LongType()),
-                    T.StructField(f"mn_{b}", T.DoubleType()),
-                    T.StructField(f"mx_{b}", T.DoubleType())]
-    partial_schema = T.StructType(pfields)
-
     offsets = [buffer_offsets(b, "canonical", xres) for b in buffers_m]
+    pts = points.select(id_col, "x", "y").withColumn(
+        "group_id", _home_group(tile_px, height, width, xres))
+    win_tiles = halo_groups(tiles, tile_px, rmax, rmax, height, width)
+    pts, win_tiles = _salt_hot_groups(pts, win_tiles, "group_id", id_col,
+                                      hot_group_rows, max_salt)
+    schema = T.StructType([T.StructField(id_col, T.LongType())]
+                          + _stats_schema(buffers_m).fields)
 
-    def _partial(key, pdf_points: pd.DataFrame, pdf_tiles: pd.DataFrame
-                 ) -> pd.DataFrame:
+    def _window_stats(key, pdf_points: pd.DataFrame,
+                      pdf_tiles: pd.DataFrame) -> pd.DataFrame:
         if pdf_points.empty:
-            return pd.DataFrame(
-                {f.name: pd.Series(dtype="float64") for f in partial_schema})
-        ids = pdf_points[id_col].to_numpy()
-        singles = pdf_points["single"].to_numpy()
-        pr = pdf_points["y"].to_numpy().astype(np.int64) // xres
-        pc = pdf_points["x"].to_numpy().astype(np.int64) // xres
-        # home tile: the tile holding the point's pixel clamped into the
-        # raster extent — always one of its point_tile_ids candidates, so
-        # every point keeps exactly one guaranteed partial row, even at
-        # zero count (row-count parity with buffered_stats for points off
-        # the raster, on nodata, or under a tile missing from the table)
-        home = tile_id_of(np.clip(pr, 0, height - 1) // tile_px,
-                          np.clip(pc, 0, width - 1) // tile_px
-                          ) == int(key[0]) // 64
-        if pdf_tiles.empty:
-            value_at = _absent_lookup
-        else:
-            t = pdf_tiles.iloc[0]
-            th, tw = int(t["h"]), int(t["w"])
-            row0, col0 = int(t["row0"]), int(t["col0"])
-            value_at = _window_lookup(
-                np.asarray(t["data"], dtype=np.float64).reshape(th, tw),
-                row0, col0)
-            # ~(1 - 2·rmax/tile_px)² of points have their whole window
-            # inside this tile (the `single` fraction): order them first so
-            # the kernel's chunks stay homogeneous and take the lookup's
-            # in-window path (emitted row order is free — the combine
-            # groups by point id and the driver hash is order-insensitive)
-            interior = ((pr - rmax >= row0) & (pr + rmax < row0 + th)
-                        & (pc - rmax >= col0) & (pc + rmax < col0 + tw))
-            if interior.any() and not interior.all():
-                ordr = np.argsort(~interior, kind="stable")
-                ids, singles, pr, pc, home = (
-                    ids[ordr], singles[ordr], pr[ordr], pc[ordr], home[ordr])
-        cols_out = {id_col: ids, "single": singles}
-        any_cnt = np.zeros(len(ids), dtype=np.int64)
-        for b, (s, cnt, mn, mx) in zip(
-                buffers_m, _disc_stats(pr, pc, offsets, value_at)):
-            cols_out[f"s_{b}"] = s
-            cols_out[f"cnt_{b}"] = cnt
-            cols_out[f"mn_{b}"] = mn
-            cols_out[f"mx_{b}"] = mx
-            any_cnt += cnt
-        df_out = pd.DataFrame(cols_out)
-        return df_out[(any_cnt > 0) | home]
+            return pd.DataFrame({f.name: pd.Series(dtype="float64")
+                                 for f in schema})
+        g = int(key[0]) // 64
+        wr0 = (g >> 32) * tile_px - rmax
+        wc0 = (g & 0xFFFFFFFF) * tile_px - rmax
+        win = fill_window(pdf_tiles, wr0, wc0, tile_px + 2 * rmax,
+                          tile_px + 2 * rmax)
+        return pd.DataFrame({
+            id_col: pdf_points[id_col].to_numpy(),
+            **_stats(pdf_points["x"].to_numpy(), pdf_points["y"].to_numpy(),
+                     xres, buffers_m, offsets,
+                     _window_lookup(win, wr0, wc0))})
 
-    partial = (pts.groupBy("gkey")
-               .cogroup(tiles.groupBy("gkey"))
-               .applyInPandas(_partial, partial_schema))
-    # the partial table feeds BOTH branches below; without materialization
-    # Spark plans the cogroup kernel twice (one per union branch — verified
-    # via explain: two FlatMapCoGroupsInPandas nodes). Partials are
-    # points-scale (14 numbers per (point, tile)) — persisting them is the
-    # cheap side, never the raster.
-    partial = partial.persist(StorageLevel.MEMORY_AND_DISK)
-
-    def _finalize(df_):
-        cols = [F.col(id_col)]
-        for b in buffers_m:
-            has = F.col(f"cnt_{b}") > 0
-            cols += [
-                F.when(has, F.col(f"s_{b}") / F.col(f"cnt_{b}"))
-                .alias(f"mean_{b}"),
-                F.when(has, F.col(f"mn_{b}")).alias(f"min_{b}"),
-                F.when(has, F.col(f"mx_{b}")).alias(f"max_{b}"),
-                F.coalesce(F.col(f"cnt_{b}"), F.lit(0))
-                .alias(f"n_valid_{b}"),
-            ]
-        return df_.select(cols)
-
-    # single-tile points: the one partial row IS the final row — project it
-    # straight through; only multi-tile partials pay the combine shuffle
-    # (bit-identical: combining one row is the identity)
-    direct = _finalize(partial.filter(F.col("single")))
-    aggs = []
-    for b in buffers_m:
-        aggs += [F.sum(f"s_{b}").alias(f"s_{b}"),
-                 F.sum(f"cnt_{b}").alias(f"cnt_{b}"),
-                 F.min(f"mn_{b}").alias(f"mn_{b}"),
-                 F.max(f"mx_{b}").alias(f"mx_{b}")]
-    combined = _finalize(
-        partial.filter(~F.col("single")).groupBy(id_col).agg(*aggs))
-    return direct.unionByName(combined)
+    return (pts.groupBy("gkey")
+            .cogroup(win_tiles.groupBy("gkey"))
+            .applyInPandas(_window_stats, schema))
 
 
 def buffered_mean_convolve_all(points: DataFrame, tiles: DataFrame,
@@ -586,10 +466,11 @@ def buffered_mean_convolve_all(points: DataFrame, tiles: DataFrame,
     Why this shape survives 100 TB: the r2 plan shuffled the raster 9×
     (full halo fan-out), materialized 6 result planes per tile (48 B/px)
     and shuffled THEM again into the gather cogroup — ~25 GB of movement
-    per 201 M px. Here whole tiles go to every superblock whose
-    rmax-padded window they touch (``halo_groups``: 8.27 groups per tile
-    on the 4096² raster at sb_tiles = 1), points shuffle once, no plane
-    is materialized, and only per-point rows leave the task; per-task
+    per 201 M px. Here each superblock receives the part of every tile
+    inside its rmax-padded window (``halo_groups``: about 1.15× the
+    raster on the 4096² raster at sb_tiles = 1), points shuffle once to
+    their home superblock (``_home_group``), no plane is materialized, and
+    only per-point rows leave the task; per-task
     compute is one cumsum of the superblock (cache-resident) plus
     O(points·r) gathers. min/max are not convolution-expressible; like
     the reference's Method 1 this strategy emits mean + n_valid.
@@ -622,10 +503,7 @@ def buffered_mean_convolve_all(points: DataFrame, tiles: DataFrame,
 
     contrib = halo_groups(tiles, sb_px, rmax, rmax, height, width)
     pts = points.select(id_col, "x", "y").withColumn(
-        "group_id",
-        ((F.col("y") / XRES).cast("long") / sb_px).cast("long")
-        * F.lit(1 << 32)
-        + ((F.col("x") / XRES).cast("long") / sb_px).cast("long"))
+        "group_id", _home_group(sb_px, height, width, XRES))
     # urban clusters pile millions of points into one superblock group —
     # the 4N-leg straggler; each salt group assembles the same window and
     # serves disjoint points
@@ -650,13 +528,6 @@ def buffered_mean_convolve_all(points: DataFrame, tiles: DataFrame,
         sbr, sbc = sb >> 32, sb & 0xFFFFFFFF
         sb_h = min(sb_px, height - sbr * sb_px)
         sb_w = min(sb_px, width - sbc * sb_px)
-        if sb_h <= 0 or sb_w <= 0 or pdf_tiles.empty:
-            # superblock entirely outside coverage: NaN stats, 0 counts
-            # (row parity with the other zonal strategies)
-            for b in buffers_m:
-                out[f"mean_{b}"] = np.full(len(ids), np.nan)
-                out[f"n_valid_{b}"] = np.zeros(len(ids), dtype=np.int64)
-            return pd.DataFrame(out)
         wr0 = sbr * sb_px - rmax
         wc0 = sbc * sb_px - rmax
         win = fill_window(pdf_tiles, wr0, wc0,

@@ -95,7 +95,7 @@ def choose_zonal_strategy(raster_px: int, n_points: int,
             "per-point tile visits (O1 Method 1, out-of-core raster)")
     return ZonalPlan("tiled",
                      f"raster {raster_bytes >> 20} MiB exceeds executor "
-                     "budget: tile cogroup partial/final agg")
+                     "budget: tile cogroup, one halo window per point")
 
 
 def extract_pipeline(pages: DataFrame, monitors: DataFrame,

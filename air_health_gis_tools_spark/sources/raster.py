@@ -43,8 +43,8 @@ def fdiv(e: str, d: int) -> str:
 
 def halo_groups(tiles: DataFrame, group_px: int, before: int, after: int,
                 n_rows: int, n_cols: int) -> DataFrame:
-    """Explode every tile to the output groups whose padded window it
-    intersects: adds ``group_id = (gr << 32) + gc``.
+    """Route every tile to the output groups whose padded window it
+    intersects, cut to that window: adds ``group_id = (gr << 32) + gc``.
 
     Group ``g`` (per axis) owns pixels ``[g·group_px, (g+1)·group_px)`` of
     an ``n_rows × n_cols`` raster and reads the window
@@ -52,14 +52,18 @@ def halo_groups(tiles: DataFrame, group_px: int, before: int, after: int,
     ``[o, o + extent)`` goes to every in-grid ``g`` with
     ``floor((o − after) / group_px) ≤ g ≤ floor((o + extent − 1 + before)
     / group_px)``. This is the one tile→group rule of the tiled raster
-    operators (convolution, resampling, fused convolve-and-gather).
+    operators (convolution, resampling, buffered zonal stats).
 
-    Fan-out: whole tiles are shipped, so with ``group_px = k·tile_px`` and
-    a halo of 1..tile_px pixels each tile on a group border lands in the
-    neighbour group too — about ``(1 + 2/k)²`` groups per tile away from
-    the raster edge (9 at k = 1, 4 at k = 2), not ``1 + 4·halo/tile_px``.
-    On a 4096² raster of 256-px tiles that is 8.27 groups per tile at
-    k = 1 and 3.52 at k = 2; shipping only the halo strips would cut it.
+    Each (tile, group) row carries only the tile's pixels inside the
+    group's window: rows ``a0 = max(g·group_px − before − row0, 0)`` to
+    ``a1 = min((g+1)·group_px + after − row0, h)`` and the same for
+    columns, with ``row0``/``col0``/``h``/``w`` shifted to match (a tile
+    wholly inside the window passes through as is). So a neighbour group
+    receives a halo-wide strip, not the whole tile: the pixels shipped are
+    about ``(1 + (before + after) / group_px)²`` times the raster (1.15×
+    on a 4096² raster of 256-px groups at a 10-px halo), not the
+    ``(1 + 2/k)²`` of whole tiles (8.27×). ``fill_window`` pastes the
+    pieces like tiles.
 
     A tile outside the grid (lo > hi on either axis) fails the job rather
     than fanning out over a descending ``sequence``. Pure Catalyst;
@@ -77,11 +81,28 @@ def halo_groups(tiles: DataFrame, group_px: int, before: int, after: int,
             f"ELSE raise_error(concat('halo_groups: tile {origin}=', "
             f"CAST({origin} AS STRING), ' lies outside the raster')) END"))
 
+    def cut(g: str, origin: str, extent: str):
+        """The window's [lo, hi) on one axis, in the tile's own pixels."""
+        return (f"greatest({g} * {group_px} - {before} - {origin}, 0)",
+                f"least(({g} + 1) * {group_px} + {after} - {origin}, "
+                f"{extent})")
+
+    (a0, a1), (b0, b1) = cut("_gr", "row0", "h"), cut("_gc", "col0", "w")
+    data = F.expr(
+        f"CASE WHEN {a0} = 0 AND {a1} = h AND {b0} = 0 AND {b1} = w "
+        f"THEN data ELSE flatten(transform(sequence({a0}, {a1} - 1), "
+        f"r -> slice(data, CAST(r * w + {b0} + 1 AS INT), "
+        f"CAST({b1} - {b0} AS INT)))) END")
     return (tiles
             .withColumn("_gr", span("row0", "h", n_rows))
             .withColumn("_gc", span("col0", "w", n_cols))
-            .withColumn("group_id",
-                        F.col("_gr") * F.lit(1 << 32) + F.col("_gc"))
+            .withColumns({
+                "row0": F.expr(f"CAST(row0 + {a0} AS INT)"),
+                "col0": F.expr(f"CAST(col0 + {b0} AS INT)"),
+                "h": F.expr(f"CAST({a1} - {a0} AS INT)"),
+                "w": F.expr(f"CAST({b1} - {b0} AS INT)"),
+                "data": data,
+                "group_id": F.col("_gr") * F.lit(1 << 32) + F.col("_gc")})
             .drop("_gr", "_gc"))
 
 

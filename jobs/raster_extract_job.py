@@ -51,8 +51,7 @@ def main() -> None:
                     default=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     args = ap.parse_args()
 
-    from air_health_gis_tools_spark.operators.zonal import (
-        buffered_stats_tiled, radius_px)
+    from air_health_gis_tools_spark.operators.zonal import buffered_stats_tiled
     from air_health_gis_tools_spark.session import get_spark
     from air_health_gis_tools_spark.sources.geotiff import (
         geotiff_tile_table, read_ifd)
@@ -61,11 +60,6 @@ def main() -> None:
     t0 = time.perf_counter()
     info = read_ifd(args.tif)
     xres = int(round(abs(info.transform[1]))) if info.transform else 1000
-    rmax = max(radius_px(b, xres) for b in args.buffers)
-    if 2 * rmax + 1 > info.tile_h:
-        raise SystemExit(
-            f"max buffer spans {2 * rmax + 1} px > TIFF tile {info.tile_h}"
-            " — re-tile the raster or drop the largest buffer")
 
     if args.synthetic_points:
         n = args.synthetic_points

@@ -87,39 +87,38 @@ def test_tiled_zonal_keeps_points_outside_coverage(spark, pts):
     assert row["n_valid_10000"] == 0 or np.isfinite(row["mean_10000"])
 
 
-def test_point_tile_ids_double_coordinates(spark, pts):
-    """Double-typed x/y take the kernels' ``astype(np.int64)`` path —
-    truncate toward zero, then floor-divide — and the tiled operator
-    accepts them with the same result as BIGINT coordinates."""
-    from air_health_gis_tools_spark.operators.zonal import point_tile_ids
-    rmax, tile = 10, 256
-    rng = np.random.default_rng(7)
-    xs = np.concatenate([[245_999.9, 246_000.4, -999.5, -1_000.5],
-                         rng.uniform(-50_000, 4_200_000, 300)])
-    ys = np.concatenate([[500_000.0, 500_000.0, 265_999.2, -0.25],
-                         rng.uniform(-50_000, 4_200_000, 300)])
-    pdf = pd.DataFrame({"doc_id": np.arange(len(xs)), "x": xs, "y": ys})
-    got = (point_tile_ids(spark.createDataFrame(pdf), rmax, tile)
-           .toPandas().groupby("doc_id"))
-    r0 = ys.astype(np.int64) // G.XRES
-    c0 = xs.astype(np.int64) // G.XRES
-    tr = (np.maximum(r0 - rmax, 0) // tile,
-          np.minimum(r0 + rmax, G.RASTER_H - 1) // tile)
-    tc = (np.maximum(c0 - rmax, 0) // tile,
-          np.minimum(c0 + rmax, G.RASTER_W - 1) // tile)
-    for i in range(len(xs)):
-        want = {int(r[i]) * (1 << 32) + int(c[i]) for r in tr for c in tc}
-        rows = got.get_group(i)
-        assert set(rows["tile_id"]) == want, (xs[i], ys[i])
-        assert (rows["single"] == (len(want) == 1)).all()
-    assert got.get_group(0)["tile_id"].tolist() == [1 << 32]
-    assert sorted(got.get_group(1)["tile_id"]) == [(1 << 32), (1 << 32) + 1]
-
-    tiles = synthetic_tile_table(spark, tile_px=tile)
+def test_tiled_zonal_double_coordinates(spark, pts):
+    """The tiled operator accepts double-typed x/y with the same result as
+    BIGINT coordinates (test_zonal_parity checks fractional ones against
+    the oracle)."""
+    tiles = synthetic_tile_table(spark, tile_px=256)
     dbl = pts.select("doc_id", F.col("x").cast("double").alias("x"),
                      F.col("y").cast("double").alias("y"))
-    a = _sorted_pdf(buffered_stats_tiled(dbl, tiles, list(G.BUFFERS_M), tile))
-    b = _sorted_pdf(buffered_stats_tiled(pts, tiles, list(G.BUFFERS_M), tile))
+    a = _sorted_pdf(buffered_stats_tiled(dbl, tiles, list(G.BUFFERS_M), 256))
+    b = _sorted_pdf(buffered_stats_tiled(pts, tiles, list(G.BUFFERS_M), 256))
+    pd.testing.assert_frame_equal(a, b, check_exact=True)
+
+
+@pytest.mark.parametrize("op", ["tiled", "convolve_all"])
+def test_zonal_salt_accepts_any_bigint_id(spark, pts, op):
+    """The salt hash takes any BIGINT id: ids near ±2⁶² and negative ones
+    (a multiplicative hash overflowed under ANSI for |id| > 3.47·10⁹,
+    even in unsalted groups) give the same rows as small ids."""
+    tiles = synthetic_tile_table(spark, tile_px=256)
+    small = pts.orderBy("doc_id").limit(400).toPandas()
+    odd = small["doc_id"] % 2 == 1
+    big = small.assign(doc_id=np.where(odd, small["doc_id"] - (1 << 62),
+                                       (1 << 62) - 1 - small["doc_id"]))
+    if op == "tiled":
+        run = lambda df: buffered_stats_tiled(  # noqa: E731
+            df, tiles, list(G.BUFFERS_M), 256, hot_group_rows=4, max_salt=4)
+    else:
+        run = lambda df: buffered_mean_convolve_all(  # noqa: E731
+            df, tiles, list(G.BUFFERS_M), 256)
+    a = _sorted_pdf(run(spark.createDataFrame(small)))
+    b = run(spark.createDataFrame(big)).toPandas()
+    b["doc_id"] = b["doc_id"].map(dict(zip(big["doc_id"], small["doc_id"])))
+    b = b.sort_values("doc_id").reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b, check_exact=True)
 
 
@@ -154,6 +153,57 @@ def test_convolve_all_rejects_tile_outside_raster(spark, pts, op, row0):
     out = _HALO_OPS[op](bad, pts, n)
     with pytest.raises(Exception, match="tile row0=-?[0-9]+ lies outside"):
         out.collect()
+
+
+@pytest.mark.parametrize("group_px,before,after", [(128, 10, 10),
+                                                    (100, 0, 1),
+                                                    (64, 70, 3)])
+def test_halo_groups_ships_window_strips(spark, group_px, before, after):
+    """``halo_groups`` ships, per (tile, group), exactly the pixels of the
+    tile inside the group's padded window: the shipped area equals the
+    sum of window ∩ tile areas, every piece holds the raster's pixels at
+    its origin, and pasting a group's pieces rebuilds its window."""
+    from air_health_gis_tools_spark.sources.raster import (
+        fill_window, halo_groups, materialize_raster, tile_table_from_array)
+    h, w, tile = 300, 340, 96
+    arr = materialize_raster(h, w)
+    got = halo_groups(tile_table_from_array(spark, arr, tile), group_px,
+                      before, after, h, w).toPandas()
+
+    def cut(g, lo, n):
+        return (max(g * group_px - before, lo),
+                min((g + 1) * group_px + after, lo + n))
+
+    want = {}
+    for tr in range(-(-h // tile)):
+        for tc in range(-(-w // tile)):
+            th, tw = min(tile, h - tr * tile), min(tile, w - tc * tile)
+            for gr in range(-(-h // group_px)):
+                for gc in range(-(-w // group_px)):
+                    r0, r1 = cut(gr, tr * tile, th)
+                    c0, c1 = cut(gc, tc * tile, tw)
+                    if r0 < r1 and c0 < c1:
+                        want[(tr * (1 << 32) + tc, gr * (1 << 32) + gc)] = (
+                            r0, c0, r1 - r0, c1 - c0)
+    assert sorted(zip(got["tile_id"], got["group_id"])) == sorted(want)
+    assert (got["data"].map(len).sum()
+            == sum(a * b for _, _, a, b in want.values()))
+    for t in got.itertuples():
+        assert (t.row0, t.col0, t.h, t.w) == want[(t.tile_id, t.group_id)]
+        assert np.array_equal(np.asarray(t.data).reshape(t.h, t.w),
+                              arr[t.row0:t.row0 + t.h, t.col0:t.col0 + t.w],
+                              equal_nan=True)
+    padded = np.pad(arr, max(before, after) + group_px,
+                    constant_values=np.nan)
+    off = max(before, after) + group_px
+    for g, pdf in got.groupby("group_id"):
+        wr0 = (g >> 32) * group_px - before
+        wc0 = (g & 0xFFFFFFFF) * group_px - before
+        n = group_px + before + after
+        assert np.array_equal(
+            fill_window(pdf, wr0, wc0, n, n),
+            padded[off + wr0:off + wr0 + n, off + wc0:off + wc0 + n],
+            equal_nan=True)
 
 
 def test_pip_counts_points_at_negative_coordinates(spark):
@@ -440,3 +490,27 @@ def test_convolve_plane_variant_matches_zonal_means(spark):
     want_s = np.where(valid, vals, 0.0).sum(axis=1)
     assert np.array_equal(c_plane[rr, cc], want_c)
     assert np.allclose(s_plane[rr, cc], want_s, rtol=0, atol=0)
+
+
+def test_operators_leave_no_cached_data(spark, pts):
+    """Operators that reuse an intermediate own it with an
+    invocation-scoped ``localCheckpoint``, so after they run Spark's
+    CacheManager holds nothing (a ``persist`` would stay cached for the
+    session and feed later identical plans from stale storage)."""
+    from air_health_gis_tools_spark.operators.graph import triangle_counts
+    from air_health_gis_tools_spark.operators.semdedup import (
+        semantic_neardup_edges_np)
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    tiles = synthetic_tile_table(spark, tile_px=256)
+    buffered_stats_tiled(pts, tiles, list(G.BUFFERS_M), 256).collect()
+    rng = np.random.default_rng(5)
+    emb = spark.createDataFrame(
+        [(i, [float(v) for v in rng.uniform(-1, 1, 8)]) for i in range(60)],
+        "vec_id long, embedding array<float>")
+    semantic_neardup_edges_np(emb, n_lists=4, max_cluster=8).collect()
+    k4 = [(a, b) for a in range(4) for b in range(a + 1, 4)]
+    tri = triangle_counts(spark.createDataFrame(k4, "id1 long, id2 long"))
+    assert {r["node"]: r["n_triangles"] for r in tri.collect()} == {
+        0: 3, 1: 3, 2: 3, 3: 3}
+    assert cache.isEmpty()

@@ -6,14 +6,12 @@ tiled cogroup — must return one row per point with the stats of the
 direct per-buffer gather over ``circle_offsets(radius_px(b, xres))``.
 The points sit off all four sides and the corners, on discs that only
 partly overlap the raster, on nodata-only discs and in partial edge
-tiles; the rasters are the integer synthetic one and a non-integer
-float32-origin one with ~25 % nodata.
+tiles; the rasters are the integer synthetic one and non-integer
+float32-origin and float64 ones with ~25 % nodata.
 
-The broadcast kernel sums the same values in the same order as the
-oracle, so it must match bit for bit; the tiled path re-associates the
-per-tile partial sums, so its means match to 1e-9 relative (as in
-test_geotiff's real-raster parity) and its counts, mins and maxes
-exactly.
+Every strategy sums each disc's values in one place, in the oracle's
+order, so all of them must match bit for bit: means included, on the
+non-integer rasters too.
 """
 
 from __future__ import annotations
@@ -35,11 +33,12 @@ BUFFERS = [700, 1000, 10000]
 H, W = 450, 500          # neither side a multiple of the 128-px tiles
 
 
-def _float_raster(h: int, w: int) -> np.ndarray:
-    """Non-integer float32-origin values, ~25 % NaN, plus a nodata block
-    in the top-left corner so some discs reach the raster only there."""
+def _float_raster(h: int, w: int, dtype=np.float32) -> np.ndarray:
+    """Non-integer values of ``dtype`` origin, ~25 % NaN, plus a nodata
+    block in the top-left corner so some discs reach the raster only
+    there."""
     rng = np.random.default_rng(16)
-    arr = rng.uniform(0, 3884.8, (h, w)).astype(np.float32).astype(np.float64)
+    arr = rng.uniform(0, 3884.8, (h, w)).astype(dtype).astype(np.float64)
     arr[rng.random((h, w)) < 0.25] = np.nan
     arr[:12, :12] = np.nan
     return arr
@@ -97,8 +96,8 @@ def _formula_values(rows, cols):
 def _oracle(value, pts: pd.DataFrame, xres: int) -> dict[str, np.ndarray]:
     """coregRaster semantics (utils.py:89-117), one direct gather per
     buffer: nan-aware mean/min/max/count, NULL stats on an empty disc."""
-    pr = pts["y"].to_numpy() // xres
-    pc = pts["x"].to_numpy() // xres
+    pr = pts["y"].to_numpy().astype(np.int64) // xres
+    pc = pts["x"].to_numpy().astype(np.int64) // xres
     out = {}
     for b in BUFFERS:
         dr, dc = circle_offsets(radius_px(b, xres))
@@ -116,7 +115,7 @@ def _oracle(value, pts: pd.DataFrame, xres: int) -> dict[str, np.ndarray]:
     return out
 
 
-def _assert_matches(got: pd.DataFrame, want: dict, n: int, exact_mean: bool):
+def _assert_matches(got: pd.DataFrame, want: dict, n: int):
     got = got.sort_values("doc_id").reset_index(drop=True)
     assert got["doc_id"].tolist() == list(range(n)), "one row per point"
     for b in BUFFERS:
@@ -126,24 +125,30 @@ def _assert_matches(got: pd.DataFrame, want: dict, n: int, exact_mean: bool):
             g = got[f"{stat}_{b}"].to_numpy()
             w = want[f"{stat}_{b}"]
             assert np.array_equal(np.isnan(g), np.isnan(w)), (stat, b)
-            if stat == "mean" and not exact_mean:
-                m = ~np.isnan(w)
-                assert np.allclose(g[m], w[m], rtol=1e-9, atol=0), (stat, b)
-            else:
-                assert np.array_equal(np.nan_to_num(g, nan=-1.0),
-                                      np.nan_to_num(w, nan=-1.0)), (stat, b)
+            assert np.array_equal(np.nan_to_num(g, nan=-1.0),
+                                  np.nan_to_num(w, nan=-1.0)), (stat, b)
+
+
+def _strategy(spark, strategy, pts, arr, tile_px=128, xres=G.XRES):
+    sdf = spark.createDataFrame(pts)
+    if strategy == "broadcast":
+        return buffered_stats(sdf, BUFFERS, raster=arr, xres=xres).toPandas()
+    h, w = arr.shape
+    return buffered_stats_tiled(
+        sdf, tile_table_from_array(spark, arr, tile_px), BUFFERS, tile_px,
+        height=h, width=w, xres=xres).toPandas()
 
 
 _RASTERS = {"integer": lambda: materialize_raster(H, W),
-            "float32_nan": lambda: _float_raster(H, W)}
+            "float32_nan": lambda: _float_raster(H, W),
+            "float64_nan": lambda: _float_raster(H, W, np.float64)}
 
 
 def test_formula_edge_fallback_matches_oracle(spark):
     """Formula raster: points at its 4096-px edges take the clipping path."""
     pts = _edge_points(G.RASTER_H, G.RASTER_W, G.XRES, 150)
     got = buffered_stats(spark.createDataFrame(pts), BUFFERS).toPandas()
-    _assert_matches(got, _oracle(_formula_values, pts, G.XRES), len(pts),
-                    exact_mean=True)
+    _assert_matches(got, _oracle(_formula_values, pts, G.XRES), len(pts))
 
 
 @pytest.mark.parametrize("raster", sorted(_RASTERS))
@@ -151,14 +156,25 @@ def test_formula_edge_fallback_matches_oracle(spark):
 def test_zonal_strategy_matches_oracle_at_edges(spark, strategy, raster):
     arr = _RASTERS[raster]()
     pts = _edge_points(H, W, G.XRES, 300)
-    sdf = spark.createDataFrame(pts)
-    if strategy == "broadcast":
-        got = buffered_stats(sdf, BUFFERS, raster=arr)
-    else:
-        got = buffered_stats_tiled(sdf, tile_table_from_array(spark, arr, 128),
-                                   BUFFERS, 128, height=H, width=W)
-    _assert_matches(got.toPandas(), _oracle(_array_values(arr), pts, G.XRES),
-                    len(pts), exact_mean=strategy == "broadcast")
+    _assert_matches(_strategy(spark, strategy, pts, arr),
+                    _oracle(_array_values(arr), pts, G.XRES), len(pts))
+
+
+@pytest.mark.parametrize("strategy", ["broadcast", "tiled"])
+def test_zonal_double_coordinates_match_oracle(spark, strategy):
+    """Double-typed x/y are truncated toward zero, then floor-divided
+    (numpy's ``astype(np.int64) // xres``): −999.5 and −1,000.5 are both
+    pixel −1, −0.25 is pixel 0 and 245,999.9 is pixel 245."""
+    rng = np.random.default_rng(7)
+    xs = np.concatenate([[245_999.9, 246_000.4, -999.5, -1_000.5, -0.25],
+                         rng.uniform(-20_000, (W + 20) * G.XRES, 120)])
+    ys = np.concatenate([[265_999.2, -0.25, 100_000.0, -999.5, 300_000.5],
+                         rng.uniform(-20_000, (H + 20) * G.XRES, 120)])
+    pts = pd.DataFrame({"doc_id": np.arange(len(xs), dtype=np.int64),
+                        "x": xs, "y": ys})
+    arr = _float_raster(H, W)
+    _assert_matches(_strategy(spark, strategy, pts, arr),
+                    _oracle(_array_values(arr), pts, G.XRES), len(pts))
 
 
 def test_formula_raster_rejects_other_xres(spark):
@@ -178,11 +194,16 @@ def test_zonal_honours_xres(spark, strategy):
     assert [radius_px(b, xres) for b in BUFFERS] == [7, 9, 89]
     arr = _float_raster(h, w)
     pts = _edge_points(h, w, xres, 180)
-    sdf = spark.createDataFrame(pts)
-    if strategy == "broadcast":
-        got = buffered_stats(sdf, BUFFERS, raster=arr, xres=xres)
-    else:
-        got = buffered_stats_tiled(sdf, tile_table_from_array(spark, arr, 256),
-                                   BUFFERS, 256, height=h, width=w, xres=xres)
-    _assert_matches(got.toPandas(), _oracle(_array_values(arr), pts, xres),
-                    len(pts), exact_mean=strategy == "broadcast")
+    _assert_matches(_strategy(spark, strategy, pts, arr, 256, xres),
+                    _oracle(_array_values(arr), pts, xres), len(pts))
+
+
+def test_tiled_zonal_reference_scale_on_small_tiles(spark):
+    """The reference's 113 m grid with its 700 m / 1 km / 10 km buffers
+    (r = 7 / 9 / 89 px) on 64-px tiles: the largest disc spans up to
+    four tiles per axis and still matches the oracle bit for bit."""
+    xres, h, w = 113, 300, 340
+    arr = _float_raster(h, w)
+    pts = _edge_points(h, w, xres, 180)
+    _assert_matches(_strategy(spark, "tiled", pts, arr, 64, xres),
+                    _oracle(_array_values(arr), pts, xres), len(pts))
