@@ -19,18 +19,19 @@ Spark-first construction, reusing the IVF machinery
        sample (pinned membership AND order — a bare LIMIT has neither);
     2. assignment: broadcast centroids, one batched-matmul Arrow kernel —
        narrow, no shuffle;
-    3. pair generation: self-equi-join on the cluster id — ONE hash
-       shuffle keyed on (cluster), never a cross product;
+    3. pair search: ONE hash shuffle keyed on the cluster id carries the
+       int16-quantized vector, then one ``applyInPandas`` per cluster
+       tests its pairs as a blocked matmul — never a cross product;
     4. the near-dup predicate is EXACT INTEGER arithmetic end-to-end:
        embeddings quantize to int64 (×1000, the engine-wide scheme), and
-       cos(u,v) ≥ τ with τ = num/den tests as
+       cos(u,v) ≥ τ with τ = TAU_NUM/TAU_DEN tests as
 
            dot > 0  AND  dot²·den² ≥ num²·‖u‖²·‖v‖²
 
-       — no float anywhere, so results are bit-identical across engines,
-       partitionings and summation orders. int64 bounds (dim 64, |q| ≤
-       ~1000): dot ≤ 6.4e7 ⇒ dot²·den² ≤ 1.7e18 < 2^63 for den ≤ 20, and
-       num²·n1·n2 ≤ 3.4e17 for num ≤ 9 — asserted at call time.
+       — the dot runs in float64 dgemm but stays below 2⁵³, so it is
+       exact and results are bit-identical across engines, partitionings
+       and summation orders. Every batch checks ‖q‖² ≤ ``_N2_MAX``, which
+       keeps the predicate's operands inside int64 (``_n2_bound_ok``).
     5. keep policy: a vector is DROPPED iff a lower-id near-duplicate
        exists in its cluster (deterministic representative = min id; the
        paper keeps one exemplar per duplicate group — min-id is the
@@ -58,8 +59,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
-from .similarity import (_quant_expr, ivf_assign, ivf_assign_topp,
-                         ivf_train_centroids, training_sample)
+from .similarity import (ivf_assign, ivf_assign_topp, ivf_train_centroids,
+                         training_sample)
 
 TAU_NUM = 9          # τ = 9/20 = 0.45 — q37's corpus-calibrated threshold
 TAU_DEN = 20
@@ -67,7 +68,7 @@ TAU_DEN = 20
 
 def _quant16_expr(col: str) -> str:
     """SQL: array<float> -> array<smallint> with the engine-wide
-    floor(e·1000 + 0.5) quantization — bit-identical to ``_quant_expr``
+    floor(e·1000 + 0.5) quantization — bit-identical to ``similarity._quant_expr``
     but shipped at 2 bytes/component through the cluster shuffle (half
     the Arrow volume of the raw float32 vector). A component with
     |e| > 32 would overflow int16; it raises instead — the guard is
@@ -77,13 +78,13 @@ def _quant16_expr(col: str) -> str:
     NOTE (ADVICE r5): int16 representability is NOT the binding limit —
     the exact-integer cosine predicate needs ‖q‖² ≤ _N2_MAX (≈1.5e8, see
     ``_n2_bound_ok``), i.e. |e| ≲ sqrt(_N2_MAX/dim)/1000 (~1.5 at dim
-    64). The predicate-level guard is enforced per batch in the kernel
-    and in-expression in ``_quant_cols``; this int16 guard only protects
-    the shuffle encoding."""
+    64). The predicate-level guard is enforced per batch in the kernel;
+    this int16 guard only protects the shuffle encoding."""
     return (f"transform({col}, e -> CASE WHEN abs(CAST(e AS DOUBLE)) <= 32.0"
             f" THEN CAST(floor(CAST(e AS DOUBLE) * 1000 + 0.5) AS SMALLINT)"
             f" ELSE CAST(raise_error('semdedup: |component| > 32 overflows"
-            f" the int16 quantized shuffle — use the expression kernel')"
+            f" the int16 quantized shuffle; the exact cosine predicate"
+            f" needs ||q||^2 <= {_N2_MAX}')"
             f" AS SMALLINT) END)")
 
 
@@ -101,57 +102,6 @@ def _n2_bound_ok(n2_max: int) -> None:
             f"semdedup: max ‖q‖² = {n2_max} exceeds {_N2_MAX}; the exact "
             "int64 cosine predicate would overflow (component bound is "
             "|e| <= sqrt(_N2_MAX/dim)/1000, not the int16 limit)")
-
-
-def _quant_cols(df: DataFrame) -> DataFrame:
-    # the ‖q‖² guard is folded into the produced n2 VALUE (rangejoin
-    # lesson: Catalyst prunes unevaluated guard columns) so the Catalyst
-    # pair path fails fast instead of wrapping int64 in the predicate
-    qe = _quant_expr("embedding")
-    n2 = (f"aggregate(transform({qe}, e -> e * e), "
-          f"0L, (acc, v) -> acc + v)")
-    return df.select(
-        F.col("cluster"),
-        F.col("vec_id"),
-        F.expr(qe).alias("qv"),
-        F.expr(f"CASE WHEN {n2} <= {_N2_MAX} THEN {n2} ELSE "
-               f"CAST(raise_error('semdedup: ||q||^2 overflows the exact "
-               f"int64 cosine predicate') AS BIGINT) END").alias("n2"))
-
-
-def semantic_neardup_edges(emb: DataFrame, n_lists: int = 8,
-                           tau_num: int = TAU_NUM, tau_den: int = TAU_DEN,
-                           centroids: np.ndarray | None = None
-                           ) -> DataFrame:
-    """Cluster-local near-dup edges of ``(vec_id, embedding)`` rows
-    (id1 < id2, same cluster, cos ≥ tau_num/tau_den exact-integer).
-    Columns: cluster, id1, id2."""
-    _check_tau(tau_num, tau_den)
-    if centroids is None:
-        centroids = ivf_train_centroids(training_sample(emb), n_lists)
-    assigned = (ivf_assign(emb, centroids)
-                .withColumnRenamed("ivf_list", "cluster"))
-    q = _quant_cols(assigned)
-    a = q.select("cluster", F.col("vec_id").alias("id1"),
-                 F.col("qv").alias("qv1"), F.col("n2").alias("n21"))
-    b = q.select("cluster", F.col("vec_id").alias("id2"),
-                 F.col("qv").alias("qv2"), F.col("n2").alias("n22"))
-    pairs = (a.join(b, "cluster")
-             .filter(F.col("id1") < F.col("id2"))
-             .withColumn("dot", F.expr(
-                 "aggregate(zip_with(qv1, qv2, (x, y) -> x * y), 0L, "
-                 "(acc, v) -> acc + v)")))
-    near = pairs.filter(
-        (F.col("dot") > 0)
-        & (F.col("dot") * F.col("dot") * F.lit(tau_den * tau_den)
-           >= F.lit(tau_num * tau_num) * F.col("n21") * F.col("n22")))
-    return near.select("cluster", "id1", "id2")
-
-
-def _check_tau(tau_num: int, tau_den: int) -> None:
-    if not (0 < tau_num <= tau_den <= 20):
-        raise ValueError("tau must be in (0, 1] with den <= 20 "
-                         "(int64 overflow bound, module docstring)")
 
 
 def _cap_cluster_salt(assigned: DataFrame, max_cluster: int) -> DataFrame:
@@ -177,14 +127,13 @@ def semantic_neardup_edges_np(emb: DataFrame, n_lists: int = 8,
                               centroids: np.ndarray | None = None,
                               n_probe: int = 1,
                               max_cluster: int | None = None) -> DataFrame:
-    """The throughput twin of ``semantic_neardup_edges``: one
-    ``applyInPandas`` per cluster running the within-cluster pair search
-    as a blocked matmul (2048-row dot blocks — cache-resident, the
-    zonal-gather lesson) instead of a per-pair Catalyst expression.
-    IDENTICAL result set at ``n_probe=1``: the same ×1000 quantization and
-    the same exact integer predicate, just evaluated c×c at a time. This
-    is the kernel the 100 TB run uses — the expression form pays per-pair
-    higher-order-function evaluation; this pays one BLAS pass per cluster.
+    """Cluster-local near-dup edges of ``(vec_id, embedding)`` rows
+    (id1 < id2, same cluster, cos ≥ TAU_NUM/TAU_DEN exact-integer).
+    Columns: cluster, id1, id2. One ``applyInPandas`` per cluster runs
+    the within-cluster pair search as a blocked matmul (2048-row dot
+    blocks — cache-resident, the zonal-gather lesson): one BLAS pass per
+    cluster instead of a per-pair expression. The ×1000 quantization and
+    the exact integer predicate are the module docstring's.
     Parallelism = n_lists (size your cluster count ≥ executor slots; a
     degenerate giant cluster serializes into one task — cap upstream).
 
@@ -204,7 +153,6 @@ def semantic_neardup_edges_np(emb: DataFrame, n_lists: int = 8,
     the LOWER-numbered one (canonical-emission rule, checked against the
     visitor's probe set in-kernel) — no post-hoc dedup shuffle, the
     interval-join lesson. Shuffle volume scales ×n_probe."""
-    _check_tau(TAU_NUM, TAU_DEN)
     if centroids is None:
         centroids = ivf_train_centroids(training_sample(emb), n_lists)
     # the cluster shuffle ships the QUANTIZED int16 vector, not the raw
@@ -339,7 +287,7 @@ def semantic_dedup(emb: DataFrame, n_lists: int = 8) -> DataFrame:
     centroids = ivf_train_centroids(training_sample(emb), n_lists)
     assigned = (ivf_assign(emb, centroids)
                 .withColumnRenamed("ivf_list", "cluster"))
-    edges = semantic_neardup_edges(emb, n_lists, centroids=centroids)
+    edges = semantic_neardup_edges_np(emb, n_lists, centroids=centroids)
     # per-vector rollup of the (already cluster-bounded) edge set: one
     # map-side-combined aggregate over exploded endpoints
     nbrs = (edges.select(F.col("id1").alias("vec_id"),

@@ -3031,11 +3031,11 @@ FROM corners GROUP BY doc_id
 def q84_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup over the embeddings table: deterministic k-means (the
     q41/q59 trainer), broadcast-centroid assignment (map-only), ONE
-    cluster-keyed self-join for pairs, exact-integer cosine threshold
-    (dot²·den² ≥ num²·n1·n2 — no float anywhere, bit-identical across
-    engines), keep = min-id exemplar per near-dup neighborhood. Oracle:
-    committed golden parquet from an independent numpy brute-force replay
-    (tools/make_golden.py golden_q84)."""
+    cluster-keyed shuffle and a blocked-matmul pair search per cluster,
+    exact-integer cosine threshold (dot²·den² ≥ num²·n1·n2,
+    bit-identical across engines), keep = min-id exemplar per near-dup
+    neighborhood. Oracle: committed golden parquet from an independent
+    numpy brute-force replay (tools/make_golden.py golden_q84)."""
     from ..operators.semdedup import semantic_dedup
     return semantic_dedup(_emb(spark, sf_dir), n_lists=8)
 

@@ -6,14 +6,16 @@ Usage (cluster):
     zip -r ahgts.zip air_health_gis_tools_spark
     spark-submit --py-files ahgts.zip jobs/extract_job.py \
         --pages /data/pages_parquet --output /out/extract \
-        --checkpoint /out/ckpt --buffers 700 1000 10000
+        --buffers 700 1000 10000
 
-Usage (sandbox smoke):
-    python jobs/extract_job.py --synthetic-pages 2000 --output /tmp/out \
-        --checkpoint /tmp/ckpt
+Usage (local smoke):
+    python jobs/extract_job.py --synthetic-pages 2000 --output /tmp/out
 
-The job writes three result tables (zonal, knn, pip) plus a lineage/metrics
-manifest; re-running with the same --checkpoint resumes unfinished buckets.
+The job commits three result tables, ``{output}/zonal``, ``{output}/knn``
+and ``{output}/pip``, each a ``CheckpointStore`` (bucketed parquet plus a
+lineage/metrics manifest, plans/lineage.py) written by ``run_stage``.
+Re-running with the same --output resumes: committed buckets of every
+table are kept and only the missing ones run.
 The pages are scanned, geocoded and cell-encoded once per run: all three
 tables read one local checkpoint of the point side (plans/pipeline.py).
 """
@@ -28,7 +30,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession
 
 
 def main(argv=None):
@@ -37,10 +39,9 @@ def main(argv=None):
     p.add_argument("--synthetic-pages", type=int, default=0,
                    help="generate N deterministic fixture pages instead")
     p.add_argument("--output", required=True)
-    p.add_argument("--checkpoint", required=True)
     p.add_argument("--buffers", type=int, nargs="+", default=[700, 1000, 10000])
     p.add_argument("--resume-buckets", type=int, default=8,
-                   help="lineage buckets for the resumable zonal stage")
+                   help="lineage buckets of each resumable table")
     args = p.parse_args(argv)
 
     # on a real cluster spark-submit provides the session; builder config
@@ -48,8 +49,7 @@ def main(argv=None):
     from air_health_gis_tools_spark.session import get_spark
     spark = SparkSession.getActiveSession() or get_spark("extract_job")
 
-    from air_health_gis_tools_spark.plans.lineage import (CheckpointStore,
-                                                          run_stage)
+    from air_health_gis_tools_spark.plans import lineage
     from air_health_gis_tools_spark.plans.pipeline import extract_pipeline
     from air_health_gis_tools_spark.plans.queries import (monitors_df,
                                                           polys_df)
@@ -66,18 +66,19 @@ def main(argv=None):
     out = extract_pipeline(pages, monitors_df(spark), polys_df(spark),
                            buffers_m=args.buffers)
 
-    store = CheckpointStore(args.checkpoint)
-    zonal = out["zonal"].withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(args.resume_buckets)))
-    run_stage(zonal, "bucket", store,
-              buckets=list(range(args.resume_buckets)))
+    buckets = list(range(args.resume_buckets))
+    rows = {}
+    for table, key in (("zonal", "url"), ("knn", "doc_id"),
+                       ("pip", "poly_id")):
+        store = lineage.CheckpointStore(f"{args.output}/{table}")
+        lineage.run_stage(
+            out[table].withColumn(
+                "bucket", lineage.salted_bucket(key, args.resume_buckets)),
+            "bucket", store, buckets=buckets)
+        done = store.done_buckets()
+        rows[table] = sum(done[str(b)]["rows"] for b in buckets)
 
-    out["knn"].write.mode("overwrite").parquet(f"{args.output}/knn")
-    out["pip"].write.mode("overwrite").parquet(f"{args.output}/pip")
-
-    done = store.done_buckets()
-    n = sum(done[str(b)]["rows"] for b in range(args.resume_buckets))
-    print(json.dumps({"rows": n,
+    print(json.dumps({"rows": rows,
                       "seconds": round(time.perf_counter() - t0, 2),
                       "plan": out["plan"].strategy,
                       "output": args.output}))

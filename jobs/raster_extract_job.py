@@ -34,10 +34,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F
+import pyarrow.parquet as pq
+from pyspark.sql import SparkSession, functions as F
 
 
-def main() -> None:
+def main(argv=None) -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--tif", required=True)
     ap.add_argument("--points", help="parquet with (doc_id, x, y)")
@@ -47,16 +48,16 @@ def main() -> None:
     ap.add_argument("--buffers", type=int, nargs="+",
                     default=[700, 1000, 10000])
     ap.add_argument("--output", required=True)
-    ap.add_argument("--cpus", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
     from air_health_gis_tools_spark.operators.zonal import buffered_stats_tiled
     from air_health_gis_tools_spark.session import get_spark
     from air_health_gis_tools_spark.sources.geotiff import (
         geotiff_tile_table, read_ifd)
 
-    spark = get_spark("raster_extract", cpus=args.cpus)
+    # on a real cluster spark-submit provides the session; builder config
+    # here only fills in when run directly
+    spark = SparkSession.getActiveSession() or get_spark("raster_extract")
     t0 = time.perf_counter()
     info = read_ifd(args.tif)
     xres = int(round(abs(info.transform[1]))) if info.transform else 1000
@@ -83,20 +84,21 @@ def main() -> None:
                              (col * xres + xres // 2).alias("x"),
                              (row * xres + xres // 2).alias("y"))
 
-    tiles = geotiff_tile_table(spark, args.tif,
-                               n_partitions=args.cpus * 4)
+    tiles = geotiff_tile_table(
+        spark, args.tif,
+        n_partitions=spark.sparkContext.defaultParallelism * 4)
     out = buffered_stats_tiled(pts, tiles, args.buffers,
                                tile_px=info.tile_h, height=info.height,
                                width=info.width, xres=xres)
     out.write.mode("overwrite").parquet(args.output)
-    n_out = spark.read.parquet(args.output).count()
+    n_out = sum(pq.read_metadata(os.path.join(args.output, f)).num_rows
+                for f in os.listdir(args.output) if f.endswith(".parquet"))
     print(json.dumps({
         "tif": args.tif, "raster_px": info.width * info.height,
         "points": n_out, "buffers": args.buffers,
         "seconds": round(time.perf_counter() - t0, 2),
         "output": args.output,
     }))
-    spark.stop()
 
 
 if __name__ == "__main__":

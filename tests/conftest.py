@@ -7,7 +7,8 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from air_health_gis_tools_spark.session import get_spark  # noqa: E402
+from air_health_gis_tools_spark.session import (DEFAULT_CPUS,  # noqa: E402
+                                                get_spark)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 SF_DIR_MED = os.environ.get("SPARK_GRAFT_TEST_SF_MED", "/root/testdata/sf0.01")
@@ -51,8 +52,7 @@ def reference_data(request):
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")),
-                  shuffle_partitions=8)
+    s = get_spark("tests", cpus=DEFAULT_CPUS, shuffle_partitions=8)
     yield s
 
 

@@ -1,13 +1,16 @@
-"""spark-submit job entry points, driven in-process (the CLI path the
-north_rule ships: WARC segment → curated pages table)."""
+"""spark-submit job entry points, driven in-process (the CLI paths the
+north_rule ships: WARC segment → curated pages table, pages → resumable
+extraction tables, GeoTIFF → zonal table)."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 
 import numpy as np
 import pandas as pd
+import pytest
 
 
 def _expected_curated(n):
@@ -169,3 +172,83 @@ def test_warc_curation_single_pass_plan(spark, tmp_path):
     exchanges = [ln for ln in physical.splitlines() if "Exchange" in ln]
     assert len(exchanges) == 2
     assert all("hashpartitioning" in ln for ln in exchanges)
+
+
+def _committed(root):
+    """Every row a ``CheckpointStore`` at ``root`` holds, read from its
+    bucket files in a canonical row order."""
+    pdf = pd.concat([pd.read_parquet(f) for f in
+                     glob.glob(os.path.join(root, "bucket=*", "*.parquet"))],
+                    ignore_index=True)
+    return pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
+
+
+def test_extract_job_resumes_every_table(spark, tmp_path, monkeypatch):
+    """A run that dies in the PIP commit resumes: the rerun keeps the
+    zonal and kNN commits untouched (byte-identical manifests), commits
+    PIP, and all three tables equal a clean run's."""
+    from air_health_gis_tools_spark.plans import lineage
+    from jobs.extract_job import main
+    args = ["--synthetic-pages", "3000"]
+    clean, out = str(tmp_path / "clean"), str(tmp_path / "out")
+    main([*args, "--output", clean])
+
+    run_stage = lineage.run_stage
+
+    def dies_in_pip(df, part_col, store, buckets):
+        if store.root.endswith("pip"):
+            raise RuntimeError("killed in the pip commit")
+        return run_stage(df, part_col, store, buckets)
+
+    monkeypatch.setattr(lineage, "run_stage", dies_in_pip)
+    with pytest.raises(RuntimeError, match="pip commit"):
+        main([*args, "--output", out])
+    monkeypatch.undo()
+
+    def manifest(table):
+        with open(os.path.join(out, table, "_manifest.json"), "rb") as f:
+            return f.read()
+
+    before = {t: manifest(t) for t in ("zonal", "knn")}
+    assert not os.path.exists(os.path.join(out, "pip", "_manifest.json"))
+    main([*args, "--output", out])
+    assert {t: manifest(t) for t in ("zonal", "knn")} == before
+    for table, n in (("zonal", 3000), ("knn", 3000), ("pip", 50)):
+        got = _committed(os.path.join(out, table))
+        assert len(got) == n
+        pd.testing.assert_frame_equal(
+            got, _committed(os.path.join(clean, table)))
+
+
+def test_raster_extract_job_matches_broadcast_kernel(spark, tmp_path):
+    """The GeoTIFF job (tile scan → tiled zonal) on a 113 m raster with
+    nodata gives, for every synthetic point, the broadcast kernel's
+    statistics over the same array bit for bit."""
+    from air_health_gis_tools_spark.operators.zonal import buffered_stats
+    from air_health_gis_tools_spark.sources.geotiff import write_geotiff
+    from air_health_gis_tools_spark.sources.raster import (
+        tile_table_from_array)
+    from jobs.raster_extract_job import main
+    rng = np.random.default_rng(5)
+    arr = rng.integers(0, 1000, size=(300, 260)).astype(np.float64)
+    arr[rng.random(arr.shape) < 0.2] = np.nan
+    tif, out = str(tmp_path / "r.tif"), str(tmp_path / "zonal")
+    write_geotiff(tile_table_from_array(spark, arr, tile_px=128), tif,
+                  height=300, width=260, tile_px=128,
+                  transform=(0.0, 113.0, 0.0, -113.0))
+    main(["--tif", tif, "--synthetic-points", "500", "--output", out])
+    got = (spark.read.parquet(out).toPandas()
+           .sort_values("doc_id").reset_index(drop=True))
+    # the job's synthetic points: interior pixels, 16 px from every edge
+    ids = np.arange(500, dtype=np.int64)
+    pts = pd.DataFrame({
+        "doc_id": ids,
+        "x": (16 + (ids * 48271 + 11) % (260 - 32)) * 113 + 113 // 7,
+        "y": (16 + (ids * 16807 + 23) % (300 - 32)) * 113 + 113 // 2})
+    want = (buffered_stats(spark.createDataFrame(pts), [700, 1000, 10000],
+                           raster=arr, xres=113)
+            .drop("x", "y").toPandas()
+            .sort_values("doc_id").reset_index(drop=True))
+    assert len(got) == 500 and list(got.columns) == list(want.columns)
+    assert len(want.columns) == 1 + 12
+    pd.testing.assert_frame_equal(got, want, check_exact=True)

@@ -327,20 +327,3 @@ def test_run_stage_commits_without_read_back(spark, tmp_path):
     assert os.listdir(store.bucket_path("2")) == []
     assert out.schema == docs.schema
     assert out.count() == docs.count()
-
-
-def test_run_stage_bucket_discovery_is_bounded(spark, tmp_path, monkeypatch):
-    """VERDICT r2 #7: buckets=None with a high-cardinality part_col must
-    fail fast with guidance, never collect unbounded to the driver."""
-    import air_health_gis_tools_spark.plans.lineage as L
-    monkeypatch.setattr(L, "MAX_DISCOVERED_BUCKETS", 50)
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    store = CheckpointStore(str(tmp_path / "ckpt_hc"))
-    with pytest.raises(ValueError, match="distinct values"):
-        run_stage(docs, "doc_id", store, buckets=None)
-    # low-cardinality discovery still works end-to-end
-    docs4 = docs.withColumn("bucket", F.pmod(F.col("doc_id"), F.lit(4)))
-    store2 = CheckpointStore(str(tmp_path / "ckpt_ok"))
-    out = run_stage(docs4, "bucket", store2, buckets=None)
-    assert out.count() == docs.count()
-    assert len(store2.done_buckets()) == 4

@@ -1,6 +1,6 @@
 """SemDeDup operator (operators/semdedup.py): exact-integer threshold
 predicate, cluster restriction, min-id keep rule, degenerate-corpus
-behavior, and the overflow guard."""
+behavior, and the two input guards (‖q‖² and int16 component bounds)."""
 
 from __future__ import annotations
 
@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F, types as T
 
 from air_health_gis_tools_spark.operators.semdedup import (
-    semantic_dedup, semantic_neardup_edges, semantic_neardup_edges_np)
+    semantic_dedup, semantic_neardup_edges_np)
 
 DIM = 8
 SCHEMA = T.StructType([
@@ -47,25 +47,29 @@ def _brute_edges(vectors, cluster, tau_num, tau_den):
 def test_edges_match_bruteforce_and_stay_in_cluster(spark):
     """Plant near-dups (tiny perturbations) in a random corpus; the
     operator's edge set must equal the numpy brute force restricted to
-    its own cluster assignment."""
-    base = _rng_vectors(40)
-    planted = base[:6] + _rng_vectors(6, seed=9) * 0.01
-    vectors = np.vstack([base, planted.astype(np.float32)])
-    df = _emb_df(spark, vectors)
-    verdict = semantic_dedup(df, n_lists=4).toPandas().sort_values(
-        "vec_id").reset_index(drop=True)
-    cluster = verdict["cluster"].to_numpy()
-    got = {(r["id1"], r["id2"]) for r in
-           semantic_neardup_edges(df, n_lists=4).collect()}
-    expected = _brute_edges(vectors, cluster, 9, 20)
-    assert got == expected
-    assert expected, "fixture must plant at least one near-dup pair"
-    # keep rule from the same edge set: dropped iff a lower-id neighbor
-    dropped = {v for _, v in expected}
-    for _, row in verdict.iterrows():
-        assert row["keep"] == (0 if row["vec_id"] in dropped else 1)
-        deg = sum(1 for e in expected if row["vec_id"] in e)
-        assert row["n_nbrs"] == deg
+    its own cluster assignment, on three corpora (each fits one 2048-row
+    block, so the strict-upper-triangle mask spans the whole matrix)."""
+    for n, n_planted, seed, jitter_seed in ((40, 6, 7, 9), (40, 6, 13, 14),
+                                            (30, 5, 31, 32)):
+        base = _rng_vectors(n, seed=seed)
+        planted = (base[:n_planted]
+                   + _rng_vectors(n_planted, seed=jitter_seed) * 0.01)
+        vectors = np.vstack([base, planted.astype(np.float32)])
+        df = _emb_df(spark, vectors)
+        verdict = semantic_dedup(df, n_lists=4).toPandas().sort_values(
+            "vec_id").reset_index(drop=True)
+        cluster = verdict["cluster"].to_numpy()
+        got = {(r["id1"], r["id2"]) for r in
+               semantic_neardup_edges_np(df, n_lists=4).collect()}
+        expected = _brute_edges(vectors, cluster, 9, 20)
+        assert got == expected
+        assert expected, "fixture must plant at least one near-dup pair"
+        # keep rule from the same edge set: dropped iff a lower-id neighbor
+        dropped = {v for _, v in expected}
+        for _, row in verdict.iterrows():
+            assert row["keep"] == (0 if row["vec_id"] in dropped else 1)
+            deg = sum(1 for e in expected if row["vec_id"] in e)
+            assert row["n_nbrs"] == deg
 
 
 def test_identical_flood_keeps_one_per_cluster(spark):
@@ -86,28 +90,24 @@ def test_orthogonal_corpus_all_kept(spark):
     assert (verdict["n_nbrs"] == 0).all()
 
 
-def test_numpy_kernel_equals_expression_kernel(spark):
-    """The blocked-matmul throughput twin must produce the identical edge
-    set (same quantization, same integer predicate) — including planted
-    near-dups and block boundaries (corpus > one 2048 block would be slow
-    here; boundary logic is exercised via a tiny block by monkeypatching
-    nothing: 46 rows with block size 2048 still covers the strict-upper-
-    triangle masking across the whole matrix)."""
-    base = _rng_vectors(40, seed=13)
-    planted = base[:6] + _rng_vectors(6, seed=14) * 0.01
-    vectors = np.vstack([base, planted.astype(np.float32)])
-    df = _emb_df(spark, vectors)
-    expr_edges = {(r["id1"], r["id2"]) for r in
-                  semantic_neardup_edges(df, n_lists=4).collect()}
-    np_edges = {(r["id1"], r["id2"]) for r in
-                semantic_neardup_edges_np(df, n_lists=4).collect()}
-    assert expr_edges == np_edges
-    assert expr_edges
+def test_overflow_guard(spark):
+    """‖q‖² past ``_N2_MAX`` would overflow the exact int64 predicate:
+    eight components at 5.0 give ‖q‖² = 2·10⁸ and raise, through
+    ``semantic_dedup``, before any edge is emitted."""
+    from air_health_gis_tools_spark.operators.semdedup import _N2_MAX
+    vectors = np.vstack([np.full((1, DIM), 5.0), _rng_vectors(9)])
+    assert 8 * 5000 ** 2 > _N2_MAX
+    with pytest.raises(Exception, match=f"exceeds {_N2_MAX}"):
+        semantic_dedup(_emb_df(spark, vectors), n_lists=2).collect()
 
 
-def test_overflow_guard():
-    with pytest.raises(ValueError, match="overflow"):
-        semantic_neardup_edges(None, tau_num=21, tau_den=40)
+def test_int16_component_guard(spark):
+    """A component past ±32 cannot ship as the int16 quantized vector:
+    the shuffle encoding raises instead of wrapping."""
+    vectors = _rng_vectors(10)
+    vectors[3, 0] = 40.0
+    with pytest.raises(Exception, match=r"\|component\| > 32"):
+        semantic_dedup(_emb_df(spark, vectors), n_lists=2).collect()
 
 
 def test_integer_predicate_equals_float_threshold(spark):
@@ -116,7 +116,7 @@ def test_integer_predicate_equals_float_threshold(spark):
     vectors = _rng_vectors(30, seed=11)
     df = _emb_df(spark, vectors)
     edges = {(r["id1"], r["id2"]) for r in
-             semantic_neardup_edges(df, n_lists=1).collect()}
+             semantic_neardup_edges_np(df, n_lists=1).collect()}
     q = np.floor(vectors.astype(np.float64) * 1000 + 0.5)
     norm = np.sqrt((q * q).sum(axis=1))
     cos = (q @ q.T) / norm[:, None] / norm[None, :]
@@ -162,21 +162,6 @@ def test_multiprobe_recall_monotone_and_exact(spark):
     one = {(r["id1"], r["id2"]) for r in
            semantic_neardup_edges_np(df, n_lists=4, n_probe=1).collect()}
     assert len(full) >= len(one)
-
-
-def test_multiprobe_default_matches_expression_kernel(spark):
-    """n_probe=1 (the default) must remain bit-identical to the Catalyst
-    expression form — the q84 golden contract."""
-    base = _rng_vectors(30, seed=31)
-    planted = base[:5] + _rng_vectors(5, seed=32) * 0.01
-    vectors = np.vstack([base, planted.astype(np.float32)])
-    df = _emb_df(spark, vectors)
-    expr_edges = {(r["id1"], r["id2"]) for r in
-                  semantic_neardup_edges(df, n_lists=4).collect()}
-    np_edges = {(r["id1"], r["id2"]) for r in
-                semantic_neardup_edges_np(df, n_lists=4,
-                                          n_probe=1).collect()}
-    assert expr_edges == np_edges
 
 
 def test_max_cluster_noop_when_under_cap(spark):
