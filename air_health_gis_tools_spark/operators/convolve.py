@@ -2,12 +2,11 @@
 
 The reference's A2 operator (``buffer_convolve``, extract_raster_buffer.py:
 68-80) convolves the WHOLE raster in one resident ndarray. The scale path
-here is tile + halo exchange (SURVEY.md A2 row): every tile goes to the
-output groups whose halo window it intersects
-(``sources/raster.halo_groups``, which also states the fan-out), each group
-pastes its tiles into one padded window (``fill_window``) and convolves it
-with the SAME shift-accumulate kernel order as the single-node reference
-implementation (functions/ref_compat.convolve_extend) — so the
+here is tile + halo exchange (SURVEY.md A2 row): the tile→tile window
+pass ``sources/raster.map_windows`` (whose docstrings state the fan-out)
+hands each output group one padded window of the raster, which it
+convolves with the SAME shift-accumulate kernel order as the single-node
+reference implementation (functions/ref_compat.convolve_extend) — so the
 distributed result is bit-identical to the whole-array result, any tiling.
 Only the tiles shuffle; at 100 TB the tile table is the raster's native
 COG layout and this is a single self-join-shaped stage.
@@ -22,7 +21,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from ..geo_synth import RASTER_H, RASTER_W, XRES
-from ..sources.raster import (TILE_SCHEMA, fdiv, fill_window, halo_groups,
+from ..sources.raster import (TILE_SCHEMA, fdiv, map_windows, tile_frame,
                               tile_id_of)
 
 # superblock side in tiles for convolve_sum_count_tiles
@@ -53,25 +52,19 @@ def convolve_tiles(tiles: DataFrame, kernel: np.ndarray, tile_px: int,
     """Focal sum/area convolution over a tile table with halo exchange.
 
     Returns a tile table of the same tiling containing convolved values.
-    Requires halo (kernel//2) ≤ tile_px.
     """
     kh, kw = kernel.shape
     ph, pw = kh // 2, kw // 2
-    assert ph <= tile_px and pw <= tile_px, "halo larger than tile"
     bc_kernel = tiles.sparkSession.sparkContext.broadcast(kernel)
     halo = max(ph, pw)
-    contrib = halo_groups(tiles, tile_px, halo, halo, height, width)
 
-    def _assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        otr, otc = int(key[0]) >> 32, int(key[0]) & 0xFFFFFFFF
-        r0 = otr * tile_px
-        c0 = otc * tile_px
-        h = min(tile_px, height - r0)
-        w = min(tile_px, width - c0)
-        kernel = bc_kernel.value
-        wr0 = r0 - ph  # absolute raster row of win[0, 0]
-        wc0 = c0 - pw
-        win = fill_window(pdf, wr0, wc0, h + kh - 1, w + kw - 1)
+    def _convolve(otr: int, otc: int, win: np.ndarray) -> pd.DataFrame:
+        wr0 = otr * tile_px - ph  # absolute raster row of win[0, 0]
+        wc0 = otc * tile_px - pw
+        h = min(tile_px, height - otr * tile_px)
+        w = min(tile_px, width - otc * tile_px)
+        win = win[halo - ph:halo - ph + h + kh - 1,
+                  halo - pw:halo - pw + w + kw - 1]
         # replicate at raster boundary (astropy boundary='extend' semantics)
         top = max(0, -wr0)
         left = max(0, -wc0)
@@ -85,13 +78,11 @@ def convolve_tiles(tiles: DataFrame, kernel: np.ndarray, tile_px: int,
             win[:, :left] = win[:, left][:, None]
         if right:
             win[:, -right:] = win[:, -(right + 1)][:, None]
-        out = convolve_valid(win, kernel)
-        return pd.DataFrame([{
-            "tile_id": tile_id_of(otr, otc), "row0": r0, "col0": c0,
-            "h": h, "w": w, "data": out.ravel()}])
+        return tile_frame(otr, otc, tile_px,
+                          convolve_valid(win, bc_kernel.value))
 
-    return (contrib.groupBy("group_id")
-            .applyInPandas(_assemble, TILE_SCHEMA))
+    return map_windows(tiles, tile_px, halo, halo, height, width, _convolve,
+                       TILE_SCHEMA)
 
 
 def gather_point_values(points: DataFrame, tiles: DataFrame,
@@ -168,11 +159,15 @@ def convolve_sum_count_tiles(tiles: DataFrame, kernels: dict,
              for k, v in kernels.items()}
     ph = max(h for h, _ in halos.values())
     pw = max(w for _, w in halos.values())
-    assert ph <= tile_px and pw <= tile_px, "halo larger than tile"
     spark = tiles.sparkSession
     bc_kernels = spark.sparkContext.broadcast(
         {k: np.asarray(v, dtype=np.float64) for k, v in kernels.items()})
+    # SUPERBLOCK grouping (SB_TILES x SB_TILES tiles per task): SB_TILES=2
+    # (512 px superblocks, ~12 MB output per group) measured fastest at
+    # local[32], 2x the per-tile grouping; SB_TILES=4 forms 50 MB groups
+    # (memory pressure + last-wave imbalance)
     sb_px = SB_TILES * tile_px
+    halo = max(ph, pw)
 
     fields = [T.StructField("tile_id", T.LongType()),
               T.StructField("row0", T.IntegerType()),
@@ -184,21 +179,15 @@ def convolve_sum_count_tiles(tiles: DataFrame, kernels: dict,
                    T.StructField(f"c_{k}", T.ArrayType(T.LongType()))]
     out_schema = T.StructType(fields)
 
-    # SUPERBLOCK grouping (SB_TILES x SB_TILES tiles per task): SB_TILES=2
-    # (512 px superblocks, ~12 MB output per group) measured fastest at
-    # local[32], 2x the per-tile grouping; SB_TILES=4 forms 50 MB groups
-    # (memory pressure + last-wave imbalance)
-    halo = max(ph, pw)
-    contrib = halo_groups(tiles, sb_px, halo, halo, height, width)
-
-    def _assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        sbr, sbc = int(key[0]) >> 32, int(key[0]) & 0xFFFFFFFF
+    def _planes(sbr: int, sbc: int, win: np.ndarray) -> pd.DataFrame:
         r0 = sbr * sb_px
         c0 = sbc * sb_px
         sb_h = min(sb_px, height - r0)
         sb_w = min(sb_px, width - c0)
-        win = fill_window(pdf, r0 - ph, c0 - pw,
-                          sb_h + 2 * ph, sb_w + 2 * pw)
+        # the window from raster pixel (r0 − ph, c0 − pw); the row prefix
+        # sums start at its left edge, so what lies past the last chord
+        # changes none of them
+        win = win[halo - ph:, halo - pw:]
         filled = np.nan_to_num(win, nan=0.0)
         valid = (~np.isnan(win)).astype(np.float64)
         # CHORD DECOMPOSITION: a circle kernel is one contiguous column
@@ -253,5 +242,5 @@ def convolve_sum_count_tiles(tiles: DataFrame, kernels: dict,
                 rows.append(row)
         return pd.DataFrame(rows)
 
-    return (contrib.groupBy("group_id")
-            .applyInPandas(_assemble, out_schema))
+    return map_windows(tiles, sb_px, halo, halo, height, width, _planes,
+                       out_schema)

@@ -289,11 +289,12 @@ def semantic_dedup(emb: DataFrame, n_lists: int = 8) -> DataFrame:
                 .withColumnRenamed("ivf_list", "cluster"))
     edges = semantic_neardup_edges_np(emb, n_lists, centroids=centroids)
     # per-vector rollup of the (already cluster-bounded) edge set: one
-    # map-side-combined aggregate over exploded endpoints
-    nbrs = (edges.select(F.col("id1").alias("vec_id"),
-                         F.lit(0).alias("has_lower"))
-            .unionAll(edges.select(F.col("id2").alias("vec_id"),
-                                   F.lit(1).alias("has_lower")))
+    # aggregate over both endpoints, exploded in one pass over the edges
+    nbrs = (edges.select(F.inline(F.array(
+                F.struct(F.col("id1").alias("vec_id"),
+                         F.lit(0).alias("has_lower")),
+                F.struct(F.col("id2").alias("vec_id"),
+                         F.lit(1).alias("has_lower")))))
             .groupBy("vec_id")
             .agg(F.count(F.lit(1)).alias("n_nbrs"),
                  F.max("has_lower").alias("dropped")))

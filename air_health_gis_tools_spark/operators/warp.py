@@ -12,8 +12,8 @@ output tile (src (tr, tc) → out (tr//f, tc//f)); group the f² source tiles
 per output tile, assemble, and gather centers. One narrow shuffle keyed by
 output tile; no pixel is read twice. The bilinear and Lanczos modes swap
 the gather kernel and widen the window by their stencil's halo. All three
-route tiles with ``sources/raster.halo_groups`` (group = one output tile,
-``tile_px·f`` source pixels) and paste them with ``fill_window``.
+run through the tile→tile window pass ``sources/raster.map_windows``
+(group = one output tile, ``tile_px·f`` source pixels).
 """
 
 from __future__ import annotations
@@ -23,8 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..geo_synth import RASTER_H, RASTER_W
-from ..sources.raster import (TILE_SCHEMA, fill_window, halo_groups,
-                              tile_id_of)
+from ..sources.raster import TILE_SCHEMA, map_windows, tile_frame
 
 
 def resample_tiles_nearest(tiles: DataFrame, factor: int, tile_px: int,
@@ -49,14 +48,8 @@ def resample_tiles_nearest(tiles: DataFrame, factor: int, tile_px: int,
     out_w = -(-width // f)
 
     span = tile_px * f
-    keyed = halo_groups(tiles, span, 0, 0, height, width)
 
-    def _assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        otr, otc = int(key[0]) >> 32, int(key[0]) & 0xFFFFFFFF
-        # source window covered by this output tile
-        src_r0 = otr * span
-        src_c0 = otc * span
-        win = fill_window(pdf, src_r0, src_c0, span, span)
+    def _nearest(otr: int, otc: int, win: np.ndarray) -> pd.DataFrame:
         # trim edge tiles to the true downsampled extent so h/w metadata
         # matches the output raster dims (no phantom NaN-padded pixels)
         h = min(tile_px, out_h - otr * tile_px)
@@ -68,17 +61,15 @@ def resample_tiles_nearest(tiles: DataFrame, factor: int, tile_px: int,
         # falls past the source extent (e.g. height=997, f=4)
         idx_r = np.clip(
             np.arange(otr * tile_px, otr * tile_px + h, dtype=np.int64)
-            * f + off, 0, height - 1) - src_r0
+            * f + off, 0, height - 1) - otr * span
         idx_c = np.clip(
             np.arange(otc * tile_px, otc * tile_px + w, dtype=np.int64)
-            * f + off, 0, width - 1) - src_c0
-        out = win[np.ix_(idx_r, idx_c)]
-        return pd.DataFrame([{
-            "tile_id": tile_id_of(otr, otc),
-            "row0": otr * tile_px, "col0": otc * tile_px,
-            "h": h, "w": w, "data": out.ravel()}])
+            * f + off, 0, width - 1) - otc * span
+        return tile_frame(otr, otc, tile_px, win[np.ix_(idx_r, idx_c)])
 
-    return keyed.groupBy("group_id").applyInPandas(_assemble, TILE_SCHEMA)
+    # each output tile reads exactly its own source span: no halo
+    return map_windows(tiles, span, 0, 0, height, width, _nearest,
+                       TILE_SCHEMA)
 
 
 def resample_tiles_bilinear(tiles: DataFrame, factor: int, tile_px: int,
@@ -104,24 +95,17 @@ def resample_tiles_bilinear(tiles: DataFrame, factor: int, tile_px: int,
     span = tile_px * f
     out_h = -(-height // f)
     out_w = -(-width // f)
-    # output tile otr needs source rows [otr*span, otr*span+span+1)
-    keyed = halo_groups(tiles, span, 0, 1, height, width)
 
-    def _assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        otr, otc = int(key[0]) >> 32, int(key[0]) & 0xFFFFFFFF
-        src_r0 = otr * span
-        src_c0 = otc * span
-        win = fill_window(pdf, src_r0, src_c0, span + 1, span + 1)
+    def _bilinear(otr: int, otc: int, win: np.ndarray) -> pd.DataFrame:
         h = min(tile_px, out_h - otr * tile_px)
         w = min(tile_px, out_w - otc * tile_px)
-        out = bilinear_gather_np(win, src_r0, src_c0, otr * tile_px,
-                                 otc * tile_px, h, w, f, height, width)
-        return pd.DataFrame([{
-            "tile_id": tile_id_of(otr, otc),
-            "row0": otr * tile_px, "col0": otc * tile_px,
-            "h": h, "w": w, "data": out.ravel()}])
+        return tile_frame(otr, otc, tile_px, bilinear_gather_np(
+            win, otr * span, otc * span, otr * tile_px, otc * tile_px, h, w,
+            f, height, width))
 
-    return keyed.groupBy("group_id").applyInPandas(_assemble, TILE_SCHEMA)
+    # output tile otr needs source rows [otr*span, otr*span+span+1)
+    return map_windows(tiles, span, 0, 1, height, width, _bilinear,
+                       TILE_SCHEMA)
 
 
 LANCZOS_A = 3
@@ -176,28 +160,21 @@ def resample_tiles_lanczos(tiles: DataFrame, factor: int, tile_px: int,
     halo = LANCZOS_A * f
     out_h = -(-height // f)
     out_w = -(-width // f)
-    # output tile otr reads source rows [otr*span − halo,
-    # otr*span + span + halo), clipped to the raster
-    keyed = halo_groups(tiles, span, halo, halo, height, width)
 
-    def _assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        otr, otc = int(key[0]) >> 32, int(key[0]) & 0xFFFFFFFF
-        win_r0 = max(0, otr * span - halo)
-        win_c0 = max(0, otc * span - halo)
-        win_r1 = min(height, otr * span + span + halo)
-        win_c1 = min(width, otc * span + span + halo)
-        win = fill_window(pdf, win_r0, win_c0,
-                          win_r1 - win_r0, win_c1 - win_c0)
+    def _lanczos(otr: int, otc: int, win: np.ndarray) -> pd.DataFrame:
+        # the window clipped to the raster: Wy @ sub @ Wx.T turns a NaN
+        # under a zero weight into NaN
+        wr0, wc0 = otr * span - halo, otc * span - halo
+        r0, c0 = max(wr0, 0), max(wc0, 0)
+        sub = win[r0 - wr0:height - wr0, c0 - wc0:width - wc0]
         h = min(tile_px, out_h - otr * tile_px)
         w = min(tile_px, out_w - otc * tile_px)
-        out = lanczos_gather_np(win, win_r0, win_c0, otr * tile_px,
-                                otc * tile_px, h, w, f, height, width)
-        return pd.DataFrame([{
-            "tile_id": tile_id_of(otr, otc),
-            "row0": otr * tile_px, "col0": otc * tile_px,
-            "h": h, "w": w, "data": out.ravel()}])
+        return tile_frame(otr, otc, tile_px, lanczos_gather_np(
+            sub, r0, c0, otr * tile_px, otc * tile_px, h, w, f, height,
+            width))
 
-    return keyed.groupBy("group_id").applyInPandas(_assemble, TILE_SCHEMA)
+    return map_windows(tiles, span, halo, halo, height, width, _lanczos,
+                       TILE_SCHEMA)
 
 
 def bilinear_gather_np(win: np.ndarray, win_r0: int, win_c0: int,

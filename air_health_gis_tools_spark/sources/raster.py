@@ -10,9 +10,18 @@ tile_id = (row0/tile_px) * 2^32 + (col0/tile_px). Tiles are what a COG reader
 would emit from ``spark.read.format("binaryFile")`` + windowed decode in
 ``mapInArrow``; here they are generated deterministically from the synthetic
 raster formula (geo_synth.raster_value_np) so tests need no GDAL.
+
+The tiled raster operators read the raster as the reference does, one
+resident window at a time, through one of two window passes here:
+``map_windows`` (tile → tile) and ``map_point_windows`` (point → row:
+home group, hot-group salting, cogroup). Only this module packs and
+unpacks their group keys; ``halo_groups`` routes the tiles and
+``fill_window`` pastes them.
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -120,6 +129,135 @@ def fill_window(pdf_tiles: pd.DataFrame, r0: int, c0: int, h: int, w: int
             win[rr + a0:rr + a1, cc + b0:cc + b1] = (
                 np.asarray(t.data).reshape(th, tw)[a0:a1, b0:b1])
     return win
+
+
+def tile_frame(trow: int, tcol: int, tile_px: int, data: np.ndarray
+               ) -> pd.DataFrame:
+    """The one ``TILE_SCHEMA`` row of output tile ``(trow, tcol)`` of a
+    ``tile_px`` tiling holding the 2-D ``data``."""
+    h, w = data.shape
+    return pd.DataFrame([{"tile_id": tile_id_of(trow, tcol),
+                          "row0": trow * tile_px, "col0": tcol * tile_px,
+                          "h": h, "w": w, "data": data.ravel()}])
+
+
+def map_windows(tiles: DataFrame, group_px: int, before: int, after: int,
+                n_rows: int, n_cols: int,
+                kernel: Callable[[int, int, np.ndarray], pd.DataFrame],
+                schema: T.StructType) -> DataFrame:
+    """The tile→tile window pass of the tiled raster operators: one
+    grouped ``applyInPandas`` call per output group ``(gr, gc)`` of
+    ``group_px`` pixels returns ``kernel(gr, gc, win)``, its ``schema``
+    rows.
+
+    ``win`` is the group's full padded window, rows ``[gr·group_px −
+    before, (gr+1)·group_px + after)`` and the same for columns: NaN
+    outside the ``n_rows × n_cols`` raster and under missing tiles. Tiles
+    reach it by ``halo_groups``, pasted by ``fill_window``."""
+    n = group_px + before + after
+
+    def _window(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        gr, gc = divmod(int(key[0]), 1 << 32)
+        return kernel(gr, gc, fill_window(pdf, gr * group_px - before,
+                                          gc * group_px - before, n, n))
+
+    return (halo_groups(tiles, group_px, before, after, n_rows, n_cols)
+            .groupBy("group_id").applyInPandas(_window, schema))
+
+
+def _home_group(group_px: int, height: int, width: int, xres: int):
+    """``group_id`` of each ``(x, y)`` point's home group: the group of
+    ``group_px``-square cells holding its pixel (truncated coordinates,
+    floor-divided) clamped into the ``height × width`` extent. Every
+    raster pixel within ``halo`` of the point lies in that group's
+    ``halo_groups(…, halo, halo, …)`` window.
+
+    Truncating ``DIV`` gives the clamped floor: the two differ only below
+    pixel 0, which the clamp maps to 0 either way. Each coordinate appears
+    once, so the filters Catalyst infers from the cogroup key stay small
+    when they inline an upstream coordinate expression."""
+    def cell(coord: str, n: int) -> str:
+        return (f"(least(greatest(CAST({coord} AS BIGINT) DIV {xres}, 0L), "
+                f"{n - 1}L) DIV {group_px})")
+    return F.expr(f"{cell('y', height)} * {1 << 32}L + {cell('x', width)}")
+
+
+# adaptive salting: a hot group splits into at most MAX_SALT salt groups
+MAX_SALT = 32
+
+
+def _salt_hot_groups(points: DataFrame, tiles: DataFrame, key: str,
+                     id_col: str, hot_group_rows: int, max_salt: int
+                     ) -> tuple[DataFrame, DataFrame]:
+    """Adaptive salting of a (points, tiles) cogroup on ``key``: adds the
+    cogroup key ``gkey = key·64 + salt`` to both sides.
+
+    A group holding more than ``hot_group_rows`` points splits into
+    ceil(count / hot_group_rows) ≤ ``max_salt`` salt groups: points pick
+    their salt by id hash, the group's tile rows (the small side)
+    replicate into each salt. Cold groups take salt 0 via the left-join
+    default and pay nothing. Output is unchanged: each salt group sees
+    every tile row of its group and a disjoint share of its points. Fully
+    distributed — the hot map is a broadcast-joined DataFrame bounded by
+    n_points / hot_group_rows, never a driver collect.
+    """
+    hot = (points.groupBy(key).count()
+           .filter(F.col("count") > hot_group_rows)
+           .select(key,
+                   F.least(F.ceil(F.col("count") / hot_group_rows),
+                           F.lit(max_salt)).cast("long").alias("salt_k")))
+    # xxhash64 of the id picks the salt (no arithmetic on the id, so any
+    # BIGINT id is safe under ANSI overflow checks)
+    points = (points.join(F.broadcast(hot), key, "left")
+              .withColumn(
+                  "gkey",
+                  F.col(key) * 64
+                  + F.pmod(F.xxhash64(F.col(id_col)),
+                           F.coalesce(F.col("salt_k"), F.lit(1))))
+              .drop("salt_k"))
+    tiles = (tiles.join(F.broadcast(hot), key, "left")
+             .withColumn(
+                 "_salt",
+                 F.explode(F.sequence(
+                     F.lit(0).cast("long"),
+                     F.coalesce(F.col("salt_k"), F.lit(1)) - 1)))
+             .withColumn("gkey", F.col(key) * 64 + F.col("_salt"))
+             .drop("salt_k", "_salt"))
+    return points, tiles
+
+
+def map_point_windows(
+        points: DataFrame, tiles: DataFrame, id_col: str, group_px: int,
+        halo: int, n_rows: int, n_cols: int, xres: int,
+        hot_group_rows: int, max_salt: int,
+        kernel: Callable[[pd.DataFrame, np.ndarray, int, int], pd.DataFrame],
+        schema: T.StructType) -> DataFrame:
+    """The point→row window pass: each ``(id_col, x, y)`` point keys to
+    its home group (``_home_group``, ``xres`` metres per pixel), hot
+    groups are salted (``_salt_hot_groups``), and one cogroup call per
+    (salted) group returns ``kernel(pts, win, wr0, wc0)``: the ``schema``
+    rows of the group's points from its full ``halo``-padded window (as
+    in ``map_windows``), whose [0, 0] is raster pixel ``(wr0, wc0)``.
+    A group without points returns no rows."""
+    pts = points.select(id_col, "x", "y").withColumn(
+        "group_id", _home_group(group_px, n_rows, n_cols, xres))
+    win_tiles = halo_groups(tiles, group_px, halo, halo, n_rows, n_cols)
+    pts, win_tiles = _salt_hot_groups(pts, win_tiles, "group_id", id_col,
+                                      hot_group_rows, max_salt)
+    n = group_px + 2 * halo
+
+    def _window(key: tuple, pdf_points: pd.DataFrame,
+                pdf_tiles: pd.DataFrame) -> pd.DataFrame:
+        if pdf_points.empty:
+            return pd.DataFrame({f.name: pd.Series(dtype="float64")
+                                 for f in schema})
+        gr, gc = divmod(int(key[0]) // 64, 1 << 32)
+        wr0, wc0 = gr * group_px - halo, gc * group_px - halo
+        return kernel(pdf_points, fill_window(pdf_tiles, wr0, wc0, n, n),
+                      wr0, wc0)
+
+    return (pts.groupBy("gkey").cogroup(win_tiles.groupBy("gkey"))
+            .applyInPandas(_window, schema))
 
 
 def synthetic_tile_table(spark: SparkSession, tile_px: int = 256,

@@ -46,7 +46,6 @@ def build_queries(spark):
     mxs, mys = G.monitor_xy_np(mids)
     tiles = synthetic_tile_table(spark, tile_px=256).cache()
     tiles.count()
-    _uniq = iter(range(100000))
     n_polys = int(os.environ.get("SPARK_GRAFT_PIP_POLYS", "500"))
     from air_health_gis_tools_spark.functions.html_text import html_to_text_udf
     from air_health_gis_tools_spark.sources.warc import (ensure_pages_warc,
@@ -63,8 +62,7 @@ def build_queries(spark):
             pts, Q.polys_df(spark, n_polys)),
         "q09_radius_600k": lambda: radius_count_np(pts, (mxs, mys), 25_000),
         "q01_zonal_tiled_600k": lambda: buffered_stats_tiled(
-            pts, tiles, list(G.BUFFERS_M), 256,
-            hot_group_rows=8192 + next(_uniq)),
+            pts, tiles, list(G.BUFFERS_M), 256),
         "q21_hex_rollup_600k": lambda: (
             pts_roll.withColumn("c", hex_cell_expr(7))
             .groupBy("c").count()),

@@ -452,10 +452,12 @@ def test_zonal_deterministic_across_partitionings(spark, pts):
     pd.testing.assert_frame_equal(outs[0], outs[1])
 
 
-def test_convolve_plane_variant_matches_zonal_means(spark):
+@pytest.mark.parametrize("tile_px,b", [(128, 10_000), (16, 20_000)])
+def test_convolve_plane_variant_matches_zonal_means(spark, tile_px, b):
     """convolve_sum_count_tiles (the plane-materializing Method-1 half,
     used when the focal raster itself is the product) must agree with the
-    broadcast zonal kernel at interior pixels: mean = s/c, count = c."""
+    broadcast zonal kernel at interior pixels: mean = s/c, count = c;
+    also when the halo (20 px) is wider than a tile."""
     from air_health_gis_tools_spark.operators.convolve import (
         convolve_sum_count_tiles)
     from air_health_gis_tools_spark.operators.zonal import (circle_offsets,
@@ -463,13 +465,12 @@ def test_convolve_plane_variant_matches_zonal_means(spark):
     from air_health_gis_tools_spark.sources.raster import (
         materialize_raster, synthetic_tile_table)
     h = w = 512
-    b = 10_000
     rpx = radius_px(b)
-    tiles = synthetic_tile_table(spark, tile_px=128, height=h, width=w)
+    tiles = synthetic_tile_table(spark, tile_px=tile_px, height=h, width=w)
     rng = np.arange(-rpx, rpx + 1)
     kr, kc = np.meshgrid(rng, rng, indexing="ij")
     kern = (kr * kr + kc * kc <= rpx * rpx).astype(np.float64)
-    conv = convolve_sum_count_tiles(tiles, {str(b): kern}, 128,
+    conv = convolve_sum_count_tiles(tiles, {str(b): kern}, tile_px,
                                     height=h, width=w).toPandas()
     s_plane = np.full((h, w), np.nan)
     c_plane = np.zeros((h, w), dtype=np.int64)

@@ -88,13 +88,15 @@ def test_spark_ref_mode_matches_coreg_raster_oracle(spark):
             assert got == want, i  # bit-identical (exact integer sums)
 
 
-def test_distributed_convolution_bit_identical_to_reference(spark):
+@pytest.mark.parametrize("tile_px,r", [(128, 10), (16, 22)])
+def test_distributed_convolution_bit_identical_to_reference(spark, tile_px,
+                                                            r):
     """Tile+halo convolve_tiles == whole-array ref_buffer_convolve,
-    including raster-edge replication, bit for bit."""
+    including raster-edge replication, bit for bit; also when the halo
+    (21 px for the 43×43 mask of r = 22) is wider than a tile."""
     h = w = 512
-    r = 10
-    tiles = synthetic_tile_table(spark, tile_px=128, height=h, width=w)
-    out = convolve_tiles(tiles, ref_create_buffer_mask(r), 128,
+    tiles = synthetic_tile_table(spark, tile_px=tile_px, height=h, width=w)
+    out = convolve_tiles(tiles, ref_create_buffer_mask(r), tile_px,
                          height=h, width=w).toPandas()
     got = np.full((h, w), np.nan)
     for t in out.itertuples():

@@ -3,15 +3,17 @@
 Every ``buffered_stats`` strategy — the formula raster (whose edge
 windows take the generic clipping path), a broadcast ndarray and the
 tiled cogroup — must return one row per point with the stats of the
-direct per-buffer gather over ``circle_offsets(radius_px(b, xres))``.
+direct per-buffer gather over ``circle_offsets(radius_px(b, xres))``;
+so must convolve_all's mean and n_valid on the integer raster.
 The points sit off all four sides and the corners, on discs that only
 partly overlap the raster, on nodata-only discs and in partial edge
 tiles; the rasters are the integer synthetic one and non-integer
 float32-origin and float64 ones with ~25 % nodata.
 
-Every strategy sums each disc's values in one place, in the oracle's
-order, so all of them must match bit for bit: means included, on the
-non-integer rasters too.
+Every ``buffered_stats`` strategy sums each disc's values in one place,
+in the oracle's order, so all of them must match bit for bit: means
+included, on the non-integer rasters too. convolve_all's chord sums are
+exact on integer-valued rasters only.
 """
 
 from __future__ import annotations
@@ -22,10 +24,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from air_health_gis_tools_spark import geo_synth as G
-from air_health_gis_tools_spark.operators.zonal import (buffered_stats,
-                                                        buffered_stats_tiled,
-                                                        circle_offsets,
-                                                        radius_px)
+from air_health_gis_tools_spark.operators.zonal import (
+    buffered_mean_convolve_all, buffered_stats, buffered_stats_tiled,
+    circle_offsets, radius_px)
 from air_health_gis_tools_spark.sources.raster import (materialize_raster,
                                                        tile_table_from_array)
 
@@ -115,13 +116,14 @@ def _oracle(value, pts: pd.DataFrame, xres: int) -> dict[str, np.ndarray]:
     return out
 
 
-def _assert_matches(got: pd.DataFrame, want: dict, n: int):
+def _assert_matches(got: pd.DataFrame, want: dict, n: int,
+                    stats=("mean", "min", "max")):
     got = got.sort_values("doc_id").reset_index(drop=True)
     assert got["doc_id"].tolist() == list(range(n)), "one row per point"
     for b in BUFFERS:
         assert np.array_equal(got[f"n_valid_{b}"].to_numpy(),
                               want[f"n_valid_{b}"]), b
-        for stat in ("mean", "min", "max"):
+        for stat in stats:
             g = got[f"{stat}_{b}"].to_numpy()
             w = want[f"{stat}_{b}"]
             assert np.array_equal(np.isnan(g), np.isnan(w)), (stat, b)
@@ -134,9 +136,12 @@ def _strategy(spark, strategy, pts, arr, tile_px=128, xres=G.XRES):
     if strategy == "broadcast":
         return buffered_stats(sdf, BUFFERS, raster=arr, xres=xres).toPandas()
     h, w = arr.shape
-    return buffered_stats_tiled(
-        sdf, tile_table_from_array(spark, arr, tile_px), BUFFERS, tile_px,
-        height=h, width=w, xres=xres).toPandas()
+    tiles = tile_table_from_array(spark, arr, tile_px)
+    if strategy == "convolve_all":
+        return buffered_mean_convolve_all(sdf, tiles, BUFFERS, tile_px,
+                                          height=h, width=w).toPandas()
+    return buffered_stats_tiled(sdf, tiles, BUFFERS, tile_px, height=h,
+                                width=w, xres=xres).toPandas()
 
 
 _RASTERS = {"integer": lambda: materialize_raster(H, W),
@@ -151,13 +156,19 @@ def test_formula_edge_fallback_matches_oracle(spark):
     _assert_matches(got, _oracle(_formula_values, pts, G.XRES), len(pts))
 
 
-@pytest.mark.parametrize("raster", sorted(_RASTERS))
-@pytest.mark.parametrize("strategy", ["broadcast", "tiled"])
+@pytest.mark.parametrize("strategy,raster", [
+    *((s, r) for s in ("broadcast", "tiled") for r in sorted(_RASTERS)),
+    ("convolve_all", "integer")])
 def test_zonal_strategy_matches_oracle_at_edges(spark, strategy, raster):
+    """convolve_all clips discs at the raster edge like the others; it
+    emits mean and n_valid only, and its chord sums are exact only on
+    integer-valued rasters."""
     arr = _RASTERS[raster]()
     pts = _edge_points(H, W, G.XRES, 300)
     _assert_matches(_strategy(spark, strategy, pts, arr),
-                    _oracle(_array_values(arr), pts, G.XRES), len(pts))
+                    _oracle(_array_values(arr), pts, G.XRES), len(pts),
+                    ("mean",) if strategy == "convolve_all"
+                    else ("mean", "min", "max"))
 
 
 @pytest.mark.parametrize("strategy", ["broadcast", "tiled"])
