@@ -1,4 +1,6 @@
-"""Cell tiling kernels: hex (H3-style, res 7-9) and square/quadkey cells.
+"""Cell tiling kernels: hex (H3-style, res 7-9) and square/quadkey cells,
+and the package's one floor rule (``fdiv``) and packed 2-D key
+(``pack_key``), which every cell, tile and group key calls.
 
 All kernels are batched NumPy inside Arrow ``pandas_udf``s — no per-row
 Python (BASELINE.json input_hint). The hex assignment is the engine's
@@ -22,6 +24,25 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
 from ..geo_synth import HEX_I_SHIFT, HEX_PITCH, HEX_RES_SHIFT
+
+
+def fdiv(e: str, d: int) -> str:
+    """SQL floor division of the integer expression ``e`` by ``d``: Spark's
+    ``DIV`` truncates, but on ``e − pmod(e, d)``, an exact multiple of
+    ``d``, truncation is floor (numpy's ``//``)."""
+    return f"((({e}) - pmod({e}, {d})) DIV {d})"
+
+
+def pack_key(a, b):
+    """The key ``a·2³² + b`` of cell, tile or group ``(a, b)`` (ints or
+    BIGINT Columns)."""
+    return a * (1 << 32) + b
+
+
+def unpack_key(key: int) -> tuple[int, int]:
+    """``(a, b)`` of a ``pack_key`` key with ``0 ≤ b < 2³²``."""
+    return divmod(int(key), 1 << 32)
+
 
 _OFFSETS = np.array([(di, dj) for di in (-1, 0, 1, 2) for dj in (-1, 0, 1, 2)],
                     dtype=np.int64)
@@ -91,12 +112,8 @@ def hex_cell_expr(res: int):
       pmod(best, 2³²).
     """
     w, h = HEX_PITCH[res]
-    # FLOOR division, exact in int64: Spark's DIV truncates toward zero,
-    # but the Arrow kernel (numpy //) floors — subtracting pmod first makes
-    # the dividend an exact multiple of the pitch, where truncation == floor,
-    # so the expression matches hex_assign_np for negative coords too
-    i0 = f"(((x) - pmod(x, {w})) DIV {w})"
-    j0 = f"(((y) - pmod(y, {h})) DIV {h})"
+    # floor, as hex_assign_np's numpy // does, for negative coords too
+    i0, j0 = fdiv("x", w), fdiv("y", h)
 
     def key(di: int, dj: int) -> str:
         i = f"({i0} + {di})"

@@ -23,22 +23,27 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..geo_synth import MARGIN_M, SPAN, point_xy_sql
 
-_COORD_RE = r"x ([0-9]+) y ([0-9]+)"
+_COORD_RE = r"x [0-9]+ y [0-9]+"
 
 
-def _coord_sql(group: int, fallback: str) -> str:
-    """One coordinate: regex group ``group`` of the first phrase, clamped
-    into ``[MARGIN_M, MARGIN_M + SPAN - 1]``; ``fallback`` when the text
-    holds no phrase (the group of a failed match is the empty string)."""
+def _coord_sql(digits: str, fallback: str) -> str:
+    """One coordinate: its ``digits`` in the phrase ``_xy``, clamped into
+    ``[MARGIN_M, MARGIN_M + SPAN - 1]``; ``fallback`` when ``_xy`` is ''."""
     hi = MARGIN_M + SPAN - 1
-    m = f"regexp_extract(coalesce(text, ''), '{_COORD_RE}', {group})"
-    parsed = f"least(greatest(coalesce(try_cast({m} AS BIGINT), {hi}L), " \
-             f"{MARGIN_M}L), {hi}L)"
-    return f"(CASE WHEN {m} = '' THEN {fallback} ELSE {parsed} END)"
+    parsed = (f"least(greatest(coalesce(try_cast({digits} AS BIGINT), "
+              f"{hi}L), {MARGIN_M}L), {hi}L)")
+    return f"(CASE WHEN _xy = '' THEN {fallback} ELSE {parsed} END)"
 
 
 def with_xy(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Append (x, y) geocoded from ``text``, falling back to ``id_col``."""
+    """Append (x, y) geocoded from ``text``, falling back to ``id_col``.
+    The phrase is matched once per row, into ``_xy``: Catalyst does not
+    collapse a regex used four times into the projection that uses it."""
     fx, fy = point_xy_sql(f"CAST({id_col} AS BIGINT)", "spark")
-    return docs.withColumns({"x": F.expr(_coord_sql(1, fx)),
-                             "y": F.expr(_coord_sql(2, fy))})
+    x = "substring_index(substring_index(_xy, ' ', 2), ' ', -1)"
+    y = "substring_index(_xy, ' ', -1)"
+    return (docs.withColumn("_xy", F.expr(
+                f"regexp_extract(coalesce(text, ''), '{_COORD_RE}', 0)"))
+            .withColumns({"x": F.expr(_coord_sql(x, fx)),
+                          "y": F.expr(_coord_sql(y, fy))})
+            .drop("_xy"))

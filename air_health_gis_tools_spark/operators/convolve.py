@@ -10,6 +10,9 @@ reference implementation (functions/ref_compat.convolve_extend) — so the
 distributed result is bit-identical to the whole-array result, any tiling.
 Only the tiles shuffle; at 100 TB the tile table is the raster's native
 COG layout and this is a single self-join-shaped stage.
+
+``gather_point_values`` keys each point's tile by the floor rule and key
+packer of ``functions/cells`` and decodes it with ``raster.tile_array``.
 """
 
 from __future__ import annotations
@@ -20,9 +23,10 @@ from pyspark.sql import DataFrame, functions as F
 
 from pyspark.sql import types as T
 
+from ..functions.cells import fdiv, pack_key
 from ..geo_synth import RASTER_H, RASTER_W, XRES
-from ..sources.raster import (TILE_SCHEMA, fdiv, map_windows, tile_frame,
-                              tile_id_of)
+from ..sources.raster import (TILE_SCHEMA, map_windows, tile_array,
+                              tile_frame)
 
 # superblock side in tiles for convolve_sum_count_tiles
 SB_TILES = 2
@@ -102,7 +106,7 @@ def gather_point_values(points: DataFrame, tiles: DataFrame,
     tr = fdiv(fdiv("CAST(y AS BIGINT)", XRES), tile_px)
     tc = fdiv(fdiv("CAST(x AS BIGINT)", XRES), tile_px)
     pts = points.select("doc_id", "x", "y").withColumn(
-        "tile_id", F.expr(f"{tr} * {1 << 32}L + {tc}"))
+        "tile_id", pack_key(F.expr(tr), F.expr(tc)))
     schema = T.StructType([T.StructField("doc_id", T.LongType()),
                            T.StructField(out_col, T.DoubleType())])
 
@@ -115,13 +119,10 @@ def gather_point_values(points: DataFrame, tiles: DataFrame,
         if pdf_tiles.empty:
             return pd.DataFrame({"doc_id": ids,
                                  out_col: np.full(len(ids), np.nan)})
-        t = pdf_tiles.iloc[0]
-        arr = np.asarray(t["data"], dtype=np.float64).reshape(
-            int(t["h"]), int(t["w"]))
-        rr = (pdf_points["y"].to_numpy().astype(np.int64) // XRES
-              - int(t["row0"]))
-        cc = (pdf_points["x"].to_numpy().astype(np.int64) // XRES
-              - int(t["col0"]))
+        t = next(pdf_tiles.itertuples())
+        arr = tile_array(t)
+        rr = pdf_points["y"].to_numpy().astype(np.int64) // XRES - int(t.row0)
+        cc = pdf_points["x"].to_numpy().astype(np.int64) // XRES - int(t.col0)
         # a partial edge tile is narrower than its key's span
         ok = (rr < arr.shape[0]) & (cc < arr.shape[1])
         out = np.full(len(ids), np.nan)
@@ -169,11 +170,8 @@ def convolve_sum_count_tiles(tiles: DataFrame, kernels: dict,
     sb_px = SB_TILES * tile_px
     halo = max(ph, pw)
 
-    fields = [T.StructField("tile_id", T.LongType()),
-              T.StructField("row0", T.IntegerType()),
-              T.StructField("col0", T.IntegerType()),
-              T.StructField("h", T.IntegerType()),
-              T.StructField("w", T.IntegerType())]
+    # the tile table's key columns (nullable), then two planes per kernel
+    fields = [T.StructField(f.name, f.dataType) for f in TILE_SCHEMA[:5]]
     for k in kernels:
         fields += [T.StructField(f"s_{k}", T.ArrayType(T.DoubleType())),
                    T.StructField(f"c_{k}", T.ArrayType(T.LongType()))]
@@ -233,7 +231,7 @@ def convolve_sum_count_tiles(tiles: DataFrame, kernels: dict,
                 th = min(tile_px, height - tr0)
                 tw = min(tile_px, width - tc0)
                 lr, lc = tr0 - r0, tc0 - c0
-                row = {"tile_id": tile_id_of(tr, tc), "row0": tr0,
+                row = {"tile_id": pack_key(tr, tc), "row0": tr0,
                        "col0": tc0, "h": th, "w": tw}
                 for name, (s, c) in planes.items():
                     row[f"s_{name}"] = s[lr:lr + th, lc:lc + tw].ravel()

@@ -54,14 +54,19 @@ def _spread_ingest(docs: DataFrame) -> DataFrame:
     return src
 
 
+def _shingle_array(n: int):
+    """The character n-grams of ``text`` as an array (a text shorter than
+    ``n`` is its own one shingle)."""
+    return F.expr(
+        f"transform(sequence(1, greatest(length(text) - {n - 1}, 1)), "
+        f"p -> substring(text, p, {n}))")
+
+
 def shingles(docs: DataFrame, n: int = 5) -> DataFrame:
     """Distinct character n-gram shingles per doc, via sequence+explode
     (JVM-side; no UDF)."""
-    g = F.expr(
-        f"transform(sequence(1, greatest(length(text) - {n - 1}, 1)), "
-        f"p -> substring(text, p, {n}))")
     return (_spread_ingest(docs)
-            .select("doc_id", F.explode(g).alias("shingle"))
+            .select("doc_id", F.explode(_shingle_array(n)).alias("shingle"))
             .distinct())
 
 
@@ -103,11 +108,8 @@ def minhash_signature(docs: DataFrame, n: int = 5, k: int = 4) -> DataFrame:
     partitioning, the trailing groupBy(doc_id) reuses that exchange: the
     whole signature then needs exactly ONE (small) shuffle.
     """
-    src = _spread_ingest(docs)
-    g = F.expr(
-        f"transform(sequence(1, greatest(length(text) - {n - 1}, 1)), "
-        f"p -> substring(text, p, {n}))")
-    sh = src.select("doc_id", F.explode(g).alias("shingle"))
+    sh = _spread_ingest(docs).select(
+        "doc_id", F.explode(_shingle_array(n)).alias("shingle"))
     h = (f"CAST(conv(substring(md5(shingle), 1, 15), 16, 10) AS BIGINT) "
          f"% {MINHASH_P}")
     sh = sh.select("doc_id", F.expr(h).alias("h"))
@@ -152,22 +154,31 @@ def band_overflow_report(banded: DataFrame, max_bucket: int) -> DataFrame:
             .filter(F.col("n") > max_bucket))
 
 
+def _band_pairs(banded: DataFrame, max_bucket: int | None,
+                sig_col: str | None = None) -> DataFrame:
+    """Distinct ``(id1 < id2)`` doc pairs sharing a capped ``(band, val)``
+    bucket (``_cap_band_buckets``), for both banding schemes; with
+    ``sig_col``, each side's signature rides along as ``_s1`` / ``_s2``."""
+    banded = _cap_band_buckets(banded, max_bucket)
+    a, b = banded.alias("a"), banded.alias("b")
+    cols = [F.col("a.doc_id").alias("id1"), F.col("b.doc_id").alias("id2")]
+    if sig_col is not None:
+        cols += [F.col(f"a.{sig_col}").alias("_s1"),
+                 F.col(f"b.{sig_col}").alias("_s2")]
+    return (a.join(b, (F.col("a.band") == F.col("b.band"))
+                   & (F.col("a.val") == F.col("b.val"))
+                   & (F.col("a.doc_id") < F.col("b.doc_id")))
+            .select(*cols)
+            .distinct())
+
+
 def lsh_candidate_pairs(sig: DataFrame, bands: int = 4,
                         max_bucket: int | None = None) -> DataFrame:
     """Candidate near-dup pairs sharing ≥ 1 band (here 1 row per shared
     band = 1 signature column, rows_per_band = k/bands = 1 for the default
     k=4). Self-equi-join on (band_idx, band_val), id1 < id2.
     ``max_bucket`` enables the hot-bucket cap (see _cap_band_buckets)."""
-    banded = lsh_banded(sig, bands)
-    banded = _cap_band_buckets(banded, max_bucket)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (a.join(b, (F.col(f"a.band") == F.col(f"b.band"))
-                   & (F.col(f"a.val") == F.col(f"b.val"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("id1"),
-                    F.col("b.doc_id").alias("id2"))
-            .distinct())
+    return _band_pairs(lsh_banded(sig, bands), max_bucket)
 
 
 def lsh_banded(sig: DataFrame, bands: int = 4) -> DataFrame:
@@ -216,20 +227,10 @@ def simhash_banded_pairs(sig: DataFrame, bits: int, ham_max: int,
                          F.explode(F.array(*band_cols)).alias("bv"))
               .select("doc_id", sig_col, F.col("bv.band").alias("band"),
                       F.col("bv.val").alias("val")))
-    banded = _cap_band_buckets(banded, max_bucket)
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.val") == F.col("b.val"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("id1"),
-                    F.col("b.doc_id").alias("id2"),
-                    F.col(f"a.{sig_col}").alias("_s1"),
-                    F.col(f"b.{sig_col}").alias("_s2"))
-            .distinct())
-    return (cand.withColumn(
-                "hamming",
-                F.bit_count(F.col("_s1").bitwiseXOR(F.col("_s2")))
-                .cast("long"))
+    return (_band_pairs(banded, max_bucket, sig_col)
+            .withColumn("hamming",
+                        F.bit_count(F.col("_s1").bitwiseXOR(F.col("_s2")))
+                        .cast("long"))
             .filter(F.col("hamming") <= ham_max)
             .select("id1", "id2", "hamming"))
 

@@ -21,7 +21,8 @@ and every point reads the single row of its own cell — a hash lookup per
 point, no explode of the fact side, no group-by and no shuffle. The exact
 predicate then runs as a Catalyst higher-order function over that row.
 ``radius_count_np`` is its broadcast-kernel twin, timed by ``bench.py``.
-All three joins key cells with one floor rule, ``_cell_sql``.
+All three joins key cells with one floor rule, ``_cell_sql``, packed by
+``functions/cells`` (its ``fdiv`` and ``pack_key``, the package's own).
 """
 
 from __future__ import annotations
@@ -31,22 +32,24 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
+from ..functions.cells import fdiv, pack_key
+
 # square cell pitch of the polygon cover / point key equi-join
 CELL_M = 25_000
 
 
 def _cell_sql(e: str, cell_m: int = CELL_M) -> str:
     """floor(e / cell_m) of the BIGINT value of ``e`` — the one cell key of
-    both sides of every cell join here. Floor (the pmod form), not
-    truncation: a negative coordinate must land in the cell its polygon's
-    cover, or its target's 3×3 ring, lists."""
-    v = f"CAST({e} AS BIGINT)"
-    return f"(({v} - pmod({v}, {cell_m})) DIV {cell_m})"
+    both sides of every cell join here. Floor, not truncation: a negative
+    coordinate must land in the cell its polygon's cover, or its target's
+    3×3 ring, lists."""
+    return fdiv(f"CAST({e} AS BIGINT)", cell_m)
 
 
-def _cell_key_sql(x: str, y: str, cell_m: int = CELL_M) -> str:
+def _cell_key(x: str, y: str, cell_m: int = CELL_M):
     """The packed (column, row) cell key of the point ``(x, y)``."""
-    return f"{_cell_sql(x, cell_m)} * {1 << 32}L + {_cell_sql(y, cell_m)}"
+    return pack_key(F.expr(_cell_sql(x, cell_m)),
+                    F.expr(_cell_sql(y, cell_m)))
 
 
 def _near_targets(points: DataFrame, targets: DataFrame, cell_m: int
@@ -70,11 +73,10 @@ def _near_targets(points: DataFrame, targets: DataFrame, cell_m: int
                      F.expr(_cell_sql("mx", cell_m)).alias("ci"),
                      F.expr(_cell_sql("my", cell_m)).alias("cj"))
              .select("*", ring.alias("di"), ring.alias("dj"))
-             .groupBy(((F.col("ci") + F.col("di")) * F.lit(1 << 32)
-                       + F.col("cj") + F.col("dj")).alias("cell"))
+             .groupBy(pack_key(F.col("ci") + F.col("di"),
+                               F.col("cj") + F.col("dj")).alias("cell"))
              .agg(F.collect_list("t").alias("cands")))
-    return (points.withColumn("cell",
-                              F.expr(_cell_key_sql("x", "y", cell_m)))
+    return (points.withColumn("cell", _cell_key("x", "y", cell_m))
             .join(F.broadcast(index), "cell", "left").drop("cell"))
 
 
@@ -86,10 +88,8 @@ def polygon_cover_cells(polys: DataFrame) -> DataFrame:
     ``arcpy.conversion.PolygonToRaster``, 1-Burnt Area ArcGIS - 25km.py:30 —
     polygon → covering-cell set as an equi-join key.)
 
-    Pure Catalyst (r3): ``sequence``+``explode`` replaces the r2 Arrow
-    kernel — the dim prep no longer pays a Python-worker round-trip inside
-    every job that builds the broadcast (and stays in whole-stage
-    codegen).
+    Pure Catalyst (``sequence`` + ``explode``): building the broadcast
+    runs no Python worker and stays in whole-stage codegen.
     """
     ci = _cell_sql("cx - r"), _cell_sql("cx + r")
     cj = _cell_sql("cy - r"), _cell_sql("cy + r")
@@ -100,8 +100,7 @@ def polygon_cover_cells(polys: DataFrame) -> DataFrame:
                     F.explode(F.expr(f"sequence({cj[0]}, {cj[1]})")
                               ).alias("_cj"))
             .select(*polys.columns,
-                    (F.col("_ci") * F.lit(1 << 32) + F.col("_cj")
-                     ).alias("cell")))
+                    pack_key(F.col("_ci"), F.col("_cj")).alias("cell")))
 
 
 def pip_circle_counts(points: DataFrame, polys: DataFrame,
@@ -117,7 +116,7 @@ def pip_circle_counts(points: DataFrame, polys: DataFrame,
     """
     group_cols = group_cols or []
     covered = polygon_cover_cells(polys)
-    pts = points.withColumn("cell", F.expr(_cell_key_sql("x", "y")))
+    pts = points.withColumn("cell", _cell_key("x", "y"))
 
     dx = F.col("x") - F.col("cx")
     dy = F.col("y") - F.col("cy")

@@ -37,6 +37,27 @@ from pyspark.sql import DataFrame, functions as F
 MAX_SPAN_BUCKETS = 10_000
 
 
+def _explode_buckets(df: DataFrame, lo: str, hi: str, bucket_w: float,
+                     max_span: int, op: str) -> DataFrame:
+    """``df`` with one row per bucket id ``_b`` its ``[lo, hi]`` interval
+    covers (``sequence(floor(lo/w), floor(hi/w))``). An interval over more
+    than ``max_span`` buckets fails the job, naming ``op``. The guard lives
+    INSIDE the sequence's end bound — a separate guard column would be
+    pruned away by the optimizer and never evaluated."""
+    start = F.floor(F.col(lo) / bucket_w).cast("long")
+    span = F.floor(F.col(hi) / bucket_w).cast("long") - start + 1
+    end = F.when(
+        span <= max_span,
+        F.floor(F.col(hi) / bucket_w).cast("long")
+    ).otherwise(F.raise_error(F.concat(
+        F.lit(f"{op}: interval spans more than {max_span} "
+              f"buckets at bucket_w={bucket_w}; raise bucket_w or split "
+              "the interval — ["),
+        F.col(lo).cast("string"), F.lit(", "),
+        F.col(hi).cast("string"), F.lit("]"))).cast("long"))
+    return df.withColumn("_b", F.explode(F.sequence(start, end)))
+
+
 def range_join(probes: DataFrame, intervals: DataFrame, v_col: str,
                bucket_w: float = 10.0, key: str | None = None,
                max_span_buckets: int = MAX_SPAN_BUCKETS) -> DataFrame:
@@ -44,20 +65,8 @@ def range_join(probes: DataFrame, intervals: DataFrame, v_col: str,
     ``v_col`` (and matching ``key``, if given). Returns probe columns +
     interval columns. Exact semantics: ``lo <= v <= hi`` (pure comparisons
     — no float arithmetic crosses the result surface)."""
-    start = F.floor(F.col("lo") / bucket_w).cast("long")
-    span = F.floor(F.col("hi") / bucket_w).cast("long") - start + 1
-    # the guard lives INSIDE the sequence's end bound — a separate guard
-    # column would be pruned away by the optimizer and never evaluated
-    end = F.when(
-        span <= max_span_buckets,
-        F.floor(F.col("hi") / bucket_w).cast("long")
-    ).otherwise(F.raise_error(F.concat(
-        F.lit(f"range_join: interval spans more than {max_span_buckets} "
-              f"buckets at bucket_w={bucket_w}; raise bucket_w or split "
-              "the interval — ["),
-        F.col("lo").cast("string"), F.lit(", "),
-        F.col("hi").cast("string"), F.lit("]"))).cast("long"))
-    b_int = intervals.withColumn("_b", F.explode(F.sequence(start, end)))
+    b_int = _explode_buckets(intervals, "lo", "hi", bucket_w,
+                             max_span_buckets, "range_join")
     b_pr = probes.withColumn(
         "_b", F.floor(F.col(v_col) / bucket_w).cast("long"))
     on = ["_b"] if key is None else ["_b", key]
@@ -81,20 +90,10 @@ def interval_overlap_join(left: DataFrame, right: DataFrame,
     (which would also collapse genuinely duplicate input rows when callers
     lack a unique key). Same fail-fast span guard as
     range_join on both sides, at ``MAX_SPAN_BUCKETS``."""
-    def _explode(df: DataFrame, lo: str, hi: str) -> DataFrame:
-        start = F.floor(F.col(lo) / bucket_w).cast("long")
-        span = F.floor(F.col(hi) / bucket_w).cast("long") - start + 1
-        end = F.when(
-            span <= MAX_SPAN_BUCKETS,
-            F.floor(F.col(hi) / bucket_w).cast("long")
-        ).otherwise(F.raise_error(F.lit(
-            f"interval_overlap_join: interval spans more than "
-            f"{MAX_SPAN_BUCKETS} buckets at bucket_w={bucket_w}"))
-            .cast("long"))
-        return df.withColumn("_b", F.explode(F.sequence(start, end)))
-
-    a = _explode(left, "lo", "hi")
-    b = _explode(right, "lo_r", "hi_r")
+    op = "interval_overlap_join"
+    a = _explode_buckets(left, "lo", "hi", bucket_w, MAX_SPAN_BUCKETS, op)
+    b = _explode_buckets(right, "lo_r", "hi_r", bucket_w, MAX_SPAN_BUCKETS,
+                         op)
     first_shared = F.greatest(
         F.floor(F.col("lo") / bucket_w).cast("long"),
         F.floor(F.col("lo_r") / bucket_w).cast("long"))

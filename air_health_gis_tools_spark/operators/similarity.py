@@ -62,6 +62,25 @@ def cosine_topk(df: DataFrame, qvec: list[float], k: int = 5
             .select("vec_id", "cosine"))
 
 
+def _lloyd(data: np.ndarray, cents: np.ndarray) -> np.ndarray:
+    """Ten fixed Lloyd's k-means iterations over ``data`` from centroids
+    ``cents`` (updated in place). Distances are chunked over the sample
+    axis, so the (chunk, k, dim) tensor stays ~25 MB at dim 64 for ANY k,
+    with the whole-array form's per-element arithmetic: the assignments,
+    centroids and the q41/q59/q84 goldens that mirror them are unchanged."""
+    for _ in range(10):
+        assign = np.empty(len(data), dtype=np.int64)
+        for s in range(0, len(data), 512):
+            d = ((data[s:s + 512, None, :] - cents[None, :, :]) ** 2
+                 ).sum(axis=2)
+            assign[s:s + 512] = np.argmin(d, axis=1)
+        for c in range(len(cents)):
+            m = assign == c
+            if m.any():
+                cents[c] = data[m].mean(axis=0)
+    return cents
+
+
 def ivf_train_centroids(vectors: np.ndarray, n_lists: int = 16
                         ) -> np.ndarray:
     """Deterministic Lloyd's k-means for the IVF coarse quantizer.
@@ -74,23 +93,7 @@ def ivf_train_centroids(vectors: np.ndarray, n_lists: int = 16
     rng = np.random.default_rng(42)
     idx = rng.choice(len(vectors), size=min(n_lists, len(vectors)),
                      replace=False)
-    cents = vectors[idx].astype(np.float64).copy()
-    for _ in range(10):
-        # chunked over the sample axis: the (chunk, k, dim) difference
-        # tensor stays bounded (~25 MB at dim 64) for ANY n_lists, while
-        # the per-element arithmetic — and therefore every assignment and
-        # centroid, and the committed q41/q59/q84 goldens that mirror it
-        # — is bit-identical to the whole-array form.
-        assign = np.empty(len(vectors), dtype=np.int64)
-        for s in range(0, len(vectors), 512):
-            d = ((vectors[s:s + 512, None, :] - cents[None, :, :]) ** 2
-                 ).sum(axis=2)
-            assign[s:s + 512] = np.argmin(d, axis=1)
-        for c in range(len(cents)):
-            m = assign == c
-            if m.any():
-                cents[c] = vectors[m].mean(axis=0)
-    return cents
+    return _lloyd(vectors, vectors[idx].astype(np.float64).copy())
 
 
 def ivf_assign(df: DataFrame, centroids: np.ndarray) -> DataFrame:
@@ -182,14 +185,7 @@ def pq_train_codebooks(vectors: np.ndarray, m: int = 8, ksub: int = 16
     for j in range(m):
         sub = vectors[:, j * dsub:(j + 1) * dsub].astype(np.float64)
         idx = rng.choice(n, size=min(ksub, n), replace=False)
-        cents = sub[idx].copy()
-        for _ in range(10):
-            d = ((sub[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            assign = np.argmin(d, axis=1)
-            for c in range(len(cents)):
-                msk = assign == c
-                if msk.any():
-                    cents[c] = sub[msk].mean(axis=0)
+        cents = _lloyd(sub, sub[idx].copy())
         books[j, :len(cents)] = cents
         if len(cents) < ksub:          # degenerate tiny sample: pad
             books[j, len(cents):] = cents[-1]

@@ -69,11 +69,19 @@ def radius_px(buffer_m: int, xres: int = XRES) -> int:
     return max(math.ceil(buffer_m / xres), 1)
 
 
+def disc_chords(rpx: int) -> tuple[np.ndarray, np.ndarray]:
+    """The disc dr²+dc² ≤ rpx², the one membership rule, as chords: row
+    dr ∈ [−rpx, rpx] spans columns [−half, half], half = isqrt(rpx² − dr²)."""
+    dr = np.arange(-rpx, rpx + 1, dtype=np.int64)
+    return dr, np.array([math.isqrt(rpx * rpx - d * d) for d in dr.tolist()],
+                        dtype=np.int64)
+
+
 def circle_offsets(rpx: int) -> tuple[np.ndarray, np.ndarray]:
-    """(dr, dc) offsets with dr²+dc² ≤ rpx², row-major order."""
-    rng = np.arange(-rpx, rpx + 1, dtype=np.int64)
+    """(dr, dc) offsets of the ``disc_chords`` disc, row-major order."""
+    rng, half = disc_chords(rpx)
     dr, dc = np.meshgrid(rng, rng, indexing="ij")
-    m = dr * dr + dc * dc <= rpx * rpx
+    m = np.abs(dc) <= half[:, None]
     return dr[m], dc[m]
 
 
@@ -378,9 +386,9 @@ def buffered_mean_convolve_all(points: DataFrame, tiles: DataFrame,
     """Third physical strategy — the reference's Method 1 ('convolve once,
     gather many', extract_raster_buffer.py:220-245), distributed.
 
-    r3 plan (replaces the two-stage convolve-planes-then-gather): ONE
-    cogroup on SUPERBLOCK keys (``sb_tiles``×``sb_tiles`` tiles per task)
-    fuses convolution and gather over the ``(id_col, x, y)`` points. Each
+    ONE cogroup on SUPERBLOCK keys (``sb_tiles``×``sb_tiles`` tiles per
+    task) fuses convolution and gather over the ``(id_col, x, y)`` points,
+    with no result plane materialized or shuffled. Each
     task assembles its superblock window + rmax halo, takes one
     row-prefix-sum pass, and evaluates every point's buffer sums directly
     from the prefix table via chord subtraction (2r+1 ops per point per
@@ -389,15 +397,11 @@ def buffered_mean_convolve_all(points: DataFrame, tiles: DataFrame,
     integer-valued rasters (prefix sums < 2^53 — the chord-decomposition
     invariant documented in convolve.py).
 
-    Why this shape survives 100 TB: the r2 plan shuffled the raster 9×
-    (full halo fan-out), materialized 6 result planes per tile (48 B/px)
-    and shuffled THEM again into the gather cogroup — ~25 GB of movement
-    per 201 M px. Here the point window pass
+    Why this shape survives 100 TB: the point window pass
     (``sources/raster.map_point_windows``) sends each superblock the part
     of every tile inside its rmax-padded window (about 1.15× the raster
     on the 4096² raster at sb_tiles = 1), points shuffle once to their
-    home superblock, no plane is materialized, and
-    only per-point rows leave the task; per-task
+    home superblock, and only per-point rows leave the task; per-task
     compute is one cumsum of the superblock (cache-resident) plus
     O(points·r) gathers. min/max are not convolution-expressible; like
     the reference's Method 1 this strategy emits mean + n_valid.
@@ -418,13 +422,7 @@ def buffered_mean_convolve_all(points: DataFrame, tiles: DataFrame,
     sb_px = sb_tiles * tile_px
     n = sb_px + 2 * rmax   # window side
 
-    # chord tables per buffer: disc row dr spans columns [-half, half]
-    chords = {}
-    for b in buffers_m:
-        rpx = radius_px(b)
-        dr = np.arange(-rpx, rpx + 1, dtype=np.int64)
-        chords[b] = (dr, np.floor(np.sqrt(
-            (rpx * rpx - dr * dr).astype(np.float64))).astype(np.int64))
+    chords = {b: disc_chords(radius_px(b)) for b in buffers_m}
 
     fields = [T.StructField(id_col, T.LongType())]
     for b in buffers_m:

@@ -11,10 +11,11 @@ public TIFF 6.0 specification. No code is taken from GDAL/libtiff/tifffile;
 the LZW variant (MSB-first codes, Clear=256, EOI=257, 'early change') is
 implemented directly from the spec.
 
-Scale path: ``geotiff_tile_table`` hands each executor task a set of tile
-indices; tasks read ONLY their tiles' byte ranges and decode in-process
-(the COG access pattern — the whole raster never materializes anywhere).
-``read_geotiff`` is the driver-side full decode used as the parity oracle.
+Scale path: ``geotiff_tile_table`` is ``sources/raster.scan_tiles`` over
+the block grid (a stripped file has one tile column); each task opens the
+file once and reads ONLY its blocks' byte ranges (the COG access pattern —
+the whole raster never materializes anywhere). ``read_geotiff`` is the
+driver-side full decode used as the parity oracle.
 
 Transform: the sidecar ``.tfw`` world file (or the ModelPixelScale +
 ModelTiepoint GeoKeys) gives the affine; ``rowcol_of_xy`` inverts it the
@@ -27,14 +28,14 @@ from __future__ import annotations
 import os
 import struct
 import zlib
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from .raster import TILE_SCHEMA, tile_id_of
+from .raster import scan_tiles, tile_array
 
 # TIFF tag ids (TIFF 6.0 spec §8)
 _TAGS = {
@@ -77,10 +78,6 @@ class TiffInfo:
     @property
     def n_tiles_x(self) -> int:
         return (self.width + self.tile_w - 1) // self.tile_w
-
-    @property
-    def n_tiles_y(self) -> int:
-        return (self.height + self.tile_h - 1) // self.tile_h
 
 
 def _read_tag_values(f, bo: str, typ: int, cnt: int, raw: bytes):
@@ -364,14 +361,11 @@ def write_geotiff(tiles: DataFrame, path: str, height: int, width: int,
             rows = []
             for t in pdf.itertuples():
                 tr, tc = int(t.row0) // tile_px, int(t.col0) // tile_px
-                full = np.full((tile_px, tile_px), np.float32(nodata),
-                               dtype=np.float32)
-                arr = np.asarray(t.data, dtype=np.float64).reshape(t.h, t.w)
-                blk = arr.astype(np.float32)
-                blk[np.isnan(arr)] = np.float32(nodata)
-                full[:t.h, :t.w] = blk
+                full = np.full((tile_px, tile_px), np.nan)
+                full[:t.h, :t.w] = tile_array(t)
+                blk = np.where(np.isnan(full), nodata, full).astype(np.float32)
                 rows.append((tr * ntx + tc,
-                             zlib.compress(full.tobytes(), level)))
+                             zlib.compress(blk.tobytes(), level)))
             yield pd.DataFrame(rows, columns=["idx", "blob"])
 
     # toLocalIterator: the driver streams compressed blobs partition by
@@ -469,36 +463,17 @@ def write_geotiff(tiles: DataFrame, path: str, height: int, width: int,
 
 def geotiff_tile_table(spark: SparkSession, path: str,
                        n_partitions: int = 32) -> DataFrame:
-    """Distributed GeoTIFF scan → the engine's standard tile table.
-
-    One row per TIFF tile; each executor task seeks to its tiles' byte
-    ranges only (COG access pattern) and decodes with the pure-NumPy
-    LZW/deflate path. 100 TB shape: byte-range reads parallelize across
-    the cluster, the driver ships only the ~100-byte TiffInfo."""
+    """Distributed GeoTIFF scan → the engine's standard tile table, one row
+    per TIFF tile or strip, decoded with the pure-NumPy LZW/deflate path.
+    100 TB shape: byte-range reads parallelize across the cluster, the
+    driver ships only the ~100-byte TiffInfo."""
     info = read_ifd(path)
-    n_blocks = len(info.offsets)
-    ntx = info.n_tiles_x
-    idx_df = spark.range(n_blocks).repartition(
-        min(n_partitions, n_blocks)).select(F.col("id").cast("int"))
 
-    def _decode(batches):
-        fh = open(info.path, "rb")
-        for pdf in batches:
-            rows = []
-            for idx in pdf["id"]:
-                idx = int(idx)
-                if info.tiled:
-                    ty, tx = divmod(idx, ntx)
-                else:
-                    ty, tx = idx, 0
-                r0, c0 = ty * info.tile_h, tx * info.tile_w
-                h = min(info.tile_h, info.height - r0)
-                w = min(info.tile_w, info.width - c0)
-                blk = decode_block(info, idx, fh)[:h, :w]
-                rows.append((tile_id_of(ty, tx), r0, c0, h, w,
-                             blk.ravel()))
-            yield pd.DataFrame(rows,
-                               columns=[f.name for f in TILE_SCHEMA])
-        fh.close()
+    @contextmanager
+    def _blocks():
+        with open(info.path, "rb") as fh:
+            yield lambda i, r0, c0, h, w: decode_block(info, i, fh)[:h, :w]
 
-    return idx_df.mapInPandas(_decode, TILE_SCHEMA)
+    return scan_tiles(spark, info.height, info.width, info.tile_h,
+                      info.tile_w, _blocks,
+                      min(n_partitions, len(info.offsets)))

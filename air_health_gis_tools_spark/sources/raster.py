@@ -6,21 +6,21 @@ Our scale-path representation is a *tile table*:
 
     (tile_id:long, row0:int, col0:int, h:int, w:int, data:array<double>)
 
-tile_id = (row0/tile_px) * 2^32 + (col0/tile_px). Tiles are what a COG reader
-would emit from ``spark.read.format("binaryFile")`` + windowed decode in
-``mapInArrow``; here they are generated deterministically from the synthetic
-raster formula (geo_synth.raster_value_np) so tests need no GDAL.
+tile_id = pack_key(row0/tile_px, col0/tile_px). This module alone scans
+(``scan_tiles``, as a COG reader would: each task decodes only its own
+blocks), packs (``tile_row``) and decodes (``tile_array``) tile rows.
 
 The tiled raster operators read the raster as the reference does, one
 resident window at a time, through one of two window passes here:
 ``map_windows`` (tile → tile) and ``map_point_windows`` (point → row:
-home group, hot-group salting, cogroup). Only this module packs and
-unpacks their group keys; ``halo_groups`` routes the tiles and
-``fill_window`` pastes them.
+home group, hot-group salting, cogroup). ``halo_groups`` routes the tiles
+and ``fill_window`` pastes them. Keys pack and floor by the rules of
+``functions/cells``; only this module unpacks one.
 """
 
 from __future__ import annotations
 
+from contextlib import nullcontext
 from typing import Callable
 
 import numpy as np
@@ -28,6 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F, types as T
 
+from ..functions.cells import fdiv, pack_key, unpack_key
 from ..geo_synth import RASTER_H, RASTER_W, raster_value_np
 
 TILE_SCHEMA = T.StructType([
@@ -40,20 +41,24 @@ TILE_SCHEMA = T.StructType([
 ])
 
 
-def tile_id_of(trow: int, tcol: int) -> int:
-    return trow * (1 << 32) + tcol
+def tile_row(trow: int, tcol: int, tile_h: int, tile_w: int,
+             data: np.ndarray) -> tuple:
+    """The ``TILE_SCHEMA`` row of tile ``(trow, tcol)`` of a ``tile_h ×
+    tile_w`` tiling, holding the 2-D ``data``."""
+    h, w = data.shape
+    return (pack_key(trow, tcol), trow * tile_h, tcol * tile_w, h, w,
+            np.asarray(data, dtype=np.float64).ravel())
 
 
-def fdiv(e: str, d: int) -> str:
-    """SQL floor division of the integer expression ``e`` by ``d`` (the
-    pmod form: Spark's DIV truncates toward zero, numpy's ``//`` floors)."""
-    return f"((({e}) - pmod({e}, {d})) DIV {d})"
+def tile_array(t) -> np.ndarray:
+    """The 2-D float64 pixels of tile row ``t`` (a Row or named tuple)."""
+    return np.asarray(t.data, dtype=np.float64).reshape(int(t.h), int(t.w))
 
 
 def halo_groups(tiles: DataFrame, group_px: int, before: int, after: int,
                 n_rows: int, n_cols: int) -> DataFrame:
     """Route every tile to the output groups whose padded window it
-    intersects, cut to that window: adds ``group_id = (gr << 32) + gc``.
+    intersects, cut to that window: adds ``group_id = pack_key(gr, gc)``.
 
     Group ``g`` (per axis) owns pixels ``[g·group_px, (g+1)·group_px)`` of
     an ``n_rows × n_cols`` raster and reads the window
@@ -111,7 +116,7 @@ def halo_groups(tiles: DataFrame, group_px: int, before: int, after: int,
                 "h": F.expr(f"CAST({a1} - {a0} AS INT)"),
                 "w": F.expr(f"CAST({b1} - {b0} AS INT)"),
                 "data": data,
-                "group_id": F.col("_gr") * F.lit(1 << 32) + F.col("_gc")})
+                "group_id": pack_key(F.col("_gr"), F.col("_gc"))})
             .drop("_gr", "_gc"))
 
 
@@ -121,24 +126,20 @@ def fill_window(pdf_tiles: pd.DataFrame, r0: int, c0: int, h: int, w: int
     group's tiles pasted in and clipped to it."""
     win = np.full((h, w), np.nan)
     for t in pdf_tiles.itertuples():
-        th, tw = int(t.h), int(t.w)
         rr, cc = int(t.row0) - r0, int(t.col0) - c0
-        a0, a1 = max(0, -rr), min(th, h - rr)
-        b0, b1 = max(0, -cc), min(tw, w - cc)
+        a0, a1 = max(0, -rr), min(int(t.h), h - rr)
+        b0, b1 = max(0, -cc), min(int(t.w), w - cc)
         if a0 < a1 and b0 < b1:
             win[rr + a0:rr + a1, cc + b0:cc + b1] = (
-                np.asarray(t.data).reshape(th, tw)[a0:a1, b0:b1])
+                tile_array(t)[a0:a1, b0:b1])
     return win
 
 
 def tile_frame(trow: int, tcol: int, tile_px: int, data: np.ndarray
                ) -> pd.DataFrame:
-    """The one ``TILE_SCHEMA`` row of output tile ``(trow, tcol)`` of a
-    ``tile_px`` tiling holding the 2-D ``data``."""
-    h, w = data.shape
-    return pd.DataFrame([{"tile_id": tile_id_of(trow, tcol),
-                          "row0": trow * tile_px, "col0": tcol * tile_px,
-                          "h": h, "w": w, "data": data.ravel()}])
+    """``tile_row`` as a one-row frame, for a ``tile_px`` tiling."""
+    return pd.DataFrame([tile_row(trow, tcol, tile_px, tile_px, data)],
+                        columns=TILE_SCHEMA.names)
 
 
 def map_windows(tiles: DataFrame, group_px: int, before: int, after: int,
@@ -157,7 +158,7 @@ def map_windows(tiles: DataFrame, group_px: int, before: int, after: int,
     n = group_px + before + after
 
     def _window(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        gr, gc = divmod(int(key[0]), 1 << 32)
+        gr, gc = unpack_key(key[0])
         return kernel(gr, gc, fill_window(pdf, gr * group_px - before,
                                           gc * group_px - before, n, n))
 
@@ -179,7 +180,7 @@ def _home_group(group_px: int, height: int, width: int, xres: int):
     def cell(coord: str, n: int) -> str:
         return (f"(least(greatest(CAST({coord} AS BIGINT) DIV {xres}, 0L), "
                 f"{n - 1}L) DIV {group_px})")
-    return F.expr(f"{cell('y', height)} * {1 << 32}L + {cell('x', width)}")
+    return pack_key(F.expr(cell("y", height)), F.expr(cell("x", width)))
 
 
 # adaptive salting: a hot group splits into at most MAX_SALT salt groups
@@ -251,7 +252,7 @@ def map_point_windows(
         if pdf_points.empty:
             return pd.DataFrame({f.name: pd.Series(dtype="float64")
                                  for f in schema})
-        gr, gc = divmod(int(key[0]) // 64, 1 << 32)
+        gr, gc = unpack_key(int(key[0]) // 64)
         wr0, wc0 = gr * group_px - halo, gc * group_px - halo
         return kernel(pdf_points, fill_window(pdf_tiles, wr0, wc0, n, n),
                       wr0, wc0)
@@ -260,49 +261,62 @@ def map_point_windows(
             .applyInPandas(_window, schema))
 
 
-def synthetic_tile_table(spark: SparkSession, tile_px: int = 256,
-                         height: int = RASTER_H, width: int = RASTER_W,
-                         ) -> DataFrame:
-    """Distributed generation: one row per tile, pixel decode inside an Arrow
-    kernel on executors (never materialized on the driver)."""
-    ntr = (height + tile_px - 1) // tile_px
-    ntc = (width + tile_px - 1) // tile_px
-    idx = spark.range(ntr * ntc).select(
+def scan_tiles(spark: SparkSession, height: int, width: int, tile_h: int,
+               tile_w: int, open_blocks: Callable,
+               n_partitions: int | None = None) -> DataFrame:
+    """The ``TILE_SCHEMA`` rows of a ``height × width`` raster of ``tile_h ×
+    tile_w`` tiles, decoded on the executors from one ``spark.range`` of
+    the row-major tile grid (``n_partitions`` splits; no Exchange). Each
+    task enters ``open_blocks()`` once; the ``block(i, row0, col0, h, w)``
+    it yields returns the pixels of tile ``i = trow·n_cols + tcol``."""
+    ntr = (height + tile_h - 1) // tile_h
+    ntc = (width + tile_w - 1) // tile_w
+    idx = spark.range(ntr * ntc, numPartitions=n_partitions).select(
         (F.col("id") / ntc).cast("int").alias("trow"),
         (F.col("id") % ntc).cast("int").alias("tcol"))
 
     def _gen(batches):
-        for pdf in batches:
-            rows = []
-            for trow, tcol in zip(pdf["trow"], pdf["tcol"]):
-                r0 = int(trow) * tile_px
-                c0 = int(tcol) * tile_px
-                h = min(tile_px, height - r0)
-                w = min(tile_px, width - c0)
-                rr, cc = np.meshgrid(np.arange(r0, r0 + h),
-                                     np.arange(c0, c0 + w), indexing="ij")
-                data = raster_value_np(rr, cc).ravel()
-                rows.append((tile_id_of(int(trow), int(tcol)),
-                             r0, c0, h, w, data))
-            yield pd.DataFrame(rows, columns=[f.name for f in TILE_SCHEMA])
+        with open_blocks() as block:
+            for pdf in batches:
+                rows = []
+                for trow, tcol in zip(pdf["trow"].tolist(),
+                                      pdf["tcol"].tolist()):
+                    r0, c0 = trow * tile_h, tcol * tile_w
+                    data = block(trow * ntc + tcol, r0, c0,
+                                 min(tile_h, height - r0),
+                                 min(tile_w, width - c0))
+                    rows.append(tile_row(trow, tcol, tile_h, tile_w, data))
+                yield pd.DataFrame(rows, columns=TILE_SCHEMA.names)
 
     return idx.mapInPandas(_gen, TILE_SCHEMA)
 
 
+def synthetic_tile_table(spark: SparkSession, tile_px: int = 256,
+                         height: int = RASTER_H, width: int = RASTER_W,
+                         ) -> DataFrame:
+    """The synthetic raster's tile table, computed on the executors."""
+    def block(i: int, r0: int, c0: int, h: int, w: int) -> np.ndarray:
+        rr, cc = np.meshgrid(np.arange(r0, r0 + h), np.arange(c0, c0 + w),
+                             indexing="ij")
+        return raster_value_np(rr, cc)
+
+    return scan_tiles(spark, height, width, tile_px, tile_px,
+                      lambda: nullcontext(block))
+
+
 def tile_table_from_array(spark: SparkSession, arr: np.ndarray,
                           tile_px: int = 256) -> DataFrame:
-    """Tile table from an in-memory ndarray (tests / small rasters).
-    NaN = nodata, as everywhere else."""
+    """Tile table from an in-memory ndarray (tests / small rasters), built
+    on the driver. NaN = nodata, as everywhere else."""
     h, w = arr.shape
-    rows = []
-    for tr in range((h + tile_px - 1) // tile_px):
-        for tc in range((w + tile_px - 1) // tile_px):
-            r0, c0 = tr * tile_px, tc * tile_px
-            blk = arr[r0:min(r0 + tile_px, h), c0:min(c0 + tile_px, w)]
-            rows.append((tile_id_of(tr, tc), r0, c0,
-                         blk.shape[0], blk.shape[1],
-                         [float(v) for v in blk.ravel()]))
-    return spark.createDataFrame(rows, TILE_SCHEMA)
+    rows = [tile_row(tr, tc, tile_px, tile_px,
+                     arr[tr * tile_px:(tr + 1) * tile_px,
+                         tc * tile_px:(tc + 1) * tile_px])
+            for tr in range((h + tile_px - 1) // tile_px)
+            for tc in range((w + tile_px - 1) // tile_px)]
+    # python floats: a pandas frame's Arrow path would turn NaN into NULL
+    return spark.createDataFrame([(*r[:5], r[5].tolist()) for r in rows],
+                                 TILE_SCHEMA)
 
 
 # largest raster (pixels) tile_table_to_array assembles on the driver
@@ -315,22 +329,16 @@ def tile_table_to_array(tiles: DataFrame) -> np.ndarray:
     planner's *broadcast* regime where the raster fits one executor; the
     ``MAX_PX`` guard refuses anything larger so a mis-routed 100 TB tile
     table fails fast instead of OOMing the driver."""
-    rows = tiles.select("row0", "col0", "h", "w", "data").collect()
-    if not rows:
+    pdf = tiles.select("row0", "col0", "h", "w", "data").toPandas()
+    if pdf.empty:
         return np.full((0, 0), np.nan)
-    height = max(int(r["row0"]) + int(r["h"]) for r in rows)
-    width = max(int(r["col0"]) + int(r["w"]) for r in rows)
+    height = int((pdf["row0"] + pdf["h"]).max())
+    width = int((pdf["col0"] + pdf["w"]).max())
     if height * width > MAX_PX:
         raise ValueError(
             f"tile table is {height}x{width} px > max_px={MAX_PX}; "
             "use the tiled/convolve_all strategy for rasters this large")
-    arr = np.full((height, width), np.nan)
-    for r in rows:
-        arr[int(r["row0"]):int(r["row0"]) + int(r["h"]),
-            int(r["col0"]):int(r["col0"]) + int(r["w"])] = (
-            np.asarray(r["data"], dtype=np.float64)
-            .reshape(int(r["h"]), int(r["w"])))
-    return arr
+    return fill_window(pdf, 0, 0, height, width)
 
 
 def materialize_raster(height: int, width: int) -> np.ndarray:

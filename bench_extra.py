@@ -30,12 +30,11 @@ from air_health_gis_tools_spark.operators.pip import (pip_circle_counts,
 from air_health_gis_tools_spark.operators.zonal import (buffered_stats,
                                                         buffered_stats_tiled)
 from air_health_gis_tools_spark.plans import queries as Q
-from air_health_gis_tools_spark.session import get_spark
+from air_health_gis_tools_spark.session import DEFAULT_CPUS, get_spark
 from air_health_gis_tools_spark.sources.raster import synthetic_tile_table
 from bench import bench_points
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def build_queries(spark):
@@ -77,7 +76,8 @@ def build_queries(spark):
 
 
 def main():
-    spark = get_spark("bench_extra", cpus=CPUS, shuffle_partitions=CPUS)
+    # the host's CPUs (SPARK_GRAFT_CPUS overrides), not a fixed count
+    spark = get_spark("bench_extra", shuffle_partitions=DEFAULT_CPUS)
     qs = build_queries(spark)
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 3
     only = set(sys.argv[2].split(",")) if len(sys.argv) > 2 else None

@@ -9,6 +9,7 @@ operator must match a coregRaster-style numpy oracle over the REAL raster
 from __future__ import annotations
 
 import functools
+import struct
 
 import numpy as np
 import pytest
@@ -163,6 +164,61 @@ def test_geotiff_sink_single_tile_inline_tags(spark, tmp_path):
     assert np.array_equal(np.isnan(back), np.isnan(src))
     both = ~np.isnan(src)
     assert np.array_equal(back[both], src[both])
+
+
+def _write_stripped_tiff(path, arr, rows_per_strip):
+    """``arr`` as an uncompressed little-endian float64 TIFF in strips of
+    ``rows_per_strip`` rows (NaN stays NaN: no nodata tag)."""
+    h, w = arr.shape
+    strips = [arr[r:r + rows_per_strip].astype("<f8").tobytes()
+              for r in range(0, h, rows_per_strip)]
+    n = len(strips)
+    tags = [(256, 4, 1, w), (257, 4, 1, h), (258, 3, 1, 64), (259, 3, 1, 1),
+            (273, 4, n, None), (277, 3, 1, 1), (278, 4, 1, rows_per_strip),
+            (279, 4, n, None), (339, 3, 1, 3)]
+    offsets_at = 8 + 2 + 12 * len(tags) + 4
+    counts_at = offsets_at + 4 * n
+    data_at = counts_at + 4 * n
+    with open(path, "wb") as f:
+        f.write(b"II*\x00" + struct.pack("<IH", 8, len(tags)))
+        for tag, typ, cnt, val in tags:
+            if tag in (273, 279):
+                val = offsets_at if tag == 273 else counts_at
+            f.write(struct.pack("<HHI", tag, typ, cnt)
+                    + struct.pack("<H" if typ == 3 else "<I", val)
+                    .ljust(4, b"\x00"))
+        f.write(struct.pack("<I", 0))
+        f.write(struct.pack(f"<{n}I", *np.cumsum(
+            [data_at] + [len(s) for s in strips[:-1]]).tolist()))
+        f.write(struct.pack(f"<{n}I", *[len(s) for s in strips]))
+        f.write(b"".join(strips))
+
+
+def test_geotiff_scan_tiled_and_stripped_without_exchange(spark, tmp_path):
+    """The distributed GeoTIFF scan reads a tiled file (partial edge
+    tiles, nodata) and a stripped one (a grid of one tile column) into the
+    raster the driver-side decode gives, one row per block, over a range
+    split into its partitions with no Exchange."""
+    from air_health_gis_tools_spark.sources.geotiff import write_geotiff
+    from air_health_gis_tools_spark.sources.raster import (
+        tile_table_from_array, tile_table_to_array)
+    rng = np.random.default_rng(11)
+    arr = rng.integers(0, 1000, size=(45, 37)).astype(np.float64)
+    arr[rng.random(arr.shape) < 0.2] = np.nan
+    tiled, stripped = str(tmp_path / "t.tif"), str(tmp_path / "s.tif")
+    write_geotiff(tile_table_from_array(spark, arr, tile_px=16), tiled,
+                  height=45, width=37, tile_px=16)
+    _write_stripped_tiff(stripped, arr, rows_per_strip=7)
+    for path, n_blocks in ((tiled, 9), (stripped, 7)):
+        tiles = geotiff_tile_table(spark, path, n_partitions=4)
+        plan = tiles._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, plan
+        assert tiles.rdd.getNumPartitions() == 4
+        assert tiles.count() == n_blocks
+        want, _ = read_geotiff(path)
+        assert np.array_equal(tile_table_to_array(tiles), want,
+                              equal_nan=True)
+        assert np.array_equal(want, arr, equal_nan=True)
 
 
 def _probe_points(info, n=300):
